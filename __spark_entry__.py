@@ -2,9 +2,9 @@
 
 queries() exposes the engine's operator surface (SURVEY.md §2 +
 training-data ops); oracle_sql() gives the ANSI-SQL equivalent DuckDB
-runs on the same parquet views. Queries whose semantics are not
-SQL-expressible (iterative connected components, hash-seeded LSH,
-SimHash banding) have no oracle entry → driver records rows-only.
+runs on the same parquet views. Hash-based queries (minhash, SimHash,
+sampling) use the md5 family of json_ld_spark/operators/hashfamily.py,
+whose SQL twins the oracles below embed.
 """
 
 from __future__ import annotations
@@ -14,6 +14,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from json_ld_spark.operators.hashfamily import (
+    MD5_HASH60_SQL,
+    SIMHASH_BITS,
+    SIMHASH_BLOCK_BITS,
+    minhash_affine,
+    minhash_band_bucket_sql,
+)
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -267,12 +275,11 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming-LSH near-dup pairs with the md5-prefix 60-bit
     hash family: the DuckDB oracle recomputes the same signatures,
     blocks, and Hamming distances — a FULL oracle for the banding
-    pipeline (the xxhash64 family stays the production default and is
-    what bench.py measures)."""
+    pipeline."""
     from json_ld_spark.operators.dedup import simhash_neardup_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return simhash_neardup_pairs(docs, hash_family="md5").filter(
+    return simhash_neardup_pairs(docs).filter(
         F.col("hamming") <= 16
     )
 
@@ -282,12 +289,11 @@ def q_minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5+affine hash family: the DuckDB oracle recomputes the same
     signatures, band buckets (incl. the 64-row skew cap), verified
     pairs, and components (recursive-CTE transitive closure) — a FULL
-    oracle for the entire near-dup clustering pipeline. bench.py
-    measures the xxhash64 production family."""
+    oracle for the entire near-dup clustering pipeline."""
     from json_ld_spark.operators.dedup import minhash_dedup_components
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_dedup_components(docs, threshold=0.3, hash_family="md5")
+    return minhash_dedup_components(docs, threshold=0.3)
 
 
 def q_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,7 +309,7 @@ def q_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.textstats import quality_score
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    comps = minhash_dedup_components(docs, threshold=0.3, hash_family="md5")
+    comps = minhash_dedup_components(docs, threshold=0.3)
     qual = docs.select(
         F.col("doc_id").alias("id"),
         quality_score(F.col("text")).alias("q"),
@@ -1431,9 +1437,7 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = docs.filter(F.col("doc_id") % _SPLIT_PLANT_MOD == 0).select(
         (F.col("doc_id") + _SPLIT_PLANT_OFF).alias("doc_id"), "text"
     )
-    return leakage_safe_splits(
-        docs.unionByName(planted), hash_family="md5"
-    )
+    return leakage_safe_splits(docs.unionByName(planted))
 
 
 _MIX_RATES = {"src0": 1.0, "src1": 0.25, "src2": 0.1}
@@ -1453,7 +1457,7 @@ def q_domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return stratified_sample(
         docs, _MIX_RATES, "source", "doc_id",
-        default_rate=_MIX_DEFAULT, hash_family="md5",
+        default_rate=_MIX_DEFAULT,
     ).select("doc_id", "source")
 
 
@@ -1474,7 +1478,7 @@ def q_domain_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return upsample_by_epochs(
         docs, _UP_EPOCHS, "source", "doc_id",
-        default_epochs=_UP_DEFAULT, hash_family="md5",
+        default_epochs=_UP_DEFAULT,
     ).select("doc_id", "source", "copy_idx")
 
 
@@ -1664,9 +1668,9 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.corpus import deterministic_sample
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return deterministic_sample(
-        docs, _SAMPLE_FRACTION, "doc_id", hash_family="md5"
-    ).select("doc_id")
+    return deterministic_sample(docs, _SAMPLE_FRACTION, "doc_id").select(
+        "doc_id"
+    )
 
 
 def q_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1815,18 +1819,15 @@ def _sql_cos(a: str, b: str) -> str:
     )
 
 
-_MD5H60 = "CAST(concat('0x', substring(md5({x}), 1, 15)) AS BIGINT)"
-
-
-def _simhash_oracle_sql(shingle: int = 4, n_bits: int = 60,
-                        block_bits: int = 15, max_hamming: int = 16,
+def _simhash_oracle_sql(shingle: int = 4, max_hamming: int = 16,
                         max_bucket: int = 64) -> str:
     """DuckDB twin of q_simhash_pairs: md5-prefix shingle hashes →
-    per-bit vote sums → 60-bit signature → 4×15-bit block banding
-    (with the deterministic ``max_bucket`` row cap per block-bucket —
-    the hot-bucket skew guard) → Hamming filter. Bit-for-bit the
-    Spark md5-family computation."""
-    h = _MD5H60.format(x=f"substring(lt, i, {shingle})")
+    per-bit vote sums → SIMHASH_BITS signature → SIMHASH_BLOCK_BITS
+    block banding (with the deterministic ``max_bucket`` row cap per
+    block-bucket — the hot-bucket skew guard) → Hamming filter.
+    Bit-for-bit the Spark md5-family computation."""
+    n_bits, block_bits = SIMHASH_BITS, SIMHASH_BLOCK_BITS
+    h = MD5_HASH60_SQL.format(x=f"substring(lt, i, {shingle})")
     sig_terms = " + ".join(
         f"(CASE WHEN list_sum(list_transform(hs, x -> "
         f"CASE WHEN (x >> {b}) & 1 = 1 THEN 1 ELSE -1 END)) > 0 "
@@ -1866,23 +1867,13 @@ def _minhash_band_cte(num_hashes: int = 32, bands: int = 8,
     minhash signatures → md5-string band buckets (tables d, sh, sig,
     band) — consumed by both the batch components oracle and the
     streaming dedup oracle."""
-    from json_ld_spark.operators.canonicalize import minhash_affine
-
     A, B, P = minhash_affine(num_hashes)
-    rows_per_band = num_hashes // bands
-    h = _MD5H60.format(x=f"substring(lt, i, {shingle})")
+    h = MD5_HASH60_SQL.format(x=f"substring(lt, i, {shingle})")
     sig_items = ", ".join(
         f"list_min(list_transform(hs, h -> ({A[i]} * (h % {P}) + {B[i]}) % {P}))"
         for i in range(num_hashes)
     )
-    band_parts = (
-        "md5(concat_ws('-', CAST(t.b AS VARCHAR), "
-        + ", ".join(
-            f"CAST(sg[t.b * {rows_per_band} + {j + 1}] AS VARCHAR)"
-            for j in range(rows_per_band)
-        )
-        + "))"
-    )
+    band_parts = minhash_band_bucket_sql("t.b", "sg", num_hashes, bands)
     return f"""d AS (SELECT doc_id, lower(text) AS lt FROM documents),
     sh AS (
       SELECT doc_id, list_distinct(list_transform(
@@ -3658,11 +3649,10 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost bucket state row, a wrong representative update, or a band
     computed differently in the stream path fails the hash."""
     from json_ld_spark.operators.canonicalize import (
-        char_shingles,
-        minhash_affine,
         minhash_signature,
+        shingle_hash_set,
     )
-    from json_ld_spark.operators.dedup import md5_hash60
+    from json_ld_spark.operators.hashfamily import minhash_band_buckets
     from json_ld_spark.streaming.stream_pipeline import stream_minhash_dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -3682,8 +3672,6 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(in_dir)
     )
     num_hashes, bands = 32, 8
-    rows_per_band = num_hashes // bands
-    affine = minhash_affine(num_hashes)
     par = spark.sparkContext.defaultParallelism
     # each micro-batch is ONE file = one input partition, and chained
     # projections collapse (the signature fold would capture the whole
@@ -3696,35 +3684,15 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.lower(F.col("text")).alias("_lt")
     )
     s2 = s1.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                char_shingles(F.col("_lt"), 3, pre_lowered=True),
-                md5_hash60,
-            )
-        ).alias("_sh"),
+        "doc_id", shingle_hash_set(F.col("_lt"), 3).alias("_sh")
     ).repartition(par, "doc_id")
     s3 = s2.select(
-        "doc_id",
-        minhash_signature(F.col("_sh"), num_hashes, affine=affine).alias(
-            "_sig"
-        ),
+        "doc_id", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
     ).repartition(par, "doc_id")
-
-    def band_bucket(i: int):
-        return F.md5(F.concat_ws(
-            "-",
-            F.lit(str(i)),
-            *[
-                F.element_at("_sig", i * rows_per_band + j + 1).cast("string")
-                for j in range(rows_per_band)
-            ],
-        ))
-
     banded = s3.select(
         "doc_id",
         F.explode(
-            F.array(*[band_bucket(i) for i in range(bands)])
+            F.array(*minhash_band_buckets("_sig", num_hashes, bands))
         ).alias("bucket"),
     ).select("bucket", "doc_id")
     out_dir = _run_available_now(stream_minhash_dedup(banded), base)
@@ -6673,7 +6641,7 @@ def oracle_sql() -> dict[str, str]:
         """
     # quality-classifier oracle: hash → slot → closed-form weight →
     # exact integer sum replayed word-for-word; one rounded division
-    _qc_h = _MD5H60.format(x="w")
+    _qc_h = MD5_HASH60_SQL.format(x="w")
     d["quality_classifier"] = f"""
         WITH s AS (
           SELECT doc_id,
@@ -6951,8 +6919,8 @@ def oracle_sql() -> dict[str, str]:
     # negative-sampling oracle: vocabulary bucketing, per-bucket
     # ranks, md5-family probe arithmetic, and the filtered anti-join
     # all replayed — over the same mention-triple derivation
-    _neg_h_ent = _MD5H60.format(x="entity")
-    _neg_h_probe = _MD5H60.format(x="head || '|' || k_idx")
+    _neg_h_ent = MD5_HASH60_SQL.format(x="entity")
+    _neg_h_probe = MD5_HASH60_SQL.format(x="head || '|' || k_idx")
     d["kg_negative_samples"] = f"""
         WITH m AS ({d["kg_triples_mentions"]}),
         pos AS (

@@ -224,6 +224,8 @@ def main() -> None:
         "char_entropy",
         "kg_validate",
         "capped_sample",
+        "minhash_components",
+        "simhash_pairs",
     ]
     # streaming queries run once (temp-dir setup + query startup
     # dominate; min-of-N would only re-measure fixed latency)
@@ -248,33 +250,6 @@ def main() -> None:
         dt = time.time() - t0
         timings[name] = round(dt, 3)
         total += dt
-
-    # minhash + simhash production family (xxhash64): the driver
-    # queries run the md5 oracle family for DuckDB parity; throughput
-    # is measured on the fast path (same algorithm, pluggable hash) —
-    # keys kept stable for round-over-round comparability
-    from json_ld_spark.operators.dedup import (
-        minhash_dedup_components,
-        simhash_neardup_pairs,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dt = float("inf")
-    for _ in range(reps):
-        t0 = time.time()
-        minhash_dedup_components(docs, threshold=0.3).count()
-        dt = min(dt, time.time() - t0)
-    timings["minhash_components"] = round(dt, 3)
-    total += dt
-    from pyspark.sql import functions as F
-
-    dt = float("inf")
-    for _ in range(reps):
-        t0 = time.time()
-        simhash_neardup_pairs(docs).filter(F.col("hamming") <= 16).count()
-        dt = min(dt, time.time() - t0)
-    timings["simhash_pairs"] = round(dt, 3)
-    total += dt
 
     result = {
         "metric": "headline_suite_sec",

@@ -6,8 +6,10 @@ No reference analog (SURVEY §2.12) — the reference is single-document;
 cross-document identity resolution is what a 10^12-turn corpus adds.
 
 Scale design:
-  - minhash signatures are pure JVM column expressions (xxhash64 per
-    seed + array_min) — no Python, fully codegen'd.
+  - minhash signatures are pure JVM column expressions over the md5
+    hash family (hashfamily.py: md5_hash60 shingle hashes, affine
+    minima, md5 band buckets) — no Python, and the DuckDB oracle
+    recomputes every stage.
   - banding turns O(n²) similarity into per-bucket self-joins; bucket
     sizes are bounded by construction (cap + salt guard below).
   - connected components = alternating large-star/small-star
@@ -21,6 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from json_ld_spark.operators.hashfamily import (
+    md5_hash60,
+    minhash_affine,
+    minhash_band_buckets,
+)
 
 
 def char_shingles(col, n: int = 3, pre_lowered: bool = False):
@@ -39,102 +47,62 @@ def char_shingles(col, n: int = 3, pre_lowered: bool = False):
     )
 
 
-def _seeded_hash(seed: int):
-    # one-arg closure: a two-arg lambda would make Spark pass the array
-    # index as the second argument, silently overriding the seed
-    return lambda s: F.xxhash64(s, F.lit(seed))
-
-
-MINHASH_PRIME = 2147483647  # 2^31 - 1: (a*h + b) % P stays in 62 bits
-
-
-def minhash_affine(num_hashes: int = 32, seed: int = 12345):
-    """(A, B, P) coefficients for the affine universal-hash family
-    h_i(x) = (a_i * x + b_i) mod P over a shared md5-derived base
-    hash. Seeded-deterministic so ANY engine (DuckDB included) can
-    reproduce the signatures from the same constants — the basis for
-    the fully-oracled minhash driver query."""
-    import random
-
-    rnd = random.Random(seed)
-    A = [rnd.randrange(1, MINHASH_PRIME) for _ in range(num_hashes)]
-    B = [rnd.randrange(0, MINHASH_PRIME) for _ in range(num_hashes)]
-    return A, B, MINHASH_PRIME
+def shingle_hash_set(lowered, shingle: int = 3):
+    """Distinct md5_hash60 hashes of the character shingles of an
+    already-lowercased, staged column."""
+    return F.array_distinct(
+        F.transform(char_shingles(lowered, shingle, pre_lowered=True), md5_hash60)
+    )
 
 
 def hashed_shingle_sets(
     df: DataFrame, id_col: str, text_col: str, shingle: int = 3,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(_id, _sh: array<long>): distinct hashed shingle sets,
     materialized once — the shared input for BOTH minhash signatures
     and exact-Jaccard verification (avoids computing the shingle
-    array twice per document). hash_family "md5" uses the
-    cross-engine md5-prefix hash (see dedup.md5_hash60)."""
-    if hash_family == "md5":
-        from json_ld_spark.operators.dedup import md5_hash60
-
-        hf = md5_hash60
-    else:
-        hf = lambda s: F.xxhash64(s)  # noqa: E731 (varargs fn can't be a HOF callback)
+    array twice per document)."""
     # Layout + form, A/B-measured at sf1 (50k docs, 32 cores):
     # a compact parquet corpus scans as 1-2 splits, and whatever runs
     # before the first shuffle inherits that — the starved HOF form
     # cost the full pipeline +15 s. Of the two fixes, rebalancing the
     # (id, lowered-text) rows FIRST and keeping the zero-shuffle HOF
-    # shingle pass wins by 15×: 1.2 s / 1.5 s (xxh / md5) vs 18.2 /
-    # 26.9 s for exploding shingles into a collect_set aggregation —
-    # the text rebalance ships ~1× the corpus bytes once, while the
-    # exploded form shuffles shingle-count × 8-byte hashes (≈8× the
-    # corpus) into hash-set merges. The repartition is skipped when
-    # the scan already has enough splits (the real-cluster case).
+    # shingle pass wins by ~18×: 1.5 s vs 26.9 s for exploding
+    # shingles into a collect_set aggregation — the text rebalance
+    # ships ~1× the corpus bytes once, while the exploded form
+    # shuffles shingle-count × 8-byte hashes (≈8× the corpus) into
+    # hash-set merges. The repartition is skipped when the scan
+    # already has enough splits (the real-cluster case).
     from json_ld_spark.plans.layout import rebalance_scan
 
     staged = rebalance_scan(df.select(
         F.col(id_col).alias("_id"), F.lower(F.col(text_col)).alias("_lt")
     ))
     return staged.select(
-        "_id",
-        F.array_distinct(
-            F.transform(
-                char_shingles(F.col("_lt"), shingle, pre_lowered=True), hf
-            )
-        ).alias("_sh"),
+        "_id", shingle_hash_set(F.col("_lt"), shingle).alias("_sh")
     ).localCheckpoint()
 
 
-def minhash_signature(shingles_col, num_hashes: int = 32, affine=None):
-    """Array of minhash values, one per hash function.
+def minhash_signature(shingles_col, num_hashes: int = 32):
+    """Array of minhash values, one per affine hash
+    h_i = (a_i * (base % P) + b_i) % P over the md5_hash60 shingle
+    hashes (coefficients from minhash_affine) — bit-identical in any
+    SQL engine.
 
     Single traversal: one aggregate whose accumulator holds all
     ``num_hashes`` running minima (~35% faster than ``num_hashes``
-    separate interpreted array_min(transform(...)) passes).
-
-    Default family: xxhash64(shingle, seed_i) — fastest, JVM-only.
-    With ``affine`` = (A, B, P) from minhash_affine: h_i =
-    (a_i * (base % P) + b_i) % P over the md5-base shingle hashes —
-    bit-identical in any SQL engine."""
-    if affine is not None:
-        A, B, P = affine
-        ab = F.array(*[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in zip(A, B)
-        ])
-        return F.aggregate(
-            shingles_col,
-            F.array_repeat(F.lit(P).cast("long"), num_hashes),
-            lambda acc, h: F.zip_with(
-                acc, ab,
-                lambda ac, s: F.least(ac, (s["a"] * (h % P) + s["b"]) % P),
-            ),
-        )
-    seeds = F.array(*[F.lit(i).cast("long") for i in range(num_hashes)])
-    max_long = (1 << 63) - 1
+    separate interpreted array_min(transform(...)) passes)."""
+    A, B, P = minhash_affine(num_hashes)
+    ab = F.array(*[
+        F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+        for a, b in zip(A, B)
+    ])
     return F.aggregate(
         shingles_col,
-        F.array_repeat(F.lit(max_long).cast("long"), num_hashes),
-        lambda acc, s: F.zip_with(
-            acc, seeds, lambda a, seed: F.least(a, F.xxhash64(s, seed))
+        F.array_repeat(F.lit(P).cast("long"), num_hashes),
+        lambda acc, h: F.zip_with(
+            acc, ab,
+            lambda ac, s: F.least(ac, (s["a"] * (h % P) + s["b"]) % P),
         ),
     )
 
@@ -148,50 +116,28 @@ def minhash_candidate_pairs(
     shingle: int = 3,
     max_bucket: int = 64,
     shingle_sets: "DataFrame | None" = None,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs whose minhash bands collide.
 
     rows per band-bucket are capped at ``max_bucket`` (hot buckets —
     e.g. empty strings — would otherwise explode quadratically; the
     cap is a skew guard, logged by callers that need exactness).
-
-    hash_family "md5": md5-base + affine signatures and md5-string
-    band buckets — every stage reproducible by the SQL oracle.
+    Signatures and band buckets are the md5 family (hashfamily.py),
+    so every stage is reproducible by the SQL oracle.
     """
-    rows_per_band = num_hashes // bands
     # stage the shingle array in its own projection: higher-order
     # functions are interpreted (no codegen CSE), so inlining the
     # shingle expression into the signature aggregate would recompute
     # it per accumulator update
     if shingle_sets is None:
-        shingle_sets = hashed_shingle_sets(
-            df, id_col, text_col, shingle, hash_family=hash_family
-        )
-    affine = minhash_affine(num_hashes) if hash_family == "md5" else None
+        shingle_sets = hashed_shingle_sets(df, id_col, text_col, shingle)
     sig = shingle_sets.select(
-        "_id",
-        minhash_signature(F.col("_sh"), num_hashes, affine=affine).alias("_sig"),
+        "_id", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
     )
-    if hash_family == "md5":
-        def band_bucket(i: int):
-            return F.md5(F.concat_ws(
-                "-",
-                F.lit(str(i)),
-                *[F.element_at("_sig", i * rows_per_band + j + 1).cast("string")
-                  for j in range(rows_per_band)],
-            ))
-    else:
-        def band_bucket(i: int):
-            return F.xxhash64(
-                *[F.element_at("_sig", i * rows_per_band + j + 1)
-                  for j in range(rows_per_band)],
-                F.lit(1000 + i),
-            )
     banded = sig.select(
         "_id",
         F.posexplode(
-            F.array(*[band_bucket(i) for i in range(bands)])
+            F.array(*minhash_band_buckets("_sig", num_hashes, bands))
         ).alias("_band", "_bucket"),
     )
     # bound bucket size (skew guard)
@@ -221,23 +167,16 @@ def minhash_candidate_pairs(
 
 
 def jaccard_filter(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.6,
-    shingle: int = 3,
-    shingle_sets: "DataFrame | None" = None,
+    pairs: DataFrame, shingle_sets: DataFrame, threshold: float = 0.6
 ) -> DataFrame:
     """Verify candidate pairs with exact shingle-set Jaccard (join back
-    the shingle sets, JVM array intersect/union).
+    the hashed_shingle_sets the pairs were blocked on, JVM array
+    intersect/union).
 
-    Shingles are 64-bit hashes, not strings: the pair join shuffles two
+    Shingles are 60-bit hashes, not strings: the pair join shuffles two
     shingle arrays per candidate, so 8-byte longs cut shuffle bytes ~3x
     and intersect/union compares longs (collision probability over a
-    few hundred shingles is ~1e-14 — immaterial for dedup)."""
-    if shingle_sets is None:
-        shingle_sets = hashed_shingle_sets(df, id_col, text_col, shingle)
+    few hundred shingles is ~1e-13 — immaterial for dedup)."""
     # stage set sizes once per document; per pair compute ONLY the
     # intersection — |A∪B| = |A|+|B|−|A∩B| for distinct sets, so the
     # array_union pass (the other half of the per-pair CPU on a dense

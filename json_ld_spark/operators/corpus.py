@@ -14,14 +14,21 @@ documents and the tokenizer:
     kept when new data arrives (the property incremental pipelines
     need).
 
-Both have md5-family variants so the driver's DuckDB oracle recomputes
-them bit-for-bit (same policy as the minhash/simhash families).
+Every hash sampler buckets keys with the md5 family
+(hashfamily.sample_bucket), so the driver's DuckDB oracle recomputes
+the sampled rows bit-for-bit (the same family as minhash/simhash).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from json_ld_spark.operators.hashfamily import (
+    SAMPLE_BUCKETS,
+    md5_hash60,
+    sample_bucket,
+)
 
 
 def chunk_documents(
@@ -212,30 +219,12 @@ def deterministic_sample(
     fraction: float,
     key_col: str,
     seed: int = 7,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Rows whose key hashes under ``fraction`` — reproducible sampling
-    that is independent of partitioning and stable under appends.
-
-    hash_family "md5" uses the cross-engine md5-prefix bucket
-    (dedup.md5_hash60 mod 1e6) so a SQL oracle reproduces the exact
-    row set; xxhash64 is the production default."""
-    denom = 1_000_000
-    thresh = int(fraction * denom)
-    if hash_family == "md5":
-        from json_ld_spark.operators.dedup import md5_hash60
-
-        bucket = F.pmod(
-            md5_hash60(F.concat(F.col(key_col).cast("string"),
-                                F.lit(f"-{seed}"))),
-            F.lit(denom),
-        )
-    else:
-        bucket = F.pmod(
-            F.xxhash64(F.col(key_col).cast("string"), F.lit(seed)),
-            F.lit(denom),
-        )
-    return df.filter(bucket < thresh)
+    that is independent of partitioning and stable under appends. The
+    md5-family bucket lets a SQL oracle reproduce the exact row set."""
+    bucket = sample_bucket(key_col, f"-{seed}")
+    return df.filter(bucket < int(fraction * SAMPLE_BUCKETS))
 
 
 def stratified_sample(
@@ -245,7 +234,6 @@ def stratified_sample(
     key_col: str,
     default_rate: float = 0.0,
     seed: int = 7,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the domain-mixing step of
     a training-data pipeline (keep 100% of books, 10% of common-crawl,
@@ -260,24 +248,11 @@ def stratified_sample(
     source tags) are small by construction, so this stays a pure JVM
     row-expression: zero shuffle, zero join, full pushdown through
     the parquet scan."""
-    denom = 1_000_000
-    if hash_family == "md5":
-        from json_ld_spark.operators.dedup import md5_hash60
-
-        bucket = F.pmod(
-            md5_hash60(F.concat(F.col(key_col).cast("string"),
-                                F.lit(f"-{seed}"))),
-            F.lit(denom),
-        )
-    else:
-        bucket = F.pmod(
-            F.xxhash64(F.col(key_col).cast("string"), F.lit(seed)),
-            F.lit(denom),
-        )
-    thresh = F.lit(int(default_rate * denom))
+    bucket = sample_bucket(key_col, f"-{seed}")
+    thresh = F.lit(int(default_rate * SAMPLE_BUCKETS))
     for stratum, rate in sorted(rates.items()):
         thresh = F.when(
-            F.col(strata_col) == stratum, F.lit(int(rate * denom))
+            F.col(strata_col) == stratum, F.lit(int(rate * SAMPLE_BUCKETS))
         ).otherwise(thresh)
     return df.filter(bucket < thresh)
 
@@ -320,7 +295,6 @@ def assign_splits(
         ("train", 0.8), ("val", 0.1), ("test", 0.1)
     ),
     seed: int = 7,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """``df`` plus a ``split`` column: deterministic train/val/test
     assignment by hash bucket — partition-independent and append-
@@ -329,28 +303,14 @@ def assign_splits(
     silently leak yesterday's training data into today's eval set).
 
     ``weights`` are (name, fraction) in priority order over the same
-    1e-6-grained bucket space as ``deterministic_sample``; md5 family
-    for oracle replay, xxhash64 for production. Pure JVM row
-    expression — zero shuffle, full pushdown."""
-    denom = 1_000_000
-    if hash_family == "md5":
-        from json_ld_spark.operators.dedup import md5_hash60
-
-        bucket = F.pmod(
-            md5_hash60(F.concat(F.col(key_col).cast("string"),
-                                F.lit(f"-{seed}"))),
-            F.lit(denom),
-        )
-    else:
-        bucket = F.pmod(
-            F.xxhash64(F.col(key_col).cast("string"), F.lit(seed)),
-            F.lit(denom),
-        )
+    1e-6-grained md5-family bucket space as ``deterministic_sample``.
+    Pure JVM row expression — zero shuffle, full pushdown."""
+    bucket = sample_bucket(key_col, f"-{seed}")
     expr = F.lit(weights[-1][0])
     acc = 0
     cuts = []
     for name, frac in weights[:-1]:
-        acc += int(frac * denom)
+        acc += int(frac * SAMPLE_BUCKETS)
         cuts.append((name, acc))
     for name, cut in reversed(cuts):
         expr = F.when(bucket < cut, F.lit(name)).otherwise(expr)
@@ -362,7 +322,6 @@ def leakage_safe_splits(
     key_col: str = "doc_id",
     text_col: str = "text",
     seed: int = 7,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(key, split) for every document, with TRAIN rows whose
     normalized content fingerprint also appears in val or test
@@ -382,7 +341,7 @@ def leakage_safe_splits(
     removes training contamination, never evaluation rows."""
     from json_ld_spark.operators.textstats import fingerprint_md5
 
-    s = assign_splits(docs, key_col, seed=seed, hash_family=hash_family)
+    s = assign_splits(docs, key_col, seed=seed)
     fp = s.select(
         F.col(key_col), "split", fingerprint_md5(F.col(text_col)).alias("_fp")
     )
@@ -405,7 +364,6 @@ def upsample_by_epochs(
     key_col: str,
     default_epochs: float = 1.0,
     seed: int = 11,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """``df`` replicated per-stratum by FRACTIONAL epoch weights — the
     upsampling half of training-data mixing (see 'The Pile' /
@@ -422,29 +380,15 @@ def upsample_by_epochs(
     co-locating them. Pure JVM row expressions: a literal CASE chain
     for the weight lookup (mix tables are small by construction), a
     hash threshold for the fractional copy, and one ``explode`` over
-    a ``sequence`` — zero shuffle, zero join, full scan pushdown.
-    md5 family for oracle replay, xxhash64 for production."""
-    denom = 1_000_000
-    if hash_family == "md5":
-        from json_ld_spark.operators.dedup import md5_hash60
-
-        bucket = F.pmod(
-            md5_hash60(F.concat(F.col(key_col).cast("string"),
-                                F.lit(f"-up{seed}"))),
-            F.lit(denom),
-        )
-    else:
-        bucket = F.pmod(
-            F.xxhash64(F.col(key_col).cast("string"), F.lit(seed)),
-            F.lit(denom),
-        )
-    base = F.lit(int(default_epochs * denom))
+    a ``sequence`` — zero shuffle, zero join, full scan pushdown."""
+    bucket = sample_bucket(key_col, f"-up{seed}")
+    base = F.lit(int(default_epochs * SAMPLE_BUCKETS))
     for stratum, w in sorted(epochs.items()):
         base = F.when(
-            F.col(strata_col) == stratum, F.lit(int(w * denom))
+            F.col(strata_col) == stratum, F.lit(int(w * SAMPLE_BUCKETS))
         ).otherwise(base)
-    n_copies = (base / denom).cast("int") + (
-        bucket < F.pmod(base, F.lit(denom))
+    n_copies = (base / SAMPLE_BUCKETS).cast("int") + (
+        bucket < F.pmod(base, F.lit(SAMPLE_BUCKETS))
     ).cast("int")
     return (
         df.withColumn("_n", n_copies)
@@ -475,8 +419,6 @@ def weighted_sample(
     leaves the plan, so libm ulp differences cannot reach the gate
     (keys of distinct ids are never within an ulp). One TakeOrdered
     top-k, no full sort."""
-    from json_ld_spark.operators.dedup import md5_hash60
-
     h = md5_hash60(F.col(id_col).cast("string"))
     u = (h + 1).cast("double") / F.lit(float(1 << 60))
     key = F.log(u) / F.col(weight_col).cast("double")
@@ -675,8 +617,6 @@ def capped_group_sample(
     one group-keyed shuffle; whale groups degrade like any skewed
     window (salt upstream if one group dominates a partition)."""
     from pyspark.sql.window import Window
-
-    from json_ld_spark.operators.dedup import md5_hash60
 
     w = Window.partitionBy(group_col).orderBy(
         md5_hash60(F.col(id_col).cast("string")), F.col(id_col)

@@ -19,8 +19,14 @@ from pyspark.sql import functions as F
 from json_ld_spark.functions.columns import cosine_similarity
 from json_ld_spark.operators.canonicalize import (
     connected_components,
+    hashed_shingle_sets,
     jaccard_filter,
     minhash_candidate_pairs,
+)
+from json_ld_spark.operators.hashfamily import (
+    SIMHASH_BITS,
+    SIMHASH_BLOCK_BITS,
+    md5_hash60,
 )
 from json_ld_spark.operators.textstats import fingerprint_md5
 
@@ -84,49 +90,31 @@ def minhash_dedup_components(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    hash_family: str = "xxhash64",
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """(id, component): near-duplicate clusters via MinHash blocking →
     Jaccard verify → connected components. Singletons omitted.
-    hash_family "md5" = the cross-engine family (full SQL oracle).
     ``checkpoint_dir``: reliable per-round checkpoints for the CC
     iterations (pass it on a real cluster — hours-long CC must survive
     executor loss; see plans/checkpoints.py)."""
-    from json_ld_spark.operators.canonicalize import hashed_shingle_sets
-
     # one shingle pass feeds both blocking and verification
-    sets_ = hashed_shingle_sets(docs, id_col, text_col, hash_family=hash_family)
+    sets_ = hashed_shingle_sets(docs, id_col, text_col)
     pairs = minhash_candidate_pairs(
-        docs, id_col, text_col, num_hashes, bands, shingle_sets=sets_,
-        hash_family=hash_family,
+        docs, id_col, text_col, num_hashes, bands, shingle_sets=sets_
     )
-    verified = jaccard_filter(
-        pairs, docs, id_col, text_col, threshold, shingle_sets=sets_
-    )
+    verified = jaccard_filter(pairs, sets_, threshold)
     return connected_components(
         verified.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
     )
 
 
-def md5_hash60(col):
-    """60-bit hash from the md5 hex prefix: the cross-engine hash
-    family. Any SQL engine with md5 reproduces it —
-    DuckDB: CAST(concat('0x', substring(md5(x), 1, 15)) AS BIGINT) —
-    which is what makes simhash/minhash driver queries fully
-    oracle-checkable instead of rows-only. xxhash64 stays the default
-    production family (≈3× cheaper); the algorithms are identical."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def simhash_sig(text_col, shingle: int = 4, n_bits: int = 64, hash_fn=None,
-                pre_lowered: bool = False):
-    """n_bits-wide SimHash over character shingles, as ONE JVM
-    aggregate: the accumulator is an array of n_bits vote counters
-    updated per shingle hash (a single expression tree — 64 separate
-    aggregates made codegen explode and cost seconds of compile per
-    query). hash_fn maps a shingle column to a long (default
-    xxhash64; md5_hash60 with n_bits=60 for the cross-engine family).
+def simhash_sig(text_col, shingle: int = 4, pre_lowered: bool = False):
+    """SIMHASH_BITS-wide SimHash over the md5_hash60 hashes of the
+    character shingles, as ONE JVM aggregate: the accumulator is an
+    array of vote counters updated per shingle hash (a single
+    expression tree — one aggregate per bit made codegen explode and
+    cost seconds of compile per query). The interpreted reference
+    form of simhash_sig_table.
     pre_lowered: ``text_col`` is an already-lowercased staged column —
     interpreted HOFs re-evaluate a captured lower() per element
     (see char_shingles), so callers stage it.
@@ -136,15 +124,11 @@ def simhash_sig(text_col, shingle: int = 4, n_bits: int = 64, hash_fn=None,
         F.sequence(F.lit(1), F.greatest(F.length(lowered) - (shingle - 1), F.lit(1))),
         lambda i: lowered.substr(i, F.lit(shingle)),
     )
-    hashes = F.transform(shingles, hash_fn or (lambda s: F.xxhash64(s)))
-    # per-bit masks as a literal array (bit 63 = the sign bit as a
-    # signed long); shift functions require literal bit counts, masks
-    # don't
+    hashes = F.transform(shingles, md5_hash60)
+    # per-bit masks as a literal array; shift functions require
+    # literal bit counts, masks don't
     masks = F.array(
-        *[
-            F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long")
-            for b in range(n_bits)
-        ]
+        *[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)]
     )
     votes = F.aggregate(
         hashes,
@@ -156,8 +140,7 @@ def simhash_sig(text_col, shingle: int = 4, n_bits: int = 64, hash_fn=None,
         ),
     )
     # fold positive-vote bits into a bigint: sum of masks where the
-    # vote is positive (the sign-bit mask contributes negatively,
-    # which IS its two's-complement value)
+    # vote is positive
     return F.aggregate(
         F.zip_with(
             votes,
@@ -169,26 +152,19 @@ def simhash_sig(text_col, shingle: int = 4, n_bits: int = 64, hash_fn=None,
     )
 
 
-def simhash64(text_col, shingle: int = 4):
-    """64-bit SimHash, xxhash64 family (the production default)."""
-    return simhash_sig(text_col, shingle=shingle, n_bits=64)
-
-
 def simhash_sig_table(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle: int = 4,
-    n_bits: int = 64,
-    hash_fn=None,
 ) -> DataFrame:
     """(_id, _sh): SimHash signatures as an EXPLODED-ROWS aggregation —
     the corpus-scale form of simhash_sig.
 
     The expression form (simhash_sig) folds an interpreted HOF
-    accumulator over every shingle: ~n_bits interpreted lambda ops per
-    shingle, measured 68 s for 50k docs at sf1 — it was the dominant
-    term of the whole simhash query. This form stays inside
+    accumulator over every shingle: one interpreted lambda op per bit
+    per shingle, measured 68 s for 50k docs at sf1 — it was the
+    dominant term of the whole simhash query. This form stays inside
     whole-stage codegen: explode shingles to rows, hash per row, and
     take 32 PACKED bit-count sums per document (two 32-bit lanes per
     long: lane b counts bit b, its high lane counts bit b+32 — lanes
@@ -197,7 +173,6 @@ def simhash_sig_table(
     (sig bit b = ones_b·2 > n, identical to the ±1 vote sign).
     Measured 68 s → ~2 s on the same corpus."""
     lane = 0x0000000100000001
-    h_fn = hash_fn or (lambda s: F.xxhash64(s))
     from json_ld_spark.plans.layout import rebalance_scan
 
     # scan-granularity guard: the exploded hash + packed-lane partial
@@ -215,7 +190,7 @@ def simhash_sig_table(
         ).alias("_i"),
         "_lt",
     ).select(
-        "_id", h_fn(F.col("_lt").substr(F.col("_i"), F.lit(shingle))).alias("_h")
+        "_id", md5_hash60(F.col("_lt").substr(F.col("_i"), F.lit(shingle))).alias("_h")
     )
     lanes = rows.groupBy("_id").agg(
         F.count("*").alias("_n"),
@@ -232,25 +207,21 @@ def simhash_sig_table(
         return s.bitwiseAND(F.lit(0xFFFFFFFF))
 
     sig = F.lit(0).cast("long")
-    for b in range(n_bits):
-        m = (1 << b) if b < 63 else -(1 << 63)
+    for b in range(SIMHASH_BITS):
         sig = sig + F.when(
-            ones(b) * 2 > F.col("_n"), F.lit(m).cast("long")
+            ones(b) * 2 > F.col("_n"), F.lit(1 << b).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return lanes.select("_id", sig.alias("_sh"))
 
 
 def simhash_neardup_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    block_bits: int = 16, hash_family: str = "xxhash64",
     max_bucket: int = 64,
 ) -> DataFrame:
     """Candidate pairs whose SimHash agrees on at least one block
-    (standard Hamming-LSH banding: 4 blocks of signature bits).
-
-    hash_family "md5" switches to the 60-bit md5-prefix family
-    (md5_hash60) with 4×15-bit blocks — same algorithm, reproducible
-    by the DuckDB oracle bit-for-bit.
+    (standard Hamming-LSH banding: the SIMHASH_BITS signature in
+    blocks of SIMHASH_BLOCK_BITS), with their Hamming distance —
+    reproducible by the DuckDB oracle bit-for-bit.
 
     ``max_bucket`` caps rows per (block, key) bucket — the same skew
     guard minhash_candidate_pairs uses. A cluster of k near-identical
@@ -261,28 +232,20 @@ def simhash_neardup_pairs(
     pairs inside an over-full bucket beyond the cap are dropped — by
     construction those are near-identical clusters that exact /
     minhash dedup already collapses."""
-    if hash_family == "md5":
-        n_bits, block_bits = 60, 15
-        sig = simhash_sig_table(
-            docs, id_col, text_col, n_bits=n_bits, hash_fn=md5_hash60
-        )
-    else:
-        n_bits = 64
-        sig = simhash_sig_table(docs, id_col, text_col)
     # materialize the signature BEFORE posexplode: generator inputs
     # are inlined through collapsed projections, so exploding over
     # expressions of _sh would re-evaluate the signature per
     # generated row
-    sig = sig.localCheckpoint()
-    mask = (1 << block_bits) - 1
+    sig = simhash_sig_table(docs, id_col, text_col).localCheckpoint()
+    mask = (1 << SIMHASH_BLOCK_BITS) - 1
     blocked = sig.select(
         "_id",
         "_sh",
         F.posexplode(
             F.array(
                 *[
-                    F.shiftright("_sh", i * block_bits).bitwiseAND(F.lit(mask))
-                    for i in range(n_bits // block_bits)
+                    F.shiftright("_sh", i * SIMHASH_BLOCK_BITS).bitwiseAND(F.lit(mask))
+                    for i in range(SIMHASH_BITS // SIMHASH_BLOCK_BITS)
                 ]
             )
         ).alias("_blk", "_key"),

@@ -247,9 +247,7 @@ def _triples_batch_iter(
         )
 
 
-def emit_triples(
-    transcripts: DataFrame, ordered: bool = True, dedup_scope: str = "conv"
-) -> DataFrame:
+def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     """Transcripts → triples DataFrame (errors quarantined in-band).
 
     Cross-turn duplicate facts (the Conversation node re-asserted by
@@ -258,15 +256,12 @@ def emit_triples(
     (flatten.rb:85,120): per-doc merge in the UDF, global merge on the
     triple key.
 
-    dedup_scope:
-      "conv" (default) — only triples about shared Conversation nodes
-        go through the dedup shuffle. Turn IRIs and mention bnode
-        labels embed (conv_id, turn_idx), so every other triple is
-        unique by construction; at 10^12 turns this shrinks the dedup
-        exchange by ~50x (the full-table dropDuplicates was the
-        dominant stage: it shuffled every wide triple row).
-      "full" — dedup everything (for arbitrary documents whose
-        subjects may collide across docs).
+    ordered=True partitions turns by conv_id upstream, so the UDF
+    dedups the shared Conversation-node triples partition-locally and
+    nothing shuffles: turn IRIs and mention bnode labels embed
+    (conv_id, turn_idx), so every other triple is unique by
+    construction. ordered=False (un-partitioned input) dedups the full
+    table with one shuffle.
     """
     src = with_stable_turn_order(transcripts) if ordered else transcripts.select(
         "*", F.lit(None).cast("int").alias("next_turn_idx")
@@ -274,8 +269,8 @@ def emit_triples(
     triples = src.mapInPandas(_triples_batch_iter, schema=TRIPLE_SCHEMA)
     key = ["subj", "pred", "obj_value", "obj_is_iri", "obj_datatype",
            "obj_language", "graph"]
-    if dedup_scope == "full" or not ordered:
-        # arbitrary docs / un-partitioned streams: global shuffle dedup
+    if not ordered:
+        # un-partitioned input: global shuffle dedup
         return triples.dropDuplicates(key)
     # ordered path: conv_id-partitioned upstream → the UDF already
     # deduped shared-subject triples partition-locally; nothing shuffles

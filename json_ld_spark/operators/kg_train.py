@@ -14,7 +14,7 @@ Design constraints at 100 TB:
     equi-join on (bucket, local_rank) — co-partitioned, no skew
     (buckets are hash-balanced).
   * Deterministic: the probe hash is the cross-engine md5 family
-    (dedup.md5_hash60), so the ENTIRE sample — bucket assignment,
+    (hashfamily.md5_hash60), so the ENTIRE sample — bucket assignment,
     local ranks, probe arithmetic, accidental-positive filter — is
     replayed by the SQL oracle.
   * Filtered sampling: corruptions that collide with a TRUE (head,
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from json_ld_spark.operators.dedup import md5_hash60
+from json_ld_spark.operators.hashfamily import md5_hash60
 
 
 def negative_samples(

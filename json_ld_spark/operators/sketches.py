@@ -6,7 +6,7 @@ own ``approx_count_distinct`` is a fine production default, but its
 HLL++ registers are an implementation detail no other engine
 reproduces — nothing can gate it. These two sketches use the repo's
 cross-engine hash family (md5 prefix → 60-bit integer, the same
-family the dedup oracles replay: ``operators/dedup.py:md5_hash60``)
+family the dedup oracles replay: ``operators/hashfamily.py:md5_hash60``)
 and keep EVERY intermediate in exact integer arithmetic, so the
 DuckDB oracle replays register contents and estimates bit-for-bit:
 
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from json_ld_spark.operators.dedup import md5_hash60
+from json_ld_spark.operators.hashfamily import md5_hash60
 
 _HASH_BITS = 60
 _SCALE_SHIFT = 51  # Σ 2^-rank carried as Σ 2^(51-rank), exact bigint
@@ -213,7 +213,7 @@ def kmv_distinct(
 def cms_bucket(value_col, row_idx: int, w: int):
     """Count-min bucket for hash row ``row_idx``: the cross-engine
     md5 family over 'row|value', mod table width."""
-    from json_ld_spark.operators.dedup import md5_hash60
+    from json_ld_spark.operators.hashfamily import md5_hash60
 
     return F.pmod(
         md5_hash60(

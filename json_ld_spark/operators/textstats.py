@@ -652,7 +652,7 @@ def quality_classifier_scores(
     All JVM: split → transform(hash→weight) → aggregate — per-row
     expressions, no shuffle, no Python. At 100 TB this is the
     cheapest possible classifier pass."""
-    from json_ld_spark.operators.dedup import md5_hash60
+    from json_ld_spark.operators.hashfamily import md5_hash60
 
     norm = F.trim(
         F.regexp_replace(

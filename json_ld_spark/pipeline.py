@@ -22,13 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators import jsonld_ops
-from json_ld_spark.operators.canonicalize import (
-    apply_merge_map,
-    build_merge_map,
-    connected_components,
-    jaccard_filter,
-    minhash_candidate_pairs,
-)
+from json_ld_spark.operators.canonicalize import apply_merge_map, build_merge_map
+from json_ld_spark.operators.dedup import minhash_dedup_components
 
 LINEAGE_SCHEMA = (
     "stage string, conv_bucket int, status string, triple_count long, "
@@ -54,16 +49,10 @@ def alias_merge_map(
 
         rows = [(entity_iri(suffix), surface) for _, surface, suffix in GAZETTEER]
         aliases = spark.createDataFrame(rows, "entity_iri string, surface string")
-    pairs = minhash_candidate_pairs(
-        aliases, id_col="entity_iri", text_col="surface", num_hashes=32, bands=8
-    )
-    verified = jaccard_filter(
-        pairs, aliases, id_col="entity_iri", text_col="surface", threshold=0.85
-    )
-    comps = connected_components(
-        verified.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
-    )
-    return build_merge_map(comps)
+    return build_merge_map(minhash_dedup_components(
+        aliases, "entity_iri", "surface", threshold=0.85,
+        checkpoint_dir=checkpoint_dir,
+    ))
 
 
 def run_pipeline(

@@ -8,7 +8,7 @@ docs / 1.3M turns). This probe runs the SAME operators on synthetic
 corpora at 3 sizes up to ≥1M documents and logs per-stage wall times,
 so the curve — not a single point — is on record.
 
-Stages timed for dedup/CC (all on the xxhash64 production family):
+Stages timed for dedup/CC:
   shingle   hashed_shingle_sets (shared pass, materialized)
   pairs     minhash signatures → banding → capped self-join
   verify    exact-Jaccard join-back filter
@@ -81,9 +81,7 @@ def probe_size(spark, n_docs: int) -> dict:
     out["pairs_sec"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    verified = jaccard_filter(
-        pairs, docs, "doc_id", "text", threshold=0.8, shingle_sets=sets_
-    ).localCheckpoint()
+    verified = jaccard_filter(pairs, sets_, threshold=0.8).localCheckpoint()
     out["n_verified"] = verified.count()
     out["verify_sec"] = round(time.time() - t0, 2)
 

@@ -40,9 +40,7 @@ def summary(spark, sf_dir: str):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     t0 = time.time()
-    comp = minhash_dedup_components(
-        docs, threshold=0.3, hash_family="md5"
-    ).localCheckpoint()
+    comp = minhash_dedup_components(docs, threshold=0.3).localCheckpoint()
     n_rows = comp.count()
     wall = time.time() - t0
     digest = (
@@ -54,13 +52,9 @@ def summary(spark, sf_dir: str):
 
     # the VERIFIED edge set the CC actually ran on (same parameters
     # as minhash_dedup_components)
-    sets_ = hashed_shingle_sets(docs, "doc_id", "text", hash_family="md5")
-    pairs = minhash_candidate_pairs(
-        docs, "doc_id", "text", shingle_sets=sets_, hash_family="md5"
-    )
-    verified = jaccard_filter(
-        pairs, docs, "doc_id", "text", 0.3, shingle_sets=sets_
-    ).select("id_a", "id_b")
+    sets_ = hashed_shingle_sets(docs, "doc_id", "text")
+    pairs = minhash_candidate_pairs(docs, "doc_id", "text", shingle_sets=sets_)
+    verified = jaccard_filter(pairs, sets_, 0.3).select("id_a", "id_b")
     return comp, verified, n_rows, wall, n_components, digest
 
 

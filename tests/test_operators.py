@@ -1759,16 +1759,12 @@ def test_luhn_valid_known_numbers(spark):
 
 def test_simhash_sig_table_matches_expression_form(spark):
     """The codegen exploded-rows signature (simhash_sig_table) must be
-    bit-identical to the interpreted HOF fold (simhash_sig) — both
-    hash families. The table form replaced the expression form inside
+    bit-identical to the interpreted HOF fold (simhash_sig), the
+    reference form. The table form replaced the expression form inside
     simhash_neardup_pairs for the ~30× speedup; this pins equality."""
     import pyspark.sql.functions as F
 
-    from json_ld_spark.operators.dedup import (
-        md5_hash60,
-        simhash_sig,
-        simhash_sig_table,
-    )
+    from json_ld_spark.operators.dedup import simhash_sig, simhash_sig_table
 
     docs = spark.createDataFrame(
         [
@@ -1781,28 +1777,80 @@ def test_simhash_sig_table_matches_expression_form(spark):
         ],
         "doc_id long, text string",
     )
-    for kwargs in (
-        {},
-        {"n_bits": 60, "hash_fn": md5_hash60},
-    ):
-        expr = {
-            r["doc_id"]: r["_sh"]
-            for r in docs.select(
-                F.col("doc_id"), F.lower(F.col("text")).alias("_lt")
-            )
-            .select(
-                "doc_id",
-                simhash_sig(F.col("_lt"), pre_lowered=True, **kwargs).alias(
-                    "_sh"
-                ),
-            )
-            .collect()
-        }
-        table = {
-            r["_id"]: r["_sh"]
-            for r in simhash_sig_table(docs, **kwargs).collect()
-        }
-        assert expr == table, kwargs
+    expr = {
+        r["doc_id"]: r["_sh"]
+        for r in docs.select(
+            F.col("doc_id"), F.lower(F.col("text")).alias("_lt")
+        )
+        .select(
+            "doc_id", simhash_sig(F.col("_lt"), pre_lowered=True).alias("_sh")
+        )
+        .collect()
+    }
+    table = {r["_id"]: r["_sh"] for r in simhash_sig_table(docs).collect()}
+    assert expr == table
+
+
+def test_default_samplers_match_duckdb_md5_bucket(spark):
+    """With default arguments, the hash samplers select exactly the
+    rows DuckDB selects with the md5 family bucket
+    CAST(concat('0x', substring(md5(key || salt), 1, 15)) AS BIGINT)
+    mod 1e6 — the same rule the driver oracles replay."""
+    import duckdb
+
+    from json_ld_spark.operators.corpus import (
+        assign_splits,
+        deterministic_sample,
+        stratified_sample,
+        upsample_by_epochs,
+    )
+
+    rows = [(k, ("a", "b", "c")[k % 3]) for k in range(600)]
+    df = spark.createDataFrame(rows, "k long, src string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k BIGINT, src VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+
+    def duck(sql):
+        return sorted(tuple(r) for r in con.execute(sql).fetchall())
+
+    def bucket(salt):
+        return (
+            "(CAST(concat('0x', substring(md5(CAST(k AS VARCHAR) || "
+            f"'{salt}'), 1, 15)) AS BIGINT) % 1000000)"
+        )
+
+    b7, b_up = bucket("-7"), bucket("-up11")
+    got = sorted((r["k"],) for r in deterministic_sample(df, 0.3, "k").collect())
+    assert got == duck(f"SELECT k FROM t WHERE {b7} < 300000")
+
+    got = sorted((r["k"], r["split"]) for r in assign_splits(df, "k").collect())
+    assert got == duck(
+        f"SELECT k, CASE WHEN {b7} < 800000 THEN 'train' "
+        f"WHEN {b7} < 900000 THEN 'val' ELSE 'test' END FROM t"
+    )
+
+    rates = {"a": 0.5, "b": 0.2}
+    got = sorted(
+        (r["k"],) for r in stratified_sample(df, rates, "src", "k").collect()
+    )
+    assert got == duck(
+        f"SELECT k FROM t WHERE {b7} < CASE src WHEN 'a' THEN 500000 "
+        "WHEN 'b' THEN 200000 ELSE 0 END"
+    )
+
+    epochs = {"a": 2.5, "b": 0.5}
+    got = sorted(
+        (r["k"], r["copy_idx"])
+        for r in upsample_by_epochs(df, epochs, "src", "k").collect()
+    )
+    assert got == duck(
+        "SELECT k, unnest(range(n)) FROM ("
+        "  SELECT k, CASE src WHEN 'a' THEN 2 WHEN 'b' THEN 0 ELSE 1 END"
+        f"    + CASE WHEN {b_up} < CASE src WHEN 'a' THEN 500000"
+        "      WHEN 'b' THEN 500000 ELSE 0 END THEN 1 ELSE 0 END AS n"
+        "  FROM t)"
+    )
 
 
 def test_simhash_hot_bucket_cap(spark):
