@@ -34,6 +34,10 @@ def _cpu_steal_total() -> "tuple[int, int]":
         return 0, 1
 
 
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -59,16 +63,19 @@ def main() -> None:
     total = 0.0
 
     # headline A: full KG construction over the driver-provided tables
-    # (derive → window → expand/toRDF → dedup) — the oracle-aligned
-    # path; the sf-dir corpus is small, so this number is dominated by
-    # fixed Spark overhead and measures end-to-end latency, not rate
+    # (derive → window → triple template) — the oracle-aligned path;
+    # the sf-dir corpus is small, so this number is dominated by fixed
+    # Spark overhead and measures end-to-end latency, not rate.
+    # Emission is timed through the noop sink, which materializes every
+    # triple; count() would let Catalyst prune the assembled strings.
+    # The triple counts are taken once, outside the timed reps.
     kg_sec = float("inf")
-    n_triples = 0
+    n_triples = entry._triples(spark, sf_dir).count()
     kg_steal = None
     for _ in range(hreps):
         s0, j0 = _cpu_steal_total()
         t0 = time.time()
-        n_triples = entry._triples(spark, sf_dir).count()
+        _noop(entry._triples(spark, sf_dir))
         dt = time.time() - t0
         s1, j1 = _cpu_steal_total()
         if dt < kg_sec:
@@ -86,7 +93,7 @@ def main() -> None:
     n_convs = int(os.environ.get("SPARK_GRAFT_KG_CONVS", "20000"))
     tx = synthesize_transcripts(spark, n_convs=n_convs).localCheckpoint()
     n_turns = tx.count()
-    valid_triples(emit_triples(tx)).count()  # warmup
+    n_sustained = valid_triples(emit_triples(tx)).count()  # warmup
     # best-of-hreps with per-rep steal telemetry: the sandbox VM sees
     # host-level steal; the min-wall rep is the steal-free estimate
     # and its recorded steal% is the in-band proof (same policy as
@@ -94,13 +101,12 @@ def main() -> None:
     # swing: 2 reps both landed on stolen intervals; hreps=5 plus the
     # steal column makes that diagnosable from the JSON alone.
     sus_sec = float("inf")
-    n_sustained = 0
     sus_rep_secs: list = []
     sus_rep_steal: list = []
     for _ in range(hreps):
         s0, j0 = _cpu_steal_total()
         t0 = time.time()
-        n_sustained = valid_triples(emit_triples(tx)).count()
+        _noop(valid_triples(emit_triples(tx)))
         dt = time.time() - t0
         s1, j1 = _cpu_steal_total()
         sus_rep_secs.append(round(dt, 3))

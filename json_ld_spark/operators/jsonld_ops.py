@@ -1,39 +1,46 @@
-"""Spark operators for the KG pipeline: turn → JSON-LD document →
-expanded → node map → (subj, pred, obj) triples.
+"""Spark operators for the KG pipeline: turn → (subj, pred, obj) triples.
 
 Execution shape (SURVEY §3.1 Spark equivalent):
     read transcripts
       → window row_number/lead over (conv_id, turn_idx)   [stable order]
-      → mapInPandas(build doc + mention detect + expand + toRDF)
-      → triples DataFrame → global dedup of cross-turn nodes
+      → prepare_turns: key check, ts string, mention counts
+        (one regexp_count per gazetteer surface)
+      → one triple template per turn, inline'd   [JVM, no Python]
       → write (bucketed by conv_id)
 
-The UDF stage is embarrassingly parallel per turn — the reference's own
-streaming reader (streaming_reader.rb:29-54) is the license: triple
-emission never needs cross-document state. Blank nodes get
-per-document deterministic labels (utils.rb:283-310 adapted: namer
-prefix = conv/turn key) so no global counter exists at 10^12 scale.
+Each turn is a JSON-LD document over the one fixed ``KG_CONTEXT``
+(``build_turn_document`` + expand + toRDF in the pure core, which stays
+the reference). Under that context every string value is opaque to
+expansion (no ``@language``, no ``@type: @vocab``) and every emitted
+IRI has a fixed ``https:`` scheme, so the toRDF output of a turn is a
+fixed template over its columns: ``emit_triples`` assembles it with
+Catalyst expressions instead of crossing into Python per turn. Mention
+blank nodes get per-document labels (utils.rb:283-310 adapted: namer
+prefix = conv/turn key, counter in first-visit order = entity-id order
+of the kept surfaces), so no global counter exists at 10^12 scale.
 
-All Python execution is Arrow-batched (mapInPandas); mention counting
-is vectorized per surface over each batch (pandas .str.count), not
-per-row.
+``emit_triples_streaming_reader`` is the one emitter that still runs
+Python: it feeds the same prepared turns through the raw streaming
+key-order reader, so that reader stays exercised under the triple
+oracle.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from json_ld_spark.core.keywords import RDF_TYPE
 from json_ld_spark.sources.gazetteer import (
     CONV_NS,
     GAZETTEER,
     KG_CONTEXT,
     TURN_NS,
     VOCAB,
+    XSD,
     entity_iri,
 )
 
@@ -42,6 +49,12 @@ TRIPLE_SCHEMA = (
     "obj_value string, obj_is_iri boolean, obj_datatype string, "
     "obj_language string, graph string, error_code string, error_msg string"
 )
+TRIPLE_COLS = ["conv_id", "turn_idx", "subj", "pred", "obj_value",
+               "obj_is_iri", "obj_datatype", "obj_language", "graph",
+               "error_code", "error_msg"]
+
+INVALID_TURN_KEY = "invalid turn key"
+_INVALID_TURN_KEY_MSG = "conv_id and turn_idx must both be non-null"
 
 _NEXT_TURN_CONTEXT = {**KG_CONTEXT,
                       "nextTurn": {"@id": VOCAB + "nextTurn", "@type": "@id"}}
@@ -118,17 +131,19 @@ def with_stable_turn_order(
     """Stable turn ordering + nextTurn linkage (the north rule's
     window): row_number + lead over (conv_id, turn_idx).
 
+    turn_idx sorts nulls last, so a turn with a null key never takes
+    turn_rank 1 and is never a valid turn's nextTurn target (``lead``
+    of the last valid turn reads its null turn_idx).
+
     The explicit repartition(n, conv_id) serves two purposes: the
-    window reuses it (one shuffle total), and — critically — AQE never
-    coalesces a user-specified repartition. Without it, AQE sizes the
-    post-window partitions by shuffle BYTES and collapses a small-but-
-    CPU-heavy stage to one task, serializing the Python emission UDF
-    (the per-row cost is Python CPU, invisible to byte-based sizing).
+    window reuses it (one shuffle total), and AQE never coalesces a
+    user-specified repartition, so the emission stage keeps one task
+    per core however few bytes the shuffle moves.
     """
     if n_partitions is None:
         sc = transcripts.sparkSession.sparkContext
         n_partitions = sc.defaultParallelism * 2
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc_nulls_last())
     return transcripts.repartition(n_partitions, "conv_id").select(
         "*",
         F.row_number().over(w).alias("turn_rank"),
@@ -136,152 +151,134 @@ def with_stable_turn_order(
     )
 
 
-def _triples_batch_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: Arrow batch of turns → Arrow batch of triples."""
-    # imports inside the worker so the closure pickles cheaply
-    from json_ld_spark.core import api as core_api
-    from json_ld_spark.core.context import parse_context_cached
-    from json_ld_spark.core.errors import JsonLdError
-    from json_ld_spark.core.keywords import BlankNodeNamer
+def prepare_turns(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
+    """Per turn, every input the emitters need besides the raw columns:
+    ``key_ok`` (conv_id and turn_idx non-null), ``turn_rank``,
+    ``next_turn_idx``, ``ts_str`` (the xsd:dateTime lexical form) and
+    ``mentions``, an array of (entity_id, surface, count) structs for
+    the gazetteer surfaces found in ``text``, in entity-id order.
 
-    ctx = parse_context_cached(_NEXT_TURN_CONTEXT)  # once per worker (lru)
-    surface_patterns = [
-        (eid, surface, re.compile(re.escape(surface)))
-        for eid, surface, _ in GAZETTEER
-    ]
-    # partition-local dedup of shared-subject (Conversation) triples:
-    # the upstream exchange hash-partitions by conv_id, so all
-    # duplicates of a conv-level fact land in this iterator — deduping
-    # here replaces a full-table dropDuplicates shuffle (the dominant
-    # stage at scale). The iterator spans the whole partition.
-    seen_shared: set = set()
-
-    for pdf in batches:
-        ts_str = pdf["ts"].dt.strftime("%Y-%m-%dT%H:%M:%S")
-        # vectorized mention counting: one pass per gazetteer surface
-        # over the whole batch (never per-row regex compilation)
-        texts = pdf["text"].fillna("")
-        count_cols = [
-            (eid, surface, texts.str.count(pattern).tolist())
-            for eid, surface, pattern in surface_patterns
-        ]
-        # plain-list row access: Series.iloc in a row loop costs more
-        # than the JSON-LD algorithms themselves
-        conv_ids = pdf["conv_id"].tolist()
-        turn_idxs = pdf["turn_idx"].tolist()
-        roles = pdf["role"].tolist()
-        text_vals = pdf["text"].tolist()
-        tools = pdf["tool"].tolist()
-        ts_vals = ts_str.tolist()
-        next_idxs = pdf["next_turn_idx"].tolist()
-        rows: list[tuple] = []
-        for i in range(len(conv_ids)):
-            conv_id = conv_ids[i]
-            turn_idx = int(turn_idxs[i])
-            mentions = [
-                (eid, surface, int(cnts[i]))
-                for eid, surface, cnts in count_cols
-                if cnts[i] > 0
-            ]
-            next_idx = next_idxs[i]
-            doc = build_turn_document(
-                conv_id,
-                turn_idx,
-                roles[i] if pd.notna(roles[i]) else None,
-                text_vals[i] if pd.notna(text_vals[i]) else None,
-                tools[i] if pd.notna(tools[i]) else None,
-                ts_vals[i] if pd.notna(ts_vals[i]) else None,
-                int(next_idx) if pd.notna(next_idx) else None,
-                mentions,
-            )
-            namer = BlankNodeNamer(prefix=f"{conv_id}t{turn_idx}m")
-            try:
-                expanded = core_api.expand_with_context(doc, ctx)
-                # single-pass emitter (streaming_reader.rb parity):
-                # turn docs are trees with only labeled bnodes, so the
-                # output is identical to the node-map path, ~30% cheaper
-                triples = core_api.expanded_to_rdf_stream(expanded, namer=namer)
-            except JsonLdError as e:  # quarantine, never fail the task
-                rows.append(
-                    (conv_id, turn_idx, None, None, None, None, None, None,
-                     None, e.code, str(e))
-                )
-                continue
-            for t in triples:
-                subj = ("_:" + t.subject.value) if t.subject.kind == "bnode" else t.subject.value
-                obj_is_iri = t.obj.kind != "literal"
-                obj_value = (
-                    ("_:" + t.obj.value) if t.obj.kind == "bnode" else t.obj.value
-                )
-                if subj.startswith(CONV_NS):
-                    k = (subj, t.predicate.value, obj_value)
-                    if k in seen_shared:
-                        continue
-                    seen_shared.add(k)
-                rows.append(
-                    (
-                        conv_id,
-                        turn_idx,
-                        subj,
-                        t.predicate.value,
-                        obj_value,
-                        obj_is_iri,
-                        None if obj_is_iri else t.obj.datatype,
-                        None if obj_is_iri else t.obj.language,
-                        ("_:" + t.graph.value if t.graph.kind == "bnode" else t.graph.value)
-                        if t.graph is not None
-                        else None,
-                        None,
-                        None,
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "conv_id", "turn_idx", "subj", "pred", "obj_value",
-                "obj_is_iri", "obj_datatype", "obj_language", "graph",
-                "error_code", "error_msg",
-            ],
+    A count is the number of non-overlapping occurrences of the
+    literal surface (Python's ``str.count``; no surface is a substring
+    of another). ordered=False skips the window: every turn has rank 1
+    and no nextTurn."""
+    if ordered:
+        src = with_stable_turn_order(transcripts)
+    else:
+        src = transcripts.select(
+            "*", F.lit(1).alias("turn_rank"),
+            F.lit(None).cast("int").alias("next_turn_idx"),
         )
+    found = F.array(*[
+        F.struct(
+            F.lit(eid).alias("entity_id"),
+            F.lit(surface).alias("surface"),
+            F.regexp_count(F.col("text"), F.lit(f"\\Q{surface}\\E")).cast("int").alias("count"),
+        )
+        for eid, surface, _ in GAZETTEER
+    ])
+    return src.select(
+        "conv_id", "turn_idx", "role", "text", "tool", "turn_rank", "next_turn_idx",
+        (F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()).alias("key_ok"),
+        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss").alias("ts_str"),
+        F.filter(found, lambda m: m["count"] > 0).alias("mentions"),
+    )
+
+
+def _triple(subj: Column, pred: str, obj: Column, obj_is_iri: bool,
+            datatype: Optional[str] = None) -> Column:
+    return F.struct(
+        subj.alias("subj"), F.lit(pred).alias("pred"), obj.alias("obj_value"),
+        F.lit(obj_is_iri).alias("obj_is_iri"),
+        F.lit(datatype).cast("string").alias("obj_datatype"),
+    )
+
+
+def _turn_template() -> Column:
+    """The toRDF output of one prepared turn's document, as an array
+    of (subj, pred, obj_value, obj_is_iri, obj_datatype) structs; a
+    triple whose object is null (an absent optional field, or the
+    Conversation type past the conversation's first turn) is dropped
+    after the inline."""
+    conv_id, turn_idx = F.col("conv_id"), F.col("turn_idx")
+    turn = F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), turn_idx)
+    conv = F.concat(F.lit(CONV_NS), conv_id)
+    next_turn = F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), F.col("next_turn_idx"))
+    xsd_string, xsd_integer = XSD + "string", XSD + "integer"
+    fixed = F.array(
+        _triple(turn, RDF_TYPE, F.lit(VOCAB + "Turn"), True),
+        _triple(turn, VOCAB + "index", turn_idx.cast("string"), False, xsd_integer),
+        _triple(turn, VOCAB + "partOf", conv, True),
+        _triple(conv, RDF_TYPE,
+                F.when(F.col("turn_rank") == 1, F.lit(VOCAB + "Conversation")), True),
+        _triple(turn, VOCAB + "role", F.col("role"), False, xsd_string),
+        _triple(turn, VOCAB + "text", F.col("text"), False, xsd_string),
+        _triple(turn, VOCAB + "tool", F.col("tool"), False, xsd_string),
+        _triple(turn, VOCAB + "ts", F.col("ts_str"), False, XSD + "dateTime"),
+        _triple(turn, VOCAB + "nextTurn", next_turn, True),
+    )
+    bnode_prefix = F.concat(F.lit("_:"), conv_id, F.lit("t"), turn_idx, F.lit("m"))
+    entity = F.array(*[F.lit(_ENTITY_BY_ID[eid]) for eid, _, _ in GAZETTEER])
+
+    def mention(m: Column, k: Column) -> Column:
+        bnode = F.concat(bnode_prefix, k)
+        return F.array(
+            _triple(turn, VOCAB + "mentions", bnode, True),
+            _triple(bnode, RDF_TYPE, F.lit(VOCAB + "Mention"), True),
+            _triple(bnode, VOCAB + "label", m["surface"], False, xsd_string),
+            _triple(bnode, VOCAB + "score", m["count"].cast("string"), False, xsd_integer),
+            _triple(bnode, VOCAB + "of", F.element_at(entity, m["entity_id"] + 1), True),
+        )
+
+    return F.concat(fixed, F.flatten(F.transform(F.col("mentions"), mention)))
 
 
 def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     """Transcripts → triples DataFrame (errors quarantined in-band).
 
-    Cross-turn duplicate facts (the Conversation node re-asserted by
-    every turn) are globally deduplicated — the relational half of
-    create_node_map's add_value(allow_duplicate:false) merge
-    (flatten.rb:85,120): per-doc merge in the UDF, global merge on the
-    triple key.
+    Each prepared turn's triples come from one Catalyst template
+    (``_turn_template``), equal to the pure core's expand + toRDF of
+    ``build_turn_document`` under ``_NEXT_TURN_CONTEXT``. A turn whose
+    conv_id or turn_idx is null yields one quarantine row with
+    error_code ``invalid turn key`` and no triples.
 
-    ordered=True partitions turns by conv_id upstream, so the UDF
-    dedups the shared Conversation-node triples partition-locally and
-    nothing shuffles: turn IRIs and mention bnode labels embed
-    (conv_id, turn_idx), so every other triple is unique by
-    construction. ordered=False (un-partitioned input) dedups the full
-    table with one shuffle.
+    Cross-turn duplicate facts (the Conversation node re-asserted by
+    every turn) are deduplicated — the relational half of
+    create_node_map's add_value(allow_duplicate:false) merge
+    (flatten.rb:85,120). ordered=True emits the Conversation type only
+    on each conversation's first turn (turn_rank 1), so nothing
+    shuffles past the ordering window: turn IRIs and mention bnode
+    labels embed (conv_id, turn_idx), so every other triple is unique
+    by construction. ordered=False (un-partitioned input, no window)
+    dedups the full table with one shuffle.
     """
-    src = with_stable_turn_order(transcripts) if ordered else transcripts.select(
-        "*", F.lit(None).cast("int").alias("next_turn_idx")
+    turns = prepare_turns(transcripts, ordered)
+    key_ok = F.col("key_ok")
+    # a null array inlines (outer) as one all-null row: the quarantine row
+    triples = turns.select(
+        "conv_id", "turn_idx", "key_ok",
+        F.inline_outer(F.when(key_ok, _turn_template())),
+    ).filter(F.col("obj_value").isNotNull() | ~key_ok).select(
+        "conv_id", "turn_idx", "subj", "pred", "obj_value", "obj_is_iri",
+        "obj_datatype",
+        F.lit(None).cast("string").alias("obj_language"),
+        F.lit(None).cast("string").alias("graph"),
+        F.when(~key_ok, F.lit(INVALID_TURN_KEY)).alias("error_code"),
+        F.when(~key_ok, F.lit(_INVALID_TURN_KEY_MSG)).alias("error_msg"),
     )
-    triples = src.mapInPandas(_triples_batch_iter, schema=TRIPLE_SCHEMA)
-    key = ["subj", "pred", "obj_value", "obj_is_iri", "obj_datatype",
-           "obj_language", "graph"]
     if not ordered:
         # un-partitioned input: global shuffle dedup
-        return triples.dropDuplicates(key)
-    # ordered path: conv_id-partitioned upstream → the UDF already
-    # deduped shared-subject triples partition-locally; nothing shuffles
+        return triples.dropDuplicates(
+            ["subj", "pred", "obj_value", "obj_is_iri", "obj_datatype",
+             "obj_language", "graph"])
     return triples
 
 
 def _stream_batch_iter(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: turns → triples via the RAW streaming
-    key-order reader (core/streaming_reader.py) instead of
+    """mapInPandas worker: prepared turns → triples via the RAW
+    streaming key-order reader (core/streaming_reader.py) instead of
     expand+emit. Semantically identical output (turn documents are
     emitted in streaming-profile key order); exists so the streaming
     reader is exercised distributed and under the triple oracle."""
@@ -296,45 +293,31 @@ def _stream_batch_iter(
     )
 
     ctx = parse_context_cached(_NEXT_TURN_CONTEXT)
-    surface_patterns = [
-        (eid, surface, re.compile(re.escape(surface)))
-        for eid, surface, _ in GAZETTEER
-    ]
-    seen_shared: set = set()
     options = Options()
 
+    def opt(v):
+        return None if v is None or v != v else v  # null arrives as None/NaN
+
     for pdf in batches:
-        ts_str = pdf["ts"].dt.strftime("%Y-%m-%dT%H:%M:%S")
-        texts = pdf["text"].fillna("")
-        count_cols = [
-            (eid, surface, texts.str.count(pattern).tolist())
-            for eid, surface, pattern in surface_patterns
-        ]
-        conv_ids = pdf["conv_id"].tolist()
-        turn_idxs = pdf["turn_idx"].tolist()
-        roles = pdf["role"].tolist()
-        text_vals = pdf["text"].tolist()
-        tools = pdf["tool"].tolist()
-        ts_vals = ts_str.tolist()
-        next_idxs = pdf["next_turn_idx"].tolist()
         rows: list[tuple] = []
-        for i in range(len(conv_ids)):
-            conv_id = conv_ids[i]
-            turn_idx = int(turn_idxs[i])
-            mentions = [
-                (eid, surface, int(cnts[i]))
-                for eid, surface, cnts in count_cols
-                if cnts[i] > 0
-            ]
-            next_idx = next_idxs[i]
+        # plain-list row access: Series.iloc in a row loop costs more
+        # than the JSON-LD algorithms themselves
+        for conv_id, turn_idx, role, text, tool, ts_str, next_idx, rank, mentions, key_ok in zip(
+            *(pdf[c].tolist() for c in (
+                "conv_id", "turn_idx", "role", "text", "tool", "ts_str",
+                "next_turn_idx", "turn_rank", "mentions", "key_ok"))
+        ):
+            turn_idx, next_idx = opt(turn_idx), opt(next_idx)
+            if not key_ok:
+                rows.append((conv_id, None if turn_idx is None else int(turn_idx),
+                             None, None, None, None, None, None, None,
+                             INVALID_TURN_KEY, _INVALID_TURN_KEY_MSG))
+                continue
+            turn_idx = int(turn_idx)
             doc = build_turn_document(
-                conv_id, turn_idx,
-                roles[i] if pd.notna(roles[i]) else None,
-                text_vals[i] if pd.notna(text_vals[i]) else None,
-                tools[i] if pd.notna(tools[i]) else None,
-                ts_vals[i] if pd.notna(ts_vals[i]) else None,
-                int(next_idx) if pd.notna(next_idx) else None,
-                mentions,
+                conv_id, turn_idx, opt(role), opt(text), opt(tool), opt(ts_str),
+                None if next_idx is None else int(next_idx),
+                [(m["entity_id"], m["surface"], m["count"]) for m in mentions],
             )
             reader = StreamingReader(options)
             reader.namer = BlankNodeNamer(prefix=f"{conv_id}t{turn_idx}m")
@@ -367,15 +350,14 @@ def _stream_batch_iter(
                 continue
             for t in out:
                 subj = ("_:" + t.subject.value) if t.subject.kind == "bnode" else t.subject.value
+                # the Conversation node is asserted by every turn;
+                # keep it on the conversation's first turn only
+                if rank != 1 and subj.startswith(CONV_NS):
+                    continue
                 obj_is_iri = t.obj.kind != "literal"
                 obj_value = (
                     ("_:" + t.obj.value) if t.obj.kind == "bnode" else t.obj.value
                 )
-                if subj.startswith(CONV_NS):
-                    k = (subj, t.predicate.value, obj_value)
-                    if k in seen_shared:
-                        continue
-                    seen_shared.add(k)
                 rows.append(
                     (
                         conv_id, turn_idx, subj, t.predicate.value, obj_value,
@@ -387,23 +369,19 @@ def _stream_batch_iter(
                         None, None,
                     )
                 )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "conv_id", "turn_idx", "subj", "pred", "obj_value",
-                "obj_is_iri", "obj_datatype", "obj_language", "graph",
-                "error_code", "error_msg",
-            ],
-        )
+        yield pd.DataFrame(rows, columns=TRIPLE_COLS)
 
 
 def emit_triples_streaming_reader(transcripts: DataFrame) -> DataFrame:
     """Transcripts → triples via the raw streaming key-order reader —
     the alternate single-pass emission path (streaming_reader.rb
-    parity), distributed. Same partition-local conv-level dedup as
-    emit_triples; the driver gates it against the same triple oracle."""
-    src = with_stable_turn_order(transcripts)
-    return src.mapInPandas(_stream_batch_iter, schema=TRIPLE_SCHEMA)
+    parity), distributed. It reads the same ``prepare_turns`` columns
+    as ``emit_triples`` (so key checks, timestamps and mention
+    detection are defined once) and keeps the Conversation type on
+    each conversation's first turn; the driver gates it against the
+    same triple oracle."""
+    return prepare_turns(transcripts).mapInPandas(
+        _stream_batch_iter, schema=TRIPLE_SCHEMA)
 
 
 EXPAND_SCHEMA = (

@@ -1,7 +1,7 @@
 """End-to-end KG construction pipeline (BASELINE.json north_rule):
 
-    transcripts → stable turn order → mention detect + expand + toRDF
-      → global node dedup → alias canonicalization (minhash + CC)
+    transcripts → stable turn order → mention counts + per-turn triple
+      template (expand + toRDF, JVM-native) → alias canonicalization (minhash + CC)
       → bucketed graph_triples sink + per-partition lineage/metrics
 
 Checkpoint-resume: the sink is partitioned by conv_bucket =

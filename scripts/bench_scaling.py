@@ -144,7 +144,7 @@ Raw data: `BENCH/scale_probe.json`; reproduce with
             f"""# BENCH — two-parallelism scaling evidence
 
 Same job (synthesized transcripts → stable-order window → mention
-detection + JSON-LD expand + toRDF → partition-local dedup → count),
+detection + per-turn triple template → count),
 same input ({r[2]['turns']} turns from {n_convs} conversations,
 seed 42), measured after one warmup pass, each run CPU-pinned with
 `taskset` to exactly its core budget so a small-parallelism baseline

@@ -14,7 +14,7 @@ Stages timed for dedup/CC:
   verify    exact-Jaccard join-back filter
   cc        alternating large-star/small-star to fixpoint (+rounds)
 
-Emission: synthesize → stable-order window → expand/toRDF → dedup →
+Emission: synthesize → stable-order window → triple template →
 count (same job as bench_scaling's worker, one size point per corpus).
 
 Near-linearity check: for each consecutive size pair the probe prints

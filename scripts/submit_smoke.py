@@ -6,7 +6,7 @@ zip with NO repo checkout on the executors' path.
         --py-files dist/json_ld_spark.zip scripts/submit_smoke.py
 
 Runs the core pipeline end-to-end (synthesize -> stable order ->
-mention detection -> JSON-LD expand/toRDF -> dedup) plus one
+mention detection -> per-turn triple template) plus one
 canonicalization pass, and prints one JSON line. Imports of
 json_ld_spark resolve from the zip spark-submit shipped — this file
 deliberately does NOT sys.path.insert the repo root.

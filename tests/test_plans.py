@@ -61,6 +61,21 @@ def test_emission_partitioning_is_pinned(spark):
     assert "REPARTITION_BY_NUM" in plan or "hashpartitioning(conv_id" in plan
 
 
+def test_emission_is_jvm_native_with_one_exchange(spark):
+    """Triple emission runs no Python: no MapInPandas / Arrow / batch
+    Python UDF node, and the conv_id repartition feeding the ordering
+    window is the plan's only shuffle."""
+    from json_ld_spark.operators.jsonld_ops import emit_triples
+    from json_ld_spark.sources.transcripts import synthesize_transcripts
+
+    t = synthesize_transcripts(spark, n_convs=5, shuffle=False)
+    plan = explain_str(emit_triples(t))
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
+    tree = plan.split("\n\n(1) ")[0]
+    assert tree.count("Exchange") == 1
+
+
 def test_exact_dedup_single_shuffle(spark):
     from json_ld_spark.operators.dedup import exact_dedup_groups
 

@@ -51,9 +51,37 @@ def test_synthesis_is_deterministic_across_parallelism(spark, transcripts):
     )
 
 
-def test_triples_match_pure_core(spark, transcripts):
-    """The distributed emission must equal the pure core run per turn —
-    the Spark layer adds no semantics (SURVEY §7.1 rationale)."""
+_TURN_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+
+
+def _edge_transcripts(spark):
+    """Hand-made turns covering what the synthetic generator never
+    produces: null optional fields, empty text, a repeated surface and
+    adjacent surfaces, unicode and JSON-looking text, gapped and
+    negative turn_idx, a single-turn conversation and a conv_id with a
+    space."""
+    ts = datetime.datetime(2024, 5, 6, 7, 8, 9)
+    rows = [
+        ("e1", 0, None, None, None, None),
+        ("e1", 1, "user", "", None, ts),
+        ("e1", 5, "assistant", "Paris, Paris and ParisParis; KyotoNairobi",
+         None, ts),
+        ("e1", 9, "tool",
+         'naïve café 日本語 — {"@id": "Alan Turing", "@type": "@vocab"}',
+         "search", ts),
+        ("e2", -3, "user", "Globex spark window", None, ts),
+        ("e2", 4, None, "Initech", "python", None),
+        ("single", 7, "user", "only one turn: stream filter", None, ts),
+        ("conv with space", 0, "user", "Acme Corp", None, ts),
+        ("conv with space", 1, "assistant", "warp drive", None, ts),
+    ]
+    return spark.createDataFrame(rows, _TURN_SCHEMA)
+
+
+def _assert_triples_match_pure_core(transcripts):
     from json_ld_spark.core import api as core_api
     from json_ld_spark.core.context import parse_context_cached
     from json_ld_spark.core.keywords import BlankNodeNamer
@@ -90,26 +118,66 @@ def test_triples_match_pure_core(spark, transcripts):
                  t.obj.language if t.obj.kind == "literal" else None)
             )
 
-    got = {
+    got = [
         (r["subj"], r["pred"], r["obj_value"], r["obj_is_iri"],
          r["obj_datatype"], r["obj_language"])
         for r in valid_triples(emit_triples(transcripts)).collect()
-    }
-    assert got == expected
+    ]
+    assert len(got) == len(set(got))  # no duplicate triple survives
+    assert set(got) == expected
+
+
+def test_triples_match_pure_core(spark, transcripts):
+    """The distributed emission must equal the pure core run per turn —
+    the Spark layer adds no semantics (SURVEY §7.1 rationale)."""
+    _assert_triples_match_pure_core(transcripts)
+
+
+def test_triples_match_pure_core_edge_frame(spark):
+    _assert_triples_match_pure_core(_edge_transcripts(spark))
+
+
+def _assert_quarantine_contract(spark, emitter):
+    """A malformed turn must quarantine, not fail the job: a null
+    turn_idx or conv_id yields one ``invalid turn key`` row and no
+    triples, and never becomes a nextTurn target or the turn that
+    carries the Conversation node; a timestamp outside pandas'
+    nanosecond range (1677-2262) formats like any other."""
+    from json_ld_spark.operators import jsonld_ops
+    from json_ld_spark.sources.gazetteer import CONV_NS, VOCAB
+
+    rows = [
+        ("c1", 0, "user", "fine text", None, datetime.datetime(2024, 1, 1)),
+        ("c1", None, "user", "no index", None, datetime.datetime(2024, 1, 1)),
+        (None, 3, "user", "no conversation", None, datetime.datetime(2024, 1, 1)),
+        ("c2", 0, "user", "far future", None, datetime.datetime(2300, 1, 2, 3, 4, 5)),
+        ("c2", 1, "user", "far past", None, datetime.datetime(1600, 1, 2, 3, 4, 5)),
+    ]
+    out = getattr(jsonld_ops, emitter)(spark.createDataFrame(rows, _TURN_SCHEMA))
+    bad = sorted(
+        (r["conv_id"] or "", r["turn_idx"] if r["turn_idx"] is not None else -1,
+         r["error_code"], r["subj"])
+        for r in quarantined(out).collect()
+    )
+    assert bad == [("", 3, "invalid turn key", None),
+                   ("c1", -1, "invalid turn key", None)]
+    ok = valid_triples(out).collect()
+    assert not any("None" in (r["subj"] + r["obj_value"]) for r in ok)
+    assert not any(r["pred"] == VOCAB + "nextTurn"
+                   for r in ok if r["conv_id"] == "c1")
+    conv_nodes = [(r["subj"], r["turn_idx"]) for r in ok if r["subj"].startswith(CONV_NS)]
+    assert sorted(conv_nodes) == [(CONV_NS + "c1", 0), (CONV_NS + "c2", 0)]
+    ts = sorted(r["obj_value"] for r in ok if r["pred"] == VOCAB + "ts")
+    assert ts == ["1600-01-02T03:04:05", "2024-01-01T00:00:00",
+                  "2300-01-02T03:04:05"]
 
 
 def test_quarantine_contract(spark):
-    """A malformed turn must quarantine, not fail the job."""
-    rows = [
-        ("c1", 0, "user", "fine text", None, datetime.datetime(2024, 1, 1)),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    out = emit_triples(df)
-    assert quarantined(out).count() == 0
-    assert valid_triples(out).count() > 0
+    _assert_quarantine_contract(spark, "emit_triples")
+
+
+def test_quarantine_contract_streaming_reader(spark):
+    _assert_quarantine_contract(spark, "emit_triples_streaming_reader")
 
 
 def test_pipeline_resume(spark, transcripts):
