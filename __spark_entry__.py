@@ -9,7 +9,10 @@ whose SQL twins the oracles below embed.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -996,7 +999,6 @@ def _stage_ordered_batches(base: str, parts) -> str:
     increasing mtimes — the file source orders batches by modification
     time, which is what makes the replay's batch sequence (and
     therefore watermark/state evolution) deterministic."""
-    import glob as _glob
     import shutil
 
     in_dir = os.path.join(base, "in")
@@ -1004,7 +1006,7 @@ def _stage_ordered_batches(base: str, parts) -> str:
     for i, part in enumerate(parts):
         tmp = os.path.join(base, f"tmp{i}")
         part.coalesce(1).write.parquet(tmp)
-        src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        src = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
         dest = os.path.join(in_dir, f"batch{i}.parquet")
         shutil.copy(src, dest)
         os.utime(dest, (1_700_000_000 + i * 1000,) * 2)
@@ -3136,7 +3138,7 @@ _HB_K = 2
 _HB_B = 8
 
 
-def q_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_hyperball_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperBall neighborhood-function estimation over the KG
     (Boldi & Vigna 2013): per-node HLL counters propagated 2 rounds
     along co-occurrence edges with max-merge — the web-scale
@@ -4313,165 +4315,45 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+def _latest_driver_rows() -> dict[str, tuple[int, dict]]:
+    """name → (round, row) of each query's latest driver row across the
+    committed CORRECTNESS_r*.json records (rounds compared as integers)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    records = sorted(
+        (int(re.search(r"_r(\d+)\.json$", p).group(1)), p)
+        for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
+    )
+    latest: dict[str, tuple[int, dict]] = {}
+    for rnd, path in records:
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                latest[name] = (rnd, row)
+    return latest
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry. ORDER MATTERS for driver verification: the
-    round driver oracle-checks the FIRST ~50 dict entries, so the
-    registry is ordered by verification debt — (1) the 50 queries
-    never driver-checked through r4 (four r5 additions took window
-    slots of queries the r4 judge independently DuckDB-probed, which
-    moved to block 1b), (2) the 10 whose last green driver row is
-    r1–r3, (3) the 50 verified green in r4 (CORRECTNESS_r04.json),
-    each block in stable prior order, then (1c at the tail of block
-    1b / after block 3) the remaining r5 additions — every entry,
-    windowed or not, is replayed vs DuckDB by
-    tests/test_oracle_parity.py at sf0.001 and was hand-probed at
-    sf0.01 (scripts/oracle_check.py) when added."""
-    return {
-        # -- block 1: never driver-verified through r4 (50) ----------
-        # bm25_retrieval / fuzzy_entity_match (new in r5, zero prior
-        # driver evidence) take the window slots of hll_distinct_users
-        # / events_pivot, which the r4 judge independently DuckDB-
-        # probed OK (VERDICT "untested*-check" set) — maximizes queries
-        # with at least one external verification.
-        "bm25_retrieval": q_bm25_retrieval,
-        "fuzzy_entity_match": q_fuzzy_entity_match,
-        "kmv_distinct_users": q_kmv_distinct_users,
-        "entity_adamic_adar": q_entity_adamic_adar,
-        "events_rollup": q_events_rollup,
-        "event_bursts": q_event_bursts,
-        "pii_redaction": q_pii_redaction,
-        "curriculum_buckets": q_curriculum_buckets,
-        "gif_decode": q_gif_decode,
-        "adpcm_decode": q_adpcm_decode,
-        "flac_decode": q_flac_decode,
-        "warc_ingest": q_warc_ingest,
-        "url_canonicalize": q_url_canonicalize,
-        "html_extract": q_html_extract,
-        "kg_negative_samples": q_kg_negative_samples,
-        "semdedup": q_semdedup,
-        "crawl_domain_stats": q_crawl_domain_stats,
-        "bpe_train_encode": q_bpe_train_encode,
-        "robots_filter": q_robots_filter,
-        "quality_classifier": q_quality_classifier,
-        "stream_minhash_dedup": q_stream_minhash_dedup,
-        "exact_substring_spans": q_exact_substring_spans,
-        "loss_mask_spans": q_loss_mask_spans,
-        "contrastive_pairs": q_contrastive_pairs,
-        "conversation_quality": q_conversation_quality,
-        "cms_user_counts": q_cms_user_counts,
-        "cms_user_estimate": q_cms_user_estimate,
-        "stream_cms_counts": q_stream_cms_counts,
-        "bloom_user_filter": q_bloom_user_filter,
-        "pii_luhn_cards": q_pii_luhn_cards,
-        "session_window_overlap": q_session_window_overlap,
-        "events_unpivot": q_events_unpivot,
-        "neardup_canonical": q_neardup_canonical,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "event_transitions": q_event_transitions,
-        "bm25_scores": q_bm25_scores,
-        "embedding_quantize": q_embedding_quantize,
-        "weighted_sample": q_weighted_sample,
-        "stream_hll_distinct": q_stream_hll_distinct,
-        "stream_sessionize": q_stream_sessionize,
-        "pca_top_component": q_pca_top_component,
-        "table_profile": q_table_profile,
-        "mention_kwic": q_mention_kwic,
-        "pack_turns": q_pack_turns,
-        "dup_ngram_frac": q_dup_ngram_frac,
-        "dedup_incremental": q_dedup_incremental,
-        "chunk_documents_bpe": q_chunk_documents_bpe,
-        "bpe_train_merges": q_bpe_train_merges,
-        "pack_chunks_bpe": q_pack_chunks_bpe,
-        # -- block 1b: never driver-verified, but independently
-        # DuckDB-probed OK by the r4 judge (displaced from the window
-        # by the four r5 additions above) -----------------------------
-        "hll_distinct_users": q_hll_distinct_users,
-        "events_pivot": q_events_pivot,
-        "entity_kcore": q_entity_kcore,
-        "jaccard_prefix_join": q_jaccard_prefix_join,
-        # -- block 1c: new in round 5 after the window filled (in-repo
-        # oracle-parity gated; outside the driver's ~50-query window) --
-        "rdfs_entailment": q_rdfs_entailment,
-        "bgp_match": q_bgp_match,
-        "triple_provenance": q_triple_provenance,
-        "heavy_hitters": q_heavy_hitters,
-        "histogram_quantiles": q_histogram_quantiles,
-        "ks_drift": q_ks_drift,
-        "dpo_pairs": q_dpo_pairs,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "entity_sssp": q_entity_sssp,
-        "hyperball_neighborhood": q_hyperball,
-        "entity_walks": q_entity_walks,
-        "kg_snapshot_diff": q_kg_snapshot_diff,
-        "kg_scd2_merge": q_kg_scd2_merge,
-        "rrf_fusion": q_rrf_fusion,
-        "char_entropy": q_char_entropy,
-        "kg_validate": q_kg_validate,
-        "capped_sample": q_capped_sample,
-        # -- block 2: last green driver row is r1–r3 (10) ------------
-        "dedup_keep": q_dedup_keep,
-        "dedup_keep_best": q_dedup_keep_best,
-        "chunk_documents": q_chunk_documents,
-        "pack_chunks": q_pack_chunks,
-        "deterministic_sample": q_deterministic_sample,
-        "events_sessionize": q_events_sessionize,
-        "lineitem_agg": q_lineitem_agg,
-        "revenue_by_nation": q_revenue_by_nation,
-        "events_daily": q_events_daily,
-        "top_suppliers_window": q_top_suppliers_window,
-        # -- block 3: green in CORRECTNESS_r04.json (50) -------------
-        "transcripts_derive": q_transcripts_derive,
-        "turn_ordering": q_turn_ordering,
-        "kg_triples_meta": q_kg_triples_meta,
-        "kg_triples_mentions": q_kg_triples_mentions,
-        "kg_triple_counts": q_kg_triple_counts,
-        "entity_cooccurrence": q_entity_cooccurrence,
-        "entity_pagerank": q_entity_pagerank,
-        "entity_pagerank_directed": q_entity_pagerank_directed,
-        "doc_stats": q_doc_stats,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "simhash_pairs": q_simhash_pairs,
-        "minhash_components": q_minhash_components,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "ann_brute_topk": q_ann_brute_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_lsh_batch": q_ann_lsh_batch,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_ivf_batch": q_ann_ivf_batch,
-        "kg_documents": q_kg_documents,
-        "kg_node_docs": q_kg_node_docs,
-        "kg_frame_conversations": q_kg_frame_conversations,
-        "canonicalized_triples": q_canonicalized_triples,
-        "kg_triples_stream_reader": q_kg_triples_stream_reader,
-        "rdf_lists_reconstitute": q_rdf_lists_reconstitute,
-        "jsonld_expand_table": q_jsonld_expand_table,
-        "multimodal_plan": q_multimodal_plan,
-        "multimodal_decode": q_multimodal_decode,
-        "stream_triples": q_stream_triples,
-        "stream_turn_chain": q_stream_turn_chain,
-        "stream_windowed_counts": q_stream_windowed_counts,
-        "stream_turn_rate": q_stream_turn_rate,
-        "stream_dedup": q_stream_dedup,
-        "repetition_stats": q_repetition_stats,
-        "decontaminate": q_decontaminate,
-        "entity_triangles": q_entity_triangles,
-        "entity_khop": q_entity_khop,
-        "entity_pmi": q_entity_pmi,
-        "entity_communities": q_entity_communities,
-        "lm_quality_scores": q_lm_quality_scores,
-        "train_val_split": q_train_val_split,
-        "domain_mix_sample": q_domain_mix_sample,
-        "domain_upsample": q_domain_upsample,
-        "audio_features": q_audio_features,
-        "event_props": q_event_props,
-        "events_asof": q_events_asof,
-        "events_in_windows": q_events_in_windows,
-        "source_percentiles": q_source_percentiles,
-    }
+    """Query registry: every module-level ``q_<name>`` function, keyed
+    by ``<name>``.
+
+    ORDER MATTERS: the round driver oracle-checks only the first ~50
+    entries, so the registry is sorted by verification debt, read from
+    each query's latest row in CORRECTNESS_r*.json: queries with no
+    driver row first, then red rows (rows, schema or hash mismatch, or
+    an error), then green rows oldest round first. Ties keep definition
+    order. Every entry, windowed or not, is replayed against DuckDB by
+    tests/test_oracle_parity.py."""
+    latest = _latest_driver_rows()
+
+    def debt(fn: Callable) -> tuple[int, int]:
+        rnd, row = latest.get(fn.__name__[2:], (0, None))
+        if row is None:
+            return (0, 0)
+        green = (not row["err"] and row["rows_match"]
+                 and row["schema_match"] and row["hash_match"])
+        return (2, rnd) if green else (1, 0)
+
+    fns = [fn for name, fn in globals().items() if name.startswith("q_")]
+    return {fn.__name__[2:]: fn for fn in sorted(fns, key=debt)}
 
 
 def _mention_chain_cte(t: str, m: str, r: str, b: str,
@@ -4581,28 +4463,7 @@ def _rdfs_oracle_sql() -> str:
              '{CONV_NS}' || conv_id AS conv, *
       FROM t
     ),
-    facts AS (
-      SELECT turn AS subj, '{RDFNS}type' AS pred,
-             '{VOCAB}Turn' AS obj_value, TRUE AS obj_is_iri FROM base
-      UNION ALL SELECT turn, '{VOCAB}index', CAST(turn_idx AS VARCHAR),
-                       FALSE FROM base
-      UNION ALL SELECT turn, '{VOCAB}partOf', conv, TRUE FROM base
-      UNION ALL SELECT DISTINCT conv, '{RDFNS}type',
-                       '{VOCAB}Conversation', TRUE FROM base
-      UNION ALL SELECT turn, '{VOCAB}role', role, FALSE FROM base
-      UNION ALL SELECT turn, '{VOCAB}text', text, FALSE FROM base
-      UNION ALL SELECT turn, '{VOCAB}tool', tool, FALSE FROM base
-                WHERE tool IS NOT NULL
-      UNION ALL SELECT turn, '{VOCAB}ts',
-                       strftime(ts, '%Y-%m-%dT%H:%M:%S'), FALSE FROM base
-      UNION ALL SELECT turn, '{VOCAB}nextTurn',
-                       '{TURN_NS}' || conv_id || '/' || next_turn_idx, TRUE
-                FROM base WHERE next_turn_idx IS NOT NULL
-      UNION ALL SELECT turn, '{VOCAB}mentions', bn, TRUE FROM b
-      UNION ALL SELECT bn, '{RDFNS}type', '{VOCAB}Mention', TRUE FROM b
-      UNION ALL SELECT bn, '{VOCAB}label', surface, FALSE FROM b
-      UNION ALL SELECT bn, '{VOCAB}score', CAST(cnt AS VARCHAR), FALSE FROM b
-      UNION ALL SELECT bn, '{VOCAB}of', iri, TRUE FROM b
+    facts AS ({_triples_union_arms('base', 'b')}
       UNION ALL SELECT iri, '{RDFNS}type', cls, TRUE
                 FROM (VALUES {vals(O.ENTITY_TYPES)}) AS et(iri, cls)
     ),
@@ -4815,7 +4676,7 @@ def oracle_sql() -> dict[str, str]:
         UNION ALL
         SELECT bn, '{VOCAB}of', iri, TRUE, NULL, NULL, NULL FROM b
         """,
-        "kg_triple_counts": _BASE_CTE.replace("WITH t AS", "WITH t AS") + f"""
+        "kg_triple_counts": _BASE_CTE + f"""
         , meta AS (
           SELECT turn AS subj FROM base
           UNION ALL SELECT turn FROM base

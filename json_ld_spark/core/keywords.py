@@ -141,15 +141,6 @@ def is_graph_object(value: Any) -> bool:
     ) <= {"@context", "@id", "@index", "@graph"}
 
 
-def is_simple_graph_object(value: Any) -> bool:
-    """Graph object without @id. Parity: utils.rb:68-70."""
-    return is_graph_object(value) and "@id" not in value
-
-
-def is_default_object(value: Any) -> bool:
-    return isinstance(value, dict) and "@default" in value
-
-
 def is_scalar(value: Any) -> bool:
     return isinstance(value, (str, int, float, bool))
 

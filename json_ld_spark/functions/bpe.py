@@ -171,12 +171,6 @@ def bpe_tokens(text_col, pre_normalized: bool = False) -> Column:
     )
 
 
-def bpe_token_count(text_col) -> Column:
-    """BPE token count as a column expression (the real-tokenizer
-    replacement for the regex proxy in textstats.token_count_bpe_ish)."""
-    return F.size(bpe_tokens(text_col))
-
-
 def bpe_sql_norm(inner_sql: str) -> str:
     """DuckDB twin of ``_normalized`` — shared by the encode oracle
     and the distributed-training oracle."""

@@ -9,8 +9,7 @@ local[N]):
     executor-python memory so partitions spill, not OOM.
   - shuffle.partitions sized by caller (≈ cores locally; thousands on
     a real cluster).
-  - Iceberg catalog configured when the runtime jars are present;
-    parquet fallback otherwise (sandbox has no Iceberg jars).
+  - Sinks write parquet; no Iceberg catalog is configured.
 """
 
 from __future__ import annotations
@@ -19,19 +18,6 @@ import os
 from typing import Optional
 
 from pyspark.sql import SparkSession
-
-
-def iceberg_available(spark: Optional[SparkSession] = None) -> bool:
-    """Best-effort check for Iceberg runtime jars on the classpath."""
-    if spark is None:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def build_session(

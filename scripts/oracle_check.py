@@ -1,6 +1,7 @@
 """Driver-contract parity probe: run selected __spark_entry__ queries
 AND their DuckDB oracles side-by-side, compare sorted rows (the same
-compare the round driver performs, minus its value-hash packaging).
+compare tests/test_oracle_parity.py performs, minus the driver's
+value-hash packaging).
 
 Usage: python scripts/oracle_check.py [sf_dir] [query ...]
        (no query args = every query that has an oracle entry)
@@ -8,32 +9,16 @@ Usage: python scripts/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _norm(v):
-    # every value wrapped as (tag, payload) so sort keys stay
-    # homogeneous per column even when NULLs mix with ints/strings
-    if v is None:
-        return (0, "")
-    if isinstance(v, bool):
-        return (1, int(v))
-    if isinstance(v, float) or str(type(v).__name__) == "Decimal":
-        v = float(v)
-        if math.isnan(v):
-            return (1, "NaN")
-        return (1, round(v, 9))
-    if isinstance(v, list):
-        return (1, tuple(_norm(x) for x in v))
-    return (1, v)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
 def main() -> int:
-    import duckdb
+    from test_oracle_parity import _duck, _normalize
 
     import __spark_entry__ as E
     from json_ld_spark.plans.session import build_session
@@ -47,20 +32,13 @@ def main() -> int:
 
     spark = build_session(app_name="oracle-check", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    con = _duck(sf)
     # per-process spill directory: two concurrent probes sharing the
     # default ".tmp" corrupt each other's temp files (seen as an
     # IOException mid-sweep on the k-core oracle's spill)
     con.execute(
         f"PRAGMA temp_directory='/tmp/duckdb_spill_{os.getpid()}'"
     )
-    for t in ["documents", "embeddings", "lineitem", "orders", "customer",
-              "nation", "supplier", "events", "part", "region"]:
-        p = f"{sf}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
 
     failures = 0
     for name in names:
@@ -71,17 +49,10 @@ def main() -> int:
         try:
             sdf = queries[name](spark, sf)
             scols = sdf.columns
-            srows = sorted(
-                tuple(_norm(v) for v in row)
-                for row in ((r[c] for c in sorted(scols)) for r in sdf.collect())
-            )
+            srows = _normalize([tuple(r) for r in sdf.collect()], scols)
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]
-            fetched = cur.fetchall()
-            idx = [ocols.index(c) for c in sorted(ocols)]
-            orows = sorted(
-                tuple(_norm(row[i]) for i in idx) for row in fetched
-            )
+            orows = _normalize(cur.fetchall(), ocols)
         except Exception as exc:  # surface, keep probing the rest
             print(f"{name}: ERROR {type(exc).__name__}: {exc}")
             failures += 1

@@ -12,6 +12,8 @@ import duckdb
 import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
+# the round driver oracle-checks this many leading queries() entries
+DRIVER_WINDOW = 50
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -111,6 +113,36 @@ def test_every_query_has_oracle_and_docs():
     survey = open("SURVEY.md").read()
     missing = sorted(q for q in qs if q not in survey)
     assert not missing, f"queries not documented in SURVEY.md: {missing}"
+
+
+def test_oracle_window_covers_verification_debt():
+    """The driver oracle-checks only the first DRIVER_WINDOW registry
+    entries. Every query outside that window must have an all-green
+    row in one of the two latest CORRECTNESS records, and no query
+    with a driver row may sit before one that has never had one."""
+    import glob
+    import json
+    import re
+
+    import __spark_entry__ as E
+
+    paths = sorted(
+        glob.glob(os.path.join(os.path.dirname(E.__file__),
+                               "CORRECTNESS_r*.json")),
+        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
+    )
+    records = [json.load(open(p)) for p in paths]
+    checked = {name for rec in records for name in rec}
+    green = {
+        name for rec in records[-2:] for name, row in rec.items()
+        if not row["err"]
+        and row["rows_match"] and row["schema_match"] and row["hash_match"]
+    }
+    order = list(E.queries())
+    stale = [n for n in order[DRIVER_WINDOW:] if n not in green]
+    assert not stale, f"outside the driver window without recent green: {stale}"
+    flags = [n in checked for n in order]
+    assert flags == sorted(flags), "a checked query precedes an unchecked one"
 
 
 def test_neardup_gate_config_pin():
