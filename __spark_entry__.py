@@ -1014,34 +1014,91 @@ def _stage_ordered_batches(base: str, parts) -> str:
     return in_dir
 
 
-def _run_available_now(result_stream, base: str) -> str:
-    """foreachBatch → parquet sink, availableNow trigger, VERIFIED
-    termination (a timed-out replay must fail loudly, not hand the
-    gate a partial sink). The input and checkpoint dirs — the bulk of
-    the footprint — are removed after the run; only the small sink
-    survives for the caller to read."""
+def _drop_stream_inputs(base: str) -> None:
+    """Remove a replay's staged input and checkpoint dirs — the bulk
+    of its footprint; only the small sink under base/out survives."""
     import shutil
 
+    for name in ("in", "ckpt"):
+        shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+
+
+def _replay(
+    spark: SparkSession,
+    parts,
+    build: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Bounded file replay shared by the stream_* gates:
+    stage each part as one file (ordered mtimes), stream them one file
+    per trigger with the schema of ``parts[0]``, run ``build(stream)``
+    into a foreachBatch parquet append under an availableNow trigger,
+    and return the sink. Termination is VERIFIED (a timed-out replay
+    must fail loudly, not hand the gate a partial sink), and so is the
+    gates' premise: every part must arrive as its own non-empty
+    micro-batch, and there must be at least two of them — otherwise
+    the replay proves nothing about batch boundaries. Staged input and
+    checkpoint are removed even when the replay fails."""
+    base = _fresh_stream_dir("kgreplay_")
     out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    q = (
-        result_stream.writeStream.foreachBatch(
-            lambda df, _eid: df.write.mode("append").parquet(out_dir)
-        )
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        terminated = q.awaitTermination(300)
+        in_dir = _stage_ordered_batches(base, parts)
+        stream = (
+            spark.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        q = (
+            build(stream)
+            .writeStream.foreachBatch(
+                lambda df, _eid: df.write.mode("append").parquet(out_dir)
+            )
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            terminated = q.awaitTermination(300)
+        finally:
+            q.stop()
+        if not terminated:
+            raise RuntimeError("streaming replay did not terminate in 300s")
+        n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+        if n_batches != len(parts) or n_batches < 2:
+            raise RuntimeError(
+                f"streaming replay ran {n_batches} input micro-batches for "
+                f"{len(parts)} parts; it needs one per part, at least two"
+            )
     finally:
-        q.stop()
-    if not terminated:
-        raise RuntimeError("streaming replay did not terminate in 300s")
-    shutil.rmtree(os.path.join(base, "in"), ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out_dir
+        _drop_stream_inputs(base)
+    return spark.read.parquet(out_dir)
+
+
+def _time_thirds(df: DataFrame, back1, back2):
+    """(tmax, f0, f1, f2): ``df`` split at max(ts) − back1 and
+    max(ts) − back2 into three event-time-ordered slices."""
+    tmax = df.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
+    t1, t2 = F.lit(tmax - back1), F.lit(tmax - back2)
+    ts = F.col("ts")
+    return (
+        tmax,
+        df.filter(ts < t1),
+        df.filter((ts >= t1) & (ts < t2)),
+        df.filter(ts >= t2),
+    )
+
+
+def _latest_snapshot(snaps: DataFrame, *keys: str) -> DataFrame:
+    """The max-``seq`` row per key: the final state of a snapshot-
+    emitting stateful stream (last snapshot wins)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(F.desc("seq"))
+    return (
+        snaps.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def q_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,29 +1112,26 @@ def q_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversation prefix (streaming_writer.rb:14-125 defers reordering
     the same way). Micro-batch boundaries cannot affect the result:
     the gate proves exactly that."""
-    import shutil
-
     from json_ld_spark.operators.jsonld_ops import valid_triples
     from json_ld_spark.streaming.stream_pipeline import stream_triples
 
     base = _fresh_stream_dir("kgstream_")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    _derived(spark, sf_dir).repartition(4).write.parquet(in_dir)
-    # one file per trigger: the 4 staged files become 4 real
-    # micro-batches, so the gate genuinely exercises micro-batch-
-    # boundary independence (all-in-one-batch would prove nothing)
-    q = stream_triples(spark, in_dir, out_dir, ckpt,
-                       query_name="kg_stream_gate",
-                       max_files_per_trigger=1)
     try:
-        q.processAllAvailable()
+        # stream_triples reads one file per trigger: the 4 staged files
+        # become 4 real micro-batches, so the gate genuinely exercises
+        # micro-batch-boundary independence
+        _derived(spark, sf_dir).repartition(4).write.parquet(in_dir)
+        q = stream_triples(spark, in_dir, out_dir,
+                           os.path.join(base, "ckpt"),
+                           query_name="kg_stream_gate")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
-        q.stop()
-    # the staged corpus copy and checkpoint are the bulk — drop them
-    shutil.rmtree(in_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+        _drop_stream_inputs(base)
     out = spark.read.parquet(out_dir)
     return valid_triples(out).select(*_TRIPLE_COLS).dropDuplicates()
 
@@ -1088,28 +1142,15 @@ def q_stream_turn_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (mtimes force the order), so the cross-batch nextTurn
     links (2→3) can ONLY come from applyInPandasWithState state —
     the per-batch window cannot see them. The full link set must
-    equal the batch lead() answer: a dropped state update, a wrong
-    timeout, or mis-sorted batch arrival all fail the hash."""
-    from json_ld_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+    equal the batch lead() answer: a dropped state update or
+    mis-sorted batch arrival fails the hash."""
     from json_ld_spark.streaming.stream_pipeline import stateful_turn_chain
 
-    base = _fresh_stream_dir("kgchain_")
     der = _derived(spark, sf_dir)
-    in_dir = _stage_ordered_batches(
-        base,
-        (der.filter(F.col("turn_idx") < 3), der.filter(F.col("turn_idx") >= 3)),
+    parts = (
+        der.filter(F.col("turn_idx") < 3), der.filter(F.col("turn_idx") >= 3)
     )
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    # NoTimeout + availableNow: process the backlog then terminate —
-    # a processing-time state timeout keeps scheduling timeout-
-    # evaluation batches and the query never terminates on its own
-    chain = stateful_turn_chain(stream, timeout_minutes=None)
-    out_dir = _run_available_now(chain, base)
-    return spark.read.parquet(out_dir).select(
+    return _replay(spark, parts, stateful_turn_chain).select(
         "conv_id", "turn_idx", "next_turn_idx"
     )
 
@@ -1128,42 +1169,27 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold exactly the original rows — a counted late copy, a mis-closed
     window, or a broken watermark all fail the hash. This was the one
     streaming operator family with no CORRECTNESS row."""
-    import datetime
+    from datetime import timedelta
 
     from json_ld_spark.streaming.stream_pipeline import stream_event_counts
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(*cols)
-    tmax = ev.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
-    t1 = tmax - datetime.timedelta(hours=96)
-    t2 = tmax - datetime.timedelta(hours=48)
-    t_old = t1 - datetime.timedelta(hours=48)
-    f0 = ev.filter(F.col("ts") < F.lit(t1))
-    f1 = ev.filter((F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2)))
+    tmax, f0, f1, f2 = _time_thirds(
+        ev, timedelta(hours=96), timedelta(hours=48)
+    )
     planted = (
         f0.filter(
-            (F.col("ts") < F.lit(t_old)) & (F.col("event_id") % 20 == 0)
+            (F.col("ts") < F.lit(tmax - timedelta(hours=144)))
+            & (F.col("event_id") % 20 == 0)
         )
         .select(
             (F.col("event_id") + 10_000_000).alias("event_id"),
             "ts", "user_id", "event_type", "value",
         )
     )
-    f2 = ev.filter(F.col("ts") >= F.lit(t2)).unionByName(planted)
-
-    base = _fresh_stream_dir("kgwin_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    out_dir = _run_available_now(stream_event_counts(stream), base)
-    return spark.read.parquet(out_dir).select(
+    parts = (f0, f1, f2.unionByName(planted))
+    return _replay(spark, parts, stream_event_counts).select(
         "window_start", "window_end", "event_type", "n_events", "total_value"
     )
 
@@ -1208,36 +1234,23 @@ def q_stream_turn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is selected out: approx_count_distinct is deterministic within
     Spark but engine-specific, so it cannot be value-hashed against
     a SQL oracle — the exact count column is the gated surface."""
-    import datetime
+    from datetime import timedelta
 
     from json_ld_spark.streaming.stream_pipeline import stream_turn_rate
 
     tx = _turn_rate_input(spark, sf_dir)
-    tmax = tx.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
-    t1 = tmax - datetime.timedelta(minutes=60)
-    t2 = tmax - datetime.timedelta(minutes=30)
-    t_old = tmax - datetime.timedelta(minutes=180)
-    f0 = tx.filter(F.col("ts") < F.lit(t1))
-    f1 = tx.filter((F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2)))
+    tmax, f0, f1, f2 = _time_thirds(
+        tx, timedelta(minutes=60), timedelta(minutes=30)
+    )
     planted = f0.filter(
-        (F.col("ts") < F.lit(t_old)) & (F.col("doc_id") % 20 == 0)
+        (F.col("ts") < F.lit(tmax - timedelta(minutes=180)))
+        & (F.col("doc_id") % 20 == 0)
     )
-    f2 = tx.filter(F.col("ts") >= F.lit(t2)).unionByName(planted)
-
-    base = _fresh_stream_dir("kgrate_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    schema = "doc_id long, conv_id string, role string, ts timestamp_ntz"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    out_dir = _run_available_now(
-        stream_turn_rate(stream, "5 minutes", "10 minutes"), base
-    )
-    return spark.read.parquet(out_dir).select(
-        "window_start", "window_end", "role", "n_turns"
-    )
+    return _replay(
+        spark,
+        (f0, f1, f2.unionByName(planted)),
+        lambda s: stream_turn_rate(s, "5 minutes", "10 minutes"),
+    ).select("window_start", "window_end", "role", "n_turns")
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,37 +1266,19 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate arrives inside its key's state window and the drop
     guarantee is unconditional — which is what makes the batch
     DISTINCT oracle exact rather than approximate."""
-    import datetime
+    from datetime import timedelta
 
     from json_ld_spark.streaming.stream_pipeline import stream_exact_dedup
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(*cols)
-    tmax = ev.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
-    t1 = tmax - datetime.timedelta(hours=96)
-    t2 = tmax - datetime.timedelta(hours=48)
-    f0 = ev.filter(F.col("ts") < F.lit(t1))
+    _, f0, f1, f2 = _time_thirds(ev, timedelta(hours=96), timedelta(hours=48))
     dup = f0.filter(F.col("event_id") % 7 == 0)
-    f1 = ev.filter(
-        (F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2))
-    ).unionByName(dup)
-    f2 = ev.filter(F.col("ts") >= F.lit(t2)).unionByName(dup)
-
-    base = _fresh_stream_dir("kgdedup_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    out_dir = _run_available_now(
-        stream_exact_dedup(stream, watermark="240 hours"), base
-    )
-    return spark.read.parquet(out_dir).select(*cols)
+    return _replay(
+        spark,
+        (f0, f1.unionByName(dup), f2.unionByName(dup)),
+        lambda s: stream_exact_dedup(s, watermark="240 hours"),
+    ).select(*cols)
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3526,9 +3521,7 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly the SQL oracle of the batch sketch. A rank computed
     differently in the stream path, a lost register between batches,
     or redelivery double-counting all fail the hash."""
-    import datetime
-
-    from pyspark.sql.window import Window
+    from datetime import timedelta
 
     from json_ld_spark.operators.sketches import hll_bucket_rank
     from json_ld_spark.streaming.stream_pipeline import stream_hll_registers
@@ -3536,44 +3529,23 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    tmax = ev.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
-    t1 = tmax - datetime.timedelta(hours=96)
-    t2 = tmax - datetime.timedelta(hours=48)
-    f0 = ev.filter(F.col("ts") < F.lit(t1))
+    _, f0, f1, f2 = _time_thirds(ev, timedelta(hours=96), timedelta(hours=48))
     dup = f0.filter(F.col("event_id") % 5 == 0)
-    f1 = ev.filter(
-        (F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2))
-    ).unionByName(dup)
-    f2 = ev.filter(F.col("ts") >= F.lit(t2)).unionByName(dup)
-
-    base = _fresh_stream_dir("kghll_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, event_type string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     bucket, rank = hll_bucket_rank("user_id", _HLL_B)
-    keyed = stream.select(
-        F.col("event_type").alias("group"),
-        bucket.cast("int").alias("bucket"),
-        rank.cast("int").alias("rank"),
-    )
-    out_dir = _run_available_now(
-        stream_hll_registers(keyed, b=_HLL_B), base
-    )
-    snaps = spark.read.parquet(out_dir)
-    w = Window.partitionBy("group").orderBy(F.desc("seq"))
-    return (
-        snaps.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("group").alias("event_type"), "m", "nonempty",
-            "s_scaled", "est",
+
+    def build(stream: DataFrame) -> DataFrame:
+        keyed = stream.select(
+            F.col("event_type").alias("group"),
+            bucket.cast("int").alias("bucket"),
+            rank.cast("int").alias("rank"),
         )
+        return stream_hll_registers(keyed, b=_HLL_B)
+
+    snaps = _replay(
+        spark, (f0, f1.unionByName(dup), f2.unionByName(dup)), build
+    )
+    return _latest_snapshot(snaps, "group").select(
+        F.col("group").alias("event_type"), "m", "nonempty", "s_scaled", "est"
     )
 
 
@@ -3588,54 +3560,35 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_sessionize oracle verbatim. A dropped state row, a wrong
     gap comparison at the boundary, or per-chunk sorting inside a
     group all fail the hash."""
-    import datetime
-
-    from pyspark.sql.window import Window
+    from datetime import timedelta
 
     from json_ld_spark.streaming.stream_pipeline import stream_sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "ts", "user_id", "value"
     )
-    tmax = ev.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
-    t1 = tmax - datetime.timedelta(hours=96)
-    t2 = tmax - datetime.timedelta(hours=48)
-    f0 = ev.filter(F.col("ts") < F.lit(t1))
-    f1 = ev.filter((F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2)))
-    f2 = ev.filter(F.col("ts") >= F.lit(t2))
+    _, *parts = _time_thirds(ev, timedelta(hours=96), timedelta(hours=48))
 
-    base = _fresh_stream_dir("kgsess_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    schema = "event_id long, ts timestamp_ntz, user_id long, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    keyed = stream.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("epoch"),
-        "value",
-    )
-    out_dir = _run_available_now(stream_sessionize(keyed), base)
-    snaps = spark.read.parquet(out_dir)
-    w = Window.partitionBy("user_id", "session_idx").orderBy(F.desc("seq"))
-    return (
-        snaps.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
+    def build(stream: DataFrame) -> DataFrame:
+        return stream_sessionize(stream.select(
             "user_id",
-            "session_idx",
-            "n_events",
-            F.timestamp_micros("start_epoch")
-            .cast("timestamp_ntz")
-            .alias("session_start"),
-            F.timestamp_micros("end_epoch")
-            .cast("timestamp_ntz")
-            .alias("session_end"),
-            F.round("vsum", 2).alias("session_value"),
-        )
+            "event_id",
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("epoch"),
+            "value",
+        ))
+
+    snaps = _replay(spark, parts, build)
+    return _latest_snapshot(snaps, "user_id", "session_idx").select(
+        "user_id",
+        "session_idx",
+        "n_events",
+        F.timestamp_micros("start_epoch")
+        .cast("timestamp_ntz")
+        .alias("session_start"),
+        F.timestamp_micros("end_epoch")
+        .cast("timestamp_ntz")
+        .alias("session_end"),
+        F.round("vsum", 2).alias("session_value"),
     )
 
 
@@ -3665,40 +3618,36 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     f0 = docs.filter(F.col("doc_id") <= c1)
     f1 = docs.filter((F.col("doc_id") > c1) & (F.col("doc_id") <= c2))
     f2 = docs.filter(F.col("doc_id") > c2)
-
-    base = _fresh_stream_dir("kgmhdedup_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     num_hashes, bands = 32, 8
     par = spark.sparkContext.defaultParallelism
-    # each micro-batch is ONE file = one input partition, and chained
-    # projections collapse (the signature fold would capture the whole
-    # shingle expression, the 8 band buckets the whole fold). The two
-    # intra-batch repartitions rebalance every batch across the cores
-    # AND materialize the staged column at each boundary — the
-    # streaming analog of the batch path's localCheckpoints. They ship
-    # (id, shingle-hash array) and (id, 32-long signature) rows only.
-    s1 = stream.repartition(par, "doc_id").select(
-        "doc_id", F.lower(F.col("text")).alias("_lt")
-    )
-    s2 = s1.select(
-        "doc_id", shingle_hash_set(F.col("_lt"), 3).alias("_sh")
-    ).repartition(par, "doc_id")
-    s3 = s2.select(
-        "doc_id", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
-    ).repartition(par, "doc_id")
-    banded = s3.select(
-        "doc_id",
-        F.explode(
-            F.array(*minhash_band_buckets("_sig", num_hashes, bands))
-        ).alias("bucket"),
-    ).select("bucket", "doc_id")
-    out_dir = _run_available_now(stream_minhash_dedup(banded), base)
-    hits = spark.read.parquet(out_dir)
+
+    def build(stream: DataFrame) -> DataFrame:
+        # each micro-batch is ONE file = one input partition, and
+        # chained projections collapse (the signature fold would
+        # capture the whole shingle expression, the 8 band buckets the
+        # whole fold). The two intra-batch repartitions rebalance every
+        # batch across the cores AND materialize the staged column at
+        # each boundary — the streaming analog of the batch path's
+        # localCheckpoints. They ship (id, shingle-hash array) and
+        # (id, 32-long signature) rows only.
+        s1 = stream.repartition(par, "doc_id").select(
+            "doc_id", F.lower(F.col("text")).alias("_lt")
+        )
+        s2 = s1.select(
+            "doc_id", shingle_hash_set(F.col("_lt"), 3).alias("_sh")
+        ).repartition(par, "doc_id")
+        s3 = s2.select(
+            "doc_id", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
+        ).repartition(par, "doc_id")
+        banded = s3.select(
+            "doc_id",
+            F.explode(
+                F.array(*minhash_band_buckets("_sig", num_hashes, bands))
+            ).alias("bucket"),
+        ).select("bucket", "doc_id")
+        return stream_minhash_dedup(banded)
+
+    hits = _replay(spark, (f0, f1, f2), build)
     return hits.groupBy("doc_id").agg(
         F.count("*").alias("n_hit_buckets"),
         F.min("rep").alias("dup_of"),
@@ -3782,9 +3731,7 @@ def q_stream_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays live in state and sum across batches; the max-seq
     snapshot, exploded back to (row_idx, bucket, count), must equal
     the batch sketch — the same oracle as cms_user_counts."""
-    import datetime
-
-    from pyspark.sql.window import Window
+    from datetime import timedelta
 
     from json_ld_spark.operators.sketches import cms_bucket
     from json_ld_spark.streaming.stream_pipeline import stream_cms_registers
@@ -3792,45 +3739,28 @@ def q_stream_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "ts", "user_id"
     )
-    tmax = ev.agg(F.max("ts")).collect()[0][0]  # 1-row parameter fetch
-    t1 = tmax - datetime.timedelta(hours=96)
-    t2 = tmax - datetime.timedelta(hours=48)
-    f0 = ev.filter(F.col("ts") < F.lit(t1))
-    f1 = ev.filter((F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2)))
-    f2 = ev.filter(F.col("ts") >= F.lit(t2))
+    _, *parts = _time_thirds(ev, timedelta(hours=96), timedelta(hours=48))
 
-    base = _fresh_stream_dir("kgcms_")
-    in_dir = _stage_ordered_batches(base, (f0, f1, f2))
-    schema = "event_id long, ts timestamp_ntz, user_id long"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    coords = stream.filter(F.col("user_id").isNotNull()).select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(r).alias("row_idx"),
-                    cms_bucket("user_id", r, _CMS_W).alias("bucket"),
-                )
-                for r in range(_CMS_D)
-            ])
-        ).alias("c")
-    ).select(F.col("c.row_idx").alias("row_idx"),
-             F.col("c.bucket").alias("bucket"))
-    out_dir = _run_available_now(
-        stream_cms_registers(coords, w=_CMS_W, d=_CMS_D), base
-    )
-    snaps = spark.read.parquet(out_dir)
-    w = Window.partitionBy("row_idx").orderBy(F.desc("seq"))
-    final = (
-        snaps.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+    def build(stream: DataFrame) -> DataFrame:
+        coords = stream.filter(F.col("user_id").isNotNull()).select(
+            F.explode(
+                F.array(*[
+                    F.struct(
+                        F.lit(r).alias("row_idx"),
+                        cms_bucket("user_id", r, _CMS_W).alias("bucket"),
+                    )
+                    for r in range(_CMS_D)
+                ])
+            ).alias("c")
+        ).select(F.col("c.row_idx").alias("row_idx"),
+                 F.col("c.bucket").alias("bucket"))
+        return stream_cms_registers(coords, w=_CMS_W, d=_CMS_D)
+
+    return (
+        _latest_snapshot(_replay(spark, parts, build), "row_idx")
         .select("row_idx", F.posexplode("counts").alias("bucket", "count"))
         .filter(F.col("count") > 0)
     )
-    return final.select("row_idx", "bucket", "count")
 
 
 def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,5 @@
-"""Structured Streaming path: transcript micro-batches → triples.
+"""Structured Streaming path: transcript micro-batches → triples, plus
+the stateful and watermarked operators the stream_* driver gates replay.
 
 Parity: the reference's streaming reader emits statements in a single
 pass per document (streaming_reader.rb:29-54); our per-turn transform
@@ -8,11 +9,17 @@ batch and streaming (SURVEY §1.3 "streaming reader" row).
 
 Exactly-once: foreachBatch + checkpointLocation gives idempotent
 append (epoch id dedupes replays at the sink).
+
+The transcript reader takes ONE file per trigger: each staged file is
+its own micro-batch, so a replay of k files runs k real batches and
+exercises micro-batch-boundary independence. The operators below take
+a stream and return a stream; the driver gates run them through one
+bounded-replay harness (``_replay`` in ``__spark_entry__.py``): ordered
+one-file parts, an availableNow trigger, and a check that every part
+arrived as its own micro-batch.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,12 +28,10 @@ from json_ld_spark.operators.jsonld_ops import emit_triples
 from json_ld_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
-def read_transcript_stream(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int = 4
-) -> DataFrame:
+def read_transcript_stream(spark: SparkSession, input_path: str) -> DataFrame:
     return (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_path)
     )
 
@@ -37,7 +42,6 @@ def stream_triples(
     output_path: str,
     checkpoint_path: str,
     query_name: str = "kg_stream",
-    max_files_per_trigger: int = 4,
 ):
     """Streaming triple emission. nextTurn links need the batch to
     contain the conversation prefix, so the streaming path emits
@@ -45,8 +49,7 @@ def stream_triples(
     responsibility, exactly like the reference's streaming writer
     defers reordering (streaming_writer.rb:14-125).
     """
-    stream = read_transcript_stream(spark, input_path,
-                                    max_files_per_trigger)
+    stream = read_transcript_stream(spark, input_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         triples = emit_triples(batch_df, ordered=False)
@@ -129,10 +132,7 @@ def stream_event_counts(
     )
 
 
-def stateful_turn_chain(
-    transcripts_stream: DataFrame,
-    timeout_minutes: "int | None" = 30,
-) -> DataFrame:
+def stateful_turn_chain(transcripts_stream: DataFrame) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): resolve
     nextTurn links ACROSS micro-batches.
 
@@ -141,18 +141,16 @@ def stateful_turn_chain(
     each conversation's last-seen turn index, so when the next batch
     delivers the following turn the link triple's (subj→obj) pair is
     emitted here — closing the gap the plain foreachBatch path defers
-    to compaction. Idle conversations are GC'd by processing-time
-    timeout (the watermark story for state, applied to conversation
-    lifetime rather than event time).
+    to compaction.
 
     Output: (conv_id, turn_idx, next_turn_idx) link rows, including
     the cross-batch ones that the per-batch window cannot see.
 
-    ``timeout_minutes=None`` disables the state GC (NoTimeout). Use it
-    for bounded replays (``trigger(availableNow=True)``): with a
-    processing-time timeout Spark keeps scheduling timeout-evaluation
-    batches and the query never terminates on its own — a live
-    ingestion pipeline wants the GC, a finite backlog replay doesn't.
+    State never times out (NoTimeout). A bounded replay
+    (``trigger(availableNow=True)``) must stop once its backlog is
+    drained, and a processing-time timeout would keep Spark scheduling
+    timeout-evaluation batches so the query never terminates on its
+    own. The state is one int per conversation.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -163,9 +161,6 @@ def stateful_turn_chain(
         import pandas as pd
 
         (conv_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
         last = state.get[0] if state.exists else None
         # collect ALL chunks before sorting: a big group arrives as
         # multiple Arrow chunks (maxRecordsPerBatch) in shuffle order —
@@ -180,8 +175,6 @@ def stateful_turn_chain(
                 rows.append((conv_id, last, idx))
             last = idx
         state.update((last,))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
         yield pd.DataFrame(rows, columns=["conv_id", "turn_idx", "next_turn_idx"])
 
     return transcripts_stream.groupBy("conv_id").applyInPandasWithState(
@@ -189,11 +182,7 @@ def stateful_turn_chain(
         outputStructType=output_schema,
         stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_minutes is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -8,7 +8,10 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
+
+import __spark_entry__ as E
 
 from json_ld_spark.sources.transcripts import (
     synthesize_transcripts,
@@ -67,20 +70,14 @@ def test_stream_turn_rate(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_stateful_turn_chain_links_across_batches(spark, tmp_path):
+def test_stateful_turn_chain_links_across_batches(spark):
     """applyInPandasWithState resolves nextTurn links that span
     micro-batches: batch 1 delivers turns 0-1, batch 2 delivers turn 2;
     the (1 → 2) link only exists because conversation state survived
     between batches."""
-    import time
+    from json_ld_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+    from json_ld_spark.streaming.stream_pipeline import stateful_turn_chain
 
-    from json_ld_spark.streaming.stream_pipeline import (
-        read_transcript_stream,
-        stateful_turn_chain,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
     rows_b1 = [
         ("c1", 0, "user", "hi", None, datetime.datetime(2024, 1, 1, 0, 0)),
         ("c1", 1, "assistant", "yo", None, datetime.datetime(2024, 1, 1, 0, 1)),
@@ -90,45 +87,13 @@ def test_stateful_turn_chain_links_across_batches(spark, tmp_path):
         ("c1", 2, "user", "more", None, datetime.datetime(2024, 1, 1, 0, 2)),
         ("c2", 1, "assistant", "b", None, datetime.datetime(2024, 1, 1, 0, 3)),
     ]
-    from json_ld_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-
-    import glob
-    import time as _time
-
-    for i, rows in enumerate([rows_b1, rows_b2]):
-        staging = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(
-            str(staging)
-        )
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(in_dir / f"batch{i}.parquet")
-        shutil.copy(part, dest)
-        # the file source orders by modification time: stagger them
-        os.utime(dest, (1700000000 + i * 100, 1700000000 + i * 100))
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(in_dir))
-    )
-    # NoTimeout for a bounded replay: with a processing-time timeout
-    # the query schedules timeout-evaluation batches forever and
-    # availableNow never terminates (this test used to burn the full
-    # 120s await); without it the backlog drains and the query STOPS
-    links = stateful_turn_chain(stream, timeout_minutes=None)
-    q = (
-        links.writeStream.format("memory")
-        .queryName("turn_chain_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    terminated = q.awaitTermination(120)
-    assert terminated, "availableNow replay should self-terminate"
+    parts = [
+        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+        for rows in (rows_b1, rows_b2)
+    ]
     got = {
         (r.conv_id, r.turn_idx, r.next_turn_idx)
-        for r in spark.sql("SELECT * FROM turn_chain_test").collect()
+        for r in E._replay(spark, parts, stateful_turn_chain).collect()
     }
     assert ("c1", 0, 1) in got
     assert ("c1", 1, 2) in got, f"cross-batch link missing: {got}"
@@ -166,7 +131,7 @@ def test_stateful_turn_chain_sorts_across_arrow_chunks(spark, tmp_path):
             spark.readStream.schema(TRANSCRIPT_SCHEMA)
             .parquet(str(in_dir))
         )
-        links = stateful_turn_chain(stream, timeout_minutes=None)
+        links = stateful_turn_chain(stream)
         q = (
             links.writeStream.format("memory")
             .queryName("turn_chain_chunks")
@@ -185,7 +150,7 @@ def test_stateful_turn_chain_sorts_across_arrow_chunks(spark, tmp_path):
     assert got == [(i, i + 1) for i in range(n - 1)]
 
 
-def test_stream_exact_dedup_drops_cross_batch_duplicates(spark, tmp_path):
+def test_stream_exact_dedup_drops_cross_batch_duplicates(spark):
     """Two micro-batches where batch 1 re-sends half of batch 0's rows
     verbatim (at-least-once redelivery): the deduped sink must hold
     each event exactly once, including the batch-1-only rows."""
@@ -198,36 +163,10 @@ def test_stream_exact_dedup_drops_cross_batch_duplicates(spark, tmp_path):
         (i, base + datetime.timedelta(minutes=i), "b") for i in range(10, 16)
     ] + resent
     schema = "event_id long, ts timestamp_ntz, event_type string"
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    for i, rows in enumerate((rows0, rows1)):
-        tmp = str(tmp_path / f"tmp{i}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
-        import glob
-
-        src = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(in_dir, f"batch{i}.parquet")
-        shutil.copy(src, dest)
-        os.utime(dest, (1_700_000_000 + i * 1000,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    parts = [spark.createDataFrame(rows, schema) for rows in (rows0, rows1)]
+    got = E._replay(
+        spark, parts, lambda s: stream_exact_dedup(s, watermark="240 hours")
     )
-    out = str(tmp_path / "out")
-    q = (
-        stream_exact_dedup(stream, watermark="240 hours")
-        .writeStream.foreachBatch(
-            lambda df, _e: df.write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    q.stop()
-    got = spark.read.parquet(out)
     assert got.count() == 16
     assert got.select("event_id").distinct().count() == 16
     # the first arrival's payload wins: resent ids keep event_type 'a'
@@ -239,18 +178,14 @@ def test_stream_exact_dedup_drops_cross_batch_duplicates(spark, tmp_path):
     )
 
 
-def test_stream_sessionize_stitches_across_batches(spark, tmp_path):
+def test_stream_sessionize_stitches_across_batches(spark):
     """A session straddling a micro-batch boundary must be stitched
     by state: batch 1 ends mid-session (events at t=0s, 600s), batch
     2 continues it (t=1200s — gap 600 < 1800) and then opens a new
     session (t=5000s). Final snapshots must show ONE 3-event session
     plus the new 1-event session."""
-    import glob
-
     from json_ld_spark.streaming.stream_pipeline import stream_sessionize
 
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
     us = 1_000_000
     rows_b1 = [
         (7, 1, 0 * us, 1.0),
@@ -262,41 +197,57 @@ def test_stream_sessionize_stitches_across_batches(spark, tmp_path):
         (7, 5, 5000 * us, 8.0),   # gap 3800s > 1800s: new session
     ]
     schema = "user_id long, event_id long, epoch long, value double"
-    for i, rows in enumerate([rows_b1, rows_b2]):
-        staging = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(staging)
-        )
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(in_dir / f"batch{i}.parquet")
-        shutil.copy(part, dest)
-        os.utime(dest, (1700000000 + i * 100, 1700000000 + i * 100))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(in_dir))
-    )
-    q = (
-        stream_sessionize(stream)
-        .writeStream.format("memory")
-        .queryName("sess_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "replay should self-terminate"
-    snaps = spark.sql("SELECT * FROM sess_test").collect()
-    final = {}
-    for r in snaps:
-        key = (r.user_id, r.session_idx)
-        if key not in final or r.seq > final[key].seq:
-            final[key] = r
+    parts = [
+        spark.createDataFrame(rows, schema) for rows in (rows_b1, rows_b2)
+    ]
+    snaps = E._replay(spark, parts, stream_sessionize)
     got = {
-        k: (v.n_events, v.start_epoch, v.end_epoch, v.vsum)
-        for k, v in final.items()
+        (r.user_id, r.session_idx): (
+            r.n_events, r.start_epoch, r.end_epoch, r.vsum
+        )
+        for r in E._latest_snapshot(snaps, "user_id", "session_idx").collect()
     }
     assert got[(7, 0)] == (3, 0, 1200 * us, 7.0), got
     assert got[(7, 1)] == (1, 5000 * us, 5000 * us, 8.0), got
     assert got[(9, 0)] == (1, 100 * us, 100 * us, 5.0), got
+
+
+def _one_row_parts(spark, n):
+    return [
+        spark.createDataFrame([(i, f"row{i}")], "id long, tag string")
+        for i in range(n)
+    ]
+
+
+def test_replay_returns_every_part_row(spark):
+    """The identity replay of three one-row parts returns exactly those
+    three rows: one micro-batch per part, nothing lost or repeated."""
+    got = E._replay(spark, _one_row_parts(spark, 3), lambda s: s)
+    assert sorted(map(tuple, got.collect())) == [
+        (0, "row0"), (1, "row1"), (2, "row2")
+    ]
+
+
+def test_replay_rejects_single_part(spark):
+    """One part is one micro-batch: such a replay cannot show that
+    batch boundaries do not matter, so the harness refuses it."""
+    with pytest.raises(RuntimeError, match="micro-batch"):
+        E._replay(spark, _one_row_parts(spark, 1), lambda s: s)
+
+
+def test_replay_failure_leaves_no_staged_input(spark, tmp_path, monkeypatch):
+    """A replay whose stream fails still removes its staged input and
+    checkpoint dirs; nothing but the (partial) sink may survive."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def failing(stream):
+        return stream.withColumn(
+            "boom", F.raise_error(F.lit("planted")).cast("string")
+        )
+
+    with pytest.raises(Exception, match="planted"):
+        E._replay(spark, _one_row_parts(spark, 2), failing)
+    streams = tmp_path / "json_ld_spark_streams"
+    (replay_dir,) = [d for pid in streams.iterdir() for d in pid.iterdir()]
+    assert not (replay_dir / "in").exists()
+    assert not (replay_dir / "ckpt").exists()
