@@ -74,7 +74,6 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--input", required=True, help="transcripts parquet path")
     sp.add_argument("--output", required=True)
     sp.add_argument("--cpus", type=int, default=8)
-    sp.add_argument("--no-canonicalize", action="store_true")
     sp.add_argument("--no-resume", action="store_true")
 
     args = p.parse_args(argv)
@@ -137,7 +136,6 @@ def main(argv: list[str] | None = None) -> int:
             spark,
             read_transcripts(spark, args.input),
             args.output,
-            canonicalize=not args.no_canonicalize,
             resume=not args.no_resume,
         )
         print(json.dumps(metrics))

@@ -1,12 +1,17 @@
 """End-to-end KG construction pipeline (BASELINE.json north_rule):
 
     transcripts → stable turn order → mention counts + per-turn triple
-      template (expand + toRDF, JVM-native) → alias canonicalization (minhash + CC)
+      template (expand + toRDF, JVM-native) → alias canonicalization
+      (minhash + CC; only when the caller passes an alias table)
       → bucketed graph_triples sink + per-partition lineage/metrics
 
 Checkpoint-resume: the sink is partitioned by conv_bucket =
-pmod(xxhash64(conv_id), N). A lineage table records per-bucket status
-and triple counts; a resumed run anti-joins completed buckets and
+pmod(hash(conv_id), B), Spark's own hash-partition id (the id
+HashPartitioning(conv_id, B) assigns). The emission window shuffles on
+hashpartitioning(conv_id, n), so task p holds only buckets ≡ p mod
+gcd(n, B): at most lcm(n, B) sink files, with no second shuffle. A
+lineage table records B and per-bucket status and triple counts; a
+resumed run (refused if B differs) anti-joins completed buckets and
 processes only the remainder (idempotent per-partition overwrite).
 At cluster scale each bucket is an independent unit of work, so a
 failed job re-does only unfinished buckets.
@@ -18,7 +23,7 @@ import os
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators import jsonld_ops
@@ -26,9 +31,14 @@ from json_ld_spark.operators.canonicalize import apply_merge_map, build_merge_ma
 from json_ld_spark.operators.dedup import minhash_dedup_components
 
 LINEAGE_SCHEMA = (
-    "stage string, conv_bucket int, status string, triple_count long, "
-    "error_count long, wall_sec double"
+    "stage string, conv_buckets int, conv_bucket int, status string, "
+    "triple_count long, error_count long, wall_sec double"
 )
+
+
+def _conv_bucket(conv_buckets: int) -> Column:
+    """Spark's hash-partition id of conv_id over ``conv_buckets``."""
+    return F.pmod(F.hash("conv_id"), F.lit(conv_buckets))
 
 
 def alias_merge_map(
@@ -40,9 +50,9 @@ def alias_merge_map(
     verify with Jaccard, connect components, pick canonical heads.
 
     ``aliases`` is an (entity_iri, surface) DataFrame; defaults to the
-    built-in gazetteer (exercises the operators; real corpora pass the
-    discovered-alias table here). ``checkpoint_dir``: reliable
-    per-round checkpoints for the CC iterations on a real cluster.
+    built-in gazetteer (distinct surfaces: an empty map that exercises
+    the operators). ``checkpoint_dir``: reliable per-round checkpoints
+    for the CC iterations on a real cluster.
     """
     if aliases is None:
         from json_ld_spark.sources.gazetteer import GAZETTEER, entity_iri
@@ -60,51 +70,53 @@ def run_pipeline(
     transcripts: DataFrame,
     out_dir: str,
     conv_buckets: int = 16,
-    canonicalize: bool = True,
+    aliases: Optional[DataFrame] = None,
     resume: bool = True,
 ) -> dict:
-    """Run (or resume) the full pipeline. Returns metrics dict."""
+    """Run (or resume) the full pipeline. Returns metrics dict.
+
+    Triples are canonicalized only when an (entity_iri, surface)
+    ``aliases`` table is passed. conv_bucket is Spark's hash-partition
+    id of conv_id, so the sink holds at most
+    lcm(2·defaultParallelism, conv_buckets) files."""
     t0 = time.time()
     triples_path = os.path.join(out_dir, "graph_triples")
     lineage_path = os.path.join(out_dir, "lineage")
 
-    src = transcripts.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int")
-    )
-
     done_buckets: list[int] = []
     if resume and os.path.exists(lineage_path):
-        lineage = spark.read.parquet(lineage_path)
-        done_buckets = [
-            r["conv_bucket"]
-            for r in lineage.filter(
-                (F.col("stage") == "emit") & (F.col("status") == "done")
-            ).select("conv_bucket").distinct().collect()
-        ]
+        # one row per bucket per run: small enough to collect
+        lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).collect()
+        found = {r["conv_buckets"] for r in lineage}
+        if found - {conv_buckets}:
+            raise ValueError(f"{lineage_path} records conv_buckets {found}; "
+                             f"cannot resume it with {conv_buckets}")
+        done_buckets = sorted({r["conv_bucket"] for r in lineage
+                               if r["stage"] == "emit" and r["status"] == "done"})
         if done_buckets:
-            src = src.filter(~F.col("conv_bucket").isin(done_buckets))
+            transcripts = transcripts.filter(
+                ~_conv_bucket(conv_buckets).isin(done_buckets))
 
-    all_triples = jsonld_ops.emit_triples(src.drop("conv_bucket"))
-    if canonicalize:
-        merge_map = alias_merge_map(spark)
-        all_triples = apply_merge_map(all_triples, merge_map)
-    all_triples = all_triples.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets)).cast("int")
-    )
+    all_triples = jsonld_ops.emit_triples(transcripts)
+    if aliases is not None:
+        all_triples = apply_merge_map(all_triples, alias_merge_map(spark, aliases))
 
     # dynamic partition overwrite: only recomputed buckets are
     # replaced, so a bucket that failed MID-write last run (partial
     # files, no lineage row) is cleanly rewritten instead of appended —
     # the parquet analog of Iceberg overwrite-by-filter
     (
-        all_triples.write.mode("overwrite")
+        all_triples.withColumn("conv_bucket", _conv_bucket(conv_buckets))
+        .write.mode("overwrite")
         .partitionBy("conv_bucket")
         .parquet(triples_path)
     )
 
     # per-partition lineage + metrics (one scan of the written sink —
-    # counts what actually landed, not what was planned)
-    written = spark.read.parquet(triples_path)
+    # counts what actually landed, not what was planned); a write of 0
+    # rows leaves no file to infer the schema from
+    sink_schema = jsonld_ops.TRIPLE_SCHEMA + ", conv_bucket int"
+    written = spark.read.schema(sink_schema).parquet(triples_path)
     if done_buckets:
         written = written.filter(~F.col("conv_bucket").isin(done_buckets))
     wall = time.time() - t0
@@ -116,6 +128,7 @@ def run_pipeline(
         )
         .select(
             F.lit("emit").alias("stage"),
+            F.lit(conv_buckets).alias("conv_buckets"),
             "conv_bucket",
             F.lit("done").alias("status"),
             "triple_count",

@@ -160,21 +160,6 @@ def derive_transcripts_sql(turns_per_conv: int = 5) -> str:
     """
 
 
-def write_transcripts(
-    df: DataFrame, path: str, conv_buckets: int = 16, mode: str = "overwrite"
-) -> None:
-    """Persist transcripts. Iceberg `bucket(conv_id)` when jars are
-    available; parquet with a salt-partition column otherwise.
-
-    The salt column pmod(xxhash64(conv_id), N) is the explicit skew
-    handle (SURVEY §2.12): downstream readers co-partition on it.
-    """
-    out = df.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(conv_buckets))
-    )
-    out.write.mode(mode).partitionBy("conv_bucket").parquet(path)
-
-
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     return df.drop("conv_bucket") if "conv_bucket" in df.columns else df

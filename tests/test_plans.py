@@ -61,6 +61,20 @@ def test_emission_partitioning_is_pinned(spark):
     assert "REPARTITION_BY_NUM" in plan or "hashpartitioning(conv_id" in plan
 
 
+def test_sink_bucket_is_the_hash_partition_id(spark):
+    """The pipeline's conv_bucket is Spark's own hash-partition id of
+    conv_id: after repartition(8, conv_id) every row sits in the
+    partition equal to its bucket at 8 buckets. The sink's file count
+    (≤ lcm(partitions, buckets)) rests on this."""
+    from json_ld_spark.pipeline import _conv_bucket
+    from json_ld_spark.sources.transcripts import synthesize_transcripts
+
+    t = synthesize_transcripts(spark, n_convs=50).repartition(8, "conv_id")
+    ids = t.select(F.spark_partition_id().alias("p"), _conv_bucket(8).alias("b"))
+    assert ids.count() > 0
+    assert ids.filter(F.col("p") != F.col("b")).count() == 0
+
+
 def test_emission_is_jvm_native_with_one_exchange(spark):
     """Triple emission runs no Python: no MapInPandas / Arrow / batch
     Python UDF node, and the conv_id repartition feeding the ordering

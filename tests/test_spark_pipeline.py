@@ -185,9 +185,9 @@ def test_pipeline_resume(spark, transcripts):
 
     out = tempfile.mkdtemp()
     try:
-        m1 = run_pipeline(spark, transcripts, out, canonicalize=False)
+        m1 = run_pipeline(spark, transcripts, out)
         assert m1["triples"] > 0 and m1["errors"] == 0
-        m2 = run_pipeline(spark, transcripts, out, canonicalize=False)
+        m2 = run_pipeline(spark, transcripts, out)
         assert m2["buckets_skipped"] > 0 and m2["triples"] == 0
         total = spark.read.parquet(os.path.join(out, "graph_triples")).count()
         assert total == m1["triples"]
@@ -209,7 +209,7 @@ def test_pipeline_partial_failure_resume(spark, transcripts, tmp_path):
     import glob
     import shutil
 
-    from json_ld_spark.pipeline import run_pipeline
+    from json_ld_spark.pipeline import LINEAGE_SCHEMA, run_pipeline
 
     out = str(tmp_path / "kg")
     m1 = run_pipeline(spark, transcripts, out, conv_buckets=4)
@@ -221,11 +221,7 @@ def test_pipeline_partial_failure_resume(spark, transcripts, tmp_path):
         "conv_bucket <> 0"
     ).collect()
     shutil.rmtree(out + "/lineage")
-    spark.createDataFrame(
-        lineage,
-        "stage string, conv_bucket int, status string, triple_count long, "
-        "error_count long, wall_sec double",
-    ).write.parquet(out + "/lineage")
+    spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.parquet(out + "/lineage")
 
     m2 = run_pipeline(spark, transcripts, out, conv_buckets=4, resume=True)
     assert m2["buckets_skipped"] == 3
@@ -233,6 +229,78 @@ def test_pipeline_partial_failure_resume(spark, transcripts, tmp_path):
     assert after == full_count, (
         f"partial-failure resume changed the sink: {after} != {full_count}"
     )
+
+
+def test_pipeline_empty_input(spark, tmp_path):
+    """0 transcripts: a partitioned write of 0 rows leaves no parquet
+    file, so the sink is read back with its known schema."""
+    from json_ld_spark.pipeline import run_pipeline
+
+    empty = spark.createDataFrame([], _TURN_SCHEMA)
+    m = run_pipeline(spark, empty, str(tmp_path / "kg"))
+    assert m["triples"] == 0 and m["errors"] == 0
+
+
+def test_pipeline_resume_refuses_other_bucket_layout(spark, transcripts, tmp_path):
+    """A resume with another conv_buckets (or onto a lineage that does
+    not record it) would skip the wrong buckets and duplicate rows."""
+    from json_ld_spark.pipeline import run_pipeline
+
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, transcripts, out, conv_buckets=4)
+    with pytest.raises(ValueError, match="conv_buckets"):
+        run_pipeline(spark, transcripts, out, conv_buckets=16)
+
+    # a lineage as written before it recorded conv_buckets
+    legacy = spark.read.parquet(out + "/lineage").drop("conv_buckets")
+    rows, schema = legacy.collect(), legacy.schema
+    shutil.rmtree(out + "/lineage")
+    spark.createDataFrame(rows, schema).write.parquet(out + "/lineage")
+    with pytest.raises(ValueError, match="conv_buckets"):
+        run_pipeline(spark, transcripts, out, conv_buckets=4)
+
+
+def test_pipeline_sink_files_follow_the_exchange(spark, tmp_path):
+    """conv_bucket is the emission exchange's own partition id, so each
+    task writes only its residue class of buckets: at most
+    lcm(2·defaultParallelism, conv_buckets) files, not their product."""
+    import math
+
+    from json_ld_spark.pipeline import run_pipeline
+
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, synthesize_transcripts(spark, n_convs=200), out,
+                 conv_buckets=4)
+    files = [f for _, _, fs in os.walk(out + "/graph_triples")
+             for f in fs if f.endswith(".parquet")]
+    assert len(files) <= math.lcm(2 * spark.sparkContext.defaultParallelism, 4)
+
+
+def test_pipeline_canonicalizes_with_aliases(spark, transcripts, tmp_path):
+    """An alias table whose variant IRI sorts before a gazetteer IRI
+    makes the variant the component head: every ``of`` object of that
+    entity is relabeled, and every other triple is as without aliases."""
+    from json_ld_spark.pipeline import run_pipeline
+    from json_ld_spark.sources.gazetteer import GAZETTEER, VOCAB, entity_iri
+
+    canon = entity_iri("alan-turing")
+    variant = entity_iri("aa-alan-turing")
+    rows = [(entity_iri(suffix), surface) for _, surface, suffix in GAZETTEER]
+    aliases = spark.createDataFrame(
+        rows + [(variant, "ALAN TURING")], "entity_iri string, surface string")
+
+    plain_out, merged_out = str(tmp_path / "plain"), str(tmp_path / "merged")
+    run_pipeline(spark, transcripts, plain_out)
+    run_pipeline(spark, transcripts, merged_out, aliases=aliases)
+    plain = spark.read.parquet(plain_out + "/graph_triples")
+    merged = spark.read.parquet(merged_out + "/graph_triples")
+
+    relabel = (F.col("pred") == VOCAB + "of") & (F.col("obj_value") == canon)
+    assert plain.filter(relabel).count() > 0
+    want = plain.withColumn(
+        "obj_value", F.when(relabel, F.lit(variant)).otherwise(F.col("obj_value")))
+    assert want.exceptAll(merged).count() == 0
+    assert merged.exceptAll(want).count() == 0
 
 
 def test_expand_documents_registry_and_quarantine(spark):

@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 
-from json_ld_spark.sources.transcripts import (
-    synthesize_transcripts,
-    write_transcripts,
-)
+from json_ld_spark.sources.transcripts import synthesize_transcripts
 from json_ld_spark.streaming.stream_pipeline import (
     read_transcript_stream,
     stream_triples,
