@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators.hashfamily import (
+    BAND_BUCKET_CAP,
     MD5_HASH60_SQL,
     SIMHASH_BITS,
     SIMHASH_BLOCK_BITS,
@@ -340,6 +341,15 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is now hash-gated on real positives."""
     from json_ld_spark.operators.dedup import embedding_neardup_pairs
 
+    corpus = _neardup_planted_corpus(spark, sf_dir)
+    return embedding_neardup_pairs(corpus, threshold=0.5)
+
+
+def _neardup_planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding, label): embeddings plus the planted
+    near-duplicates (see q_embedding_neardup): every 50th vector gets
+    a derived twin (v → round(0.9·v + 0.05, 4), id + 1e6) with the
+    source's label."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     planted = emb.filter(
         F.col("vec_id") % _NEARDUP_PLANT_STRIDE == 0
@@ -351,25 +361,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
         F.col("label"),
     )
-    corpus = emb.select("vec_id", "embedding", "label").unionByName(planted)
-    return embedding_neardup_pairs(corpus, threshold=0.5)
-
-
-def _neardup_planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings plus the planted near-duplicates (see
-    q_embedding_neardup): every 50th vector gets a derived twin
-    (v → round(0.9·v + 0.05, 4), id + 1e6)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    planted = emb.filter(
-        F.col("vec_id") % _NEARDUP_PLANT_STRIDE == 0
-    ).select(
-        (F.col("vec_id") + _NEARDUP_PLANT_OFFSET).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * 0.9 + 0.05, 4).cast("float"),
-        ).alias("embedding"),
-    )
-    return emb.select("vec_id", "embedding").unionByName(planted)
+    return emb.select("vec_id", "embedding", "label").unionByName(planted)
 
 
 def _neardup_banded_pairs(
@@ -430,23 +422,29 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contrastive_pairs(pairs, pos_threshold=0.9, neg_threshold=0.3)
 
 
-def _query_vec_df(spark: SparkSession, sf_dir: str):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_q"))
+def _ann_queries(emb: DataFrame, which) -> DataFrame:
+    """(query_id, query_vec array<double>): the corpus vectors that
+    satisfy ``which``, as an ANN query frame. Cosines and plane dot
+    products cast each element to double, so the cast changes no
+    result bit."""
+    return emb.filter(which).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
 
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.functions.columns import cosine_similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = _query_vec_df(spark, sf_dir)
+    q = _ann_queries(emb, F.col("vec_id") == 0)
     return (
         emb.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), F.col("_q")), 4).alias(
-                "cosine"
-            ),
+            F.round(
+                cosine_similarity(F.col("embedding"), F.col("query_vec")), 4
+            ).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.col("vec_id"))
         .limit(10)
@@ -466,17 +464,18 @@ def _lsh_planes() -> list[list[float]]:
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe sign-LSH top-k. The plane matrix is a literal ±1
-    matrix (plane_matrix), so the bucket function — and therefore the
-    whole approximate result — is reproduced exactly by the DuckDB
-    oracle: a FULL oracle for an LSH query, not a rows-only check.
-    The 1-row query-vector collect is a parameter fetch (the plane
-    literals need driver-side values), not a data collect."""
-    from json_ld_spark.operators.similarity import lsh_topk
+    """Multi-probe sign-LSH top-k for vector 0: lsh_topk_batch on a
+    one-row query frame. The plane matrix is a literal ±1 matrix
+    (plane_matrix), so the bucket function — and therefore the whole
+    approximate result — is reproduced exactly by the DuckDB oracle:
+    a FULL oracle for an LSH query, not a rows-only check."""
+    from json_ld_spark.operators.similarity import lsh_topk_batch
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return lsh_topk(emb, qvec, k=10, planes=_lsh_planes(), probe_radius=1)
+    return lsh_topk_batch(
+        emb, _ann_queries(emb, F.col("vec_id") == 0), _lsh_planes(),
+        k=10, probe_radius=1,
+    ).select("vec_id", "cosine")
 
 
 _IVF_ITERS = 2
@@ -515,13 +514,8 @@ def q_ann_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.similarity import lsh_topk_batch
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % _BATCH_QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    return lsh_topk_batch(
-        emb, queries, k=10, planes=_lsh_planes(), probe_radius=1
-    )
+    queries = _ann_queries(emb, F.col("vec_id") % _BATCH_QUERY_STRIDE == 0)
+    return lsh_topk_batch(emb, queries, _lsh_planes(), k=10, probe_radius=1)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,14 +523,16 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe — mod-partition init + 2 Lloyd iterations, centroids
     rounded to 6 dp per step) — fully deterministic, so the DuckDB
     oracle replays the training loop CTE-for-CTE and the whole
-    index build + assignment + probing + scoring is hash-gated."""
-    from json_ld_spark.operators.similarity import ivf_assign, ivf_topk
+    index build + assignment + probing + scoring is hash-gated. The
+    query is vector 0, as a one-row ivf_topk_batch query frame."""
+    from json_ld_spark.operators.similarity import ivf_assign, ivf_topk_batch
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     cents = _trained_codebook(spark, sf_dir)
-    assigned = ivf_assign(emb, cents)
-    return ivf_topk(assigned, cents, qvec, k=10, nprobe=_IVF_NPROBE)
+    return ivf_topk_batch(
+        ivf_assign(emb, cents), cents, _ann_queries(emb, F.col("vec_id") == 0),
+        k=10, nprobe=_IVF_NPROBE,
+    ).select("vec_id", "cosine")
 
 
 def q_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,10 +545,7 @@ def q_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = _trained_codebook(spark, sf_dir)
     assigned = ivf_assign(emb, cents)
-    queries = emb.filter(F.col("vec_id") % _BATCH_QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("query_vec"),
-    )
+    queries = _ann_queries(emb, F.col("vec_id") % _BATCH_QUERY_STRIDE == 0)
     return ivf_topk_batch(assigned, cents, queries, k=10, nprobe=_IVF_NPROBE)
 
 
@@ -1816,11 +1809,10 @@ def _sql_cos(a: str, b: str) -> str:
     )
 
 
-def _simhash_oracle_sql(shingle: int = 4, max_hamming: int = 16,
-                        max_bucket: int = 64) -> str:
+def _simhash_oracle_sql(shingle: int = 4, max_hamming: int = 16) -> str:
     """DuckDB twin of q_simhash_pairs: md5-prefix shingle hashes →
     per-bit vote sums → SIMHASH_BITS signature → SIMHASH_BLOCK_BITS
-    block banding (with the deterministic ``max_bucket`` row cap per
+    block banding (with the deterministic BAND_BUCKET_CAP row cap per
     block-bucket — the hot-bucket skew guard) → Hamming filter.
     Bit-for-bit the Spark md5-family computation."""
     n_bits, block_bits = SIMHASH_BITS, SIMHASH_BLOCK_BITS
@@ -1848,7 +1840,7 @@ def _simhash_oracle_sql(shingle: int = 4, max_hamming: int = 16,
       FROM sig, range(0, {n_blocks}) t(b)
       QUALIFY row_number() OVER (
         PARTITION BY blk_i, key ORDER BY doc_id
-      ) <= {max_bucket}
+      ) <= {BAND_BUCKET_CAP}
     )
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
@@ -1886,8 +1878,7 @@ def _minhash_band_cte(num_hashes: int = 32, bands: int = 8,
 
 
 def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 8,
-                        shingle: int = 3, max_bucket: int = 64,
-                        threshold: float = 0.3) -> str:
+                        shingle: int = 3, threshold: float = 0.3) -> str:
     """DuckDB twin of q_minhash_components: md5-base shingle hashes →
     affine minhash signatures → md5-string band buckets (64-cap skew
     guard) → candidate self-join → exact-Jaccard verify → connected
@@ -1906,7 +1897,7 @@ def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 8,
                row_number() OVER (PARTITION BY band_i, bucket
                                   ORDER BY doc_id) AS rn
         FROM band
-      ) WHERE rn <= {max_bucket}
+      ) WHERE rn <= {BAND_BUCKET_CAP}
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -2045,7 +2036,7 @@ def _banded_bucket_sql(planes: "list[list[float]]") -> str:
     return " + ".join(terms)
 
 
-def _neardup_banded_pairs_cte(max_bucket: int = 64) -> str:
+def _neardup_banded_pairs_cte() -> str:
     """Shared DuckDB CTE chain (planted → corpus → e → bb → cand →
     pairs) replaying embedding_neardup_pairs_banded at the gate
     config neardup_lsh_config(_NEARDUP_GATE_N): per-band literal
@@ -2088,7 +2079,7 @@ def _neardup_banded_pairs_cte(max_bucket: int = 64) -> str:
           SELECT * FROM raw
           QUALIFY row_number() OVER (
             PARTITION BY band_i, bkt ORDER BY vec_id
-          ) <= {max_bucket}
+          ) <= {BAND_BUCKET_CAP}
         ),
         cand AS (
           SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -4925,7 +4916,11 @@ def oracle_sql() -> dict[str, str]:
           FROM (SELECT doc_id, string_split({norm}, ' ') AS words, text
                 FROM documents)
         ),
-        bands AS (SELECT _id, unnest(_bands) AS _blk FROM g),
+        bands AS (
+          SELECT * FROM (SELECT _id, unnest(_bands) AS _blk FROM g)
+          QUALIFY row_number() OVER (PARTITION BY _blk ORDER BY _id)
+            <= {BAND_BUCKET_CAP}
+        ),
         cand AS (
           SELECT DISTINCT a._id AS id_a, b._id AS id_b
           FROM bands a JOIN bands b ON a._blk = b._blk AND a._id < b._id

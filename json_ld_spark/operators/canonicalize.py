@@ -10,8 +10,10 @@ Scale design:
     hash family (hashfamily.py: md5_hash60 shingle hashes, affine
     minima, md5 band buckets) — no Python, and the DuckDB oracle
     recomputes every stage.
-  - banding turns O(n²) similarity into per-bucket self-joins; bucket
-    sizes are bounded by construction (cap + salt guard below).
+  - banding turns O(n²) similarity into per-bucket self-joins, and
+    capped_band_pairs is the one band join of every banded operator
+    (minhash here; simhash, n-gram and embedding near-dup in dedup.py):
+    its per-bucket row cap bounds bucket sizes by construction.
   - connected components = alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     converges in O(log n) rounds; each round is two shuffles and is
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators.hashfamily import (
+    BAND_BUCKET_CAP,
     md5_hash60,
     minhash_affine,
     minhash_band_buckets,
@@ -55,9 +58,7 @@ def shingle_hash_set(lowered, shingle: int = 3):
     )
 
 
-def hashed_shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, shingle: int = 3,
-) -> DataFrame:
+def hashed_shingle_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(_id, _sh: array<long>): distinct hashed shingle sets,
     materialized once — the shared input for BOTH minhash signatures
     and exact-Jaccard verification (avoids computing the shingle
@@ -79,7 +80,7 @@ def hashed_shingle_sets(
         F.col(id_col).alias("_id"), F.lower(F.col(text_col)).alias("_lt")
     ))
     return staged.select(
-        "_id", shingle_hash_set(F.col("_lt"), shingle).alias("_sh")
+        "_id", shingle_hash_set(F.col("_lt")).alias("_sh")
     ).localCheckpoint()
 
 
@@ -107,30 +108,12 @@ def minhash_signature(shingles_col, num_hashes: int = 32):
     )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle: int = 3,
-    max_bucket: int = 64,
-    shingle_sets: "DataFrame | None" = None,
-) -> DataFrame:
-    """(id_a, id_b) candidate pairs whose minhash bands collide.
-
-    rows per band-bucket are capped at ``max_bucket`` (hot buckets —
-    e.g. empty strings — would otherwise explode quadratically; the
-    cap is a skew guard, logged by callers that need exactness).
-    Signatures and band buckets are the md5 family (hashfamily.py),
-    so every stage is reproducible by the SQL oracle.
-    """
-    # stage the shingle array in its own projection: higher-order
-    # functions are interpreted (no codegen CSE), so inlining the
-    # shingle expression into the signature aggregate would recompute
-    # it per accumulator update
-    if shingle_sets is None:
-        shingle_sets = hashed_shingle_sets(df, id_col, text_col, shingle)
+def minhash_candidate_pairs(shingle_sets: DataFrame) -> DataFrame:
+    """(id_a, id_b) candidate pairs whose minhash bands collide, from
+    the hashed_shingle_sets frame. Signatures and band buckets are
+    the md5 family (hashfamily.py), so every stage is reproducible by
+    the SQL oracle; the band self-join is capped_band_pairs."""
+    num_hashes, bands = 32, 8
     sig = shingle_sets.select(
         "_id", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
     )
@@ -138,32 +121,47 @@ def minhash_candidate_pairs(
         "_id",
         F.posexplode(
             F.array(*minhash_band_buckets("_sig", num_hashes, bands))
-        ).alias("_band", "_bucket"),
+        ).alias("_band", "_bkt"),
     )
-    # bound bucket size (skew guard)
-    w_bucket = F.row_number().over(
-        Window.partitionBy("_band", "_bucket").orderBy("_id")
+    # materialize: downstream verify + connected-components each
+    # consume the pairs; without this the banded self-join re-runs per
+    # consumer (pairs are two longs per row — cheap to hold)
+    return capped_band_pairs(banded).localCheckpoint()
+
+
+def capped_band_pairs(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of the rows of an
+    (_id, _band, _bkt) frame that share a band bucket: the candidate
+    join of every banded near-dup operator.
+
+    Only the BAND_BUCKET_CAP smallest ids of each (_band, _bkt) take
+    part. k near-identical rows fill one bucket per band and would
+    give k² pairs — at corpus scale THE scale killer (the r4 sf1
+    sweep measured 11.5× growth at 10× rows from it); with the cap,
+    candidates stay ≤ C(cap, 2) per bucket, linear in N. Pairs beyond
+    the cap are dropped: by construction they sit in near-identical
+    clusters that exact / minhash dedup already collapses. The cap is
+    deterministic (row_number by id), so the SQL oracles replay it."""
+    w_bucket = Window.partitionBy("_band", "_bkt").orderBy("_id")
+    capped = (
+        banded.withColumn("_rn", F.row_number().over(w_bucket))
+        .filter(F.col("_rn") <= BAND_BUCKET_CAP)
+        .select("_id", "_band", "_bkt")
+        # materialize before the self-join: the band ids would
+        # otherwise be computed once per join side
+        .localCheckpoint()
     )
-    banded = banded.withColumn("_rn", w_bucket).filter(F.col("_rn") <= max_bucket)
-    # materialize before the self-join: the minhash signature pipeline
-    # would otherwise be computed once per join side
-    banded = banded.localCheckpoint()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
+    a, b = capped.alias("a"), capped.alias("b")
+    return (
         a.join(
             b,
             (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bucket") == F.col("b._bucket"))
+            & (F.col("a._bkt") == F.col("b._bkt"))
             & (F.col("a._id") < F.col("b._id")),
         )
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .dropDuplicates()
     )
-    # materialize: downstream verify + connected-components each
-    # consume the pairs; without this the banded self-join re-runs per
-    # consumer (pairs are two longs per row — cheap to hold)
-    return pairs.localCheckpoint()
 
 
 def jaccard_filter(
@@ -208,13 +206,11 @@ def jaccard_filter(
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 30,
     stats: "dict | None" = None,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
-    """(id, component) with component = min id in the component.
+    """(id, component) with component = min id in the component, for
+    an (id_a, id_b) edge frame.
 
     True alternating large-star/small-star (Kiveris et al., "Connected
     Components in MapReduce and Beyond") — O(log n) rounds on deep
@@ -241,14 +237,14 @@ def connected_components(
     from json_ld_spark.plans.checkpoints import cut_lineage
 
     e = cut_lineage(  # evaluate the upstream edge pipeline once
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(),
         checkpoint_dir,
     )
     prev: "tuple | None" = None
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(30):  # O(log n) rounds converge far below this cap
         rounds += 1
         # large-star: all arcs u→v, m(u) = least(u, min neighbor)
         arcs = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))

@@ -1,14 +1,22 @@
 """Deduplication operators for training-data pipelines:
 exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
+Documents are (doc_id, text) frames and vectors (vec_id, embedding)
+frames.
+
 Scale notes:
   - exact dedup is a hash-groupBy with map-side combine (one shuffle
     on the md5 of the normalized text, never on the text itself — at
     100 TB shuffling full text bodies is the classic mistake).
   - minhash/simhash signatures are JVM column expressions; candidate
-    generation shuffles only (id, band_hash) pairs.
-  - embedding near-dup uses label/sign-LSH blocking so the pair join
-    is per-bucket, never the full cross join.
+    generation shuffles only (id, band, bucket) rows.
+  - the banded operators (simhash, n-gram, embedding sign-LSH, and
+    minhash in canonicalize.py) share ONE candidate join,
+    canonicalize.capped_band_pairs: a per-(band, bucket) row cap, then
+    an id-only self-join. Sign-LSH planes are md5 literals
+    (similarity.plane_matrix) that the SQL oracles replay.
+  - label-blocked embedding near-dup joins per label, never the full
+    cross join.
 """
 
 from __future__ import annotations
@@ -16,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from json_ld_spark.functions.columns import cosine_similarity
+from json_ld_spark.functions.columns import cosine_similarity, dot, l2_norm
 from json_ld_spark.operators.canonicalize import (
+    capped_band_pairs,
     connected_components,
     hashed_shingle_sets,
     jaccard_filter,
@@ -28,26 +37,30 @@ from json_ld_spark.operators.hashfamily import (
     SIMHASH_BLOCK_BITS,
     md5_hash60,
 )
+from json_ld_spark.operators.similarity import (
+    ivf_assign,
+    plane_matrix,
+    sign_lsh_bucket_literal,
+)
 from json_ld_spark.operators.textstats import fingerprint_md5
+from json_ld_spark.plans.layout import rebalance_scan
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """(fingerprint, n_dups, keep_id): one row per distinct normalized
     text; keep_id = min id (the canonical representative)."""
     return (
         docs.select(
-            F.col(id_col).alias("id"), fingerprint_md5(F.col(text_col)).alias("fp")
+            F.col("doc_id").alias("id"), fingerprint_md5(F.col("text")).alias("fp")
         )
         .groupBy("fp")
         .agg(F.count("*").alias("n_dups"), F.min("id").alias("keep_id"))
     )
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Documents minus exact (normalized) duplicates — keeps min-id."""
-    w = Window.partitionBy(fingerprint_md5(F.col(text_col))).orderBy(F.col(id_col))
+    w = Window.partitionBy(fingerprint_md5(F.col("text"))).orderBy("doc_id")
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -55,22 +68,15 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def exact_dedup_keep_best(
-    docs: DataFrame,
-    score_col,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def exact_dedup_keep_best(docs: DataFrame, score_col) -> DataFrame:
     """Exact dedup keeping the BEST row per duplicate group — max
     ``score_col`` (a Column expression, e.g. textstats.quality_score),
     ties broken by min id. This is the keep policy a training pipeline
     actually wants: the cleanest copy of each duplicated document, not
     the lowest id. Same single shuffle as exact_dedup (the fingerprint
     partition); the score is a JVM expression evaluated pre-shuffle."""
-    from json_ld_spark.plans.layout import rebalance_scan
-
-    w = Window.partitionBy(fingerprint_md5(F.col(text_col))).orderBy(
-        F.desc("_score"), F.col(id_col)
+    w = Window.partitionBy(fingerprint_md5(F.col("text"))).orderBy(
+        F.desc("_score"), F.col("doc_id")
     )
     # the score expression (quality stats over the text) evaluates
     # BEFORE the window exchange — rebalance so it is not pinned to a
@@ -87,8 +93,6 @@ def minhash_dedup_components(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.8,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
@@ -99,10 +103,7 @@ def minhash_dedup_components(
     executor loss; see plans/checkpoints.py)."""
     # one shingle pass feeds both blocking and verification
     sets_ = hashed_shingle_sets(docs, id_col, text_col)
-    pairs = minhash_candidate_pairs(
-        docs, id_col, text_col, num_hashes, bands, shingle_sets=sets_
-    )
-    verified = jaccard_filter(pairs, sets_, threshold)
+    verified = jaccard_filter(minhash_candidate_pairs(sets_), sets_, threshold)
     return connected_components(
         verified.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
     )
@@ -152,12 +153,7 @@ def simhash_sig(text_col, shingle: int = 4, pre_lowered: bool = False):
     )
 
 
-def simhash_sig_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle: int = 4,
-) -> DataFrame:
+def simhash_sig_table(docs: DataFrame) -> DataFrame:
     """(_id, _sh): SimHash signatures as an EXPLODED-ROWS aggregation —
     the corpus-scale form of simhash_sig.
 
@@ -173,13 +169,12 @@ def simhash_sig_table(
     (sig bit b = ones_b·2 > n, identical to the ±1 vote sign).
     Measured 68 s → ~2 s on the same corpus."""
     lane = 0x0000000100000001
-    from json_ld_spark.plans.layout import rebalance_scan
-
+    shingle = 4
     # scan-granularity guard: the exploded hash + packed-lane partial
     # sums run BEFORE the groupBy shuffle, i.e. on the scan's
     # partitioning (plans/layout.py)
     staged = rebalance_scan(docs.select(
-        F.col(id_col).alias("_id"), F.lower(F.col(text_col)).alias("_lt")
+        F.col("doc_id").alias("_id"), F.lower(F.col("text")).alias("_lt")
     ))
     rows = staged.select(
         "_id",
@@ -214,33 +209,20 @@ def simhash_sig_table(
     return lanes.select("_id", sig.alias("_sh"))
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    max_bucket: int = 64,
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
     """Candidate pairs whose SimHash agrees on at least one block
     (standard Hamming-LSH banding: the SIMHASH_BITS signature in
     blocks of SIMHASH_BLOCK_BITS), with their Hamming distance —
-    reproducible by the DuckDB oracle bit-for-bit.
-
-    ``max_bucket`` caps rows per (block, key) bucket — the same skew
-    guard minhash_candidate_pairs uses. A cluster of k near-identical
-    documents lands k rows in the same block-bucket and k² candidate
-    pairs; at corpus scale that is THE scale killer (the r4 sf1 sweep
-    measured 11.5× growth at 10× rows from exactly this). The cap is
-    deterministic (row_number by id), so the SQL oracle replays it;
-    pairs inside an over-full bucket beyond the cap are dropped — by
-    construction those are near-identical clusters that exact /
-    minhash dedup already collapses."""
+    reproducible by the DuckDB oracle bit-for-bit. The block
+    self-join is capped_band_pairs (hot-bucket row cap)."""
     # materialize the signature BEFORE posexplode: generator inputs
     # are inlined through collapsed projections, so exploding over
     # expressions of _sh would re-evaluate the signature per
     # generated row
-    sig = simhash_sig_table(docs, id_col, text_col).localCheckpoint()
+    sig = simhash_sig_table(docs).localCheckpoint()
     mask = (1 << SIMHASH_BLOCK_BITS) - 1
     blocked = sig.select(
         "_id",
-        "_sh",
         F.posexplode(
             F.array(
                 *[
@@ -248,60 +230,38 @@ def simhash_neardup_pairs(
                     for i in range(SIMHASH_BITS // SIMHASH_BLOCK_BITS)
                 ]
             )
-        ).alias("_blk", "_key"),
+        ).alias("_band", "_bkt"),
     )
-    # bound bucket size (skew guard, deterministic: keep the
-    # max_bucket smallest ids per block-bucket)
-    w_bucket = F.row_number().over(
-        Window.partitionBy("_blk", "_key").orderBy("_id")
-    )
-    blocked = (
-        blocked.withColumn("_rn", w_bucket)
-        .filter(F.col("_rn") <= max_bucket)
-        .drop("_rn")
-    )
-    # materialize: the self-join would otherwise re-run the explode +
-    # cap window once per side
-    blocked = blocked.localCheckpoint()
-    a, b = blocked.alias("a"), blocked.alias("b")
+    sa = sig.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sa"))
+    sb = sig.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sb"))
     return (
-        a.join(
-            b,
-            (F.col("a._blk") == F.col("b._blk"))
-            & (F.col("a._key") == F.col("b._key"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
+        capped_band_pairs(blocked).join(sa, "id_a").join(sb, "id_b")
         .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.bit_count(F.col("a._sh").bitwiseXOR(F.col("b._sh"))).alias("hamming"),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"),
         )
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Exact word-n-gram Jaccard over blocked candidates (block = the
-    ``n_bands`` SMALLEST n-gram md5s — a bottom-k sketch; two docs are
-    candidates iff they share at least one of their bottom-k gram
-    hashes; deterministic, so the SQL oracle reproduces it verbatim).
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact word-3-gram Jaccard over blocked candidates (block = the
+    4 SMALLEST gram md5s — a bottom-k sketch; two docs are candidates
+    iff they share at least one of their bottom-k gram hashes;
+    deterministic, so the SQL oracle reproduces it verbatim).
 
-    Recall: a single min-gram band (n_bands=1) finds a pair with
+    Recall: a single min-gram band (k=1) finds a pair with
     probability ≈ its Jaccard — ~50% at the threshold, useless. With
     bottom-k banding the miss probability decays geometrically
-    (~(1−J)^k): measured ≥0.9 recall at J≥0.4 with the default 4
-    bands (tests/test_operators.py recall gate). Candidate pairs are
-    id-only through the band self-join (100 TB rule: gram arrays
-    never ride the block shuffle); grams re-join by id for the exact
-    verify, the same shape as the minhash verify step."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " "))
+    (~(1−J)^k): measured ≥0.9 recall at J≥0.4 with k = 4
+    (tests/test_operators.py recall gate). All of a document's
+    bottom-k hashes share ONE band id, so a shared gram collides at
+    any rank. Candidates come from capped_band_pairs (id-only, with
+    the hot-bucket row cap — 100 TB rule: gram arrays never ride the
+    block shuffle); grams re-join by id for the exact verify, the
+    same shape as the minhash verify step."""
+    n, k = 3, 4
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
     # stage the word array in its own projection: the gram lambda
     # below references it per ELEMENT, and interpreted HOFs have no
     # CSE — capturing the split(regexp(lower)) tree in the closure
@@ -313,39 +273,26 @@ def ngram_jaccard_pairs(
             lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
         )
     )
-    from json_ld_spark.plans.layout import rebalance_scan
-
-    # staged projections: words once, then grams once; `_blk` derives
+    # staged projections: words once, then grams once; `_bands` derives
     # from the gram alias so nothing expensive evaluates twice per row.
     # Rebalanced first: gram construction is the heavy per-row stage
     # and must not run at a compact scan's 1-2 splits (plans/layout.py)
     g = rebalance_scan(docs.select(
-        F.col(id_col).alias("_id"), F.split(norm, " ").alias("_words")
+        F.col("doc_id").alias("_id"), F.split(norm, " ").alias("_words")
     )).select(F.col("_id"), grams.alias("_grams")).select(
         "_id",
         "_grams",
         F.size("_grams").alias("_n"),
         F.slice(
-            F.array_sort(F.transform("_grams", lambda s: F.md5(s))),
-            1, n_bands,
+            F.array_sort(F.transform("_grams", lambda s: F.md5(s))), 1, k
         ).alias("_bands"),
     )
-    # materialize before the self-join: otherwise the (expensive,
-    # interpreted) gram computation runs once per join side
+    # materialize before the band join: otherwise the (expensive,
+    # interpreted) gram computation runs once per consumer
     g = g.localCheckpoint()
-    bands = g.select("_id", F.explode("_bands").alias("_blk"))
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a._blk") == F.col("b._blk"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
-        .dropDuplicates()
-    )
+    cand = capped_band_pairs(g.select(
+        "_id", F.lit(0).alias("_band"), F.explode("_bands").alias("_bkt")
+    ))
     ga = g.select(
         F.col("_id").alias("id_a"),
         F.col("_grams").alias("_gram_a"),
@@ -377,21 +324,11 @@ def ngram_jaccard_pairs(
 
 
 def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.9,
+    embeddings: DataFrame, threshold: float = 0.9
 ) -> DataFrame:
-    """Near-duplicate vectors by cosine within blocking buckets.
-
-    ``block_col`` is the bucket (a cluster/label column when present;
-    sign-LSH via ``sign_lsh_bucket`` otherwise) — the join is
-    per-bucket, so cost is Σ bucket² not N²."""
-    from json_ld_spark.functions.columns import dot, l2_norm
-
-    from json_ld_spark.plans.layout import rebalance_scan
-
+    """Near-duplicate vectors by cosine within ``label`` blocks — the
+    join is per label, so cost is Σ block² not N². The label-free
+    path is embedding_neardup_pairs_banded."""
     # per-vector norms staged BEFORE the pair join: cosine then costs
     # one aggregate per pair (the dot product) instead of three —
     # Σ bucket² pairs each re-deriving both norms was 2/3 of the CPU.
@@ -399,8 +336,8 @@ def embedding_neardup_pairs(
     # Rebalanced so the staging (and the join probe build) is not
     # pinned to a compact scan's splits (plans/layout.py).
     e = rebalance_scan(embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-        F.col(block_col).alias("_b"),
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"),
+        F.col("label").alias("_b"),
     )).withColumn("_norm", l2_norm(F.col("_v"))).localCheckpoint()
     a, b = e.alias("a"), e.alias("b")
     return (
@@ -418,37 +355,30 @@ def embedding_neardup_pairs(
     )
 
 
-def neardup_lsh_config(
-    n_vectors: int,
-    target_bucket: int = 8,
-    recall: float = 0.9,
-    p_agree: float = 0.86,
-    min_planes: int = 6,
-    max_planes: int = 16,
-) -> "tuple[int, int]":
+def neardup_lsh_config(n_vectors: int) -> "tuple[int, int]":
     """(planes_per_band, n_bands) for banded sign-LSH near-dup
     blocking, sized to the corpus.
 
     The r4 design had a CONSTANT bucket count (2^6–2^8), so the
     per-bucket self-join cost Σ bucket² = O(N²/2^planes) — measured
     29.8×/38.5× growth at 10× rows in the sf1 sweep. Fix: bucket
-    count scales with N (planes ≈ log2(N / target_bucket), so mean
-    occupancy stays ~target_bucket and Σ bucket² stays O(N)), and the
-    band count keeps recall: a pair at the design similarity (cosine
-    0.9 → per-plane sign-agreement p = 1 − θ/π ≈ 0.86) collides in
-    one band w.p. p^planes, so bands = ⌈ln(1−recall)/ln(1−p^planes)⌉
-    restores ≥``recall`` end-to-end (measured 0.9 on the planted
-    positives at sf0.01 AND sf0.1 — tests/test_operators.py).
+    count scales with N (planes ≈ log2(N / 8), so mean occupancy
+    stays ~8 and Σ bucket² stays O(N)), and the band count keeps
+    recall: a pair at the design similarity (cosine 0.9 → per-plane
+    sign-agreement p = 1 − θ/π ≈ 0.86) collides in one band w.p.
+    p^planes, so bands = ⌈ln(1−0.9)/ln(1−p^planes)⌉ restores ≥0.9
+    recall end-to-end (measured 0.9 on the planted positives at
+    sf0.01 AND sf0.1 — tests/test_operators.py).
 
-    max_planes=16 bounds the AND-width (beyond it the band count for
-    fixed recall explodes ~1/p^planes); past 2^16 buckets the
-    per-bucket row cap in embedding_neardup_pairs_banded takes over
-    as the scale bound, keeping candidates ≤ cap·N·bands — linear."""
+    Planes stay in [6, 16]: 16 bounds the AND-width (beyond it the
+    band count for fixed recall explodes ~1/p^planes); past 2^16
+    buckets the per-bucket row cap of capped_band_pairs takes over as
+    the scale bound, keeping candidates ≤ cap·N·bands — linear."""
     import math
 
+    target_bucket, recall, p_agree = 8, 0.9, 0.86
     planes = min(
-        max_planes,
-        max(min_planes, math.ceil(math.log2(max(n_vectors, 2) / target_bucket))),
+        16, max(6, math.ceil(math.log2(max(n_vectors, 2) / target_bucket)))
     )
     collide = p_agree ** planes
     bands = max(1, math.ceil(math.log(1.0 - recall) / math.log(1.0 - collide)))
@@ -456,15 +386,13 @@ def neardup_lsh_config(
 
 
 def neardup_lsh_planes(
-    planes_per_band: int, n_bands: int, dim: int, seed0: int = 100
+    planes_per_band: int, n_bands: int, dim: int
 ) -> "list[list[list[float]]]":
-    """One deterministic literal ±1 plane matrix per band (seeds
-    seed0, seed0+1, …) — data-independent constants, reproducible by
-    any engine (similarity.plane_matrix)."""
-    from json_ld_spark.operators.similarity import plane_matrix
-
+    """One deterministic literal ±1 plane matrix per band (seeds 100,
+    101, …) — data-independent constants, reproducible by any engine
+    (similarity.plane_matrix)."""
     return [
-        plane_matrix(planes_per_band, dim, seed=seed0 + b)
+        plane_matrix(planes_per_band, dim, seed=100 + b)
         for b in range(n_bands)
     ]
 
@@ -472,10 +400,7 @@ def neardup_lsh_planes(
 def embedding_neardup_pairs_banded(
     embeddings: DataFrame,
     planes_bands: "list[list[list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
-    max_bucket: int = 64,
 ) -> DataFrame:
     """(id_a, id_b, cosine): near-duplicate vectors via multi-band
     sign-LSH blocking — the label-free path that holds at corpus
@@ -486,23 +411,16 @@ def embedding_neardup_pairs_banded(
       1. one projection computes every band's bucket id per vector
          (posexplode of the per-band bucket array — vectors are read
          once);
-      2. per-(band, bucket) row cap (row_number by id, deterministic,
-         oracle-replayable) bounds hot buckets: candidates are
-         ≤ max_bucket · N · bands — linear in N;
-      3. the self-join is per (band, bucket) on an id-only relation
-         (vectors never ride the candidate shuffle);
-      4. distinct pairs re-join the staged (vector, norm) relation for
+      2. capped_band_pairs: the per-(band, bucket) row cap, then the
+         id-only self-join (vectors never ride the candidate
+         shuffle) — candidates are ≤ cap · N · bands, linear in N;
+      3. distinct pairs re-join the staged (vector, norm) relation for
          ONE cosine evaluation per pair."""
-    from json_ld_spark.functions.columns import dot, l2_norm
-    from json_ld_spark.operators.similarity import sign_lsh_bucket_literal
-
-    from json_ld_spark.plans.layout import rebalance_scan
-
     # scan-granularity guard: the bucket computation (bands × planes
     # × dim flops per vector) is the dominant cost and must not run
     # at a compact scan's 1-2 splits (plans/layout.py)
     e = rebalance_scan(embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
     )).withColumn("_norm", l2_norm(F.col("_v"))).localCheckpoint()
     vecs = F.col("_v").cast("array<double>")
     banded = e.select(
@@ -514,27 +432,6 @@ def embedding_neardup_pairs_banded(
             ])
         ).alias("_band", "_bkt"),
     )
-    w_bucket = F.row_number().over(
-        Window.partitionBy("_band", "_bkt").orderBy("_id")
-    )
-    banded = (
-        banded.withColumn("_rn", w_bucket)
-        .filter(F.col("_rn") <= max_bucket)
-        .drop("_rn")
-        .localCheckpoint()  # bucket ids are the dominant cost; the
-        # self-join must not recompute them per side
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bkt") == F.col("b._bkt"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates()
-    )
     va = e.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
         F.col("_norm").alias("_na"),
@@ -544,7 +441,7 @@ def embedding_neardup_pairs_banded(
         F.col("_norm").alias("_nb"),
     )
     return (
-        pairs.join(va, "id_a")
+        capped_band_pairs(banded).join(va, "id_a")
         .join(vb, "id_b")
         .select(
             "id_a",
@@ -559,39 +456,7 @@ def embedding_neardup_pairs_banded(
     )
 
 
-def sign_lsh_bucket(vec_col, n_planes: int = 8, seed: int = 7):
-    """Random-hyperplane LSH bucket id from deterministic pseudo-planes:
-    plane p's component j = sign derived from xxhash64(p, j). JVM-only."""
-    def _plane_weight(p: int):
-        # one-arg closure: a two-arg lambda would receive the array
-        # index as its second argument, clobbering the plane id
-        return lambda j: F.when(
-            F.xxhash64(F.lit(p), j, F.lit(seed)) % 2 == 0, F.lit(1.0)
-        ).otherwise(F.lit(-1.0))
-
-    def plane_dot(p: int):
-        return F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.transform(F.sequence(F.lit(0), F.size(vec_col) - 1), _plane_weight(p)),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        bucket = bucket * 2 + F.when(plane_dot(p) >= 0, 1).otherwise(0)
-    return bucket
-
-
-def jaccard_prefix_join(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def jaccard_prefix_join(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT similarity join via prefix filtering (the PPJoin family,
     Xiao et al., WWW 2008 — public knowledge): (id_a, id_b, jaccard)
     for every pair with word-set Jaccard ≥ ``threshold``. Unlike the
@@ -620,9 +485,9 @@ def jaccard_prefix_join(
     deliberately measures the probabilistic paths and gates this one
     at oracle scale.
     """
-    norm = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    norm = F.lower(F.coalesce(F.col("text"), F.lit("")))
     tok = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.array_distinct(
                 F.filter(F.split(norm, "\\s+"), lambda w: w != "")
@@ -679,11 +544,7 @@ def jaccard_prefix_join(
 
 
 def semdedup(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, centroids: DataFrame, threshold: float = 0.9
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) re-expressed
     relationally: semantic deduplication by k-means clustering plus
@@ -710,17 +571,13 @@ def semdedup(
     ``train_ivf_codebook`` documents); a fixed k at 100x the corpus
     re-creates the r4 sign-LSH blowup. The min(kept_by) aggregation
     is partial (map-side) on vec_id."""
-    from json_ld_spark.operators.similarity import ivf_assign
-
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+    assigned = ivf_assign(corpus, centroids)
     left = assigned.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"),
         "centroid_id",
     )
     right = assigned.select(
-        F.col(id_col).alias("_rid"),
-        F.col(vec_col).alias("_rv"),
+        F.col("vec_id").alias("_rid"), F.col("embedding").alias("_rv"),
         "centroid_id",
     )
     keep = (
@@ -734,10 +591,10 @@ def semdedup(
         .agg(F.min("_rid").alias("kept_by"))
     )
     return (
-        assigned.select(F.col(id_col), "centroid_id")
-        .join(keep.withColumnRenamed("_id", id_col), id_col, "left")
+        assigned.select("vec_id", "centroid_id")
+        .join(keep.withColumnRenamed("_id", "vec_id"), "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "centroid_id",
             "kept_by",
             F.col("kept_by").isNotNull().cast("int").alias("removed"),
@@ -746,11 +603,7 @@ def semdedup(
 
 
 def exact_substring_spans(
-    docs: DataFrame,
-    n: int = 13,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, n: int = 13, min_docs: int = 2
 ) -> DataFrame:
     """Cross-document exact-substring detection (the ExactSubstr
     flavor of Lee et al. 2022, "Deduplicating Training Data Makes
@@ -777,13 +630,13 @@ def exact_substring_spans(
     document does not mark a span."""
     norm = F.trim(
         F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "\\s+", " "
+            F.lower(F.coalesce(F.col("text"), F.lit(""))), "\\s+", " "
         )
     )
     words = F.when(
         F.length(norm) == 0, F.array().cast("array<string>")
     ).otherwise(F.split(norm, " "))
-    staged = docs.select(F.col(id_col), words.alias("_w"))
+    staged = docs.select(F.col("doc_id"), words.alias("_w"))
     grams_arr = F.when(
         F.size("_w") >= n,
         F.transform(
@@ -792,31 +645,31 @@ def exact_substring_spans(
         ),
     ).otherwise(F.array().cast("array<string>"))
     occ = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(grams_arr).alias("_p0", "_key"),
-    ).select(id_col, (F.col("_p0") + 1).cast("int").alias("pos"), "_key")
+    ).select("doc_id", (F.col("_p0") + 1).cast("int").alias("pos"), "_key")
     dup = (
         occ.groupBy("_key")
-        .agg(F.countDistinct(id_col).alias("_nd"))
+        .agg(F.countDistinct("doc_id").alias("_nd"))
         .filter(F.col("_nd") >= min_docs)
         .select("_key")
     )
-    hits = occ.join(dup, "_key").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    run = Window.partitionBy(id_col).orderBy("pos").rowsBetween(
+    hits = occ.join(dup, "_key").select("doc_id", "pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    run = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     marked = hits.select(
-        id_col,
+        "doc_id",
         "pos",
         F.when(F.col("pos") - F.lag("pos").over(w) > n, F.lit(1))
         .otherwise(F.lit(0))
         .alias("_brk"),
     )
     isl = marked.select(
-        id_col, "pos", F.sum("_brk").over(run).alias("_island")
+        "doc_id", "pos", F.sum("_brk").over(run).alias("_island")
     )
-    return isl.groupBy(id_col, "_island").agg(
+    return isl.groupBy("doc_id", "_island").agg(
         F.min("pos").cast("int").alias("span_start"),
         (F.max("pos") + n).cast("int").alias("span_end"),
         (F.max("pos") + n - F.min("pos")).cast("int").alias("span_words"),

@@ -3,10 +3,10 @@ sampling operators share with their DuckDB oracles, in one place.
 
 The base hash is the first 15 hex digits (60 bits) of md5. Any SQL
 engine with md5 reproduces it, so minhash signatures, band buckets,
-simhash signatures and sampling buckets are all recomputed
-bit-for-bit by the oracle SQL in ``__spark_entry__.py``. Each Spark
-expression below sits next to the SQL text or constant the oracle
-reads.
+simhash signatures, the band-bucket cap and sampling buckets are all
+recomputed bit-for-bit by the oracle SQL in ``__spark_entry__.py``.
+Each Spark expression below sits next to the SQL text or constant the
+oracle reads.
 """
 
 from __future__ import annotations
@@ -21,6 +21,10 @@ SIMHASH_BITS = 60
 SIMHASH_BLOCK_BITS = 15
 
 MINHASH_PRIME = 2147483647  # 2^31 - 1: (a*h + b) % P stays in 62 bits
+
+# rows kept per (band, bucket) before a banded self-join: the smallest
+# ids, by row_number — the skew guard of canonicalize.capped_band_pairs
+BAND_BUCKET_CAP = 64
 
 # sampling buckets: thresholds are fractions at 1e-6 grain
 SAMPLE_BUCKETS = 1_000_000

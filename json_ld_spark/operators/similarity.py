@@ -1,11 +1,16 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over (vec_id, embedding array<float>) frames.
 
-  - brute-force cosine top-k: the exact baseline — one scan, JVM-side
-    dot products, TakeOrderedAndProject (no full sort).
-  - LSH-bucketed top-k: the scale path — sign-LSH restricts the scan
-    to matching buckets (multi-probe = query bucket's neighbors).
-  - IVF-style top-k: coarse quantization by a centroid table
-    (broadcast), probe nearest `nprobe` centroids.
+  - brute-force cosine top-k: the exact baseline for one literal
+    query — one scan, JVM-side dot products, TakeOrderedAndProject
+    (no full sort).
+  - LSH top-k (lsh_topk_batch): the scale path — sign-LSH over md5
+    literal planes (plane_matrix, the one plane family, replayed by
+    the SQL oracles) restricts the scan to matching buckets
+    (multi-probe = each query bucket's Hamming neighbors).
+  - IVF top-k (ivf_topk_batch): coarse quantization by a trained
+    centroid table (broadcast), probe the nearest ``nprobe`` cells.
+Both indexes answer a (query_id, query_vec) frame in ONE plan; a
+single query is a one-row frame.
 """
 
 from __future__ import annotations
@@ -16,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from json_ld_spark.functions.columns import cosine_similarity
-from json_ld_spark.operators.dedup import sign_lsh_bucket
 
 
 def _query_vec_col(query_vec: Sequence[float]):
@@ -79,103 +83,34 @@ def sign_lsh_bucket_literal(vec_col, planes: Sequence[Sequence[float]]):
     return bucket
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    probe_radius: int = 1,
-    planes: "Sequence[Sequence[float]] | None" = None,
-) -> DataFrame:
-    """Approximate top-k: only vectors whose sign-LSH bucket is within
-    ``probe_radius`` Hamming bits of the query's bucket are scored
-    (multi-probe LSH: the query's own bucket plus its near-miss
-    neighbors, which is where boundary-straddling true neighbors land).
-    Candidate fraction ≈ Σ_{r≤radius} C(n_planes, r) / 2^n_planes.
-
-    With ``planes`` given (a literal ±1 matrix from plane_matrix), the
-    bucket function is engine-independent — the DuckDB oracle
-    reproduces it exactly; default (None) derives planes from
-    plane_matrix(n_planes, dim of first row is unknown) — callers pass
-    planes explicitly when they need cross-engine determinism, else
-    the xxhash64-seeded sign_lsh_bucket is used."""
-    q = _query_vec_col(query_vec)
-    if planes is not None:
-        bucket_of = lambda c: sign_lsh_bucket_literal(c, planes)  # noqa: E731
-        n_bits = len(planes)
-    else:
-        bucket_of = lambda c: sign_lsh_bucket(c, n_planes)  # noqa: E731
-        n_bits = n_planes
-    bucketed = embeddings.withColumn("_bkt", bucket_of(F.col(vec_col)))
-    # query bucket computed with the same expression over a 1-row
-    # frame, then exploded into the probe set (Hamming ≤ radius)
-    flips = [0] + [1 << i for i in range(n_bits)]
-    if probe_radius >= 2:
-        flips += [
-            (1 << i) | (1 << j)
-            for i in range(n_bits)
-            for j in range(i + 1, n_bits)
-        ]
-    qrow = (
-        embeddings.sparkSession.range(1)
-        .select(bucket_of(q.cast("array<double>")).alias("_qb"))
-        .select(
-            F.explode(
-                F.array(*[
-                    F.col("_qb").bitwiseXOR(F.lit(m).cast("long"))
-                    for m in flips
-                ])
-            ).alias("_bkt")
-        )
-        .distinct()
-    )
-    return (
-        bucketed.join(F.broadcast(qrow), "_bkt")
-        .select(
-            F.col(id_col),
-            F.round(cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def lsh_topk_batch(
     embeddings: DataFrame,
     queries: DataFrame,
+    planes: Sequence[Sequence[float]],
     k: int = 10,
-    planes: "Sequence[Sequence[float]] | None" = None,
-    n_planes: int = 6,
     probe_radius: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Multi-probe sign-LSH top-k for MANY queries in ONE plan (the
-    batch twin of lsh_topk, same shape as ivf_topk_batch):
+    """Multi-probe sign-LSH top-k for the (query_id, query_vec) frame
+    ``queries`` in ONE plan (same shape as ivf_topk_batch):
 
-      bucket: every corpus row hashed once (JVM expression);
+      bucket: every corpus row hashed once (JVM expression over the
+              literal ``planes`` from plane_matrix);
       probe:  per query, its bucket's Hamming-≤radius neighborhood
               exploded into (query_id, bucket) rows — a broadcastable
-              probe table of |Q|·Σ C(n_planes, r) rows;
+              probe table of |Q|·Σ C(len(planes), r) rows;
       cand:   corpus ⋈ broadcast(probes) on bucket — the corpus-sized
               side never shuffles;
       rank:   per-query row_number ≤ k over rounded cosine.
 
-    With literal ``planes`` the whole result is engine-reproducible
-    (the driver oracle replays it)."""
+    Literal planes make the whole result engine-reproducible (the
+    driver oracle replays it). Returns (query_id, vec_id, cosine,
+    rank)."""
     from pyspark.sql import Window
 
-    if planes is not None:
-        bucket_of = lambda c: sign_lsh_bucket_literal(c, planes)  # noqa: E731
-        n_bits = len(planes)
-    else:
-        bucket_of = lambda c: sign_lsh_bucket(c, n_planes)  # noqa: E731
-        n_bits = n_planes
-    bucketed = embeddings.withColumn("_bkt", bucket_of(F.col(vec_col)))
+    bucketed = embeddings.withColumn(
+        "_bkt", sign_lsh_bucket_literal(F.col("embedding"), planes)
+    )
+    n_bits = len(planes)
     flips = [0] + [1 << i for i in range(n_bits)]
     if probe_radius >= 2:
         flips += [
@@ -185,11 +120,14 @@ def lsh_topk_batch(
         ]
     probes = (
         queries.withColumn(
-            "_qb", bucket_of(F.col(query_vec_col).cast("array<double>"))
+            "_qb",
+            sign_lsh_bucket_literal(
+                F.col("query_vec").cast("array<double>"), planes
+            ),
         )
         .select(
-            query_id_col,
-            query_vec_col,
+            "query_id",
+            "query_vec",
             F.explode(
                 F.array(*[
                     F.col("_qb").bitwiseXOR(F.lit(m).cast("long"))
@@ -197,33 +135,29 @@ def lsh_topk_batch(
                 ])
             ).alias("_bkt"),
         )
-        .dropDuplicates([query_id_col, "_bkt"])
+        .dropDuplicates(["query_id", "_bkt"])
     )
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
+    w_rank = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.col("vec_id")
     )
     return (
         bucketed.join(F.broadcast(probes), "_bkt")
         .select(
-            query_id_col,
-            F.col(id_col),
+            "query_id",
+            "vec_id",
             F.round(
-                cosine_similarity(F.col(vec_col), F.col(query_vec_col)), 4
+                cosine_similarity(F.col("embedding"), F.col("query_vec")), 4
             ).alias("cosine"),
         )
         .withColumn("_rk", F.row_number().over(w_rank))
         .filter(F.col("_rk") <= k)
-        .select(query_id_col, id_col, "cosine",
+        .select("query_id", "vec_id", "cosine",
                 F.col("_rk").cast("int").alias("rank"))
     )
 
 
 def build_ivf_centroids(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    embeddings: DataFrame, n_centroids: int = 16, dim: int = 64
 ) -> DataFrame:
     """Coarse one-pass codebook: centroid c = mean of vectors in cell
     c. NOT a trained quantizer — it exists as (a) the deterministic,
@@ -237,14 +171,14 @@ def build_ivf_centroids(
     in non-ANSI mode would otherwise degenerate the codebook."""
     from pyspark.sql.types import NumericType
 
-    id_type = embeddings.schema[id_col].dataType
+    id_type = embeddings.schema["vec_id"].dataType
     if isinstance(id_type, NumericType):
-        cell = F.pmod(F.col(id_col), F.lit(n_centroids))
+        cell = F.pmod(F.col("vec_id"), F.lit(n_centroids))
     else:
-        cell = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_centroids))
+        cell = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_centroids))
     cells = embeddings.select(
         cell.cast("int").alias("centroid_id"),
-        F.col(vec_col).alias("_v"),
+        F.col("embedding").alias("_v"),
     )
     agg = cells.groupBy("centroid_id").agg(
         F.array(
@@ -259,10 +193,7 @@ def train_ivf_codebook(
     embeddings: DataFrame,
     n_centroids: int = 16,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
-    round_dp: int = 6,
 ) -> DataFrame:
     """TRAINED IVF codebook: Lloyd's k-means with a deterministic
     mod-partition init (build_ivf_centroids) and a FIXED iteration
@@ -276,7 +207,7 @@ def train_ivf_codebook(
         row per vector on the exchange);
       - update: one ``groupBy(centroid_id).agg(avg per dim)`` round —
         a single shuffle of dim-width partial sums.
-    Centroid coordinates are rounded to ``round_dp`` decimals after
+    Centroid coordinates are rounded to 6 decimals after
     init and after every update: the rounding quantizes away the
     ~1e-13 summation-order noise between engines (and between Spark
     partition orders), which is what makes the trained codebook
@@ -290,6 +221,7 @@ def train_ivf_codebook(
     full corpus is the one big pass."""
     from json_ld_spark.plans.layout import rebalance_scan
 
+    round_dp = 6
     rounded = lambda c: F.transform(c, lambda x: F.round(x, round_dp))  # noqa: E731
     # materialize the training input once: every Lloyd iteration scans
     # it (assignment cross join), and without this each iteration
@@ -297,19 +229,19 @@ def train_ivf_codebook(
     # per-iteration assignment (C cosines per vector, pre-aggregation)
     # runs at this frame's partitioning (plans/layout.py).
     embeddings = rebalance_scan(
-        embeddings.select(id_col, vec_col)
+        embeddings.select("vec_id", "embedding")
     ).localCheckpoint()
-    cents = build_ivf_centroids(
-        embeddings, n_centroids, id_col, vec_col, dim
-    ).select("centroid_id", rounded(F.col("centroid")).alias("centroid"),
-             "n_members")
+    cents = build_ivf_centroids(embeddings, n_centroids, dim).select(
+        "centroid_id", rounded(F.col("centroid")).alias("centroid"),
+        "n_members",
+    )
     for _ in range(n_iters):
         cents = cents.localCheckpoint()
-        assigned = ivf_assign(embeddings, cents, id_col, vec_col)
+        assigned = ivf_assign(embeddings, cents)
         upd = assigned.groupBy("centroid_id").agg(
             F.array(
                 *[
-                    F.round(F.avg(F.element_at(vec_col, i + 1)), round_dp)
+                    F.round(F.avg(F.element_at("embedding", i + 1)), round_dp)
                     for i in range(dim)
                 ]
             ).alias("centroid"),
@@ -327,12 +259,7 @@ def train_ivf_codebook(
     return cents.localCheckpoint()
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (broadcast the
     codebook — it is dimension-table-sized by construction).
 
@@ -343,21 +270,21 @@ def ivf_assign(
     would shuffle the whole cross-join output (the bounded-vs-unbounded
     exchange difference at 100-TB vector counts)."""
     joined = embeddings.crossJoin(F.broadcast(centroids)).withColumn(
-        "_sim", cosine_similarity(F.col(vec_col), F.col("centroid"))
+        "_sim", cosine_similarity(F.col("embedding"), F.col("centroid"))
     )
     # max of (sim, -centroid_id) = highest similarity, ties to the
     # lowest centroid id (same order the old window used)
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("vec_id")
         .agg(
             F.max_by(
                 F.col("centroid_id"),
                 F.struct(F.col("_sim").alias("s"),
                          (-F.col("centroid_id")).alias("c")),
             ).alias("centroid_id"),
-            F.first(vec_col).alias(vec_col),
+            F.first("embedding").alias("embedding"),
         )
-        .select(id_col, vec_col, "centroid_id")
+        .select("vec_id", "embedding", "centroid_id")
     )
 
 
@@ -367,14 +294,12 @@ def ivf_topk_batch(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Top-k for MANY query vectors in ONE plan — the serving/dedup
-    shape at scale (per-query driver loops don't distribute; a batch
-    of embeddings queried against an indexed corpus is a join):
+    """Top-k for the (query_id, query_vec) frame ``queries`` in ONE
+    plan — the serving/dedup shape at scale (per-query driver loops
+    don't distribute; a batch of embeddings queried against an
+    indexed corpus is a join). ``assigned`` is the ivf_assign output
+    (the precomputed index):
 
       probe:  queries × broadcast(codebook) → per-query top-``nprobe``
               centroids (window partitioned by query — C rows per
@@ -382,88 +307,52 @@ def ivf_topk_batch(
       cand:   assigned ⋈ broadcast(probes) on centroid_id — the
               corpus-sized side NEVER shuffles; each vector row fans
               out only to the queries probing its cell;
-      rank:   per-query row_number ≤ k over rounded cosine (the same
-              deterministic tie-break the single-query path uses).
+      rank:   per-query row_number ≤ k over rounded cosine, ties to
+              the lower vec_id.
 
     ``queries`` must be broadcastable (a batch, not a second corpus);
     for corpus×corpus similarity use the near-dup operators instead.
     Returns (query_id, vec_id, cosine, rank)."""
     from pyspark.sql import Window
 
-    w_probe = Window.partitionBy(query_id_col).orderBy(
+    w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("_csim"), F.col("centroid_id")
     )
     probes = (
         queries.crossJoin(F.broadcast(centroids))
         .withColumn(
-            "_csim",
-            cosine_similarity(F.col(query_vec_col), F.col("centroid")),
+            "_csim", cosine_similarity(F.col("query_vec"), F.col("centroid"))
         )
         .withColumn("_rn", F.row_number().over(w_probe))
         .filter(F.col("_rn") <= nprobe)
-        .select(query_id_col, "centroid_id", query_vec_col)
+        .select("query_id", "centroid_id", "query_vec")
     )
     cands = assigned.join(F.broadcast(probes), "centroid_id")
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
+    w_rank = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.col("vec_id")
     )
     return (
         cands.select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             F.round(
-                cosine_similarity(F.col(vec_col), F.col(query_vec_col)), 4
+                cosine_similarity(F.col("embedding"), F.col("query_vec")), 4
             ).alias("cosine"),
         )
         .withColumn("_rk", F.row_number().over(w_rank))
         .filter(F.col("_rk") <= k)
-        .select(query_id_col, id_col, "cosine",
+        .select("query_id", "vec_id", "cosine",
                 F.col("_rk").cast("int").alias("rank"))
     )
 
 
-def ivf_topk(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe the nprobe nearest centroids, score only their members.
-    `assigned` is the output of ``ivf_assign`` (precomputed index)."""
-    q = _query_vec_col(query_vec)
-    probe = (
-        centroids.select(
-            "centroid_id", cosine_similarity(F.col("centroid"), q).alias("_csim")
-        )
-        .orderBy(F.desc("_csim"), F.col("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id")
-    )
-    return (
-        assigned.join(F.broadcast(probe), "centroid_id")
-        .select(
-            F.col(id_col),
-            F.round(cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def quantize_codes(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_codes(emb: DataFrame) -> DataFrame:
     """(id, dim, q): the per-dimension uint8 codes behind
     embedding_quantize — exposed so downstream EXACT-integer analytics
     (PCA over codes, integer distance sketches) can reuse the same
     deterministic quantization."""
     dims = emb.select(
-        F.col(id_col).alias("id"), F.posexplode(vec_col).alias("dim", "v")
+        F.col("vec_id").alias("id"), F.posexplode("embedding").alias("dim", "v")
     )
     ranges = dims.groupBy("dim").agg(
         F.min("v").alias("_lo"), F.max("v").alias("_hi")
@@ -481,11 +370,7 @@ def quantize_codes(
     )
 
 
-def embedding_quantize(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_quantize(emb: DataFrame) -> DataFrame:
     """(id, n_dims, sum_q, min_q, max_q, checksum): per-dimension
     min-max scalar quantization of float vectors to uint8 — the
     standard 4x vector-store compression. q = round((v − min_d)·255 /
@@ -500,8 +385,8 @@ def embedding_quantize(
     pipeline is cast-to-double exact arithmetic, IEEE-identical in
     any engine."""
     return (
-        quantize_codes(emb, id_col=id_col, vec_col=vec_col)
-        .groupBy(F.col("id").alias(id_col))
+        quantize_codes(emb)
+        .groupBy(F.col("id").alias("vec_id"))
         .agg(
             F.count("*").cast("int").alias("n_dims"),
             F.sum("q").alias("sum_q"),
@@ -513,12 +398,7 @@ def embedding_quantize(
 
 
 def pca_top_component(
-    emb: DataFrame,
-    n_vecs: int,
-    n_iters: int = 3,
-    v_scale: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, n_vecs: int, n_iters: int = 3
 ) -> DataFrame:
     """(dim, v): the top principal direction of the embedding cloud,
     as a fixed-iteration power-iteration recipe over EXACT INTEGERS —
@@ -531,9 +411,9 @@ def pca_top_component(
     quantized to uint8 codes (quantize_codes — itself gated), and the
     scaled covariance C = n·Σqᵢqⱼ − ΣqᵢΣqⱼ is exact int64. Each power
     iteration computes w = C·v over integers (v carried at
-    ``v_scale``), takes ‖w‖ via DECIMAL(38,0) squares (w² overflows
+    scale 1000), takes ‖w‖ via DECIMAL(38,0) squares (w² overflows
     int64; decimal sums are exact and order-free in both engines),
-    and re-normalizes to integers: v′ = round(w/‖w‖·v_scale). The
+    and re-normalizes to integers: v′ = round(w/‖w‖·1000). The
     only floats are one cast + divide + sqrt per iteration on exact
     operands — IEEE-identical everywhere.
 
@@ -553,8 +433,9 @@ def pca_top_component(
     # range constants collected once (parameter fetch).
     from json_ld_spark.plans.layout import rebalance_scan
 
+    v_scale = 1000
     rng = (
-        emb.select(F.posexplode(vec_col).alias("dim", "v"))
+        emb.select(F.posexplode("embedding").alias("dim", "v"))
         .groupBy("dim")
         .agg(F.min("v").alias("_lo"), F.max("v").alias("_hi"))
         .orderBy("dim")
@@ -575,7 +456,7 @@ def pca_top_component(
         .cast("long"),
     )
     qdf = rebalance_scan(
-        emb.select(F.col(vec_col).alias("_v"))
+        emb.select(F.col("embedding").alias("_v"))
     ).select(qvec.alias("_q"))
 
     def _gram_parts(batches):

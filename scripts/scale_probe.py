@@ -76,7 +76,7 @@ def probe_size(spark, n_docs: int) -> dict:
     out["shingle_sec"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    pairs = minhash_candidate_pairs(docs, "doc_id", "text", shingle_sets=sets_)
+    pairs = minhash_candidate_pairs(sets_)
     out["n_pairs"] = pairs.count()
     out["pairs_sec"] = round(time.time() - t0, 2)
 

@@ -53,7 +53,7 @@ def summary(spark, sf_dir: str):
     # the VERIFIED edge set the CC actually ran on (same parameters
     # as minhash_dedup_components)
     sets_ = hashed_shingle_sets(docs, "doc_id", "text")
-    pairs = minhash_candidate_pairs(docs, "doc_id", "text", shingle_sets=sets_)
+    pairs = minhash_candidate_pairs(sets_)
     verified = jaccard_filter(pairs, sets_, 0.3).select("id_a", "id_b")
     return comp, verified, n_rows, wall, n_components, digest
 

@@ -25,8 +25,9 @@ from json_ld_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_centroids,
     ivf_assign,
-    ivf_topk,
-    lsh_topk,
+    ivf_topk_batch,
+    lsh_topk_batch,
+    plane_matrix,
 )
 
 
@@ -215,6 +216,14 @@ def vectors(spark):
     ).cache()
 
 
+def _one_query(spark, qvec):
+    """A one-row (query_id, query_vec) frame for the batch top-k
+    operators."""
+    return spark.createDataFrame(
+        [(0, [float(x) for x in qvec])], "query_id int, query_vec array<double>"
+    )
+
+
 def test_brute_force_topk_exact(spark, vectors):
     qvec = vectors.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     top = brute_force_topk(vectors, qvec, k=5).collect()
@@ -226,7 +235,12 @@ def test_brute_force_topk_exact(spark, vectors):
 def test_lsh_topk_recall(spark, vectors):
     qvec = vectors.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     exact = {r["vec_id"] for r in brute_force_topk(vectors, qvec, k=5).collect()}
-    approx = {r["vec_id"] for r in lsh_topk(vectors, qvec, k=5, n_planes=4).collect()}
+    approx = {
+        r["vec_id"]
+        for r in lsh_topk_batch(
+            vectors, _one_query(spark, qvec), plane_matrix(4, 16), k=5
+        ).collect()
+    }
     # query itself must be found; recall>=0.4 on this easy clustered set
     assert 0 in approx
     assert len(exact & approx) >= 2
@@ -237,15 +251,13 @@ def test_lsh_multiprobe_recall(spark, vectors):
     ≥0.9 recall vs brute force on near-neighbor retrieval (clustered
     fixture: the realistic regime — on isotropic random data no
     sublinear method beats a scan, so recall targets near-dups)."""
-    from json_ld_spark.operators.similarity import plane_matrix
-
     planes = plane_matrix(6, 16)
     qvec = vectors.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     exact = {r["vec_id"] for r in brute_force_topk(vectors, qvec, k=10).collect()}
     approx = {
         r["vec_id"]
-        for r in lsh_topk(
-            vectors, qvec, k=10, planes=planes, probe_radius=2
+        for r in lsh_topk_batch(
+            vectors, _one_query(spark, qvec), planes, k=10, probe_radius=2
         ).collect()
     }
     assert len(exact & approx) / len(exact) >= 0.9
@@ -256,8 +268,10 @@ def test_ivf_topk(spark, vectors):
     cents = build_ivf_centroids(vectors, n_centroids=4, dim=16)
     assigned = ivf_assign(vectors, cents)
     assert assigned.count() == vectors.count()
-    top = ivf_topk(assigned, cents, qvec, k=5, nprobe=4).collect()
-    assert top[0]["vec_id"] == 0  # nprobe=all → exact
+    top = ivf_topk_batch(
+        assigned, cents, _one_query(spark, qvec), k=5, nprobe=4
+    ).collect()
+    assert min(top, key=lambda r: r["rank"])["vec_id"] == 0  # nprobe=all → exact
 
 
 def test_ivf_trained_codebook_recall(spark, vectors):
@@ -274,7 +288,9 @@ def test_ivf_trained_codebook_recall(spark, vectors):
     assigned = ivf_assign(vectors, cents)
     approx = {
         r["vec_id"]
-        for r in ivf_topk(assigned, cents, qvec, k=10, nprobe=1).collect()
+        for r in ivf_topk_batch(
+            assigned, cents, _one_query(spark, qvec), k=10, nprobe=1
+        ).collect()
     }
     assert len(exact & approx) / len(exact) >= 0.9
     # training actually separated the clusters: every cluster's members
@@ -314,13 +330,18 @@ def test_ivf_codebook_deterministic_and_empty_cell_safe(spark, vectors):
     assert many.count() == 12
 
 
+def _rows_by_query(batch):
+    """{query_id: {rank: (vec_id, cosine)}} of a batch top-k result."""
+    out: dict = {}
+    for r in batch.collect():
+        out.setdefault(r["query_id"], {})[r["rank"]] = (r["vec_id"], r["cosine"])
+    return out
+
+
 def test_ivf_topk_batch_matches_per_query(spark, vectors):
-    """The one-plan batch join must return exactly what the per-query
-    operator returns for each query — same probes, same ranking."""
-    from json_ld_spark.operators.similarity import (
-        ivf_topk_batch,
-        train_ivf_codebook,
-    )
+    """Each query's rows in the one-plan multi-query batch must equal
+    a batch run on that query alone — same probes, same ranking."""
+    from json_ld_spark.operators.similarity import train_ivf_codebook
 
     cents = train_ivf_codebook(vectors, n_centroids=4, n_iters=3, dim=16)
     assigned = ivf_assign(vectors, cents).localCheckpoint()
@@ -329,48 +350,34 @@ def test_ivf_topk_batch_matches_per_query(spark, vectors):
         [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in qrows],
         "query_id int, query_vec array<double>",
     )
-    batch = ivf_topk_batch(assigned, cents, queries, k=5, nprobe=2)
-    got = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in batch.collect()
-    }
+    got = _rows_by_query(ivf_topk_batch(assigned, cents, queries, k=5, nprobe=2))
     for r in qrows:
-        single = ivf_topk(
-            assigned, cents, [float(x) for x in r["embedding"]],
-            k=5, nprobe=2,
-        ).collect()
-        for rank, s in enumerate(single, start=1):
-            assert got[(r["vec_id"], rank)] == (s["vec_id"], s["cosine"])
+        single = _rows_by_query(ivf_topk_batch(
+            assigned, cents, _one_query(spark, r["embedding"]), k=5, nprobe=2,
+        ))
+        assert got[r["vec_id"]] == single[0]
+        assert len(single[0]) == 5
 
 
 def test_lsh_topk_batch_matches_per_query(spark, vectors):
-    """The one-plan batch LSH join must return exactly what the
-    per-query operator returns — same buckets, probes, and ranking."""
-    from json_ld_spark.operators.similarity import (
-        lsh_topk_batch,
-        plane_matrix,
-    )
-
+    """Each query's rows in the one-plan multi-query batch LSH join
+    must equal a batch run on that query alone — same buckets, probes,
+    and ranking (a float query column included)."""
     planes = plane_matrix(6, 16)
     qrows = vectors.filter(F.col("vec_id") % 25 == 0).collect()
     queries = spark.createDataFrame(
         [(r["vec_id"], list(r["embedding"])) for r in qrows],
         "query_id int, query_vec array<float>",
     )
-    batch = lsh_topk_batch(
-        vectors, queries, k=5, planes=planes, probe_radius=1
+    got = _rows_by_query(
+        lsh_topk_batch(vectors, queries, planes, k=5, probe_radius=1)
     )
-    got = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in batch.collect()
-    }
     for r in qrows:
-        single = lsh_topk(
-            vectors, list(r["embedding"]), k=5, planes=planes,
+        single = _rows_by_query(lsh_topk_batch(
+            vectors, _one_query(spark, r["embedding"]), planes, k=5,
             probe_radius=1,
-        ).collect()
-        for rank, s in enumerate(single, start=1):
-            assert got[(r["vec_id"], rank)] == (s["vec_id"], s["cosine"])
+        ))
+        assert got[r["vec_id"]] == single[0]
 
 
 def test_ivf_codebook_string_ids_fall_back_to_hash(spark, vectors):
@@ -386,9 +393,7 @@ def test_ivf_codebook_string_ids_fall_back_to_hash(spark, vectors):
 
 
 def test_embedding_neardup_blocks(spark, vectors):
-    pairs = embedding_neardup_pairs(
-        vectors, threshold=0.99, block_col="label"
-    ).collect()
+    pairs = embedding_neardup_pairs(vectors, threshold=0.99).collect()
     assert len(pairs) > 0
     ids = {r["id_a"] // 25 for r in pairs} | {r["id_b"] // 25 for r in pairs}
     # blocking by label means pairs never cross clusters
@@ -1864,7 +1869,7 @@ def test_simhash_hot_bucket_cap(spark):
          for i in range(300)],
         "doc_id long, text string",
     )
-    pairs = simhash_neardup_pairs(docs, max_bucket=64)
+    pairs = simhash_neardup_pairs(docs)
     n = pairs.count()
     assert n == 64 * 63 // 2, n  # the 64 smallest ids, all 4 blocks agree
     kept = pairs.select("id_a", "id_b").collect()
@@ -1884,10 +1889,22 @@ def test_banded_lsh_hot_bucket_cap(spark):
         "vec_id long, embedding array<float>",
     )
     planes = neardup_lsh_planes(6, 3, 16)
-    pairs = embedding_neardup_pairs_banded(
-        vecs, planes, threshold=0.5, max_bucket=64
-    )
+    pairs = embedding_neardup_pairs_banded(vecs, planes, threshold=0.5)
     assert pairs.count() == 64 * 63 // 2
+
+
+def test_ngram_hot_bucket_cap(spark):
+    """Same guard on the n-gram path: 100 identical documents share
+    every bottom-k gram hash; candidates stay C(cap, 2) = 2,016, not
+    C(100, 2) = 4,950."""
+    docs = spark.createDataFrame(
+        [(i, "exactly the same document body repeated many times")
+         for i in range(100)],
+        "doc_id long, text string",
+    )
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5)
+    assert pairs.count() == 64 * 63 // 2
+    assert max(r["id_b"] for r in pairs.collect()) == 63
 
 
 def test_banded_lsh_planted_recall(spark):

@@ -180,13 +180,16 @@ def test_minhash_pairs_emit_only_ids(spark):
     """Candidate pairs shuffle only (id, id) — text/shingles must not
     survive into the join output schema (100 TB rule: never shuffle
     document bodies)."""
-    from json_ld_spark.operators.canonicalize import minhash_candidate_pairs
+    from json_ld_spark.operators.canonicalize import (
+        hashed_shingle_sets,
+        minhash_candidate_pairs,
+    )
 
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "alpha beta gamma")],
         "doc_id long, text string",
     )
-    pairs = minhash_candidate_pairs(df, "doc_id", "text")
+    pairs = minhash_candidate_pairs(hashed_shingle_sets(df, "doc_id", "text"))
     assert set(pairs.columns) == {"id_a", "id_b"}
 
 
