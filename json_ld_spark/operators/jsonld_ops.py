@@ -5,7 +5,10 @@ Execution shape (SURVEY §3.1 Spark equivalent):
       → window row_number/lead over (conv_id, turn_idx)   [stable order]
       → prepare_turns: key check, ts string, mention counts
         (one regexp_count per gazetteer surface)
-      → one triple template per turn, inline'd   [JVM, no Python]
+      → posexplode into one row per (turn, slot): slot 0 for the
+        turn's fixed triples, slot k for its k-th mention
+      → one compiled triple template per slot, inline'd
+        [JVM, whole-stage codegen, no Python]
       → write (bucketed by conv_id)
 
 Each turn is a JSON-LD document over the one fixed ``KG_CONTEXT``
@@ -194,14 +197,18 @@ def _triple(subj: Column, pred: str, obj: Column, obj_is_iri: bool,
     )
 
 
-def _turn_template() -> Column:
-    """The toRDF output of one prepared turn's document, as an array
-    of (subj, pred, obj_value, obj_is_iri, obj_datatype) structs; a
-    triple whose object is null (an absent optional field, or the
+def _slot_template() -> Column:
+    """The toRDF output of one (turn, slot) row, as an array of (subj,
+    pred, obj_value, obj_is_iri, obj_datatype) structs: slot 0 holds
+    the turn's fixed triples, slot k ≥ 1 the five triples of its k-th
+    mention ``m``, whose blank node is ``bnode``. ``turn`` (the turn
+    IRI) and ``bnode`` are columns of the row, so each is built once
+    however many triples use it. Every expression compiles; a triple
+    whose object is null (an absent optional field, or the
     Conversation type past the conversation's first turn) is dropped
     after the inline."""
-    conv_id, turn_idx = F.col("conv_id"), F.col("turn_idx")
-    turn = F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), turn_idx)
+    conv_id, turn_idx, turn, bnode, m = (
+        F.col(c) for c in ("conv_id", "turn_idx", "turn", "bnode", "m"))
     conv = F.concat(F.lit(CONV_NS), conv_id)
     next_turn = F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), F.col("next_turn_idx"))
     xsd_string, xsd_integer = XSD + "string", XSD + "integer"
@@ -217,30 +224,28 @@ def _turn_template() -> Column:
         _triple(turn, VOCAB + "ts", F.col("ts_str"), False, XSD + "dateTime"),
         _triple(turn, VOCAB + "nextTurn", next_turn, True),
     )
-    bnode_prefix = F.concat(F.lit("_:"), conv_id, F.lit("t"), turn_idx, F.lit("m"))
     entity = F.array(*[F.lit(_ENTITY_BY_ID[eid]) for eid, _, _ in GAZETTEER])
-
-    def mention(m: Column, k: Column) -> Column:
-        bnode = F.concat(bnode_prefix, k)
-        return F.array(
-            _triple(turn, VOCAB + "mentions", bnode, True),
-            _triple(bnode, RDF_TYPE, F.lit(VOCAB + "Mention"), True),
-            _triple(bnode, VOCAB + "label", m["surface"], False, xsd_string),
-            _triple(bnode, VOCAB + "score", m["count"].cast("string"), False, xsd_integer),
-            _triple(bnode, VOCAB + "of", F.element_at(entity, m["entity_id"] + 1), True),
-        )
-
-    return F.concat(fixed, F.flatten(F.transform(F.col("mentions"), mention)))
+    mention = F.array(
+        _triple(turn, VOCAB + "mentions", bnode, True),
+        _triple(bnode, RDF_TYPE, F.lit(VOCAB + "Mention"), True),
+        _triple(bnode, VOCAB + "label", m["surface"], False, xsd_string),
+        _triple(bnode, VOCAB + "score", m["count"].cast("string"), False, xsd_integer),
+        _triple(bnode, VOCAB + "of", F.element_at(entity, m["entity_id"] + 1), True),
+    )
+    return F.when(F.col("slot") == 0, fixed).otherwise(mention)
 
 
 def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     """Transcripts → triples DataFrame (errors quarantined in-band).
 
-    Each prepared turn's triples come from one Catalyst template
-    (``_turn_template``), equal to the pure core's expand + toRDF of
+    Each prepared turn becomes one row per slot: slot 0 for its fixed
+    triples, slot k for its k-th mention. Each slot's triples come
+    from one compiled Catalyst template (``_slot_template``); together
+    they equal the pure core's expand + toRDF of
     ``build_turn_document`` under ``_NEXT_TURN_CONTEXT``. A turn whose
-    conv_id or turn_idx is null yields one quarantine row with
-    error_code ``invalid turn key`` and no triples.
+    conv_id or turn_idx is null keeps only slot 0 and yields one
+    quarantine row with error_code ``invalid turn key`` and no
+    triples.
 
     Cross-turn duplicate facts (the Conversation node re-asserted by
     every turn) are deduplicated — the relational half of
@@ -253,11 +258,20 @@ def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     dedups the full table with one shuffle.
     """
     turns = prepare_turns(transcripts, ordered)
-    key_ok = F.col("key_ok")
+    conv_id, turn_idx, key_ok = F.col("conv_id"), F.col("turn_idx"), F.col("key_ok")
+    no_mention = F.array(F.lit(None).cast(turns.schema["mentions"].dataType.elementType))
+    # a turn with a bad key keeps slot 0 only: one quarantine row, not
+    # one per mention
+    slots = turns.select(
+        "*", F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), turn_idx).alias("turn"),
+        F.posexplode(F.concat(no_mention, F.col("mentions"))).alias("slot", "m"),
+    ).filter((F.col("slot") == 0) | key_ok).withColumn(
+        "bnode",
+        F.concat(F.lit("_:"), conv_id, F.lit("t"), turn_idx, F.lit("m"), F.col("slot") - 1))
     # a null array inlines (outer) as one all-null row: the quarantine row
-    triples = turns.select(
+    triples = slots.select(
         "conv_id", "turn_idx", "key_ok",
-        F.inline_outer(F.when(key_ok, _turn_template())),
+        F.inline_outer(F.when(key_ok, _slot_template())),
     ).filter(F.col("obj_value").isNotNull() | ~key_ok).select(
         "conv_id", "turn_idx", "subj", "pred", "obj_value", "obj_is_iri",
         "obj_datatype",

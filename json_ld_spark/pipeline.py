@@ -1,6 +1,6 @@
 """End-to-end KG construction pipeline (BASELINE.json north_rule):
 
-    transcripts → stable turn order → mention counts + per-turn triple
+    transcripts → stable turn order → mention counts + per-slot triple
       template (expand + toRDF, JVM-native) → alias canonicalization
       (minhash + CC; only when the caller passes an alias table)
       → bucketed graph_triples sink + per-partition lineage/metrics
@@ -114,7 +114,9 @@ def run_pipeline(
 
     # per-partition lineage + metrics (one scan of the written sink —
     # counts what actually landed, not what was planned); a write of 0
-    # rows leaves no file to infer the schema from
+    # rows leaves no file to infer the schema from. The at most B rows
+    # are materialized once: the lineage write and the totals both read
+    # them, not the sink.
     sink_schema = jsonld_ops.TRIPLE_SCHEMA + ", conv_bucket int"
     written = spark.read.schema(sink_schema).parquet(triples_path)
     if done_buckets:
@@ -135,16 +137,14 @@ def run_pipeline(
             "error_count",
             F.lit(wall).alias("wall_sec"),
         )
+        .localCheckpoint()
     )
     metrics.write.mode("append").parquet(lineage_path)
+    per_bucket = metrics.collect()
 
-    totals = written.agg(
-        F.count(F.when(F.col("error_code").isNull(), 1)).alias("triples"),
-        F.count(F.when(F.col("error_code").isNotNull(), 1)).alias("errors"),
-    ).collect()[0]
     return {
-        "triples": totals["triples"],
-        "errors": totals["errors"],
+        "triples": sum(r["triple_count"] for r in per_bucket),
+        "errors": sum(r["error_count"] for r in per_bucket),
         "wall_sec": wall,
         "buckets_skipped": len(done_buckets),
         "out": triples_path,

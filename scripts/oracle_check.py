@@ -1,7 +1,9 @@
 """Driver-contract parity probe: run selected __spark_entry__ queries
 AND their DuckDB oracles side-by-side, compare sorted rows (the same
 compare tests/test_oracle_parity.py performs, minus the driver's
-value-hash packaging).
+value-hash packaging). Each line also carries ``sha256=``, the hash of
+the Spark side's rows as exact ``repr`` strings, sorted: equal hashes
+at two commits mean the query returned the same rows at both.
 
 Usage: python scripts/oracle_check.py [sf_dir] [query ...]
        (no query args = every query that has an oracle entry)
@@ -9,12 +11,18 @@ Usage: python scripts/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
+
+
+def _rows_sha256(rows: list[tuple]) -> str:
+    return hashlib.sha256(
+        "\n".join(sorted(map(repr, rows))).encode()).hexdigest()
 
 
 def main() -> int:
@@ -49,7 +57,8 @@ def main() -> int:
         try:
             sdf = queries[name](spark, sf)
             scols = sdf.columns
-            srows = _normalize([tuple(r) for r in sdf.collect()], scols)
+            raw = [tuple(r) for r in sdf.collect()]
+            srows = _normalize(raw, scols)
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]
             orows = _normalize(cur.fetchall(), ocols)
@@ -65,7 +74,8 @@ def main() -> int:
             failures += 1
         print(
             f"{name}: {status} rows={len(srows)}/{len(orows)} "
-            f"schema={'ok' if schema_ok else f'{sorted(scols)} vs {sorted(ocols)}'}"
+            f"schema={'ok' if schema_ok else f'{sorted(scols)} vs {sorted(ocols)}'} "
+            f"sha256={_rows_sha256(raw)}"
         )
         if not vals_ok and rows_ok and schema_ok:
             diff = [

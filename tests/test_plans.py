@@ -90,6 +90,22 @@ def test_emission_is_jvm_native_with_one_exchange(spark):
     assert tree.count("Exchange") == 1
 
 
+def test_mention_template_has_no_lambda(spark):
+    """Mention triples come from a per-slot template of compiled
+    expressions: no transform/flatten higher-order function (which
+    Spark evaluates outside whole-stage codegen) is left in the
+    emission plan, and the conv_id exchange is still its only
+    shuffle."""
+    from json_ld_spark.operators.jsonld_ops import emit_triples
+    from json_ld_spark.sources.transcripts import synthesize_transcripts
+
+    t = synthesize_transcripts(spark, n_convs=5, shuffle=False)
+    plan = explain_str(emit_triples(t))
+    assert "transform(" not in plan and "flatten(" not in plan
+    tree = plan.split("\n\n(1) ")[0]
+    assert tree.count("Exchange") == 1
+
+
 def test_exact_dedup_single_shuffle(spark):
     from json_ld_spark.operators.dedup import exact_dedup_groups
 

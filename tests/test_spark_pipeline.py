@@ -61,9 +61,13 @@ def _edge_transcripts(spark):
     """Hand-made turns covering what the synthetic generator never
     produces: null optional fields, empty text, a repeated surface and
     adjacent surfaces, unicode and JSON-looking text, gapped and
-    negative turn_idx, a single-turn conversation and a conv_id with a
-    space."""
+    negative turn_idx, a single-turn conversation, a conv_id with a
+    space, and one turn holding every gazetteer surface (one twice): 22
+    slots, mention labels m0…m20 in entity-id order, a score of 2."""
+    from json_ld_spark.sources.gazetteer import GAZETTEER
+
     ts = datetime.datetime(2024, 5, 6, 7, 8, 9)
+    every_surface = " | ".join(s for _, s, _ in reversed(GAZETTEER)) + " | Kyoto"
     rows = [
         ("e1", 0, None, None, None, None),
         ("e1", 1, "user", "", None, ts),
@@ -77,6 +81,7 @@ def _edge_transcripts(spark):
         ("single", 7, "user", "only one turn: stream filter", None, ts),
         ("conv with space", 0, "user", "Acme Corp", None, ts),
         ("conv with space", 1, "assistant", "warp drive", None, ts),
+        ("all surfaces", 2, "assistant", every_surface, None, ts),
     ]
     return spark.createDataFrame(rows, _TURN_SCHEMA)
 
@@ -170,6 +175,41 @@ def _assert_quarantine_contract(spark, emitter):
     ts = sorted(r["obj_value"] for r in ok if r["pred"] == VOCAB + "ts")
     assert ts == ["1600-01-02T03:04:05", "2024-01-01T00:00:00",
                   "2300-01-02T03:04:05"]
+
+
+def _assert_bad_key_with_mentions_quarantines_once(spark, emitter):
+    """A turn with a null key quarantines as ONE row however many
+    mentions its text holds, and emits none of its mention triples."""
+    from json_ld_spark.operators import jsonld_ops
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        ("c1", 0, "user", "Paris meets Kyoto", None, ts),
+        ("c1", None, "user", "Paris, Kyoto and Globex", None, ts),
+        (None, 3, "user", "Ada Lovelace met Alan Turing in Paris", None, ts),
+    ]
+    out = getattr(jsonld_ops, emitter)(
+        spark.createDataFrame(rows, _TURN_SCHEMA)).collect()
+    bad = sorted(
+        (r["conv_id"] or "", r["turn_idx"] if r["turn_idx"] is not None else -1,
+         r["error_code"], r["subj"], r["pred"], r["obj_value"])
+        for r in out if r["conv_id"] is None or r["turn_idx"] is None
+    )
+    assert bad == [("", 3, "invalid turn key", None, None, None),
+                   ("c1", -1, "invalid turn key", None, None, None)]
+    ok = [r for r in out if r["conv_id"] is not None and r["turn_idx"] is not None]
+    assert {(r["conv_id"], r["turn_idx"], r["error_code"]) for r in ok} == {("c1", 0, None)}
+    # 7 fixed triples (no tool, no nextTurn) + 2 mentions x 5
+    assert len(ok) == 17
+
+
+def test_bad_key_with_mentions_quarantines_once(spark):
+    _assert_bad_key_with_mentions_quarantines_once(spark, "emit_triples")
+
+
+def test_bad_key_with_mentions_quarantines_once_streaming_reader(spark):
+    _assert_bad_key_with_mentions_quarantines_once(
+        spark, "emit_triples_streaming_reader")
 
 
 def test_quarantine_contract(spark):
