@@ -2,13 +2,15 @@
 
 Execution shape (SURVEY §3.1 Spark equivalent):
     read transcripts
-      → window row_number/lead over (conv_id, turn_idx)   [stable order]
-      → prepare_turns: key check, ts string, mention counts
-        (one regexp_count per gazetteer surface)
-      → posexplode into one row per (turn, slot): slot 0 for the
-        turn's fixed triples, slot k for its k-th mention
+      → window row_number/lead over (conv_id, turn_idx)   [stable order,
+        one partition per core]
+      → prepare_turns: key check, ts string, ``counts``, the array of
+        one regexp_count per gazetteer surface
+      → posexplode ``[NULL] ++ counts`` into one row per (turn, slot):
+        slot 0 for the turn's fixed triples, slot k for gazetteer
+        surface k, kept when its count is > 0
       → one compiled triple template per slot, inline'd
-        [JVM, whole-stage codegen, no Python]
+        [JVM, whole-stage codegen, no Python, no lambda]
       → write (bucketed by conv_id)
 
 Each turn is a JSON-LD document over the one fixed ``KG_CONTEXT``
@@ -141,11 +143,13 @@ def with_stable_turn_order(
     The explicit repartition(n, conv_id) serves two purposes: the
     window reuses it (one shuffle total), and AQE never coalesces a
     user-specified repartition, so the emission stage keeps one task
-    per core however few bytes the shuffle moves.
+    per core however few bytes the shuffle moves. n defaults to
+    ``defaultParallelism``: one task per core runs the stage in one
+    wave, where more, smaller tasks add their fixed cost per task.
     """
     if n_partitions is None:
         sc = transcripts.sparkSession.sparkContext
-        n_partitions = sc.defaultParallelism * 2
+        n_partitions = sc.defaultParallelism
     w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc_nulls_last())
     return transcripts.repartition(n_partitions, "conv_id").select(
         "*",
@@ -158,8 +162,9 @@ def prepare_turns(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     """Per turn, every input the emitters need besides the raw columns:
     ``key_ok`` (conv_id and turn_idx non-null), ``turn_rank``,
     ``next_turn_idx``, ``ts_str`` (the xsd:dateTime lexical form) and
-    ``mentions``, an array of (entity_id, surface, count) structs for
-    the gazetteer surfaces found in ``text``, in entity-id order.
+    ``counts``, the array of the 21 gazetteer surface counts in
+    ``text``, in ``GAZETTEER`` (entity-id) order; a surface with count
+    0 is not mentioned.
 
     A count is the number of non-overlapping occurrences of the
     literal surface (Python's ``str.count``; no surface is a substring
@@ -172,19 +177,15 @@ def prepare_turns(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
             "*", F.lit(1).alias("turn_rank"),
             F.lit(None).cast("int").alias("next_turn_idx"),
         )
-    found = F.array(*[
-        F.struct(
-            F.lit(eid).alias("entity_id"),
-            F.lit(surface).alias("surface"),
-            F.regexp_count(F.col("text"), F.lit(f"\\Q{surface}\\E")).cast("int").alias("count"),
-        )
-        for eid, surface, _ in GAZETTEER
+    counts = F.array(*[
+        F.regexp_count(F.col("text"), F.lit(f"\\Q{surface}\\E")).cast("int")
+        for _, surface, _ in GAZETTEER
     ])
     return src.select(
         "conv_id", "turn_idx", "role", "text", "tool", "turn_rank", "next_turn_idx",
         (F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()).alias("key_ok"),
         F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss").alias("ts_str"),
-        F.filter(found, lambda m: m["count"] > 0).alias("mentions"),
+        counts.alias("counts"),
     )
 
 
@@ -200,15 +201,15 @@ def _triple(subj: Column, pred: str, obj: Column, obj_is_iri: bool,
 def _slot_template() -> Column:
     """The toRDF output of one (turn, slot) row, as an array of (subj,
     pred, obj_value, obj_is_iri, obj_datatype) structs: slot 0 holds
-    the turn's fixed triples, slot k ≥ 1 the five triples of its k-th
-    mention ``m``, whose blank node is ``bnode``. ``turn`` (the turn
-    IRI) and ``bnode`` are columns of the row, so each is built once
-    however many triples use it. Every expression compiles; a triple
-    whose object is null (an absent optional field, or the
-    Conversation type past the conversation's first turn) is dropped
-    after the inline."""
-    conv_id, turn_idx, turn, bnode, m = (
-        F.col(c) for c in ("conv_id", "turn_idx", "turn", "bnode", "m"))
+    the turn's fixed triples, slot k ≥ 1 the five triples of gazetteer
+    surface k, found ``m`` times, whose blank node is ``bnode``.
+    ``turn`` (the turn IRI) and ``bnode`` are columns of the row, so
+    each is built once however many triples use it. Every expression
+    compiles; a triple whose object is null (an absent optional field,
+    or the Conversation type past the conversation's first turn) is
+    dropped after the inline."""
+    conv_id, turn_idx, turn, bnode, slot = (
+        F.col(c) for c in ("conv_id", "turn_idx", "turn", "bnode", "slot"))
     conv = F.concat(F.lit(CONV_NS), conv_id)
     next_turn = F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), F.col("next_turn_idx"))
     xsd_string, xsd_integer = XSD + "string", XSD + "integer"
@@ -224,27 +225,29 @@ def _slot_template() -> Column:
         _triple(turn, VOCAB + "ts", F.col("ts_str"), False, XSD + "dateTime"),
         _triple(turn, VOCAB + "nextTurn", next_turn, True),
     )
+    # surface k sits at 0-based index k - 1 of both literal arrays
+    label = F.array(*[F.lit(surface) for _, surface, _ in GAZETTEER])
     entity = F.array(*[F.lit(_ENTITY_BY_ID[eid]) for eid, _, _ in GAZETTEER])
     mention = F.array(
         _triple(turn, VOCAB + "mentions", bnode, True),
         _triple(bnode, RDF_TYPE, F.lit(VOCAB + "Mention"), True),
-        _triple(bnode, VOCAB + "label", m["surface"], False, xsd_string),
-        _triple(bnode, VOCAB + "score", m["count"].cast("string"), False, xsd_integer),
-        _triple(bnode, VOCAB + "of", F.element_at(entity, m["entity_id"] + 1), True),
+        _triple(bnode, VOCAB + "label", F.get(label, slot - 1), False, xsd_string),
+        _triple(bnode, VOCAB + "score", F.col("m").cast("string"), False, xsd_integer),
+        _triple(bnode, VOCAB + "of", F.get(entity, slot - 1), True),
     )
-    return F.when(F.col("slot") == 0, fixed).otherwise(mention)
+    return F.when(slot == 0, fixed).otherwise(mention)
 
 
 def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     """Transcripts → triples DataFrame (errors quarantined in-band).
 
     Each prepared turn becomes one row per slot: slot 0 for its fixed
-    triples, slot k for its k-th mention. Each slot's triples come
-    from one compiled Catalyst template (``_slot_template``); together
-    they equal the pure core's expand + toRDF of
-    ``build_turn_document`` under ``_NEXT_TURN_CONTEXT``. A turn whose
-    conv_id or turn_idx is null keeps only slot 0 and yields one
-    quarantine row with error_code ``invalid turn key`` and no
+    triples, slot k for gazetteer surface k if the turn mentions it.
+    Each slot's triples come from one compiled Catalyst template
+    (``_slot_template``); together they equal the pure core's expand +
+    toRDF of ``build_turn_document`` under ``_NEXT_TURN_CONTEXT``. A
+    turn whose conv_id or turn_idx is null keeps only slot 0 and yields
+    one quarantine row with error_code ``invalid turn key`` and no
     triples.
 
     Cross-turn duplicate facts (the Conversation node re-asserted by
@@ -259,15 +262,17 @@ def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     """
     turns = prepare_turns(transcripts, ordered)
     conv_id, turn_idx, key_ok = F.col("conv_id"), F.col("turn_idx"), F.col("key_ok")
-    no_mention = F.array(F.lit(None).cast(turns.schema["mentions"].dataType.elementType))
+    slot, counts = F.col("slot"), F.col("counts")
     # a turn with a bad key keeps slot 0 only: one quarantine row, not
     # one per mention
     slots = turns.select(
         "*", F.concat(F.lit(TURN_NS), conv_id, F.lit("/"), turn_idx).alias("turn"),
-        F.posexplode(F.concat(no_mention, F.col("mentions"))).alias("slot", "m"),
-    ).filter((F.col("slot") == 0) | key_ok).withColumn(
+        F.posexplode(F.concat(F.array(F.lit(None).cast("int")), counts)).alias("slot", "m"),
+    ).filter((slot == 0) | (key_ok & (F.col("m") > 0))).withColumn(
+        # the label counter is the rank of surface k among the kept ones
         "bnode",
-        F.concat(F.lit("_:"), conv_id, F.lit("t"), turn_idx, F.lit("m"), F.col("slot") - 1))
+        F.concat(F.lit("_:"), conv_id, F.lit("t"), turn_idx, F.lit("m"),
+                 F.size(F.array_remove(F.slice(counts, 1, slot), 0)) - 1))
     # a null array inlines (outer) as one all-null row: the quarantine row
     triples = slots.select(
         "conv_id", "turn_idx", "key_ok",
@@ -281,10 +286,15 @@ def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
         F.when(~key_ok, F.lit(_INVALID_TURN_KEY_MSG)).alias("error_msg"),
     )
     if not ordered:
-        # un-partitioned input: global shuffle dedup
-        return triples.dropDuplicates(
+        # un-partitioned input: global shuffle dedup. Every quarantine
+        # row has all-null triple columns, so each also carries an id
+        # of its own (null on valid rows) to keep one row per bad turn.
+        return triples.withColumn(
+            "_bad_turn", F.when(F.col("error_code").isNotNull(),
+                                F.monotonically_increasing_id()),
+        ).dropDuplicates(
             ["subj", "pred", "obj_value", "obj_is_iri", "obj_datatype",
-             "obj_language", "graph"])
+             "obj_language", "graph", "_bad_turn"]).drop("_bad_turn")
     return triples
 
 
@@ -316,10 +326,10 @@ def _stream_batch_iter(
         rows: list[tuple] = []
         # plain-list row access: Series.iloc in a row loop costs more
         # than the JSON-LD algorithms themselves
-        for conv_id, turn_idx, role, text, tool, ts_str, next_idx, rank, mentions, key_ok in zip(
+        for conv_id, turn_idx, role, text, tool, ts_str, next_idx, rank, counts, key_ok in zip(
             *(pdf[c].tolist() for c in (
                 "conv_id", "turn_idx", "role", "text", "tool", "ts_str",
-                "next_turn_idx", "turn_rank", "mentions", "key_ok"))
+                "next_turn_idx", "turn_rank", "counts", "key_ok"))
         ):
             turn_idx, next_idx = opt(turn_idx), opt(next_idx)
             if not key_ok:
@@ -331,7 +341,8 @@ def _stream_batch_iter(
             doc = build_turn_document(
                 conv_id, turn_idx, opt(role), opt(text), opt(tool), opt(ts_str),
                 None if next_idx is None else int(next_idx),
-                [(m["entity_id"], m["surface"], m["count"]) for m in mentions],
+                [(eid, surface, int(c)) for (eid, surface, _), c in zip(GAZETTEER, counts)
+                 if c > 0],
             )
             reader = StreamingReader(options)
             reader.namer = BlankNodeNamer(prefix=f"{conv_id}t{turn_idx}m")

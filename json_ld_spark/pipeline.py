@@ -78,7 +78,8 @@ def run_pipeline(
     Triples are canonicalized only when an (entity_iri, surface)
     ``aliases`` table is passed. conv_bucket is Spark's hash-partition
     id of conv_id, so the sink holds at most
-    lcm(2·defaultParallelism, conv_buckets) files."""
+    lcm(defaultParallelism, conv_buckets) files: exactly conv_buckets
+    when defaultParallelism divides it."""
     t0 = time.time()
     triples_path = os.path.join(out_dir, "graph_triples")
     lineage_path = os.path.join(out_dir, "lineage")

@@ -91,19 +91,59 @@ def test_emission_is_jvm_native_with_one_exchange(spark):
 
 
 def test_mention_template_has_no_lambda(spark):
-    """Mention triples come from a per-slot template of compiled
-    expressions: no transform/flatten higher-order function (which
-    Spark evaluates outside whole-stage codegen) is left in the
-    emission plan, and the conv_id exchange is still its only
-    shuffle."""
+    """Mention counts and triples are compiled expressions: no
+    transform/flatten/filter higher-order function or lambda (which
+    Spark evaluates outside whole-stage codegen) is left anywhere in
+    the emission plan, ``prepare_turns`` included, and the conv_id
+    exchange is still its only shuffle."""
     from json_ld_spark.operators.jsonld_ops import emit_triples
     from json_ld_spark.sources.transcripts import synthesize_transcripts
 
     t = synthesize_transcripts(spark, n_convs=5, shuffle=False)
     plan = explain_str(emit_triples(t))
-    assert "transform(" not in plan and "flatten(" not in plan
+    for fn in ("transform(", "flatten(", "filter(", "lambdafunction"):
+        assert fn not in plan
     tree = plan.split("\n\n(1) ")[0]
     assert tree.count("Exchange") == 1
+
+
+def _codegen_stages(node) -> list:
+    """The WholeStageCodegenExec nodes of an executed (adaptive) plan."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _codegen_stages(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _codegen_stages(node.plan())
+    found = [node] if name == "WholeStageCodegenExec" else []
+    children = node.children()
+    for i in range(children.size()):
+        found += _codegen_stages(children.apply(i))
+    return found
+
+
+@pytest.mark.parametrize("ordered", [True, False])
+@pytest.mark.parametrize("source", ["documents", "synthesized"])
+def test_emission_codegen_methods_stay_jit_compilable(spark, ordered, source):
+    """HotSpot never JIT-compiles a method of more than 8000 bytecode
+    bytes (HugeMethodLimit): a whole-stage-codegen stage past it runs
+    interpreted. Every stage of the executed emission plan stays under."""
+    from json_ld_spark.operators.jsonld_ops import emit_triples
+    from json_ld_spark.sources.transcripts import (
+        derive_transcripts_from_documents,
+        synthesize_transcripts,
+    )
+
+    t = (derive_transcripts_from_documents(spark, SF) if source == "documents"
+         else synthesize_transcripts(spark, n_convs=20, shuffle=False))
+    df = emit_triples(t, ordered=ordered)
+    assert df.collect()
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    stages = _codegen_stages(df._jdf.queryExecution().executedPlan())
+    assert stages
+    for stage in stages:
+        stats = codegen.compile(stage.doCodeGen()._2())._2()
+        assert stats.maxMethodCodeSize() < 8000, (
+            stage.codegenStageId(), stats.maxMethodCodeSize())
 
 
 def test_exact_dedup_single_shuffle(spark):

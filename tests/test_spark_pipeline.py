@@ -212,6 +212,38 @@ def test_bad_key_with_mentions_quarantines_once_streaming_reader(spark):
         spark, "emit_triples_streaming_reader")
 
 
+def test_unordered_keeps_one_quarantine_row_per_bad_turn(spark):
+    """ordered=False dedups on the triple columns, which are all null on
+    every quarantine row: each bad-key turn must still keep its own."""
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        ("c1", 0, "user", "Paris", None, ts),
+        (None, 3, "user", "Paris", None, ts),
+        (None, 4, "user", "Kyoto", None, ts),
+    ]
+    out = emit_triples(spark.createDataFrame(rows, _TURN_SCHEMA), ordered=False)
+    bad = sorted((r["turn_idx"], r["error_code"]) for r in quarantined(out).collect())
+    assert bad == [(3, "invalid turn key"), (4, "invalid turn key")]
+
+
+def test_streaming_reader_matches_emit_triples_edge_frame(spark):
+    """The raw streaming reader, fed the prepared turns (its mention
+    list rebuilt in Python from ``counts``), emits exactly what the
+    compiled template does: valid triples, the 22-slot turn and
+    quarantine rows alike."""
+    from json_ld_spark.operators.jsonld_ops import emit_triples_streaming_reader
+
+    ts = datetime.datetime(2024, 1, 1)
+    bad = spark.createDataFrame(
+        [("e1", None, "user", "Paris", None, ts), (None, 3, "user", "Kyoto", None, ts)],
+        _TURN_SCHEMA)
+    t = _edge_transcripts(spark).unionByName(bad)
+    want = sorted(map(repr, emit_triples(t).collect()))
+    got = sorted(map(repr, emit_triples_streaming_reader(t).collect()))
+    assert len(got) > 200 and sum("invalid turn key" in r for r in got) == 2
+    assert got == want
+
+
 def test_quarantine_contract(spark):
     _assert_quarantine_contract(spark, "emit_triples")
 
@@ -303,7 +335,7 @@ def test_pipeline_resume_refuses_other_bucket_layout(spark, transcripts, tmp_pat
 def test_pipeline_sink_files_follow_the_exchange(spark, tmp_path):
     """conv_bucket is the emission exchange's own partition id, so each
     task writes only its residue class of buckets: at most
-    lcm(2·defaultParallelism, conv_buckets) files, not their product."""
+    lcm(defaultParallelism, conv_buckets) files, not their product."""
     import math
 
     from json_ld_spark.pipeline import run_pipeline
@@ -313,7 +345,7 @@ def test_pipeline_sink_files_follow_the_exchange(spark, tmp_path):
                  conv_buckets=4)
     files = [f for _, _, fs in os.walk(out + "/graph_triples")
              for f in fs if f.endswith(".parquet")]
-    assert len(files) <= math.lcm(2 * spark.sparkContext.defaultParallelism, 4)
+    assert len(files) <= math.lcm(spark.sparkContext.defaultParallelism, 4)
 
 
 def test_pipeline_canonicalizes_with_aliases(spark, transcripts, tmp_path):
