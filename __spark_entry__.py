@@ -161,7 +161,10 @@ def q_kg_triple_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _comention_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): one row per pair of mention rows of the same turn,
+    src < dst lexicographically — the self-join every co-mention
+    query aggregates its own way."""
     t = _triples(spark, sf_dir)
     # materialize before the self-join: each join side would otherwise
     # re-derive the whole emission pipeline (self-joins recompute the
@@ -170,16 +173,18 @@ def q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", "turn_idx", F.col("obj_value").alias("entity")
     ).localCheckpoint()
     a, b = m.alias("a"), m.alias("b")
+    return a.join(
+        b,
+        (F.col("a.conv_id") == F.col("b.conv_id"))
+        & (F.col("a.turn_idx") == F.col("b.turn_idx"))
+        & (F.col("a.entity") < F.col("b.entity")),
+    ).select(F.col("a.entity").alias("src"), F.col("b.entity").alias("dst"))
+
+
+def q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        a.join(
-            b,
-            (F.col("a.conv_id") == F.col("b.conv_id"))
-            & (F.col("a.turn_idx") == F.col("b.turn_idx"))
-            & (F.col("a.entity") < F.col("b.entity")),
-        )
-        .groupBy(
-            F.col("a.entity").alias("entity_a"), F.col("b.entity").alias("entity_b")
-        )
+        _comention_pairs(spark, sf_dir)
+        .groupBy(F.col("src").alias("entity_a"), F.col("dst").alias("entity_b"))
         .agg(F.count("*").alias("n_cooccur"))
     )
 
@@ -206,23 +211,7 @@ def q_entity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity co-mention edge set, one direction per pair (src < dst
     lexicographically)."""
-    t = _triples(spark, sf_dir)
-    m = t.filter(F.col("pred") == VOCAB + "of").select(
-        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
-    ).localCheckpoint()
-    a, b = m.alias("a"), m.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.conv_id") == F.col("b.conv_id"))
-            & (F.col("a.turn_idx") == F.col("b.turn_idx"))
-            & (F.col("a.entity") < F.col("b.entity")),
-        )
-        .select(
-            F.col("a.entity").alias("src"), F.col("b.entity").alias("dst")
-        )
-        .dropDuplicates()
-    )
+    return _comention_pairs(spark, sf_dir).dropDuplicates()
 
 
 def q_entity_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3222,21 +3211,9 @@ def q_entity_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance fails the hash."""
     from json_ld_spark.operators.graph import sssp_bounded
 
-    t = _triples(spark, sf_dir)
-    m = t.filter(F.col("pred") == VOCAB + "of").select(
-        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
-    ).localCheckpoint()
-    a, b = m.alias("a"), m.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.conv_id") == F.col("b.conv_id"))
-            & (F.col("a.turn_idx") == F.col("b.turn_idx"))
-            & (F.col("a.entity") < F.col("b.entity")),
-        )
-        .groupBy(
-            F.col("a.entity").alias("src"), F.col("b.entity").alias("dst")
-        )
+        _comention_pairs(spark, sf_dir)
+        .groupBy("src", "dst")
         .agg(F.expr("1000000 div count(*)").alias("w"))
     )
     nodes = (

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from json_ld_spark.operators.graph import simple_graph
 from json_ld_spark.operators.hashfamily import md5_hash60
 
 
@@ -141,14 +142,12 @@ def deterministic_walks(
     edges: DataFrame,
     walk_len: int = 3,
     walks_per_node: int = 2,
-    src: str = "src",
-    dst: str = "dst",
-    symmetrize: bool = True,
 ) -> DataFrame:
     """(walk_id, step, node): DeepWalk/node2vec-style walk corpus
     over the KG — ``walks_per_node`` walks of ``walk_len`` steps from
-    every node, the standard skip-gram training input for graph
-    embeddings (Perozzi et al. 2014, public knowledge).
+    every node of the undirected simple graph (``graph.simple_graph``),
+    the standard skip-gram training input for graph embeddings
+    (Perozzi et al. 2014, public knowledge).
 
     The "random" choice at step t is the cross-engine md5 family
     hashed over (walk_id, t) taken mod the current node's out-degree
@@ -159,19 +158,14 @@ def deterministic_walks(
     hash picks a rank arithmetically. Every step is one join keyed
     on node ids (hub skew = degree skew, the usual story); degree
     and rank tables are computed once and reused across steps."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-    if symmetrize:
-        e = e.unionByName(
-            edges.select(F.col(dst).alias("s"), F.col(src).alias("t"))
-        )
-    e = e.filter(F.col("s") != F.col("t")).dropDuplicates().localCheckpoint()
+    e = simple_graph(edges, directed=False)
     nbr = e.select(
         "s", "t",
         F.row_number().over(
             Window.partitionBy("s").orderBy("t")
         ).alias("rk"),
     )
-    deg = e.groupBy("s").agg(F.count("*").alias("outdeg"))
+    deg = e.select("s", F.col("deg").alias("outdeg")).dropDuplicates()
     nodes = e.select(F.col("s").alias("n0")).dropDuplicates()
     cur = nodes.select(
         "n0",

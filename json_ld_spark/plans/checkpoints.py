@@ -17,9 +17,15 @@ pipeline (SURVEY §4; measured 106s → 8s on CC). Two ways to cut:
     losing one box mid-iteration 14 must not kill the job, so
     production runs pass ``checkpoint_dir``.
 
-Operators thread an optional ``checkpoint_dir`` through to here; the
-two paths produce identical results (pytest-verified) — the choice is
-purely a durability/latency trade.
+The operators whose runs are long enough to need the reliable path
+take an optional ``checkpoint_dir`` and thread it through to here:
+``canonicalize.connected_components`` (and ``dedup.minhash_dedup_components``
+above it), ``from_rdf_ops.reconstitute_lists`` and
+``pipeline.alias_merge_map``. The two paths produce identical results
+(pytest-verified) — the choice is purely a durability/latency trade.
+The graph operators (``operators/graph.py``) and
+``kg_train.deterministic_walks`` always cut locally: they run a few
+fixed rounds over entity graphs.
 """
 
 from __future__ import annotations

@@ -1633,6 +1633,29 @@ def test_k_core_peels_chain_keeps_cycle(spark):
     assert {"c0", "c1", "c2", "c3"} <= partial and "p0" not in partial
 
 
+def test_graph_operators_read_the_simple_graph(spark):
+    """A parallel edge, a reversed duplicate and a self-loop change
+    nothing: k_core counts each neighbour once (the duplicated path
+    a-b-c peels away, a self-loop keeps no node alive), and
+    sssp_bounded relaxes over the cheapest of the parallel edges."""
+    from json_ld_spark.operators.graph import k_core, sssp_bounded
+
+    edges = [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "c"),
+             ("x", "y"), ("y", "z"), ("z", "x")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {r["entity"]: r["degree"] for r in k_core(df, k=2, n_rounds=3).collect()}
+    assert got == {"x": 2, "y": 2, "z": 2}
+
+    weighted = spark.createDataFrame(
+        [("a", "b", 10), ("a", "b", 3), ("b", "a", 7), ("b", "c", 1),
+         ("c", "c", 0)],
+        "src string, dst string, w long",
+    )
+    seeds = spark.createDataFrame([("a",)], "e string")
+    rows = [(r.node, r.dist) for r in sssp_bounded(weighted, seeds, k=2).collect()]
+    assert sorted(rows) == [("a", 0), ("b", 3), ("c", 4)]
+
+
 def test_jaccard_prefix_join_is_lossless(spark):
     """Prefix filtering is a COMPLETE candidate generator: the join
     must return exactly the brute-force all-pairs answer."""

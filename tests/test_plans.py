@@ -413,3 +413,32 @@ def test_bucketed_join_is_shuffle_free(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bkt_docs_t")
         spark.sql("DROP TABLE IF EXISTS bkt_len_t")
+
+
+# symmetric pagerank(n_iters=3) on the graph below, in the tests'
+# local[4] session: 29 jobs while every round also joined the degree
+# table and left-joined the node table, 17 since the out-degree rides
+# on the simple graph's edge table
+_PAGERANK_JOBS_BEFORE = 29
+
+
+def test_pagerank_rounds_join_once(spark):
+    """Each symmetric PageRank round is one join and one groupBy: the
+    out-degree rides on the checkpointed edge table and every node has
+    an in-edge, so no round joins a degree or node table."""
+    from json_ld_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+         ("e", "f"), ("b", "a"), ("f", "f")],
+        "src string, dst string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank-jobs", "pagerank-jobs")
+    try:
+        pagerank(edges, n_iters=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n = len(sc.statusTracker().getJobIdsForGroup("pagerank-jobs"))
+    assert n < _PAGERANK_JOBS_BEFORE, n

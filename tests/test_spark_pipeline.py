@@ -62,8 +62,10 @@ def _edge_transcripts(spark):
     produces: null optional fields, empty text, a repeated surface and
     adjacent surfaces, unicode and JSON-looking text, gapped and
     negative turn_idx, a single-turn conversation, a conv_id with a
-    space, and one turn holding every gazetteer surface (one twice): 22
-    slots, mention labels m0…m20 in entity-id order, a score of 2."""
+    space, a turn whose surfaces overlap themselves or each other
+    (``windowindow``, ``windowarp drive``, ``KyotoKyoto``), and one
+    turn holding every gazetteer surface (one twice): 22 slots,
+    mention labels m0…m20 in entity-id order, a score of 2."""
     from json_ld_spark.sources.gazetteer import GAZETTEER
 
     ts = datetime.datetime(2024, 5, 6, 7, 8, 9)
@@ -81,9 +83,26 @@ def _edge_transcripts(spark):
         ("single", 7, "user", "only one turn: stream filter", None, ts),
         ("conv with space", 0, "user", "Acme Corp", None, ts),
         ("conv with space", 1, "assistant", "warp drive", None, ts),
+        ("overlap", 0, "user", "windowindow windowarp drive KyotoKyoto",
+         None, ts),
         ("all surfaces", 2, "assistant", every_surface, None, ts),
     ]
     return spark.createDataFrame(rows, _TURN_SCHEMA)
+
+
+def test_mention_counts_are_non_overlapping(spark):
+    """Per surface, a count is its non-overlapping occurrences, as
+    ``str.count`` and the oracle's ``replace`` count them: ``window``
+    once in ``windowindow`` (an every-occurrence lookahead finds it
+    twice) and once more in ``windowarp``, whose last letter also
+    starts ``warp drive``; ``KyotoKyoto`` is two."""
+    from json_ld_spark.operators.jsonld_ops import prepare_turns
+    from json_ld_spark.sources.gazetteer import GAZETTEER
+
+    t = _edge_transcripts(spark).filter(F.col("conv_id") == "overlap")
+    counts = prepare_turns(t).first()["counts"]
+    got = {surface: counts[eid] for eid, surface, _ in GAZETTEER if counts[eid]}
+    assert got == {"window": 2, "warp drive": 1, "Kyoto": 2}
 
 
 def _assert_triples_match_pure_core(transcripts):
