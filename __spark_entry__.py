@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from json_ld_spark.functions.words import normalized, words
 from json_ld_spark.operators.hashfamily import (
     BAND_BUCKET_CAP,
     MD5_HASH60_SQL,
@@ -1381,14 +1382,8 @@ def q_lm_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.textstats import bigram_lm_scores
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                         "\\s+", " ")
-    )
     vocab = (
-        docs.select(norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select(F.explode(F.split(F.col("_t"), " ")).alias("w"))
+        docs.select(F.explode(words(F.lower(F.col("text")))).alias("w"))
         .distinct()
         .count()
     )  # 1-row recipe parameter (V), same policy as PageRank's N
@@ -2673,6 +2668,18 @@ _BM25_TERMS = ["spark", "table", "query", "row", "join"]
 _BM25_K1, _BM25_B, _BM25_K = 1.2, 0.75, 10
 
 
+def _bm25_corpus(docs: DataFrame) -> "tuple[int, int]":
+    """(n_docs, total_len), the BM25 recipe parameters: how many
+    documents have a word, and how many words they hold in all."""
+    stats = (
+        docs.select(F.size(words(F.lower(F.col("text")))).alias("_n"))
+        .filter(F.col("_n") > 0)
+        .agg(F.count("*").alias("n"), F.sum("_n").alias("total"))
+        .collect()[0]  # 1-row recipe parameters
+    )
+    return int(stats["n"]), int(stats["total"])
+
+
 def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 retrieval scores for a fixed query-term set, top-10
     docs per term. N and total corpus length are counted recipe
@@ -2682,16 +2689,8 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.textstats import bm25_scores
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
-    stats = (
-        docs.select(norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select(F.size(F.split(F.col("_t"), " ")).alias("_n"))
-        .agg(F.count("*").alias("n"), F.sum("_n").alias("total"))
-        .collect()[0]  # 1-row recipe parameters
-    )
     return bm25_scores(
-        docs, _BM25_TERMS, int(stats["n"]), int(stats["total"]),
+        docs, _BM25_TERMS, *_bm25_corpus(docs),
         k1=_BM25_K1, b=_BM25_B, k=_BM25_K,
     )
 
@@ -2718,16 +2717,8 @@ def q_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = spark.createDataFrame(
         _RETRIEVAL_QUERIES, "query_id int, query_text string"
     )
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
-    stats = (
-        docs.select(norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select(F.size(F.split(F.col("_t"), " ")).alias("_n"))
-        .agg(F.count("*").alias("n"), F.sum("_n").alias("total"))
-        .collect()[0]  # 1-row recipe parameters
-    )
     return bm25_retrieval(
-        docs, qdf, int(stats["n"]), int(stats["total"]),
+        docs, qdf, *_bm25_corpus(docs),
         k1=_BM25_K1, b=_BM25_B, k=_BM25_K,
     )
 
@@ -2795,9 +2786,6 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_substring_spans(docs, n=_XSPAN_N, min_docs=2)
 
 
-_RDFS_DEPTH = 4
-
-
 def _reasoning_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asserted fact table for the reasoning ops: the emitted KG
     triples plus gazetteer entity rdf:type assertions (a broadcast-
@@ -2816,8 +2804,8 @@ def _reasoning_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rdfs_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RDFS materialization over the emitted KG (rules rdfs2/3/5/7/
-    9/11): schema hierarchies are transitively closed first (pointer-
-    doubling on the dimension-sized ontology), then the fact table is
+    9/11): schema hierarchies are transitively closed first (driver-
+    side, on the dimension-sized ontology), then the fact table is
     entailed in ONE broadcast-join pass per rule — the WebPIE-style
     stratification that never iterates over the 100-TB fact table.
     The oracle replays the closure (recursive CTE) and every rule
@@ -2834,7 +2822,6 @@ def q_rdfs_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
         mk(O.SUBPROPERTY_OF, "sub string, sup string"),
         mk(O.DOMAIN, "prop string, cls string"),
         mk(O.RANGE, "prop string, cls string"),
-        max_depth=_RDFS_DEPTH,
     )
 
 
@@ -2960,29 +2947,23 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "doc_id", "rank"
     )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
-    words = (
-        docs.select("doc_id", norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(F.split(F.col("_t"), " "))
-            ).alias("term"),
-        )
+    terms = docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(words(F.lower(F.col("text"))))
+        ).alias("term"),
     )
     qdf = spark.createDataFrame(
         _RETRIEVAL_QUERIES, "query_id int, query_text string"
     )
-    qnorm = F.trim(
-        F.regexp_replace(F.lower(F.col("query_text")), "\\s+", " ")
-    )
     qterms = qdf.select(
         "query_id",
-        F.explode(F.array_distinct(F.split(qnorm, " "))).alias("term"),
+        F.explode(
+            F.array_distinct(words(F.lower(F.col("query_text"))))
+        ).alias("term"),
     )
     ov = (
-        words.join(F.broadcast(qterms), "term")
+        terms.join(F.broadcast(qterms), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.count("*").alias("ov"))
     )
@@ -3274,13 +3255,7 @@ def q_dpo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.corpus import preference_pairs
 
     t = _derived(spark, sf_dir)
-    score = F.length(
-        F.trim(
-            F.regexp_replace(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))), "\\s+", " "
-            )
-        )
-    )
+    score = F.length(normalized(F.lower(F.coalesce(F.col("text"), F.lit("")))))
     return preference_pairs(
         t.withColumn("_score", score), "_score", min_margin=_DPO_MARGIN
     )
@@ -3365,12 +3340,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.sketches import heavy_hitters
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
-    toks = (
-        docs.select(norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select(F.explode(F.split(F.col("_t"), " ")).alias("term"))
-    )
+    toks = docs.select(F.explode(words(F.lower(F.col("text")))).alias("term"))
     return heavy_hitters(toks, col="term", k=_HH_K)
 
 
@@ -4054,11 +4024,7 @@ def q_conversation_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _derived(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     norm_len = F.length(
-        F.trim(
-            F.regexp_replace(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))), "\\s+", " "
-            )
-        )
+        normalized(F.lower(F.coalesce(F.col("text"), F.lit(""))))
     )
     staged = t.select(
         "conv_id",

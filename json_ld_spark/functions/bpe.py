@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from json_ld_spark.functions.words import normalized
+
 # frozen training corpus: common-English word/count table (public
 # knowledge), lowercase [a-z ] only so every merge literal is
 # SQL-quotable without escaping. Order and counts are part of the
@@ -143,17 +145,17 @@ def _normalized(text_col) -> Column:
     # differently — dropping them keeps the two encoders bit-identical
     # (and BMP covers the gated corpora)
     return F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(text_col), "\\s+", " ")),
+        normalized(F.lower(text_col)),
         f"[{_L}{_R}\\x{{10000}}-\\x{{10FFFF}}]",
         "",
     )
 
 
-def bpe_tokens(text_col, pre_normalized: bool = False) -> Column:
+def bpe_tokens(text_col) -> Column:
     """array<string> of BPE tokens — a chain of JVM string ops, no
     Python, no shuffle. Concatenating the array reconstructs the
     normalized text exactly."""
-    s = text_col if pre_normalized else _normalized(text_col)
+    s = _normalized(text_col)
     # split('')/join is ~2× cheaper than a per-char capture-group
     # regexp_replace for the initial wrap (measured at sf0.1)
     wrapped = F.concat(

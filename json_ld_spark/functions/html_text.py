@@ -12,7 +12,7 @@ no lookarounds — so the SQL oracle replays each step verbatim):
   4. decode the common entities, ``&amp;`` LAST so ``&amp;lt;``
      correctly becomes ``&lt;`` (single-pass decode, the standard
      order-dependence);
-  5. collapse whitespace and trim.
+  5. collapse whitespace and trim (``words.normalized``).
 
 Plus ``html_title`` (first <title> content) and ``html_links``
 (href="…" values in document order) — the raw material for
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from json_ld_spark.functions.words import normalized
 
 # two separate block patterns: RE2 (the oracle's engine) has no
 # backreferences, so <(script|style)>…</\1> is not expressible
@@ -62,8 +64,7 @@ def html_to_text(html: Column) -> Column:
     s = F.regexp_replace(s, _STYLES, " ")
     s = F.regexp_replace(s, _COMMENTS, " ")
     s = F.regexp_replace(s, _TAGS, " ")
-    s = _decode_entities(s)
-    return F.trim(F.regexp_replace(s, r"\s+", " "))
+    return normalized(_decode_entities(s))
 
 
 def html_title(html: Column) -> Column:

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from json_ld_spark.functions.bpe import _L, _R, _normalized
+from json_ld_spark.functions.words import words
 
 
 def train_bpe_distributed(
@@ -66,14 +67,11 @@ def train_bpe_distributed(
     pair at selection time."""
     spark = docs.sparkSession
     # stage 1: the one full-corpus pass — word counts, then the
-    # deterministic top-V cap. NULL text coalesces to '' (no rows).
-    words = (
+    # deterministic top-V cap. NULL text has no words (no rows).
+    counts = (
         docs.select(
-            F.explode(
-                F.split(_normalized(F.coalesce(F.col(text_col), F.lit(""))), " ")
-            ).alias("word")
+            F.explode(words(_normalized(F.col(text_col)))).alias("word")
         )
-        .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("c"))
         .orderBy(F.desc("c"), "word")
@@ -81,7 +79,7 @@ def train_bpe_distributed(
     )
     # seq: the word's current segmentation, delimiter-wrapped chars —
     # identical representation to the encoder's
-    vocab = words.select(
+    vocab = counts.select(
         "word",
         "c",
         F.concat(

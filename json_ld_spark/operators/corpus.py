@@ -15,8 +15,14 @@ documents and the tokenizer:
     need).
 
 Every hash sampler buckets keys with the md5 family
-(hashfamily.sample_bucket), so the driver's DuckDB oracle recomputes
-the sampled rows bit-for-bit (the same family as minhash/simhash).
+(hashfamily.sample_bucket) under a fixed per-operator salt, so the
+driver's DuckDB oracle recomputes the sampled rows bit-for-bit (the
+same family as minhash/simhash).
+
+The operators read fixed column names: documents are ``(doc_id,
+text)``, chunks ``(doc_id, chunk_idx, n_tokens)``, and conversation
+turns ``(conv_id, turn_idx, role, text)``. Whitespace tokens come from
+functions/words.py, the one word definition of the text family.
 """
 
 from __future__ import annotations
@@ -24,21 +30,63 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_ld_spark.functions.words import normalized, words
 from json_ld_spark.operators.hashfamily import (
     SAMPLE_BUCKETS,
     md5_hash60,
     sample_bucket,
 )
 
+# train/val/test fractions in priority order (assign_splits)
+SPLIT_WEIGHTS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
+
+
+def _token_windows(
+    staged: DataFrame, chunk_tokens: int, overlap: int, sep: str
+) -> DataFrame:
+    """(doc_id, chunk_idx, chunk_text, n_tokens) from a staged
+    ``(doc_id, _toks)`` token array: windows of ``chunk_tokens``
+    advancing by ``chunk_tokens - overlap``, each token window joined
+    with ``sep``. An empty array yields one empty chunk."""
+    if overlap >= chunk_tokens:
+        raise ValueError("overlap must be smaller than chunk_tokens")
+    stride = chunk_tokens - overlap
+    starts = F.sequence(
+        F.lit(0),
+        F.greatest(
+            F.ceil((F.size("_toks") - F.lit(chunk_tokens)) / F.lit(stride))
+            .cast("int"),
+            F.lit(0),
+        ),
+    )
+    return (
+        staged.select(
+            "doc_id",
+            "_toks",
+            F.posexplode(starts).alias("chunk_idx", "_w"),
+        )
+        .select(
+            "doc_id",
+            "chunk_idx",
+            F.slice(
+                F.col("_toks"), F.col("_w") * stride + 1, chunk_tokens
+            ).alias("_window"),
+        )
+        .select(
+            "doc_id",
+            "chunk_idx",
+            F.array_join("_window", sep).alias("chunk_text"),
+            F.size("_window").alias("n_tokens"),
+        )
+    )
+
 
 def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 64,
     overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, chunk_idx, chunk_text, n_tokens): whitespace-token windows
+    """(doc_id, chunk_idx, chunk_text, n_tokens): whitespace-token windows
     of ``chunk_tokens`` tokens advancing by ``chunk_tokens - overlap``.
 
     The last window may be short; a document shorter than one window
@@ -52,56 +100,16 @@ def chunk_documents(
     the token split runs once per document (HOFs have no CSE — the
     array must be staged, see pyspark pitfalls in canonicalize.py).
     """
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be smaller than chunk_tokens")
-    stride = chunk_tokens - overlap
-    trimmed = F.trim(
-        F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), "\\s+", " ")
-    )
-    staged = docs.select(
-        F.col(id_col).alias("id"),
-        F.when(F.length(trimmed) == 0, F.array().cast("array<string>"))
-        .otherwise(F.split(trimmed, " "))
-        .alias("_toks"),
-    )
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.ceil((F.size("_toks") - F.lit(chunk_tokens)) / F.lit(stride))
-            .cast("int"),
-            F.lit(0),
-        ),
-    )
-    return (
-        staged.select(
-            "id",
-            "_toks",
-            F.posexplode(starts).alias("chunk_idx", "_w"),
-        )
-        .select(
-            "id",
-            "chunk_idx",
-            F.slice(
-                F.col("_toks"), F.col("_w") * stride + 1, chunk_tokens
-            ).alias("_window"),
-        )
-        .select(
-            F.col("id").alias(id_col),
-            "chunk_idx",
-            F.array_join("_window", " ").alias("chunk_text"),
-            F.size("_window").alias("n_tokens"),
-        )
-    )
+    staged = docs.select("doc_id", words(F.col("text")).alias("_toks"))
+    return _token_windows(staged, chunk_tokens, overlap, " ")
 
 
 def chunk_documents_bpe(
     docs: DataFrame,
     chunk_tokens: int = 32,
     overlap: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, chunk_idx, chunk_text, n_tokens): fixed-size windows of
+    """(doc_id, chunk_idx, chunk_text, n_tokens): fixed-size windows of
     REAL BPE tokens (the vendored deterministic tokenizer in
     functions/bpe.py) — the training-pipeline chunker, budgeting in
     the unit the model trains on instead of the whitespace proxy.
@@ -112,11 +120,8 @@ def chunk_documents_bpe(
     is a JVM column-expression chain with zero shuffle, replayed
     verbatim by the SQL oracle. Same edge policy as
     ``chunk_documents``: NULL/empty docs yield one empty chunk."""
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be smaller than chunk_tokens")
     from json_ld_spark.functions.bpe import bpe_tokens
 
-    stride = chunk_tokens - overlap
     # pin CPU parallelism before the merge chain: a small parquet
     # corpus arrives as ONE input split, and the encode is ~1.3 ms of
     # JVM string work per document — without the explicit repartition
@@ -125,47 +130,17 @@ def chunk_documents_bpe(
     # at real scale (many splits) this is a cheap id-hash shuffle that
     # also balances skewed file sizes.
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    staged = docs.repartition(n_parts, id_col).select(
-        F.col(id_col).alias("id"),
-        bpe_tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("_toks"),
+    staged = docs.repartition(n_parts, "doc_id").select(
+        "doc_id",
+        bpe_tokens(F.coalesce(F.col("text"), F.lit(""))).alias("_toks"),
     )
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.ceil((F.size("_toks") - F.lit(chunk_tokens)) / F.lit(stride))
-            .cast("int"),
-            F.lit(0),
-        ),
-    )
-    return (
-        staged.select(
-            "id",
-            "_toks",
-            F.posexplode(starts).alias("chunk_idx", "_w"),
-        )
-        .select(
-            "id",
-            "chunk_idx",
-            F.slice(
-                F.col("_toks"), F.col("_w") * stride + 1, chunk_tokens
-            ).alias("_window"),
-        )
-        .select(
-            F.col("id").alias(id_col),
-            "chunk_idx",
-            F.array_join("_window", "").alias("chunk_text"),
-            F.size("_window").alias("n_tokens"),
-        )
-    )
+    return _token_windows(staged, chunk_tokens, overlap, "")
 
 
 def pack_chunks(
     chunks: DataFrame,
     target_tokens: int = 256,
     n_buckets: int = 8,
-    id_col: str = "doc_id",
-    idx_col: str = "chunk_idx",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
     """Assign chunks to fixed-token-budget training sequences
     ("packing" — the step between chunking and the tokenizer).
@@ -190,24 +165,25 @@ def pack_chunks(
     from pyspark.sql import Window
     from pyspark.sql.types import NumericType
 
-    if isinstance(chunks.schema[id_col].dataType, NumericType):
-        bucket = F.pmod(F.col(id_col), F.lit(n_buckets)).cast("int")
+    if isinstance(chunks.schema["doc_id"].dataType, NumericType):
+        key = F.col("doc_id")
     else:
-        bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
+        key = F.xxhash64("doc_id")
+    bucket = F.pmod(key, F.lit(n_buckets)).cast("int")
     w = (
         Window.partitionBy("pack_bucket")
-        .orderBy(F.col(id_col), F.col(idx_col))
+        .orderBy(F.col("doc_id"), F.col("chunk_idx"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         chunks.withColumn("pack_bucket", bucket)
-        .withColumn("_cum", F.sum(tokens_col).over(w))
+        .withColumn("_cum", F.sum("n_tokens").over(w))
         .select(
             "pack_bucket",
-            id_col,
-            idx_col,
-            tokens_col,
-            F.floor((F.col("_cum") - F.col(tokens_col)) / target_tokens)
+            "doc_id",
+            "chunk_idx",
+            "n_tokens",
+            F.floor((F.col("_cum") - F.col("n_tokens")) / target_tokens)
             .cast("int")
             .alias("pack_id"),
         )
@@ -218,12 +194,11 @@ def deterministic_sample(
     df: DataFrame,
     fraction: float,
     key_col: str,
-    seed: int = 7,
 ) -> DataFrame:
     """Rows whose key hashes under ``fraction`` — reproducible sampling
     that is independent of partitioning and stable under appends. The
     md5-family bucket lets a SQL oracle reproduce the exact row set."""
-    bucket = sample_bucket(key_col, f"-{seed}")
+    bucket = sample_bucket(key_col, "-7")
     return df.filter(bucket < int(fraction * SAMPLE_BUCKETS))
 
 
@@ -233,14 +208,13 @@ def stratified_sample(
     strata_col: str,
     key_col: str,
     default_rate: float = 0.0,
-    seed: int = 7,
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the domain-mixing step of
     a training-data pipeline (keep 100% of books, 10% of common-crawl,
     0% of spam), with the same partition-independent, append-stable
     hash rule as ``deterministic_sample``: a row's fate depends only
-    on (key, seed), so re-running over a grown corpus never flips
-    previously-kept rows.
+    on its key (under ``deterministic_sample``'s salt), so re-running
+    over a grown corpus never flips previously-kept rows.
 
     ``rates`` maps stratum value → keep fraction; unlisted strata
     (and NULL) fall back to ``default_rate``. The rate lookup is a
@@ -248,7 +222,7 @@ def stratified_sample(
     source tags) are small by construction, so this stays a pure JVM
     row-expression: zero shuffle, zero join, full pushdown through
     the parquet scan."""
-    bucket = sample_bucket(key_col, f"-{seed}")
+    bucket = sample_bucket(key_col, "-7")
     thresh = F.lit(int(default_rate * SAMPLE_BUCKETS))
     for stratum, rate in sorted(rates.items()):
         thresh = F.when(
@@ -257,11 +231,7 @@ def stratified_sample(
     return df.filter(bucket < thresh)
 
 
-def dedup_against_corpus(
-    new_batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_against_corpus(new_batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Incremental ingestion dedup: rows of ``new_batch`` whose
     normalized content fingerprint does NOT already exist in
     ``corpus`` — the daily-ingest shape, where the new batch is small
@@ -278,38 +248,31 @@ def dedup_against_corpus(
     runtime bloom/DPP filter when the new batch is small."""
     from json_ld_spark.operators.textstats import fingerprint_md5
 
-    fp_new = new_batch.withColumn("_fp", fingerprint_md5(F.col(text_col)))
-    cols = [c for c in corpus.columns if c == text_col]
+    fp_new = new_batch.withColumn("_fp", fingerprint_md5(F.col("text")))
     fp_old = (
-        corpus.select(fingerprint_md5(F.col(text_col)).alias("_fp"))
-        if cols
+        corpus.select(fingerprint_md5(F.col("text")).alias("_fp"))
+        if "text" in corpus.columns
         else corpus.select(F.col(corpus.columns[0]).alias("_fp"))
     ).distinct()
     return fp_new.join(fp_old, "_fp", "left_anti").drop("_fp")
 
 
-def assign_splits(
-    df: DataFrame,
-    key_col: str,
-    weights: "list[tuple[str, float]]" = (
-        ("train", 0.8), ("val", 0.1), ("test", 0.1)
-    ),
-    seed: int = 7,
-) -> DataFrame:
+def assign_splits(df: DataFrame, key_col: str) -> DataFrame:
     """``df`` plus a ``split`` column: deterministic train/val/test
     assignment by hash bucket — partition-independent and append-
-    stable (a row's split depends only on its key and the seed, so a
+    stable (a row's split depends only on its key, so a
     grown corpus never migrates old rows across splits, which would
     silently leak yesterday's training data into today's eval set).
 
-    ``weights`` are (name, fraction) in priority order over the same
-    1e-6-grained md5-family bucket space as ``deterministic_sample``.
-    Pure JVM row expression — zero shuffle, full pushdown."""
-    bucket = sample_bucket(key_col, f"-{seed}")
-    expr = F.lit(weights[-1][0])
+    ``SPLIT_WEIGHTS`` are (name, fraction) in priority order over the
+    same 1e-6-grained md5-family bucket space (and salt) as
+    ``deterministic_sample``. Pure JVM row expression — zero shuffle,
+    full pushdown."""
+    bucket = sample_bucket(key_col, "-7")
+    expr = F.lit(SPLIT_WEIGHTS[-1][0])
     acc = 0
     cuts = []
-    for name, frac in weights[:-1]:
+    for name, frac in SPLIT_WEIGHTS[:-1]:
         acc += int(frac * SAMPLE_BUCKETS)
         cuts.append((name, acc))
     for name, cut in reversed(cuts):
@@ -317,12 +280,7 @@ def assign_splits(
     return df.withColumn("split", expr)
 
 
-def leakage_safe_splits(
-    docs: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 7,
-) -> DataFrame:
+def leakage_safe_splits(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """(key, split) for every document, with TRAIN rows whose
     normalized content fingerprint also appears in val or test
     DROPPED — the eval-leakage guard a training pipeline runs after
@@ -341,9 +299,9 @@ def leakage_safe_splits(
     removes training contamination, never evaluation rows."""
     from json_ld_spark.operators.textstats import fingerprint_md5
 
-    s = assign_splits(docs, key_col, seed=seed)
+    s = assign_splits(docs, key_col)
     fp = s.select(
-        F.col(key_col), "split", fingerprint_md5(F.col(text_col)).alias("_fp")
+        F.col(key_col), "split", fingerprint_md5(F.col("text")).alias("_fp")
     )
     eval_fps = (
         fp.filter(F.col("split") != "train").select("_fp").distinct()
@@ -363,7 +321,6 @@ def upsample_by_epochs(
     strata_col: str,
     key_col: str,
     default_epochs: float = 1.0,
-    seed: int = 11,
 ) -> DataFrame:
     """``df`` replicated per-stratum by FRACTIONAL epoch weights — the
     upsampling half of training-data mixing (see 'The Pile' /
@@ -381,7 +338,7 @@ def upsample_by_epochs(
     for the weight lookup (mix tables are small by construction), a
     hash threshold for the fractional copy, and one ``explode`` over
     a ``sequence`` — zero shuffle, zero join, full scan pushdown."""
-    bucket = sample_bucket(key_col, f"-up{seed}")
+    bucket = sample_bucket(key_col, "-up11")
     base = F.lit(int(default_epochs * SAMPLE_BUCKETS))
     for stratum, w in sorted(epochs.items()):
         base = F.when(
@@ -400,13 +357,8 @@ def upsample_by_epochs(
     )
 
 
-def weighted_sample(
-    docs: DataFrame,
-    k: int = 64,
-    id_col: str = "doc_id",
-    weight_col: str = "n_chars",
-) -> DataFrame:
-    """(rank, id, weight): deterministic weighted sampling WITHOUT
+def weighted_sample(docs: DataFrame, k: int = 64) -> DataFrame:
+    """(rank, doc_id, n_chars): deterministic weighted sampling WITHOUT
     replacement — the A-ES / exponential-clocks scheme (Efraimidis &
     Spirakis 2006): each row draws u ∈ (0,1] from the cross-engine
     hash of its id and ranks by u^(1/w), computed as ln(u)/w (same
@@ -419,34 +371,27 @@ def weighted_sample(
     leaves the plan, so libm ulp differences cannot reach the gate
     (keys of distinct ids are never within an ulp). One TakeOrdered
     top-k, no full sort."""
-    h = md5_hash60(F.col(id_col).cast("string"))
+    h = md5_hash60(F.col("doc_id").cast("string"))
     u = (h + 1).cast("double") / F.lit(float(1 << 60))
-    key = F.log(u) / F.col(weight_col).cast("double")
+    key = F.log(u) / F.col("n_chars").cast("double")
     ranked = (
-        docs.filter(F.col(weight_col) > 0)
-        .select(F.col(id_col), F.col(weight_col), key.alias("_key"))
-        .orderBy(F.desc("_key"), F.col(id_col))
+        docs.filter(F.col("n_chars") > 0)
+        .select("doc_id", "n_chars", key.alias("_key"))
+        .orderBy(F.desc("_key"), F.col("doc_id"))
         .limit(k)
     )
     from pyspark.sql import Window
 
-    w = Window.orderBy(F.desc("_key"), F.col(id_col))
+    w = Window.orderBy(F.desc("_key"), F.col("doc_id"))
     return ranked.select(
         F.row_number().over(w).cast("int").alias("rank"),
-        id_col,
-        weight_col,
+        "doc_id",
+        "n_chars",
     )
 
 
-def pack_turns(
-    turns: DataFrame,
-    budget_tokens: int = 128,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "text",
-    extra_cols: "tuple[str, ...]" = ("role",),
-) -> DataFrame:
-    """(conv, turn_idx, *extra, n_tokens, window_idx): pack each
+def pack_turns(turns: DataFrame, budget_tokens: int = 128) -> DataFrame:
+    """(conv_id, turn_idx, role, n_tokens, window_idx): pack each
     conversation's turns IN ORDER into fixed-token-budget context
     windows — the SFT-assembly step between transcripts and the
     tokenizer. Same greedy running-total semantics as pack_chunks
@@ -461,25 +406,19 @@ def pack_turns(
     budgets). Zero joins, one window per conversation partition."""
     from pyspark.sql import Window
 
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                         "\\s+", " ")
-    )
-    n_tokens = F.when(F.length(norm) > 0, F.size(F.split(norm, " "))).otherwise(
-        F.lit(0)
-    )
     w = (
-        Window.partitionBy(conv_col)
-        .orderBy(idx_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     staged = turns.select(
-        conv_col, idx_col, *extra_cols, n_tokens.alias("n_tokens")
+        "conv_id", "turn_idx", "role",
+        F.size(words(F.col("text"))).alias("n_tokens"),
     )
     return staged.withColumn("_cum", F.sum("n_tokens").over(w)).select(
-        conv_col,
-        idx_col,
-        *extra_cols,
+        "conv_id",
+        "turn_idx",
+        "role",
         "n_tokens",
         F.floor((F.col("_cum") - F.col("n_tokens")) / budget_tokens)
         .cast("int")
@@ -487,18 +426,10 @@ def pack_turns(
     )
 
 
-def loss_mask_spans(
-    turns: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    sep_len: int = 1,
-    mask_role: str = "assistant",
-) -> DataFrame:
-    """(conv, turn_idx, start_char, end_char, n_chars): character
-    spans of ``mask_role`` turns inside the conversation's linearized
-    text (turns joined in order with a ``sep_len``-char separator) —
+def loss_mask_spans(turns: DataFrame) -> DataFrame:
+    """(conv_id, turn_idx, start_char, end_char, n_chars): character
+    spans of assistant turns inside the conversation's linearized
+    text (turns joined in order with a 1-char separator) —
     the SFT loss-mask computation: train on assistant tokens only,
     mask everything else.
 
@@ -510,28 +441,23 @@ def loss_mask_spans(
     exact integer arithmetic throughout."""
     from pyspark.sql import Window
 
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                         "\\s+", " ")
-    )
+    norm = normalized(F.lower(F.coalesce(F.col("text"), F.lit(""))))
     w = (
-        Window.partitionBy(conv_col)
-        .orderBy(idx_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     staged = turns.select(
-        conv_col, idx_col, role_col, F.length(norm).alias("n_chars")
+        "conv_id", "turn_idx", "role", F.length(norm).alias("n_chars")
     )
     return (
-        staged.withColumn(
-            "_cum", F.sum(F.col("n_chars") + sep_len).over(w)
-        )
-        .filter(F.col(role_col) == mask_role)
+        staged.withColumn("_cum", F.sum(F.col("n_chars") + 1).over(w))
+        .filter(F.col("role") == "assistant")
         .select(
-            conv_col,
-            idx_col,
-            (F.col("_cum") - F.col("n_chars") - sep_len).alias("start_char"),
-            (F.col("_cum") - F.lit(sep_len)).alias("end_char"),
+            "conv_id",
+            "turn_idx",
+            (F.col("_cum") - F.col("n_chars") - 1).alias("start_char"),
+            (F.col("_cum") - F.lit(1)).alias("end_char"),
             "n_chars",
         )
     )
@@ -540,15 +466,11 @@ def loss_mask_spans(
 def preference_pairs(
     turns: DataFrame,
     score_col: str,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    resp_role: str = "assistant",
     min_margin: int = 1,
 ) -> DataFrame:
-    """(conv, chosen_turn, rejected_turn, chosen_score,
+    """(conv_id, chosen_turn, rejected_turn, chosen_score,
     rejected_score, margin): DPO/RLHF preference-pair construction —
-    per conversation, the best- and worst-scoring response turns
+    per conversation, the best- and worst-scoring assistant turns
     become the (chosen, rejected) pair when their score margin is
     large enough to be a trustworthy label.
 
@@ -561,9 +483,9 @@ def preference_pairs(
     turns; scores stay integers."""
     from pyspark.sql.window import Window
 
-    cand = turns.filter(F.col(role_col) == resp_role).select(
-        F.col(conv_col).alias("conv"),
-        F.col(turn_col).alias("turn"),
+    cand = turns.filter(F.col("role") == "assistant").select(
+        F.col("conv_id").alias("conv"),
+        F.col("turn_idx").alias("turn"),
         F.col(score_col).cast("long").alias("score"),
     )
     wb = Window.partitionBy("conv").orderBy(
@@ -602,12 +524,7 @@ def preference_pairs(
     )
 
 
-def capped_group_sample(
-    df: DataFrame,
-    group_col: str,
-    k: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def capped_group_sample(df: DataFrame, group_col: str, k: int) -> DataFrame:
     """At most ``k`` rows per group, chosen by md5-hash order of the
     id — the per-domain cap step of balanced-corpus construction
     (keep every small domain whole, uniformly subsample the whales).
@@ -619,7 +536,7 @@ def capped_group_sample(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(group_col).orderBy(
-        md5_hash60(F.col(id_col).cast("string")), F.col(id_col)
+        md5_hash60(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("_rk", F.row_number().over(w))

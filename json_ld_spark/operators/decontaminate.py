@@ -19,66 +19,39 @@ is the 100-TB training set. The plan therefore:
     documents appear with n_hit_grams = 0 (silent drops of clean docs
     would invert the filter's meaning downstream).
 
-Tokenization matches textstats: lower + whitespace-collapse + trim,
-split on single spaces. NULL text is coalesced to '' (empty docs have
-no grams). Documents shorter than ``n`` words contribute no grams and
-are therefore clean by definition.
+Both sides are ``(doc_id, text)`` tables. Tokenization is textstats':
+lower-cased ``words`` of functions/words.py, NULL text as '' (empty
+docs have no grams). Documents shorter than ``n`` words contribute no
+grams and are therefore clean by definition.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_ld_spark.functions.words import ngrams, words
 
-def _word_ngrams(text_col, n: int) -> Column:
-    """Distinct word n-grams of the normalized text as an array
-    column. The words array is built inline; callers that reuse it
-    should stage it (document_stats pattern)."""
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(text_col, F.lit(""))),
-                         "\\s+", " ")
+
+def _staged_ngrams(df: DataFrame, n: int, *keep: str) -> DataFrame:
+    """``keep`` columns plus ``_g``, the distinct word n-grams of
+    ``text``; the words array is staged first, as ``ngrams`` asks."""
+    staged = df.select(*keep, words(F.lower(F.col("text"))).alias("_w"))
+    return staged.select(
+        *keep, F.array_distinct(ngrams(F.col("_w"), n)).alias("_g")
     )
-    words = F.when(F.length(norm) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(norm, " "))
-    return _ngrams_of(words, n)
 
 
-def _ngrams_of(words: Column, n: int) -> Column:
-    """Distinct n-grams of a pre-staged words array (guarded so
-    sequence() never sees start > stop — Spark would emit a
-    DESCENDING sequence, not an empty one)."""
-    return F.when(
-        F.size(words) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", F.slice(words, i, n)
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def benchmark_ngrams(
-    bench: DataFrame, n: int = 6, text_col: str = "text"
-) -> DataFrame:
+def benchmark_ngrams(bench: DataFrame, n: int = 6) -> DataFrame:
     """Distinct n-gram set of the benchmark/eval corpus: one ``gram``
     column. Small by construction; the caller broadcasts it."""
-    staged = bench.select(_word_ngrams(F.col(text_col), n).alias("_g"))
     return (
-        staged.select(F.explode("_g").alias("gram")).distinct()
+        _staged_ngrams(bench, n)
+        .select(F.explode("_g").alias("gram")).distinct()
     )
 
 
-def contamination(
-    docs: DataFrame,
-    bench: DataFrame,
-    n: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contamination(docs: DataFrame, bench: DataFrame, n: int = 6) -> DataFrame:
     """(doc_id, n_hit_grams, contaminated) for every document in
     ``docs``: n_hit_grams = how many of the document's DISTINCT word
     n-grams appear anywhere in the benchmark set; contaminated =
@@ -89,21 +62,20 @@ def contamination(
     one leaked prompt 100× is the same single leak as one that quotes
     it once, which is the decision the downstream drop-rule needs.
     """
-    grams = benchmark_ngrams(bench, n=n, text_col=text_col)
-    staged = docs.select(
-        F.col(id_col), _word_ngrams(F.col(text_col), n).alias("_g")
+    grams = benchmark_ngrams(bench, n=n)
+    doc_grams = _staged_ngrams(docs, n, "doc_id").select(
+        "doc_id", F.explode("_g").alias("gram")
     )
-    doc_grams = staged.select(id_col, F.explode("_g").alias("gram"))
     hits = (
         doc_grams.join(F.broadcast(grams), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_hit_grams"))
     )
     return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            F.col(id_col),
+            "doc_id",
             F.coalesce(F.col("n_hit_grams"), F.lit(0)).alias("n_hit_grams"),
             (F.coalesce(F.col("n_hit_grams"), F.lit(0)) > 0).alias(
                 "contaminated"
@@ -115,13 +87,9 @@ def contamination(
 def semantic_decontaminate(
     corpus: DataFrame,
     eval_set: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eval_id_col: str = "eval_id",
     threshold: float = 0.5,
-    round_dp: int = 4,
 ) -> DataFrame:
-    """(id, max_cos, top_eval_id, contaminated): embedding-space
+    """(vec_id, max_cos, top_eval_id, contaminated): embedding-space
     decontamination — flag training items whose embedding is too
     close to ANY benchmark item's embedding (the semantic complement
     of the n-gram rule above: catches paraphrased eval leakage that
@@ -134,24 +102,24 @@ def semantic_decontaminate(
     corpus id — which the broadcast join preserves, so only the
     (id, cos) pairs move. For eval suites too big to broadcast, use
     the IVF/LSH batch-serving joins (operators/similarity.py) as the
-    prefilter instead. ``top_eval_id`` is the argmax with min-id
-    tie-break on the ``round_dp``-rounded cosine — deterministic, so
-    a SQL oracle gates the whole pass."""
+    prefilter instead. ``corpus`` is ``(vec_id, embedding)`` and
+    ``eval_set`` ``(eval_id, embedding)``. ``top_eval_id`` is the
+    argmax with min-id tie-break on the 4-dp rounded cosine —
+    deterministic, so a SQL oracle gates the whole pass."""
     from json_ld_spark.functions.columns import dot, l2_norm
 
     c = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        l2_norm(F.col("embedding")).alias("_n"),
     )
     e = eval_set.select(
-        F.col(eval_id_col).alias("_eid"),
-        F.col(vec_col).alias("_ev"),
-        l2_norm(F.col(vec_col)).alias("_en"),
+        F.col("eval_id").alias("_eid"),
+        F.col("embedding").alias("_ev"),
+        l2_norm(F.col("embedding")).alias("_en"),
     )
     cos = F.round(
-        dot(F.col("_v"), F.col("_ev")) / (F.col("_n") * F.col("_en")),
-        round_dp,
+        dot(F.col("_v"), F.col("_ev")) / (F.col("_n") * F.col("_en")), 4
     )
     return (
         c.crossJoin(F.broadcast(e))
@@ -167,7 +135,7 @@ def semantic_decontaminate(
             ).alias("top_eval_id"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "max_cos",
             "top_eval_id",
             (F.col("max_cos") >= threshold).alias("contaminated"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from json_ld_spark.functions.columns import cosine_similarity, dot, l2_norm
+from json_ld_spark.functions.words import ngrams, words
 from json_ld_spark.operators.canonicalize import (
     capped_band_pairs,
     connected_components,
@@ -261,16 +262,16 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     block shuffle); grams re-join by id for the exact verify, the
     same shape as the minhash verify step."""
     n, k = 3, 4
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
     # stage the word array in its own projection: the gram lambda
     # below references it per ELEMENT, and interpreted HOFs have no
     # CSE — capturing the split(regexp(lower)) tree in the closure
-    # would re-run it once per gram
-    words = F.col("_words")
+    # would re-run it once per gram. Unlike ``ngrams``, a text under n
+    # words keeps one short gram (blank text: the gram '')
+    w = F.col("_words")
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+            F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),
+            lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)),
         )
     )
     # staged projections: words once, then grams once; `_bands` derives
@@ -278,7 +279,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     # Rebalanced first: gram construction is the heavy per-row stage
     # and must not run at a compact scan's 1-2 splits (plans/layout.py)
     g = rebalance_scan(docs.select(
-        F.col("doc_id").alias("_id"), F.split(norm, " ").alias("_words")
+        F.col("doc_id").alias("_id"),
+        words(F.lower(F.col("text"))).alias("_words"),
     )).select(F.col("_id"), grams.alias("_grams")).select(
         "_id",
         "_grams",
@@ -485,14 +487,9 @@ def jaccard_prefix_join(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     deliberately measures the probabilistic paths and gates this one
     at oracle scale.
     """
-    norm = F.lower(F.coalesce(F.col("text"), F.lit("")))
     tok = docs.select(
         F.col("doc_id").alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(norm, "\\s+"), lambda w: w != "")
-            )
-        ).alias("w"),
+        F.explode(F.array_distinct(words(F.lower(F.col("text"))))).alias("w"),
     )
     cnt = tok.groupBy("w").agg(F.count("*").alias("c"))
     # per-doc token list in rare-first order (count, then token —
@@ -628,26 +625,14 @@ def exact_substring_spans(
     Within-document repetition is deliberately out of scope here
     (``repetition_stats`` covers it): a gram repeated only inside one
     document does not mark a span."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))), "\\s+", " "
-        )
-    )
-    words = F.when(
-        F.length(norm) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(norm, " "))
-    staged = docs.select(F.col("doc_id"), words.alias("_w"))
-    grams_arr = F.when(
-        F.size("_w") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_w") - (n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("_w"), i, n))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    staged = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
     occ = staged.select(
-        F.col("doc_id"),
-        F.posexplode(grams_arr).alias("_p0", "_key"),
-    ).select("doc_id", (F.col("_p0") + 1).cast("int").alias("pos"), "_key")
+        "doc_id", F.posexplode(ngrams(F.col("_w"), n)).alias("_p0", "_g")
+    ).select(
+        "doc_id",
+        (F.col("_p0") + 1).cast("int").alias("pos"),
+        F.md5("_g").alias("_key"),
+    )
     dup = (
         occ.groupBy("_key")
         .agg(F.countDistinct("doc_id").alias("_nd"))

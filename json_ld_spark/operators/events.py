@@ -1,7 +1,8 @@
 """Event-stream analytics: funnels, retention cohorts, transition
 matrices — the product-analytics reads a 100 TB event table serves.
 
-All three are pure DataFrame compositions (no UDFs) whose outputs are
+All three are pure DataFrame compositions (no UDFs) over the
+``(event_id, user_id, event_type, ts)`` events table, whose outputs are
 integers or integer-derived divisions, so the DuckDB oracles replay
 them exactly. Scale shapes:
   - funnel: K tiny per-user aggregations (one per step), each a
@@ -19,13 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def funnel_conversion(
-    events: DataFrame,
-    steps: "list[str]",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_conversion(events: DataFrame, steps: "list[str]") -> DataFrame:
     """(user, t1..tK, reached): earliest strictly-ordered completion
     of the step sequence per user — t1 = min ts of step 1, t_{i+1} =
     min ts of step i+1 AFTER t_i (the standard unbounded-window
@@ -35,15 +30,15 @@ def funnel_conversion(
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
     cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(F.col(user_col).alias("user"))
-        .agg(F.min(ts_col).alias("t1"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy(F.col("user_id").alias("user"))
+        .agg(F.min("ts").alias("t1"))
     )
     out = cur
     for i, step in enumerate(steps[1:], start=2):
         nxt = (
-            events.filter(F.col(type_col) == step)
-            .select(F.col(user_col).alias("user"), F.col(ts_col).alias("_ts"))
+            events.filter(F.col("event_type") == step)
+            .select(F.col("user_id").alias("user"), F.col("ts").alias("_ts"))
             .join(out.select("user", F.col(f"t{i-1}").alias("_prev")), "user")
             .filter(F.col("_ts") > F.col("_prev"))
             .groupBy("user")
@@ -57,16 +52,12 @@ def funnel_conversion(
     return out.withColumn("reached", reached.cast("int"))
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """(cohort_day, day_offset, n_users): classic triangle retention —
     cohort = each user's first active day, offset in days, count of
     distinct cohort users active at that offset."""
     days = events.select(
-        F.col(user_col).alias("user"), F.to_date(ts_col).alias("day")
+        F.col("user_id").alias("user"), F.to_date("ts").alias("day")
     ).distinct()
     cohort = days.groupBy("user").agg(F.min("day").alias("cohort_day"))
     return (
@@ -79,23 +70,16 @@ def retention_cohorts(
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-    round_dp: int = 6,
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """(src, dst, n, p): first-order Markov transition counts over
-    each user's event sequence (ordered by ts with a total tiebreak
-    so the sequence — and therefore the counts — are partitioning-
-    independent), with the row-normalized probability p rounded to
-    ``round_dp`` (an integer/integer division, IEEE-deterministic)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
+    each user's event sequence (ordered by ts with the event_id
+    tiebreak, so the sequence — and therefore the counts — are
+    partitioning-independent), with the row-normalized probability p
+    rounded to 6 dp (an integer/integer division, IEEE-deterministic)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = events.select(
-        F.col(type_col).alias("src"),
-        F.lead(type_col).over(w).alias("dst"),
+        F.col("event_type").alias("src"),
+        F.lead("event_type").over(w).alias("dst"),
     ).filter(F.col("dst").isNotNull())
     counts = pairs.groupBy("src", "dst").agg(F.count("*").alias("n"))
     tot = Window.partitionBy("src")
@@ -105,6 +89,6 @@ def event_transitions(
         "n",
         F.round(
             F.col("n").cast("double") / F.sum("n").over(tot).cast("double"),
-            round_dp,
+            6,
         ).alias("p"),
     )

@@ -36,15 +36,13 @@ def negative_samples(
     positives: DataFrame,
     k: int = 3,
     n_buckets: int = 16,
-    head_col: str = "head",
-    tail_col: str = "tail",
 ) -> DataFrame:
     """(head, k_idx, neg_tail): up to ``k`` deterministic corrupt-tail
-    negatives per positive pair, drawn from the tail vocabulary via
-    bucketed hash indexing and filtered against true pairs."""
-    head, tail = F.col(head_col), F.col(tail_col)
+    negatives per positive ``(head, tail)`` pair, drawn from the tail
+    vocabulary via bucketed hash indexing and filtered against true
+    pairs."""
     vocab = (
-        positives.select(tail.alias("entity"))
+        positives.select(F.col("tail").alias("entity"))
         .distinct()
         .withColumn("bucket", F.pmod(md5_hash60(F.col("entity")), n_buckets))
     )
@@ -58,8 +56,8 @@ def negative_samples(
         F.count("*").alias("bucket_size")
     )
     probes = positives.select(
-        head.alias("head"),
-        tail.alias("tail"),
+        "head",
+        "tail",
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("k_idx"),
     ).withColumn(
         "_r",
@@ -78,7 +76,7 @@ def negative_samples(
         "head", "k_idx", F.col("entity").alias("neg_tail")
     )
     true_pairs = positives.select(
-        head.alias("head"), tail.alias("neg_tail")
+        "head", F.col("tail").alias("neg_tail")
     ).distinct()
     return picked.join(true_pairs, ["head", "neg_tail"], "left_anti")
 

@@ -13,9 +13,8 @@ cf. WebPIE / Urbani et al., "OWL reasoning with WebPIE"): the schema
 (class + property hierarchies, domain/range) is dimension-sized even
 when the fact table is 100 TB, so
 
-  1. compute the TRANSITIVE CLOSURE on the schema alone — iterative
-     pointer-doubling joins over a table of a few hundred rows,
-     ceil(log2(depth)) rounds;
+  1. compute the TRANSITIVE CLOSURE on the schema alone — a table of
+     a few hundred rows, closed driver-side (``close_pairs``);
   2. entail instances in ONE broadcast-join pass per rule over the
      fact table: rdfs7 (subPropertyOf), then rdfs2/rdfs3
      (domain/range), then rdfs9 (subClassOf on the accumulated type
@@ -41,19 +40,14 @@ from pyspark.sql import functions as F
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
-def transitive_closure(
-    edges: DataFrame,
-    src: str = "sub",
-    dst: str = "sup",
-    max_depth: int = 16,
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_depth: int = 16) -> DataFrame:
     """All (sub, sup) pairs reachable through ``edges`` — pointer
     doubling, so paths up to ``max_depth`` close in ceil(log2(depth))
     self-joins rather than depth-many semi-naive rounds. Intended for
     SCHEMA tables (hundreds of rows): each round is a self-join +
     distinct on a dimension-sized input. Results exclude reflexive
     pairs unless asserted."""
-    closed = edges.select(F.col(src).alias("sub"), F.col(dst).alias("sup"))
+    closed = edges.select("sub", "sup")
     rounds = max(1, (max_depth - 1).bit_length())
     for _ in range(rounds):
         hop = (
@@ -98,9 +92,6 @@ def rdfs_entail(
     subproperty_of: DataFrame,
     domain: DataFrame,
     range_: DataFrame,
-    max_depth: int = 16,
-    materialize: bool = True,
-    schema_local: bool = True,
 ) -> DataFrame:
     """Entailed triple set (asserted ∪ inferred, distinct) under the
     RDFS rules rdfs5/11 (hierarchy transitivity — precomputed on the
@@ -116,37 +107,25 @@ def rdfs_entail(
     per rule with no shuffle on the fact side (the final distinct is
     the one fact-sized shuffle, keyed on the full triple).
 
-    ``materialize=True`` (default) localCheckpoints the fact table
-    first: four rules plus the pass-through each re-evaluate their
-    input, and when facts come out of a derivation pipeline (here:
-    the whole JSON-LD emission) that is 5 recomputations of the
-    expensive subtree — the same self-join staging rule as
-    q_entity_cooccurrence. Pass False when facts are already a cheap
-    scan."""
-    if materialize:
-        facts = facts.select(
-            "subj", "pred", "obj_value", "obj_is_iri"
-        ).localCheckpoint()
-    f0 = facts.select("subj", "pred", "obj_value", "obj_is_iri")
-    if schema_local:
-        # schema tables are dimension-sized by contract: collect is a
-        # K-row artifact fetch, and closing them driver-side removes
-        # 2·log(depth) schema-only Spark jobs from the plan
-        spark = facts.sparkSession
+    The fact table is localCheckpointed first: four rules plus the
+    pass-through each re-evaluate their input, and when facts come out
+    of a derivation pipeline (here: the whole JSON-LD emission) that
+    is 5 recomputations of the expensive subtree — the same self-join
+    staging rule as q_entity_cooccurrence."""
+    f0 = facts.select(
+        "subj", "pred", "obj_value", "obj_is_iri"
+    ).localCheckpoint()
+    # schema tables are dimension-sized by contract: collect is a
+    # K-row artifact fetch, and closing them driver-side removes
+    # 2·log(depth) schema-only Spark jobs from the plan
+    spark = facts.sparkSession
 
-        def closed_local(df: DataFrame) -> DataFrame:
-            pairs = close_pairs([(r[0], r[1]) for r in df.collect()])
-            return spark.createDataFrame(pairs, "sub string, sup string")
+    def closed_local(df: DataFrame) -> DataFrame:
+        pairs = close_pairs([(r[0], r[1]) for r in df.collect()])
+        return spark.createDataFrame(pairs, "sub string, sup string")
 
-        cls = F.broadcast(closed_local(subclass_of))
-        prp = F.broadcast(closed_local(subproperty_of))
-    else:
-        cls = F.broadcast(
-            transitive_closure(subclass_of, max_depth=max_depth)
-        )
-        prp = F.broadcast(
-            transitive_closure(subproperty_of, max_depth=max_depth)
-        )
+    cls = F.broadcast(closed_local(subclass_of))
+    prp = F.broadcast(closed_local(subproperty_of))
     dom = F.broadcast(domain.select(F.col("prop"), F.col("cls")))
     rng = F.broadcast(range_.select(F.col("prop"), F.col("cls")))
 
@@ -207,11 +186,10 @@ def bgp_match(
     triples: DataFrame,
     patterns: "list[tuple[str, str, str]]",
     select: "list[str] | None" = None,
-    distinct: bool = True,
 ) -> DataFrame:
     """Match a SPARQL-style basic graph pattern against a
-    (subj, pred, obj_value) triple table and return variable
-    bindings.
+    (subj, pred, obj_value) triple table and return the distinct
+    variable bindings.
 
     Each pattern is (s, p, o); elements starting with ``?`` are
     variables, everything else is an IRI/literal constant. Each
@@ -253,14 +231,13 @@ def bgp_match(
     assert bound is not None, "empty BGP"
     if select:
         bound = bound.select(*[v.lstrip("?") for v in select])
-    return bound.dropDuplicates() if distinct else bound
+    return bound.dropDuplicates()
 
 
 def validate_shapes(
     triples: DataFrame,
     functional: "list[str] | None" = None,
     required: "list[tuple[str, str]] | None" = None,
-    type_pred: str = RDF_TYPE,
 ) -> DataFrame:
     """(rule, subj, pred, n): SHACL-lite shape validation over the
     triple table — the QA gate a KG build runs before publishing a
@@ -290,7 +267,7 @@ def validate_shapes(
         out = f
     for cls, pred in required or []:
         inst = triples.filter(
-            (F.col("pred") == type_pred) & (F.col("obj_value") == cls)
+            (F.col("pred") == RDF_TYPE) & (F.col("obj_value") == cls)
         ).select("subj")
         has = triples.filter(F.col("pred") == pred).select("subj")
         miss = (

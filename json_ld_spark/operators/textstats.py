@@ -1,16 +1,24 @@
 """Text analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+quality scoring, token counting, document fingerprinting, TF-IDF,
+BM25 and rank fusion.
 
 Every operator is a pure column expression (JVM-side, codegen) with an
 exactly-equivalent ANSI-SQL form for the DuckDB oracle — hashes are
 md5 (identical across Spark and DuckDB; xxhash64 is Spark-only and is
 used only for internal blocking, never in query output).
+
+What a word is comes from functions/words.py (``normalized``,
+``words``, ``ngrams``): lower-casing and NULL handling stay here, per
+operator. Every operator reads the ``doc_id``/``text`` columns of the
+documents table; BM25 retrieval queries are ``(query_id, query_text)``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from json_ld_spark.functions.words import WHITESPACE, ngrams, normalized, words
 
 # language marker words — crude n-gram heuristic; deterministic and
 # reproducible in SQL. Checked as ' word ' on a space-padded lowered
@@ -57,11 +65,8 @@ def language_guess(text_col) -> Column:
 
 
 def token_count_ws(text_col) -> Column:
-    """Whitespace token count."""
-    trimmed = F.trim(F.regexp_replace(text_col, "\\s+", " "))
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, " "))
-    )
+    """Whitespace token count (NULL for NULL text)."""
+    return F.when(text_col.isNotNull(), F.size(words(text_col)))
 
 
 def token_count_bpe_ish(text_col) -> Column:
@@ -69,7 +74,9 @@ def token_count_bpe_ish(text_col) -> Column:
     (regexp-token count, the standard pre-tokenizer shape)."""
     return F.size(
         F.regexp_extract_all(
-            text_col, F.lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), F.lit(0)
+            text_col,
+            F.lit(f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WHITESPACE[1:-1]}]"),
+            F.lit(0),
         )
     )
 
@@ -110,27 +117,21 @@ def quality_score(text_col) -> Column:
 def fingerprint_md5(text_col) -> Column:
     """Whole-document fingerprint: md5 of whitespace-normalized lower
     text (md5 matches DuckDB bit-for-bit)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text_col), "\\s+", " ")))
+    return F.md5(normalized(F.lower(text_col)))
 
 
-def shingle_fingerprint(text_col, k: int = 8, *,
-                        pre_normalized: bool = False) -> Column:
-    """Winnowing-style fingerprint: minimum md5 over all k-char
+def shingle_fingerprint(norm: Column) -> Column:
+    """Winnowing-style fingerprint: minimum md5 over all 8-char
     shingles of the normalized text (rolling-hash document signature;
     identical lexicographic-min semantics in SQL).
 
-    ``pre_normalized=True`` takes ``text_col`` as already
-    lower/whitespace-normalized. Callers SHOULD stage the normalized
-    text as a named column in its own projection and pass it here:
-    the normalization is captured inside the ``transform`` lambda
-    below, and interpreted HOFs re-evaluate captured expressions once
-    per array ELEMENT — per-shingle trim∘regexp_replace∘lower costs
-    2.5×+ on real text (the pitfall measured in dedup.py's ``_lt``
-    staging)."""
-    if pre_normalized:
-        norm = text_col
-    else:
-        norm = F.trim(F.regexp_replace(F.lower(text_col), "\\s+", " "))
+    ``norm`` is the lower-cased ``normalized`` text, staged by the
+    caller as a named column in its own projection: the lambda below
+    captures it, and interpreted HOFs re-evaluate captured expressions
+    once per array ELEMENT — per-shingle trim∘regexp_replace∘lower
+    costs 2.5×+ on real text (the pitfall measured in dedup.py's
+    ``_lt`` staging)."""
+    k = 8
     shingles = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))),
         lambda i: F.substring(norm, 1, 2147483647).substr(i, F.lit(k)),
@@ -138,13 +139,8 @@ def shingle_fingerprint(text_col, k: int = 8, *,
     return F.array_min(F.transform(shingles, lambda s: F.md5(s)))
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, term, tf, score, rank): top-k TF-IDF terms per document —
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
+    """(doc_id, term, tf, score, rank): top-k TF-IDF terms per document —
     keyword extraction over the whole corpus in three shuffles
     (term counts, document frequencies, per-doc ranking).
 
@@ -162,19 +158,14 @@ def tfidf_top_terms(
     it to a broadcast join at runtime on real size, not on a hint."""
     from pyspark.sql import Window
 
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")
+    terms = docs.select(
+        "doc_id", F.explode(words(F.lower(F.col("text")))).alias("term")
     )
-    terms = (
-        docs.select(F.col(id_col).alias("id"), norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select("id", F.explode(F.split(F.col("_t"), " ")).alias("term"))
-    )
-    tf = terms.groupBy("id", "term").agg(F.count("*").alias("tf"))
-    n_docs = docs.select(id_col).distinct().count()  # scalar parameter
+    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    n_docs = docs.select("doc_id").distinct().count()  # scalar parameter
     df_ = tf.groupBy("term").agg(F.count("*").alias("_df"))
     scored = tf.join(df_, "term").select(
-        "id",
+        "doc_id",
         "term",
         "tf",
         F.round(
@@ -184,26 +175,26 @@ def tfidf_top_terms(
             6,
         ).alias("score"),
     )
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.col("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.col("term"))
     return (
         scored.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
         .select(
-            F.col("id").alias(id_col), "term", "tf", "score",
+            "doc_id", "term", "tf", "score",
             F.col("_rk").cast("int").alias("rank"),
         )
     )
 
 
-def document_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def document_stats(docs: DataFrame) -> DataFrame:
     """All text-analysis columns over a documents table.
 
     The lower/whitespace normalization feeding both fingerprints is
     staged as ``_norm`` in its own projection (used twice in the outer
     select, so CollapseProject keeps it staged) — without this, the
     shingle HOF re-runs the normalization once per shingle."""
-    t = F.col(text_col)
-    norm = F.trim(F.regexp_replace(F.lower(t), "\\s+", " "))
+    t = F.col("text")
+    norm = normalized(F.lower(t))
     staged = docs.select("doc_id", t.alias("_text"), norm.alias("_norm"))
     t = F.col("_text")
     n = F.col("_norm")
@@ -216,13 +207,11 @@ def document_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
         F.round(quality_score(t), 6).alias("quality"),
         F.md5(n).alias("fp_md5"),
-        shingle_fingerprint(n, pre_normalized=True).alias("fp_shingle"),
+        shingle_fingerprint(n).alias("fp_shingle"),
     )
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals, one row per document:
 
       - ``n_words``            whitespace tokens
@@ -247,23 +236,11 @@ def repetition_stats(
     NULL/empty text behaves as the empty document (0 words, fractions
     0.0) — coalesced up front so non-ANSI ``size(NULL) = -1`` can't
     leak in (the corpus.py chunker's NULL-text lesson)."""
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                         "\\s+", " ")
-    )
-    words = F.when(F.length(norm) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(norm, " "))
-    staged = docs.select(F.col(id_col), words.alias("_w"))
+    staged = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
     w = F.col("_w")
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(w, i),
-                                  F.element_at(w, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    staged = staged.select(id_col, "_w", F.array_sort(bigrams).alias("_bg"))
+    staged = staged.select(
+        "doc_id", "_w", F.array_sort(ngrams(w, 2)).alias("_bg")
+    )
     bg = F.col("_bg")
     # max run length over the sorted bigram array: one fold, no shuffle
     zero = F.struct(
@@ -285,7 +262,7 @@ def repetition_stats(
     n_words = F.size(w)
     n_bigrams = F.size(bg)
     return staged.select(
-        F.col(id_col),
+        "doc_id",
         n_words.cast("long").alias("n_words"),
         F.when(n_words == 0, F.lit(0.0))
         .otherwise(
@@ -303,8 +280,6 @@ def duplicated_ngram_fraction(
     docs: DataFrame,
     n: int = 13,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus-level duplicated-span signal (the RefinedWeb/Dolma
     "fraction of duplicated n-grams" filter): for each document, the
@@ -326,34 +301,23 @@ def duplicated_ngram_fraction(
     Documents shorter than ``n`` words have no grams: they surface
     with n_grams = 0 and fraction 0.0 (not dropped — the downstream
     filter must see every document)."""
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                         "\\s+", " ")
+    staged = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
+    occ = staged.select(
+        "doc_id", F.explode(ngrams(F.col("_w"), n)).alias("gram")
     )
-    words = F.when(F.length(norm) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(norm, " "))
-    staged = docs.select(F.col(id_col), words.alias("_w"))
-    grams_arr = F.when(
-        F.size("_w") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_w") - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    occ = staged.select(id_col, F.explode(grams_arr).alias("gram"))
     freq = occ.groupBy("gram").agg(F.count("*").alias("_freq"))
     tagged = occ.join(freq, "gram").select(
-        id_col, (F.col("_freq") >= min_count).cast("int").alias("_dup")
+        "doc_id", (F.col("_freq") >= min_count).cast("int").alias("_dup")
     )
-    per_doc = tagged.groupBy(id_col).agg(
+    per_doc = tagged.groupBy("doc_id").agg(
         F.count("*").alias("n_grams"),
         F.sum("_dup").alias("n_dup_grams"),
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            F.col(id_col),
+            "doc_id",
             F.coalesce(F.col("n_grams"), F.lit(0)).alias("n_grams"),
             F.coalesce(F.col("n_dup_grams"), F.lit(0)).alias("n_dup_grams"),
             F.when(F.coalesce(F.col("n_grams"), F.lit(0)) == 0, F.lit(0.0))
@@ -365,14 +329,8 @@ def duplicated_ngram_fraction(
     )
 
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    vocab_size: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_dp: int = 6,
-) -> DataFrame:
-    """(id, n_bigrams, lm_score): per-document mean log-probability
+def bigram_lm_scores(docs: DataFrame, vocab_size: int) -> DataFrame:
+    """(doc_id, n_bigrams, lm_score): per-document mean log-probability
     under an add-one-smoothed bigram language model TRAINED ON THE
     CORPUS ITSELF — the perplexity-style quality filter of a training
     pipeline (template spam and keyword-stuffed pages score far below
@@ -380,7 +338,7 @@ def bigram_lm_scores(
     or never seen in normal context).
 
     score(d) = round(mean over d's bigrams of
-                     ln((c(w1,w2) + 1) / (c(w1) + V)), dp)
+                     ln((c(w1,w2) + 1) / (c(w1) + V)), 6)
     with c(·) corpus-wide counts, c(w1) the count of w1 AS A BIGRAM
     CONTEXT (not raw unigram frequency — the standard conditional
     estimate), and V = ``vocab_size`` a RECIPE PARAMETER the caller
@@ -398,13 +356,7 @@ def bigram_lm_scores(
     the occurrence table is already partitioned on the join keys by
     its own groupBys and AQE broadcasts only genuinely small models.
     """
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                         "\\s+", " ")
-    )
-    words = F.when(F.length(norm) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(norm, " "))
-    staged = docs.select(F.col(id_col), words.alias("_w"))
+    staged = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
     bigrams = F.when(
         F.size("_w") >= 2,
         F.transform(
@@ -416,14 +368,16 @@ def bigram_lm_scores(
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     occ = staged.select(
-        id_col, F.explode(bigrams).alias("_bg")
-    ).select(id_col, F.col("_bg.w1").alias("w1"), F.col("_bg.w2").alias("w2"))
+        "doc_id", F.explode(bigrams).alias("_bg")
+    ).select(
+        "doc_id", F.col("_bg.w1").alias("w1"), F.col("_bg.w2").alias("w2")
+    )
     c2 = occ.groupBy("w1", "w2").agg(F.count("*").alias("_c2"))
     c1 = occ.groupBy("w1").agg(F.count("*").alias("_c1"))
     scored = (
         occ.join(c2, ["w1", "w2"])
         .join(c1, "w1")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
             F.avg(
@@ -433,13 +387,12 @@ def bigram_lm_scores(
         )
     )
     return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            F.col(id_col),
+            "doc_id",
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            F.round(F.coalesce(F.col("_s"), F.lit(0.0)), round_dp)
-            .alias("lm_score"),
+            F.round(F.coalesce(F.col("_s"), F.lit(0.0)), 6).alias("lm_score"),
         )
     )
 
@@ -452,8 +405,6 @@ def bm25_scores(
     k1: float = 1.2,
     b: float = 0.75,
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, term, tf, dl, score, rank): Okapi BM25 ranking of the
     corpus against a fixed term set — the classic lexical retrieval
@@ -474,24 +425,18 @@ def bm25_scores(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     avgdl = float(total_len) / float(n_docs)
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " "))
-    words = (
-        docs.select(F.col(id_col).alias("id"), norm.alias("_t"))
-        .filter(F.length("_t") > 0)  # split('') is [''], size 1 — filter
-        # on the normalized text instead, as tfidf does
-        .select("id", F.split(F.col("_t"), " ").alias("_w"))
-    )
-    dl = words.select("id", F.size("_w").alias("dl"))
-    terms = words.select(
-        "id", F.explode("_w").alias("term")
+    toks = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
+    dl = toks.select("doc_id", F.size("_w").alias("dl"))
+    terms = toks.select(
+        "doc_id", F.explode("_w").alias("term")
     ).filter(F.col("term").isin(list(query_terms)))
-    tf = terms.groupBy("id", "term").agg(F.count("*").alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfx = tf.groupBy("term").agg(F.count("*").alias("_df"))
     scored = (
         tf.join(F.broadcast(dfx), "term")  # |Q| rows — a true constant
-        .join(dl, "id")
+        .join(dl, "doc_id")
         .select(
-            F.col("id").alias(id_col),
+            "doc_id",
             "term",
             "tf",
             "dl",
@@ -511,7 +456,7 @@ def bm25_scores(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("term").orderBy(F.desc("score"), F.col(id_col))
+    w = Window.partitionBy("term").orderBy(F.desc("score"), F.col("doc_id"))
     return scored.withColumn(
         "rank", F.row_number().over(w).cast("int")
     ).filter(F.col("rank") <= k)
@@ -525,10 +470,6 @@ def bm25_retrieval(
     k1: float = 1.2,
     b: float = 0.75,
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    qid_col: str = "query_id",
-    qtext_col: str = "query_text",
 ) -> DataFrame:
     """(query_id, doc_id, n_terms, score_ppm, rank): multi-query BM25
     retrieval — the inverted-index join that serves a BATCH of search
@@ -561,23 +502,19 @@ def bm25_retrieval(
     from pyspark.sql import Window
 
     avgdl = float(total_len) / float(n_docs)
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " "))
-    words = (
-        docs.select(F.col(id_col).alias("id"), norm.alias("_t"))
-        .filter(F.length("_t") > 0)
-        .select("id", F.split(F.col("_t"), " ").alias("_w"))
-    )
-    dl = words.select("id", F.size("_w").alias("dl"))
-    qnorm = F.trim(F.regexp_replace(F.lower(F.col(qtext_col)), "\\s+", " "))
+    toks = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
+    dl = toks.select("doc_id", F.size("_w").alias("dl"))
     qterms = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.explode(F.array_distinct(F.split(qnorm, " "))).alias("term"),
-    ).filter(F.length("term") > 0)
+        "query_id",
+        F.explode(
+            F.array_distinct(words(F.lower(F.col("query_text"))))
+        ).alias("term"),
+    )
     vocab = qterms.select("term").distinct()
     tf = (
-        words.select("id", F.explode("_w").alias("term"))
+        toks.select("doc_id", F.explode("_w").alias("term"))
         .join(F.broadcast(vocab), "term")
-        .groupBy("id", "term")
+        .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
     dfx = tf.groupBy("term").agg(F.count("*").alias("_df"))
@@ -599,35 +536,28 @@ def bm25_retrieval(
     ).cast("long")
     scored = (
         tf.join(F.broadcast(dfx), "term")
-        .join(dl, "id")
-        .select("id", "term", term_ppm.alias("_ppm"))
+        .join(dl, "doc_id")
+        .select("doc_id", "term", term_ppm.alias("_ppm"))
         .join(F.broadcast(qterms), "term")
-        .groupBy("qid", "id")
+        .groupBy("query_id", "doc_id")
         .agg(
             F.count("*").cast("int").alias("n_terms"),
             F.sum("_ppm").alias("score_ppm"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("score_ppm"), F.col("id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score_ppm"), F.col("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(qid_col),
-            F.col("id").alias(id_col),
-            "n_terms",
-            "score_ppm",
-            "rank",
-        )
+        .select("query_id", "doc_id", "n_terms", "score_ppm", "rank")
     )
 
 
 def quality_classifier_scores(
     docs: DataFrame,
     n_buckets: int = 4096,
-    text_col: str = "text",
 ) -> DataFrame:
     """fastText-style hashed-bag-of-words quality classifier
     INFERENCE (Joulin et al. 2017 shape — public knowledge): each
@@ -654,15 +584,9 @@ def quality_classifier_scores(
     cheapest possible classifier pass."""
     from json_ld_spark.operators.hashfamily import md5_hash60
 
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "\\s+", " "
-        )
-    )
-    staged = docs.select("doc_id", norm.alias("_norm"))
-    words = F.filter(F.split(F.col("_norm"), " "), lambda w: w != "")
+    staged = docs.select("doc_id", words(F.lower(F.col("text"))).alias("_w"))
     wts = F.transform(
-        words,
+        F.col("_w"),
         lambda w: (
             F.pmod(md5_hash60(w), n_buckets) * 2654435761
         ) % 2001 - 1000,
@@ -670,7 +594,7 @@ def quality_classifier_scores(
     w_sum = F.aggregate(
         wts, F.lit(0).cast("long"), lambda acc, x: acc + x
     )
-    n_words = F.size(words)
+    n_words = F.size("_w")
     return staged.select(
         "doc_id",
         n_words.alias("n_words"),
@@ -682,13 +606,14 @@ def quality_classifier_scores(
     ).select("doc_id", "n_words", "w_sum", "logit_ppm", "quality_pass")
 
 
-def luhn_valid(card: Column, n_digits: int = 16) -> Column:
+def luhn_valid(card: Column) -> Column:
     """Luhn checksum validation (ISO/IEC 7812 mod-10 — public
     knowledge) for a fixed-width digit string: from the RIGHTMOST
     digit, every second digit doubles (minus 9 when > 9) and the
     total must be ≡ 0 (mod 10). Pure column arithmetic — the PII
     pass uses it so checksum-invalid 16-digit lookalikes (order ids,
     timestamps) are NOT redacted."""
+    n_digits = 16
     terms = []
     for i in range(1, n_digits + 1):  # 1-based from the left
         dig = card.substr(i, 1).cast("int")
@@ -707,9 +632,6 @@ def rrf_fuse(
     runs: "list[DataFrame]",
     k_const: int = 60,
     out_k: int = 10,
-    qid_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """(query, doc, rrf_ppm, n_runs, rank): Reciprocal Rank Fusion
     (Cormack et al. 2009) of N retrieval runs — the standard way to
@@ -723,19 +645,20 @@ def rrf_fuse(
     the corpus, so cost is independent of corpus size."""
     from pyspark.sql import Window
 
-    tagged = runs[0].select(qid_col, id_col, rank_col)
+    cols = ("query_id", "doc_id", "rank")
+    tagged = runs[0].select(*cols)
     for r in runs[1:]:
-        tagged = tagged.unionByName(r.select(qid_col, id_col, rank_col))
-    contrib = F.expr(f"1000000 div ({k_const} + {rank_col})")
+        tagged = tagged.unionByName(r.select(*cols))
+    contrib = F.expr(f"1000000 div ({k_const} + rank)")
     fused = (
-        tagged.groupBy(qid_col, id_col)
+        tagged.groupBy("query_id", "doc_id")
         .agg(
             F.sum(contrib).alias("rrf_ppm"),
             F.count("*").cast("int").alias("n_runs"),
         )
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("rrf_ppm"), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("rrf_ppm"), F.col("doc_id")
     )
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -743,12 +666,8 @@ def rrf_fuse(
     )
 
 
-def char_entropy(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, n_chars, n_distinct_chars, entropy_ppm): Shannon entropy
+def char_entropy(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_chars, n_distinct_chars, entropy_ppm): Shannon entropy
     of each document's character distribution — the CCNet-family
     gibberish/boilerplate filter (low entropy = repeated padding,
     high entropy near log|alphabet| = encrypted/binary junk).
@@ -761,28 +680,21 @@ def char_entropy(
     (char counts partial-aggregate map-side: the shuffle carries at
     most |alphabet| rows per document, not |text|)."""
     chars = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.col(text_col), "")).alias("ch"),
-        )
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id", F.explode(F.split(F.col("text"), "")).alias("ch"))
         .filter(F.col("ch") != "")
     )
-    counts = chars.groupBy("id", "ch").agg(F.count("*").alias("cnt"))
-    totals = counts.groupBy("id").agg(
+    counts = chars.groupBy("doc_id", "ch").agg(F.count("*").alias("cnt"))
+    totals = counts.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_chars"),
         F.count("*").alias("n_distinct_chars"),
     )
     p = F.col("cnt").cast("double") / F.col("n_chars").cast("double")
     term_ppm = F.round(-(p * F.log(p)) * F.lit(1000000.0), 0).cast("long")
     return (
-        counts.join(totals, "id")
-        .select("id", "n_chars", "n_distinct_chars",
+        counts.join(totals, "doc_id")
+        .select("doc_id", "n_chars", "n_distinct_chars",
                 term_ppm.alias("_t"))
-        .groupBy("id", "n_chars", "n_distinct_chars")
+        .groupBy("doc_id", "n_chars", "n_distinct_chars")
         .agg(F.sum("_t").alias("entropy_ppm"))
-        .select(
-            F.col("id").alias(id_col),
-            "n_chars", "n_distinct_chars", "entropy_ppm",
-        )
     )

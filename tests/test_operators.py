@@ -573,6 +573,7 @@ def test_document_stats_staged_norm_equivalence(spark):
     """The staged-``_norm`` fast path must be value-identical to
     computing the fingerprints directly from the raw text (the HOF
     staging is a plan change, never a semantics change)."""
+    from json_ld_spark.functions.words import normalized
     from json_ld_spark.operators.textstats import (
         fingerprint_md5,
         document_stats,
@@ -591,7 +592,9 @@ def test_document_stats_staged_norm_equivalence(spark):
         for r in df.select(
             "doc_id",
             fingerprint_md5(F.col("text")).alias("fp_md5"),
-            shingle_fingerprint(F.col("text")).alias("fp_shingle"),
+            shingle_fingerprint(normalized(F.lower(F.col("text")))).alias(
+                "fp_shingle"
+            ),
         ).collect()
     }
     for d in (1, 2, 3):

@@ -64,7 +64,7 @@ def test_rdfs_rules_on_micro_kg(spark):
     )
     dom = _pairs(spark, [(V + "of", V + "Mention")], "prop string, cls string")
     rng = _pairs(spark, [(V + "of", V + "Entity")], "prop string, cls string")
-    rows = rdfs_entail(facts, sub, sprop, dom, rng, max_depth=4).collect()
+    rows = rdfs_entail(facts, sub, sprop, dom, rng).collect()
     got = {(r.subj, r.pred, r.obj_value): r.asserted for r in rows}
     # rdfs9 through the CLOSED hierarchy: Person -> Agent AND Thing
     assert got[("ada", RDF_TYPE, V + "Agent")] is False
