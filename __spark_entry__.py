@@ -162,17 +162,23 @@ def q_kg_triple_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(conv_id, turn_idx, entity): one row per mention triple (the
+    ``of`` predicate) of the emitted KG."""
+    t = _triples(spark, sf_dir)
+    return t.filter(F.col("pred") == VOCAB + "of").select(
+        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
+    )
+
+
 def _comention_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst): one row per pair of mention rows of the same turn,
     src < dst lexicographically — the self-join every co-mention
     query aggregates its own way."""
-    t = _triples(spark, sf_dir)
     # materialize before the self-join: each join side would otherwise
     # re-derive the whole emission pipeline (self-joins recompute the
     # shared subtree once per side)
-    m = t.filter(F.col("pred") == VOCAB + "of").select(
-        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
-    ).localCheckpoint()
+    m = _mentions(spark, sf_dir).localCheckpoint()
     a, b = m.alias("a"), m.alias("b")
     return a.join(
         b,
@@ -1345,10 +1351,9 @@ def q_entity_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     mention fails the hash."""
     from json_ld_spark.operators.graph import pmi_edge_weights
 
-    t = _triples(spark, sf_dir)
-    m = t.filter(F.col("pred") == VOCAB + "of").select(
-        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
-    )
+    # materialized like _comention_pairs: the marginals and both sides
+    # of the co-mention self-join would each re-derive the emission
+    m = _mentions(spark, sf_dir).localCheckpoint()
     n_turns = (
         _derived(spark, sf_dir).select("conv_id", "turn_idx").distinct().count()
     )  # 1-row recipe parameter (N), same policy as PageRank's N
@@ -1793,13 +1798,14 @@ def _sql_cos(a: str, b: str) -> str:
     )
 
 
-def _simhash_oracle_sql(shingle: int = 4, max_hamming: int = 16) -> str:
+def _simhash_oracle_sql() -> str:
     """DuckDB twin of q_simhash_pairs: md5-prefix shingle hashes →
     per-bit vote sums → SIMHASH_BITS signature → SIMHASH_BLOCK_BITS
     block banding (with the deterministic BAND_BUCKET_CAP row cap per
     block-bucket — the hot-bucket skew guard) → Hamming filter.
     Bit-for-bit the Spark md5-family computation."""
     n_bits, block_bits = SIMHASH_BITS, SIMHASH_BLOCK_BITS
+    shingle, max_hamming = 4, 16
     h = MD5_HASH60_SQL.format(x=f"substring(lt, i, {shingle})")
     sig_terms = " + ".join(
         f"(CASE WHEN list_sum(list_transform(hs, x -> "
@@ -1834,12 +1840,12 @@ def _simhash_oracle_sql(shingle: int = 4, max_hamming: int = 16) -> str:
     """
 
 
-def _minhash_band_cte(num_hashes: int = 32, bands: int = 8,
-                      shingle: int = 3) -> str:
+def _minhash_band_cte() -> str:
     """Shared DuckDB CTE prefix: md5-base shingle hashes → affine
     minhash signatures → md5-string band buckets (tables d, sh, sig,
     band) — consumed by both the batch components oracle and the
     streaming dedup oracle."""
+    num_hashes, bands, shingle = 32, 8, 3
     A, B, P = minhash_affine(num_hashes)
     h = MD5_HASH60_SQL.format(x=f"substring(lt, i, {shingle})")
     sig_items = ", ".join(
@@ -1861,20 +1867,20 @@ def _minhash_band_cte(num_hashes: int = 32, bands: int = 8,
     )"""
 
 
-def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 8,
-                        shingle: int = 3, threshold: float = 0.3) -> str:
+def _minhash_oracle_sql() -> str:
     """DuckDB twin of q_minhash_components: md5-base shingle hashes →
     affine minhash signatures → md5-string band buckets (64-cap skew
     guard) → candidate self-join → exact-Jaccard verify → connected
     components via recursive-CTE transitive closure (components are
     near-dup clusters: small, so closure is cheap; Spark uses
     large-star/small-star for the same result at corpus scale)."""
+    threshold = 0.3
     jac = (
         "len(list_intersect(sa.hs, sb.hs)) * 1.0 / "
         "(len(sa.hs) + len(sb.hs) - len(list_intersect(sa.hs, sb.hs)))"
     )
     return f"""
-    WITH RECURSIVE {_minhash_band_cte(num_hashes, bands, shingle)},
+    WITH RECURSIVE {_minhash_band_cte()},
     capped AS (
       SELECT doc_id, band_i, bucket FROM (
         SELECT doc_id, band_i, bucket,
@@ -2865,10 +2871,7 @@ def q_triple_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the role lookup joins on the mention's own (conv, turn) key
     (co-partitioned with the groupBy — no extra shuffle of the big
     side under AQE)."""
-    t = _triples(spark, sf_dir)
-    obs = t.filter(F.col("pred") == VOCAB + "of").select(
-        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
-    )
+    obs = _mentions(spark, sf_dir)
     roles = _derived(spark, sf_dir).select("conv_id", "turn_idx", "role")
     return (
         obs.join(roles, ["conv_id", "turn_idx"])
@@ -3012,10 +3015,7 @@ def q_kg_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     transforms; the oracle replays every branch."""
     from json_ld_spark.operators.lifecycle import scd2_merge
 
-    t = _triples(spark, sf_dir)
-    m = t.filter(F.col("pred") == VOCAB + "of").select(
-        "conv_id", "turn_idx", F.col("obj_value").alias("entity")
-    )
+    m = _mentions(spark, sf_dir)
     roles = _derived(spark, sf_dir).select("conv_id", "turn_idx", "role")
     mm = m.join(roles, ["conv_id", "turn_idx"]).localCheckpoint()
     tier = F.expr(f"count(*) div {_SCD2_TIER_DIV}").alias("tier")
@@ -3692,7 +3692,7 @@ def q_stream_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         ).select(F.col("c.row_idx").alias("row_idx"),
                  F.col("c.bucket").alias("bucket"))
-        return stream_cms_registers(coords, w=_CMS_W, d=_CMS_D)
+        return stream_cms_registers(coords, w=_CMS_W)
 
     return (
         _latest_snapshot(_replay(spark, parts, build), "row_idx")

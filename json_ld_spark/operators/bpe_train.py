@@ -42,8 +42,8 @@ word (the same shape as any word count); the K training rounds shuffle
 only the capped vocab table (V rows), so the iteration cost is
 independent of corpus size. The growing ``replace`` chain over K
 rounds is O(K²) column work on V rows — negligible for practical K;
-for K in the hundreds, cut lineage every few rounds
-(plans/checkpoints.cut_lineage) exactly as the CC/PageRank loops do.
+for K in the hundreds, cut lineage every few rounds with
+``localCheckpoint`` exactly as the CC/PageRank loops do.
 """
 
 from __future__ import annotations
@@ -59,9 +59,8 @@ def train_bpe_distributed(
     docs: DataFrame,
     n_merges: int = 8,
     top_v: int = 4096,
-    text_col: str = "text",
 ) -> DataFrame:
-    """Learn ``n_merges`` BPE merges from the corpus; returns one row
+    """Learn ``n_merges`` BPE merges from the ``text`` column; one row
     per merge: (merge_idx, lhs, rhs, pair_weight) in training order,
     where pair_weight is the summed word-count weight of the winning
     pair at selection time."""
@@ -70,7 +69,7 @@ def train_bpe_distributed(
     # deterministic top-V cap. NULL text has no words (no rows).
     counts = (
         docs.select(
-            F.explode(words(_normalized(F.col(text_col)))).alias("word")
+            F.explode(words(_normalized(F.col("text")))).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("c"))

@@ -207,7 +207,6 @@ def jaccard_filter(
 def connected_components(
     edges: DataFrame,
     stats: "dict | None" = None,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """(id, component) with component = min id in the component, for
     an (id_a, id_b) edge frame.
@@ -229,18 +228,16 @@ def connected_components(
     agg reads its cached partitions. At fixpoint the edge set is a star
     forest (child → min-id root), which IS the component labeling.
 
-    ``checkpoint_dir``: when set, per-round materialization uses the
-    RELIABLE checkpoint (survives executor loss — mandatory for
-    hours-long CC on a real cluster; see plans/checkpoints.py for the
-    trade). Default localCheckpoint is correct on local[N].
+    Every round cuts lineage with ``localCheckpoint``: without the cut
+    each round re-derives every earlier one (SURVEY §4; measured 106 s
+    → 8 s on CC).
     """
-    from json_ld_spark.plans.checkpoints import cut_lineage
-
-    e = cut_lineage(  # evaluate the upstream edge pipeline once
+    # evaluate the upstream edge pipeline once
+    e = (
         edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(),
-        checkpoint_dir,
+        .dropDuplicates()
+        .localCheckpoint()
     )
     prev: "tuple | None" = None
     rounds = 0
@@ -271,10 +268,10 @@ def connected_components(
         )
         # lazy checkpoint: the checksum agg below is the action that
         # materializes it — one blocking job per round, not two
-        e = cut_lineage(
-            ss.filter(F.col("a") != F.col("b")).dropDuplicates(),
-            checkpoint_dir,
-            eager=False,
+        e = (
+            ss.filter(F.col("a") != F.col("b"))
+            .dropDuplicates()
+            .localCheckpoint(eager=False)
         )
         # bit_xor, not sum: order-independent and cannot overflow
         # (ANSI mode would throw on a long-sum of 2^63-range hashes)

@@ -46,6 +46,9 @@ from json_ld_spark.operators.similarity import (
 from json_ld_spark.operators.textstats import fingerprint_md5
 from json_ld_spark.plans.layout import rebalance_scan
 
+# SimHash character-shingle width (the oracle SQL replays it)
+_SIMHASH_SHINGLE = 4
+
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """(fingerprint, n_dups, keep_id): one row per distinct normalized
@@ -95,22 +98,16 @@ def minhash_dedup_components(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """(id, component): near-duplicate clusters via MinHash blocking →
-    Jaccard verify → connected components. Singletons omitted.
-    ``checkpoint_dir``: reliable per-round checkpoints for the CC
-    iterations (pass it on a real cluster — hours-long CC must survive
-    executor loss; see plans/checkpoints.py)."""
+    Jaccard verify → connected components. Singletons omitted."""
     # one shingle pass feeds both blocking and verification
     sets_ = hashed_shingle_sets(docs, id_col, text_col)
     verified = jaccard_filter(minhash_candidate_pairs(sets_), sets_, threshold)
-    return connected_components(
-        verified.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
-    )
+    return connected_components(verified.select("id_a", "id_b"))
 
 
-def simhash_sig(text_col, shingle: int = 4, pre_lowered: bool = False):
+def simhash_sig(text_col, pre_lowered: bool = False):
     """SIMHASH_BITS-wide SimHash over the md5_hash60 hashes of the
     character shingles, as ONE JVM aggregate: the accumulator is an
     array of vote counters updated per shingle hash (a single
@@ -122,6 +119,7 @@ def simhash_sig(text_col, shingle: int = 4, pre_lowered: bool = False):
     (see char_shingles), so callers stage it.
     """
     lowered = text_col if pre_lowered else F.lower(text_col)
+    shingle = _SIMHASH_SHINGLE
     shingles = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(lowered) - (shingle - 1), F.lit(1))),
         lambda i: lowered.substr(i, F.lit(shingle)),
@@ -170,7 +168,7 @@ def simhash_sig_table(docs: DataFrame) -> DataFrame:
     (sig bit b = ones_b·2 > n, identical to the ±1 vote sign).
     Measured 68 s → ~2 s on the same corpus."""
     lane = 0x0000000100000001
-    shingle = 4
+    shingle = _SIMHASH_SHINGLE
     # scan-granularity guard: the exploded hash + packed-lane partial
     # sums run BEFORE the groupBy shuffle, i.e. on the scan's
     # partitioning (plans/layout.py)

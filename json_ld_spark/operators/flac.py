@@ -221,13 +221,11 @@ def encode_flac(
 
     for frame_no, start in enumerate(range(0, n_total, block_size)):
         blk = samples[start : start + block_size]
-        out += _encode_frame(blk, frame_no, block_size, sample_rate)
+        out += _encode_frame(blk, frame_no)
     return bytes(out)
 
 
-def _encode_frame(
-    blk: "list[int]", frame_no: int, block_size: int, sample_rate: int
-) -> bytes:
+def _encode_frame(blk: "list[int]", frame_no: int) -> bytes:
     header = bytearray()
     header += b"\xff\xf8"  # sync + fixed blocking
     # block size code 0b0111 = get 16-bit from end of header; sample

@@ -162,7 +162,6 @@ def node_docs_to_triples(node_docs: DataFrame) -> DataFrame:
 def reconstitute_lists(
     triples: DataFrame,
     max_iter: int = 12,
-    checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """(head, items, depth, exhausted): rdf:first/rest chains collapsed
     by POINTER DOUBLING — each round joins every unfinished chain state
@@ -176,12 +175,10 @@ def reconstitute_lists(
     dropped: they come back with exhausted=true and the items collected
     so far, so callers can quarantine or re-run with a higher bound.
 
-    ``checkpoint_dir``: when set, per-round state materializes via the
-    RELIABLE checkpoint (survives executor loss on a real cluster;
-    plans/checkpoints.py documents the trade). Default localCheckpoint
-    is right on local[N].
+    Every round cuts lineage with ``localCheckpoint``: each doubling
+    round joins the previous state with itself, so an uncut plan
+    re-derives all earlier rounds twice over.
     """
-    from json_ld_spark.plans.checkpoints import cut_lineage
     cells = (
         triples.filter(F.col("pred").isin(RDF_FIRST, RDF_REST))
         .groupBy("subj")
@@ -195,14 +192,11 @@ def reconstitute_lists(
     # (not including) ptr; ptr = rdf:nil means the chain is complete.
     # One row per node throughout — doubling never inflates the row
     # count (emitting every sub-interval would be quadratic).
-    state = cut_lineage(
-        cells.select(
-            F.col("subj").alias("head"),
-            F.array("first").alias("items"),
-            F.col("rest").alias("ptr"),
-        ),
-        checkpoint_dir,
-    )
+    state = cells.select(
+        F.col("subj").alias("head"),
+        F.array("first").alias("items"),
+        F.col("rest").alias("ptr"),
+    ).localCheckpoint()
     for _ in range(max_iter):
         # this take(1) doubles as the materializer of the lazy
         # checkpoint below — one blocking job per doubling round
@@ -228,7 +222,7 @@ def reconstitute_lists(
                 F.coalesce(F.col("b.ptr"), F.col("a.ptr")).alias("ptr"),
             )
         )
-        state = cut_lineage(done.union(stepped), checkpoint_dir, eager=False)
+        state = done.union(stepped).localCheckpoint(eager=False)
     # keep only maximal chains (heads that are not some other cell's rest)
     inner = cells.select(F.col("rest").alias("head")).distinct()
     return state.join(inner, "head", "left_anti").select(

@@ -25,16 +25,15 @@ Scale design:
     the node table (a node may have no in-edge) and redistributes
     dangling mass via a 1-row broadcast aggregate per round — no
     extra |V|-sized shuffle.
-  - O(n_iters) rounds with per-round lineage cuts (cut_lineage), the
-    same iterative-operator discipline as connected components.
+  - O(n_iters) rounds, each ending in a lazy ``localCheckpoint``:
+    without the cut every round's plan re-derives all earlier rounds
+    (the same iterative-operator discipline as connected components).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from json_ld_spark.plans.checkpoints import cut_lineage
 
 
 def simple_graph(edges: DataFrame, directed: bool, *keep: str) -> DataFrame:
@@ -63,7 +62,7 @@ def simple_graph(edges: DataFrame, directed: bool, *keep: str) -> DataFrame:
     else:
         e = e.dropDuplicates()
     deg = F.count("*").over(Window.partitionBy("s"))
-    return cut_lineage(e.withColumn("deg", deg), eager=False)
+    return e.withColumn("deg", deg).localCheckpoint(eager=False)
 
 
 def pagerank(
@@ -103,6 +102,8 @@ def pagerank(
             .distinct()
         )
     n = nodes.count()  # scalar parameter of the recipe (N)
+    if n == 0:  # no edge survives simple_graph: nothing to rank
+        return nodes.select("node", F.lit(None).cast("double").alias("rank"))
     dangling = nodes.join(
         e.select(F.col("s").alias("node")), "node", "left_anti"
     )
@@ -143,7 +144,7 @@ def pagerank(
                 .crossJoin(F.broadcast(dang))
                 .select("node", new_rank.alias("rank"))
             )
-        ranks = cut_lineage(nxt, eager=False)
+        ranks = nxt.localCheckpoint(eager=False)
     return ranks
 
 
@@ -183,7 +184,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         )
         .select(F.col("s").alias("a"), F.col("t").alias("b"))
     )
-    ranked = cut_lineage(ranked, eager=False)
+    ranked = ranked.localCheckpoint(eager=False)
     # wedge at the low end: (a→b), (a→c), b<c; closes iff (b→c) or
     # (c→b) is an oriented edge — orientation makes exactly ONE of
     # the two orderings present when the closing edge exists, and the
@@ -243,7 +244,7 @@ def khop_neighbors(edges: DataFrame, seeds: DataFrame, k: int = 2) -> DataFrame:
                   "left_anti")
             .withColumn("dist", F.lit(d))
         )
-        nxt = cut_lineage(nxt, eager=False)
+        nxt = nxt.localCheckpoint(eager=False)
         visited = visited.unionByName(nxt)
         frontier = nxt
     return visited.filter(F.col("dist") > 0)
@@ -345,7 +346,7 @@ def label_propagation(edges: DataFrame, n_iters: int = 3) -> DataFrame:
                 "label", F.struct((-F.col("_n")).alias("a"), F.col("label").alias("b"))
             ).alias("label")
         )
-        labels = cut_lineage(labels, eager=False)
+        labels = labels.localCheckpoint(eager=False)
     return labels
 
 
@@ -434,7 +435,7 @@ def k_core(edges: DataFrame, k: int = 2, n_rounds: int = 6) -> DataFrame:
         # twice (degrees, then the semi-joins), and a lazy cut here
         # took entity_kcore at sf0.01 (4 vCPUs) from 59 to 71 stages
         # and from 1.17 to 1.81 s
-        und = cut_lineage(und)
+        und = und.localCheckpoint()
     return und.groupBy(F.col("s").alias("entity")).agg(
         F.count("*").alias("degree")
     )
@@ -477,7 +478,7 @@ def sssp_bounded(edges: DataFrame, seeds: DataFrame, k: int = 3) -> DataFrame:
             .groupBy("seed", "node")
             .agg(F.min("dist").alias("dist"))
         )
-        dist = cut_lineage(dist, eager=False)
+        dist = dist.localCheckpoint(eager=False)
     return dist
 
 
@@ -513,7 +514,7 @@ def hyperball(edges: DataFrame, k: int = 2, b: int = 8) -> DataFrame:
     nodes = e.select(F.col("s").alias("group")).dropDuplicates()
     bucket, rank = hll_bucket_rank("group", b)
     regs = nodes.select("group", bucket.alias("bucket"), rank.alias("r"))
-    regs = cut_lineage(regs)
+    regs = regs.localCheckpoint()
     for _ in range(k):
         pulled = (
             regs.join(e, regs.group == e.t)
@@ -524,5 +525,5 @@ def hyperball(edges: DataFrame, k: int = 2, b: int = 8) -> DataFrame:
             .groupBy("group", "bucket")
             .agg(F.max("r").alias("r"))
         )
-        regs = cut_lineage(regs, eager=False)
+        regs = regs.localCheckpoint(eager=False)
     return registers_estimate(regs, b, group_col="node")

@@ -36,14 +36,14 @@ def md5_hash60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def minhash_affine(num_hashes: int = 32, seed: int = 12345):
+def minhash_affine(num_hashes: int = 32):
     """(A, B, P) coefficients for the affine universal-hash family
     h_i(x) = (a_i * x + b_i) mod P over the md5_hash60 shingle
     hashes. Seeded-deterministic, so the oracle SQL embeds the same
     constants."""
     import random
 
-    rnd = random.Random(seed)
+    rnd = random.Random(12345)
     A = [rnd.randrange(1, MINHASH_PRIME) for _ in range(num_hashes)]
     B = [rnd.randrange(0, MINHASH_PRIME) for _ in range(num_hashes)]
     return A, B, MINHASH_PRIME

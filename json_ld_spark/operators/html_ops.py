@@ -20,15 +20,14 @@ EXTRACT_SCHEMA = (
 )
 
 
-def extract_jsonld_from_html(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def extract_jsonld_from_html(df: DataFrame) -> DataFrame:
     """(doc_id, script_idx, doc_json, error_code): one row per
-    extracted ld+json script (extractAllScripts semantics); rows whose
-    HTML has no candidate tag are dropped JVM-side before Python."""
+    ld+json script extracted from a (doc_id, html) frame
+    (extractAllScripts semantics); rows whose HTML has no candidate
+    tag are dropped JVM-side before Python."""
     candidates = df.filter(
-        F.col(html_col).rlike('(?i)<script[^>]*application/ld\\+json')
-    ).select(F.col(id_col).alias("doc_id"), F.col(html_col).alias("_html"))
+        F.col("html").rlike('(?i)<script[^>]*application/ld\\+json')
+    ).select("doc_id", "html")
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from json_ld_spark.core.errors import JsonLdError
@@ -36,7 +35,7 @@ def extract_jsonld_from_html(
 
         for pdf in batches:
             rows = []
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["_html"]):
+            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
                 try:
                     docs, _base = extract_jsonld(
                         html_text, extract_all_scripts=True

@@ -41,7 +41,6 @@ def asof_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     tolerance: "int | None" = None,
-    suffix: str = "_r",
 ) -> DataFrame:
     """For every ``left`` row, attach the LATEST ``right`` row with
     the same ``on`` key and ``right_ts <= left_ts`` (ties: the right
@@ -49,7 +48,8 @@ def asof_join(
     Rows with no prior right row keep NULLs; ``tolerance`` (seconds)
     additionally nulls matches older than ``left_ts - tolerance``.
 
-    Right columns come back suffixed (except the key). Timestamps may
+    Right columns whose name the left also has come back suffixed
+    ``_r`` (the key excepted). Timestamps may
     be timestamp or numeric; comparison happens on epoch seconds.
 
     Scale: one hash shuffle of |L|+|R| on the key + one sort within
@@ -61,7 +61,7 @@ def asof_join(
     """
     lcols = left.columns
     rcols = [c for c in right.columns if c != on]
-    rmap = {c: (c + suffix if c in lcols else c) for c in rcols}
+    rmap = {c: (c + "_r" if c in lcols else c) for c in rcols}
 
     def _epoch(col: str, df: DataFrame):
         dt = dict(df.dtypes)[col]
@@ -240,15 +240,12 @@ def interval_overlap_join(
 def fuzzy_join_delete1(
     left: DataFrame,
     right: DataFrame,
-    left_id: str = "id_a",
-    left_text: str = "name_a",
-    right_id: str = "id_b",
-    right_text: str = "name_b",
     max_bucket: int = 256,
 ) -> DataFrame:
     """(id_a, name_a, id_b, name_b, dist): typo-tolerant string join —
     every (left, right) pair within Levenshtein distance ≤ 1, without
-    a cartesian product.
+    a cartesian product. ``left`` has (id_a, name_a), ``right`` has
+    (id_b, name_b).
 
     Blocking is the symmetric-delete (SymSpell) neighborhood: for each
     string, the set {s} ∪ {s with one char deleted}. Two strings with
@@ -277,14 +274,7 @@ def fuzzy_join_delete1(
     """
     from pyspark.sql.window import Window
 
-    def neighborhood(df, idc, txc, side):
-        # rename in its OWN projection: a higher-order-function lambda
-        # that captures a column aliased in the same select resolves
-        # to a LateralColumnAliasReference and Spark rejects the plan
-        base = df.select(
-            F.col(idc).alias(f"id_{side}"),
-            F.col(txc).alias(f"name_{side}"),
-        )
+    def neighborhood(df, side):
         s = F.col(f"name_{side}")
         dels = F.transform(
             F.sequence(F.lit(1), F.length(s)),
@@ -293,7 +283,7 @@ def fuzzy_join_delete1(
                 s.substr(i + 1, F.length(s)),
             ),
         )
-        v = base.select(
+        v = df.select(
             f"id_{side}",
             f"name_{side}",
             F.explode(
@@ -305,8 +295,8 @@ def fuzzy_join_delete1(
             F.col("_rn") <= max_bucket
         ).drop("_rn")
 
-    la = neighborhood(left, left_id, left_text, "a")
-    rb = neighborhood(right, right_id, right_text, "b")
+    la = neighborhood(left, "a")
+    rb = neighborhood(right, "b")
     cand = (
         la.join(rb, "_v")
         .select("id_a", "name_a", "id_b", "name_b")

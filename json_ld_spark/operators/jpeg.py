@@ -481,27 +481,19 @@ def _encode_block(writer, block, qzz, prev_dc, dc_enc, ac_enc):
 
 
 def encode_rgb(width: int, height: int, pixels: bytes,
-               subsample: str = "444",
-               quant: "list[int] | None" = None,
-               quant_chroma: "list[int] | None" = None) -> bytes:
+               subsample: str = "444") -> bytes:
     """Baseline color JPEG encode: RGB → YCbCr, optional 2×2 chroma
     subsampling ("420"; "444" keeps full chroma), per-component
     DCT/quant/Huffman (Annex-K luma + chroma tables), interleaved
     MCU scan with per-component DC predictors. ``pixels`` is
-    row-major RGB, ``len == 3·width·height``. Default quant tables
-    are all-ones (the constant-block exactness the decode gate uses);
-    chroma defaults to the luma table."""
+    row-major RGB, ``len == 3·width·height``. Luma and chroma quant
+    tables are all-ones (the constant-block exactness the decode gate
+    uses)."""
     if len(pixels) != 3 * width * height:
         raise ValueError("pixel buffer does not match dimensions")
     if subsample not in ("444", "420"):
         raise ValueError("subsample must be '444' or '420'")
-    ql = np.ones(64, dtype=np.int64) if quant is None else np.asarray(
-        quant, dtype=np.int64)
-    qc = ql if quant_chroma is None else np.asarray(
-        quant_chroma, dtype=np.int64)
-    for q in (ql, qc):
-        if q.shape != (64,) or (q < 1).any() or (q > 255).any():
-            raise ValueError("quant table must be 64 values in 1..255")
+    ql = qc = np.ones(64, dtype=np.int64)
     rgb = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, 3)
     ycc = rgb_to_ycbcr(rgb).astype(np.float64)
 

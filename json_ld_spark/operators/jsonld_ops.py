@@ -298,6 +298,27 @@ def emit_triples(transcripts: DataFrame, ordered: bool = True) -> DataFrame:
     return triples
 
 
+def _term_str(t) -> str:
+    return "_:" + t.value if t.kind == "bnode" else t.value
+
+
+def triple_row(t) -> tuple:
+    """A core Triple as the (subj, pred, obj_value, obj_is_iri,
+    obj_datatype, obj_language, graph) columns of ``TRIPLE_SCHEMA``;
+    a blank node is written ``_:label`` (``core.rdf.as_term`` reads it
+    back)."""
+    obj_is_iri = t.obj.kind != "literal"
+    return (
+        _term_str(t.subject),
+        t.predicate.value,
+        _term_str(t.obj),
+        obj_is_iri,
+        None if obj_is_iri else t.obj.datatype,
+        None if obj_is_iri else t.obj.language,
+        None if t.graph is None else _term_str(t.graph),
+    )
+
+
 def _stream_batch_iter(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
@@ -374,26 +395,12 @@ def _stream_batch_iter(
                 )
                 continue
             for t in out:
-                subj = ("_:" + t.subject.value) if t.subject.kind == "bnode" else t.subject.value
+                row = triple_row(t)
                 # the Conversation node is asserted by every turn;
                 # keep it on the conversation's first turn only
-                if rank != 1 and subj.startswith(CONV_NS):
+                if rank != 1 and row[0].startswith(CONV_NS):
                     continue
-                obj_is_iri = t.obj.kind != "literal"
-                obj_value = (
-                    ("_:" + t.obj.value) if t.obj.kind == "bnode" else t.obj.value
-                )
-                rows.append(
-                    (
-                        conv_id, turn_idx, subj, t.predicate.value, obj_value,
-                        obj_is_iri,
-                        None if obj_is_iri else t.obj.datatype,
-                        None if obj_is_iri else t.obj.language,
-                        ("_:" + t.graph.value if t.graph.kind == "bnode" else t.graph.value)
-                        if t.graph is not None else None,
-                        None, None,
-                    )
-                )
+                rows.append((conv_id, turn_idx, *row, None, None))
         yield pd.DataFrame(rows, columns=TRIPLE_COLS)
 
 
@@ -416,14 +423,12 @@ EXPAND_SCHEMA = (
 
 def expand_documents(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    json_col: str = "doc_json",
     contexts: "dict | None" = None,
-    base: "str | None" = None,
 ) -> DataFrame:
     """Distributed JSON-LD expansion for ARBITRARY documents (not just
-    pipeline-synthesized turns): each row's JSON is expanded with the
-    vendored-context registry standing in for remote fetch.
+    pipeline-synthesized turns): each (doc_id, doc_json) row's JSON is
+    expanded with the vendored-context registry standing in for remote
+    fetch.
 
     Parity: API.expand + loadRemoteDocument (api.rb:109-156,624-718)
     with the registry replacing HTTP (context_registry module). A
@@ -444,10 +449,10 @@ def expand_documents(
         from json_ld_spark.core.context import Options
         from json_ld_spark.core.errors import JsonLdError
 
-        options = Options(base=base, contexts=registry)
+        options = Options(contexts=registry)
         for pdf in batches:
             rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf[json_col]):
+            for doc_id, doc_json in zip(pdf["doc_id"], pdf["doc_json"]):
                 try:
                     doc = _json.loads(doc_json)
                     expanded = core_api.expand(doc, options)
@@ -468,11 +473,9 @@ def expand_documents(
 
     # the Python expansion is the dominant per-row cost; don't let a
     # compact scan's 1-2 splits serialize it (plans/layout.py)
-    return rebalance_scan(
-        docs.select(
-            F.col(id_col).alias(id_col), F.col(json_col).alias(json_col)
-        )
-    ).mapInPandas(_expand, schema=EXPAND_SCHEMA)
+    return rebalance_scan(docs.select("doc_id", "doc_json")).mapInPandas(
+        _expand, schema=EXPAND_SCHEMA
+    )
 
 
 def quarantined(triples: DataFrame) -> DataFrame:

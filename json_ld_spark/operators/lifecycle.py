@@ -51,11 +51,10 @@ def scd2_merge(
     snapshot: DataFrame,
     key_cols: "list[str]",
     attr_cols: "list[str]",
-    version_col: str = "version",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Slowly-changing-dimension type-2 merge of ``snapshot`` into
-    the versioned ``current`` table. Per key:
+    the versioned ``current`` table (``version``, ``is_current``
+    columns). Per key:
 
       - attrs unchanged → the live row passes through untouched;
       - attrs changed  → the live row is CLOSED (is_current=false)
@@ -67,15 +66,15 @@ def scd2_merge(
     One full-outer join of the live slice vs the snapshot on the
     key; attribute equality is null-safe. Deterministic, so the SQL
     oracle replays every branch."""
-    hist = current.filter(~F.col(current_col))
-    live = current.filter(F.col(current_col)).alias("l")
+    hist = current.filter(~F.col("is_current"))
+    live = current.filter(F.col("is_current")).alias("l")
     # presence of a side can't be read off nullable attrs; tag both
     # explicitly
     snap = snapshot.select(
         *key_cols, *attr_cols, F.lit(True).alias("_snap")
     ).alias("s")
     j = live.join(snap, on=key_cols, how="full_outer")
-    in_live = F.col(f"l.{version_col}").isNotNull()
+    in_live = F.col("l.version").isNotNull()
     in_snap = F.col("s._snap").isNotNull()
 
     same = reduce(
@@ -85,7 +84,7 @@ def scd2_merge(
             for a in attr_cols
         ],
     )
-    out_cols = key_cols + attr_cols + [version_col, current_col]
+    out_cols = key_cols + attr_cols + ["version", "is_current"]
 
     def pick(side: str):
         return (
@@ -95,23 +94,23 @@ def scd2_merge(
 
     unchanged = j.filter(in_live & in_snap & same).select(
         *pick("l"),
-        F.col(f"l.{version_col}").alias(version_col),
-        F.lit(True).alias(current_col),
+        F.col("l.version").alias("version"),
+        F.lit(True).alias("is_current"),
     )
     closed = j.filter(in_live & (~in_snap | ~same)).select(
         *pick("l"),
-        F.col(f"l.{version_col}").alias(version_col),
-        F.lit(False).alias(current_col),
+        F.col("l.version").alias("version"),
+        F.lit(False).alias("is_current"),
     )
     opened = j.filter(in_snap & in_live & ~same).select(
         *pick("s"),
-        (F.col(f"l.{version_col}") + 1).alias(version_col),
-        F.lit(True).alias(current_col),
+        (F.col("l.version") + 1).alias("version"),
+        F.lit(True).alias("is_current"),
     )
     inserted = j.filter(in_snap & ~in_live).select(
         *pick("s"),
-        F.lit(1).cast("int").alias(version_col),
-        F.lit(True).alias(current_col),
+        F.lit(1).cast("int").alias("version"),
+        F.lit(True).alias("is_current"),
     )
     return (
         hist.select(*out_cols)

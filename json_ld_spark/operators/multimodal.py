@@ -52,17 +52,15 @@ MEDIA_SCHEMA = (
 FEATURE_DIM = 32
 
 
-def synthesize_media(
-    spark: SparkSession, n: int = 64, seed: int = 42
-) -> DataFrame:
+def synthesize_media(spark: SparkSession, n: int = 64) -> DataFrame:
     """Deterministic fake media table: payload bytes are a pure
-    function of (media_id, seed); metadata is typed and plausible."""
+    function of media_id; metadata is typed and plausible."""
     base = spark.range(n)
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
         (F.pmod(F.col("id"), F.lit(3)) + 1).cast("int"),
     )
-    payload = F.sha2(F.concat(F.lit(f"media-{seed}-"), F.col("id")), 512).cast(
+    payload = F.sha2(F.concat(F.lit("media-42-"), F.col("id")), 512).cast(
         "binary"
     )
     return base.select(
@@ -258,7 +256,7 @@ def _parse_png(payload: bytes) -> tuple[int, int, bytes]:
 
 
 def decode_image(
-    payload: bytes, meta: "dict | None" = None, strict: bool = False
+    payload: bytes, strict: bool = False
 ) -> tuple[int, int, bytes]:
     """(width, height, pixel_bytes) from a binary-PPM (P6), PNG
     (8-bit RGB), or baseline JPEG payload — REAL parses of real
@@ -395,23 +393,23 @@ def decode_video_frames(
     return out
 
 
-def _features_from_bytes(data: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic fake feature extractor: dim floats in [-1, 1)
+def _features_from_bytes(data: bytes) -> list[float]:
+    """Deterministic fake feature extractor: FEATURE_DIM floats in [-1, 1)
     unfolded from iterated sha256 (stands in for a CNN/wav2vec
     embedding; same shape, same dtype, same batch contract)."""
     out: list[float] = []
     block = data
-    while len(out) < dim:
+    while len(out) < FEATURE_DIM:
         block = hashlib.sha256(block).digest()
         for i in range(0, len(block) - 3, 4):
             (u,) = struct.unpack_from("<I", block, i)
             out.append((u / 2**31) - 1.0)
-            if len(out) == dim:
+            if len(out) == FEATURE_DIM:
                 break
     return out
 
 
-def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """media table → (media_id, kind, feature array<float>, n_bytes).
 
     mapInPandas so each Arrow batch of blobs is decoded+featurized in

@@ -30,7 +30,7 @@ the salted path restitches to exactly the direct path's output.
 from __future__ import annotations
 
 import json
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 from json_ld_spark.sources.gazetteer import KG_CONTEXT
 
 _PARTIAL_SCHEMA = "conv_id string, part_json string"
-_DOC_SCHEMA = "conv_id string, doc_json string"
-_FRAME_SCHEMA = "conv_id string, framed_json string"
 
 
 def _pdf_to_core_triples(pdf: pd.DataFrame):
@@ -49,7 +47,7 @@ def _pdf_to_core_triples(pdf: pd.DataFrame):
     Sorting makes fromRdf's node/property order independent of
     shuffle order (byte-stable doc output; the salted restitch relies
     on it)."""
-    from json_ld_spark.core.rdf import Term, Triple
+    from json_ld_spark.core.rdf import Term, Triple, as_term, iri
 
     raw = []
     for subj, pred, obj_value, obj_is_iri, obj_dt, obj_lang in zip(
@@ -60,20 +58,16 @@ def _pdf_to_core_triples(pdf: pd.DataFrame):
         lang = obj_lang if pd.notna(obj_lang) else None
         raw.append((subj, pred, obj_value, bool(obj_is_iri), dt, lang))
     raw.sort(key=lambda r: (r[0], r[1], r[2], r[4] or "", r[5] or ""))
-    trs = []
-    for subj, pred, obj_value, obj_is_iri, dt, lang in raw:
-        s = Term("bnode", subj[2:]) if subj.startswith("_:") else Term("iri", subj)
-        p = Term("iri", pred)
-        if obj_is_iri:
-            o = (
-                Term("bnode", obj_value[2:])
-                if obj_value.startswith("_:")
-                else Term("iri", obj_value)
-            )
-        else:
-            o = Term("literal", obj_value, dt, lang)
-        trs.append(Triple(s, p, o, None))
-    return trs
+    return [
+        Triple(
+            as_term(subj),
+            iri(pred),
+            as_term(obj_value) if obj_is_iri
+            else Term("literal", obj_value, dt, lang),
+            None,
+        )
+        for subj, pred, obj_value, obj_is_iri, dt, lang in raw
+    ]
 
 
 def _valid(triples: DataFrame) -> DataFrame:
@@ -147,66 +141,75 @@ def _merge_parts(pdf: pd.DataFrame) -> list:
     return nodes
 
 
+def _per_conversation(
+    triples: DataFrame,
+    max_group_triples: int,
+    n_salts: int,
+    finish: "Callable[[str, list], object]",
+    out_col: str,
+) -> DataFrame:
+    """(conv_id, ``out_col``): ``finish(conv_id, nodes)`` serialized
+    once per conversation, ``nodes`` being the fromRdf node array of
+    its valid triples sorted by @id. groupBy(conv_id).applyInPandas
+    for normal conversations; the salt-and-restitch path (module
+    docstring) for those above ``max_group_triples``."""
+
+    def _row(conv_id: str, nodes: list) -> pd.DataFrame:
+        return pd.DataFrame(
+            {"conv_id": [conv_id],
+             out_col: [json.dumps(finish(conv_id, nodes), sort_keys=True)]}
+        )
+
+    def _direct(pdf: pd.DataFrame) -> pd.DataFrame:
+        from json_ld_spark.core import api as core_api
+
+        expanded = core_api.from_rdf(
+            _pdf_to_core_triples(pdf), use_native_types=True
+        )
+        expanded.sort(key=lambda n: n.get("@id", ""))
+        return _row(pdf["conv_id"].iloc[0], expanded)
+
+    def _restitch(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _row(pdf["conv_id"].iloc[0], _merge_parts(pdf))
+
+    schema = f"conv_id string, {out_col} string"
+    small, big = _split_by_size(_valid(triples), max_group_triples)
+    out_small = _pinned(small, "conv_id").groupBy("conv_id").applyInPandas(
+        _direct, schema=schema
+    )
+    out_big = (
+        _salted_partials(big, n_salts)
+        .groupBy("conv_id")
+        .applyInPandas(_restitch, schema=schema)
+    )
+    return out_small.unionByName(out_big)
+
+
 def triples_to_documents(
     triples: DataFrame,
     max_group_triples: int = 50_000,
     n_salts: int = 16,
 ) -> DataFrame:
     """(conv_id, doc_json): one compacted JSON-LD document per
-    conversation, reassembled from its triples.
+    conversation, reassembled from its triples."""
 
-    groupBy(conv_id).applyInPandas for normal conversations; the
-    salt-and-restitch path (module docstring) for conversations above
-    ``max_group_triples``."""
-
-    def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _compact(conv_id: str, nodes: list):
         from json_ld_spark.core import api as core_api
 
-        conv_id = pdf["conv_id"].iloc[0]
-        expanded = core_api.from_rdf(
-            _pdf_to_core_triples(pdf), use_native_types=True
-        )
-        expanded.sort(key=lambda n: n.get("@id", ""))
-        compacted = core_api.compact(
-            expanded, {"@context": KG_CONTEXT}, expanded_input=True
-        )
-        return pd.DataFrame(
-            {"conv_id": [conv_id],
-             "doc_json": [json.dumps(compacted, sort_keys=True)]}
+        return core_api.compact(
+            nodes, {"@context": KG_CONTEXT}, expanded_input=True
         )
 
-    def _restitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        from json_ld_spark.core import api as core_api
-
-        conv_id = pdf["conv_id"].iloc[0]
-        compacted = core_api.compact(
-            _merge_parts(pdf), {"@context": KG_CONTEXT}, expanded_input=True
-        )
-        return pd.DataFrame(
-            {"conv_id": [conv_id],
-             "doc_json": [json.dumps(compacted, sort_keys=True)]}
-        )
-
-    valid = _valid(triples)
-    small, big = _split_by_size(valid, max_group_triples)
-    out_small = _pinned(small, "conv_id").groupBy("conv_id").applyInPandas(
-        _assemble, schema=_DOC_SCHEMA
+    return _per_conversation(
+        triples, max_group_triples, n_salts, _compact, "doc_json"
     )
-    out_big = (
-        _salted_partials(big, n_salts)
-        .groupBy("conv_id")
-        .applyInPandas(_restitch, schema=_DOC_SCHEMA)
-    )
-    return out_small.unionByName(out_big)
 
 
-def documents_to_triples(
-    docs: DataFrame, json_col: str = "doc_json"
-) -> DataFrame:
+def documents_to_triples(docs: DataFrame) -> DataFrame:
     """Inverse of triples_to_documents: expand each compacted JSON-LD
-    document and re-emit its triples with a pass-through bnode namer
-    (labels preserved verbatim). Parity: Reader (reader.rb:76-121) —
-    documents back to statements.
+    ``doc_json`` document and re-emit its triples with a pass-through
+    bnode namer (labels preserved verbatim). Parity: Reader
+    (reader.rb:76-121) — documents back to statements.
 
     This closes the round-trip correctness gate for the writer path:
     triples → fromRdf+compact → expand+toRdf must reproduce the
@@ -216,47 +219,18 @@ def documents_to_triples(
     def _emit(batches) -> "Iterator[pd.DataFrame]":
         from json_ld_spark.core import api as core_api
         from json_ld_spark.core.keywords import BlankNodeMapper
+        from json_ld_spark.operators.jsonld_ops import TRIPLE_COLS, triple_row
 
         for pdf in batches:
-            rows = []
-            for doc_json in pdf[json_col]:
-                doc = json.loads(doc_json)
-                for t in core_api.to_rdf(doc, namer=BlankNodeMapper()):
-                    subj = (
-                        "_:" + t.subject.value
-                        if t.subject.kind == "bnode"
-                        else t.subject.value
-                    )
-                    obj_is_iri = t.obj.kind != "literal"
-                    obj_value = (
-                        "_:" + t.obj.value
-                        if t.obj.kind == "bnode"
-                        else t.obj.value
-                    )
-                    rows.append(
-                        (
-                            subj,
-                            t.predicate.value,
-                            obj_value,
-                            obj_is_iri,
-                            None if obj_is_iri else t.obj.datatype,
-                            None if obj_is_iri else t.obj.language,
-                            (
-                                "_:" + t.graph.value
-                                if t.graph.kind == "bnode"
-                                else t.graph.value
-                            )
-                            if t.graph is not None
-                            else None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "subj", "pred", "obj_value", "obj_is_iri",
-                    "obj_datatype", "obj_language", "graph",
-                ],
-            )
+            rows = [
+                triple_row(t)
+                for doc_json in pdf["doc_json"]
+                for t in core_api.to_rdf(
+                    json.loads(doc_json), namer=BlankNodeMapper()
+                )
+            ]
+            # subj .. graph: the triple columns without key or error
+            yield pd.DataFrame(rows, columns=TRIPLE_COLS[2:9])
 
     return docs.mapInPandas(
         _emit,
@@ -307,37 +281,11 @@ def frame_conversations(
     document (its recursive embedding needs the whole node map), but
     it then consumes pre-reduced JSON nodes instead of raw triples."""
 
-    def _frame_nodes(conv_id: str, expanded: list) -> pd.DataFrame:
+    def _frame(conv_id: str, nodes: list):
         from json_ld_spark.core import api as core_api
 
-        framed = core_api.frame(expanded, _conversation_frame(conv_id))
-        return pd.DataFrame(
-            {"conv_id": [conv_id],
-             "framed_json": [json.dumps(framed, sort_keys=True)]}
-        )
+        return core_api.frame(nodes, _conversation_frame(conv_id))
 
-    def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        from json_ld_spark.core import api as core_api
-
-        conv_id = pdf["conv_id"].iloc[0]
-        expanded = core_api.from_rdf(
-            _pdf_to_core_triples(pdf), use_native_types=True
-        )
-        expanded.sort(key=lambda n: n.get("@id", ""))
-        return _frame_nodes(conv_id, expanded)
-
-    def _restitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        return _frame_nodes(conv_id, _merge_parts(pdf))
-
-    valid = _valid(triples)
-    small, big = _split_by_size(valid, max_group_triples)
-    out_small = _pinned(small, "conv_id").groupBy("conv_id").applyInPandas(
-        _frame, schema=_FRAME_SCHEMA
+    return _per_conversation(
+        triples, max_group_triples, n_salts, _frame, "framed_json"
     )
-    out_big = (
-        _salted_partials(big, n_salts)
-        .groupBy("conv_id")
-        .applyInPandas(_restitch, schema=_FRAME_SCHEMA)
-    )
-    return out_small.unionByName(out_big)

@@ -31,19 +31,19 @@ def brute_force_topk(
     embeddings: DataFrame,
     query_vec: Sequence[float],
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector. The plan is
-    scan → project(cosine) → TakeOrderedAndProject(k) — verify no
-    global sort appears (tests assert this)."""
+    """(vec_id, cosine): exact cosine top-k against a literal query
+    vector. The plan is scan → project(cosine) →
+    TakeOrderedAndProject(k) — verify no global sort appears (tests
+    assert this)."""
     q = _query_vec_col(query_vec)
     return (
         embeddings.select(
-            F.col(id_col),
+            "vec_id",
             F.round(cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.col(id_col))
+        .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
 

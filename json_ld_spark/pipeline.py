@@ -44,15 +44,13 @@ def _conv_bucket(conv_buckets: int) -> Column:
 def alias_merge_map(
     spark: SparkSession,
     aliases: Optional[DataFrame] = None,
-    checkpoint_dir: Optional[str] = None,
 ) -> DataFrame:
     """Merge map for entity aliases: minhash-block alias surface forms,
     verify with Jaccard, connect components, pick canonical heads.
 
     ``aliases`` is an (entity_iri, surface) DataFrame; defaults to the
     built-in gazetteer (distinct surfaces: an empty map that exercises
-    the operators). ``checkpoint_dir``: reliable per-round checkpoints
-    for the CC iterations on a real cluster.
+    the operators).
     """
     if aliases is None:
         from json_ld_spark.sources.gazetteer import GAZETTEER, entity_iri
@@ -60,8 +58,7 @@ def alias_merge_map(
         rows = [(entity_iri(suffix), surface) for _, surface, suffix in GAZETTEER]
         aliases = spark.createDataFrame(rows, "entity_iri string, surface string")
     return build_merge_map(minhash_dedup_components(
-        aliases, "entity_iri", "surface", threshold=0.85,
-        checkpoint_dir=checkpoint_dir,
+        aliases, "entity_iri", "surface", threshold=0.85
     ))
 
 

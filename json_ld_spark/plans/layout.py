@@ -12,12 +12,10 @@ the operators, not the file layout.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame
 
 
-def rebalance_scan(df: DataFrame, target: Optional[int] = None) -> DataFrame:
+def rebalance_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition iff the frame currently has fewer
     partitions than the session's parallelism. Checking partition
     count converts the plan to an RDD but runs no job; the repartition
@@ -25,7 +23,7 @@ def rebalance_scan(df: DataFrame, target: Optional[int] = None) -> DataFrame:
     compute-heavy stage — ids and text, never wide intermediates).
     Measured: the minhash shingle stage at sf1 went 18.2 s → 1.2 s
     versus pushing the same work through an aggregation shuffle."""
-    target = target or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

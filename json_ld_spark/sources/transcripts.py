@@ -28,6 +28,13 @@ TRANSCRIPT_SCHEMA = (
     "tool string, ts timestamp"
 )
 
+# scale of synthesize_transcripts' skewed turn counts: a conversation
+# has 2 + d^2 * _MAX_TURNS / 100 turns, d in 0..9 (at most 34)
+_MAX_TURNS = 40
+# documents per derived conversation, shared by the Spark derivation
+# and its DuckDB twin
+_TURNS_PER_CONV = 5
+
 _ROLES = ["user", "assistant", "tool"]
 _TOOLS = ["search", "calculator", "browser", "python"]
 
@@ -48,7 +55,6 @@ _SNIPPETS = [
 def synthesize_transcripts(
     spark: SparkSession,
     n_convs: int = 100,
-    max_turns: int = 40,
     seed: int = 42,
     shuffle: bool = True,
 ) -> DataFrame:
@@ -64,7 +70,7 @@ def synthesize_transcripts(
         # (skew exercises salting/AQE, FIXTURES.md §1)
         (
             F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(10)) ** 2
-            * F.lit(max_turns)
+            * F.lit(_MAX_TURNS)
             / F.lit(100)
             + F.lit(2)
         )
@@ -118,13 +124,13 @@ def synthesize_transcripts(
 
 
 def derive_transcripts_from_documents(
-    spark: SparkSession, sf_dir: str, turns_per_conv: int = 5
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """documents.parquet → transcript shape, arithmetic-only (oracle-
     reproducible; see ``derive_transcripts_sql`` for the DuckDB side).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    k = turns_per_conv
+    k = _TURNS_PER_CONV
     return docs.select(
         F.format_string("conv%08d", (F.col("doc_id") / k).cast("long")).alias("conv_id"),
         F.pmod(F.col("doc_id"), F.lit(k)).cast("int").alias("turn_idx"),
@@ -143,10 +149,10 @@ def derive_transcripts_from_documents(
     )
 
 
-def derive_transcripts_sql(turns_per_conv: int = 5) -> str:
+def derive_transcripts_sql() -> str:
     """DuckDB CTE producing byte-identical rows to
     ``derive_transcripts_from_documents`` (the oracle side)."""
-    k = turns_per_conv
+    k = _TURNS_PER_CONV
     return f"""
     SELECT
       printf('conv%08d', doc_id // {k}) AS conv_id,

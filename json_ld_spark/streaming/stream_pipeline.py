@@ -100,24 +100,21 @@ def stream_turn_rate(
     )
 
 
-def stream_event_counts(
-    events_stream: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked event-time windowed aggregation (append mode): the
-    late-data-dropping monitoring aggregate. A row older than the
-    current watermark is DROPPED; a window is emitted once the
-    watermark passes its end — the semantics the stream_windowed_counts
-    driver query gates against the batch answer (emitted windows must
-    hold exactly the non-late rows)."""
+def stream_event_counts(events_stream: DataFrame) -> DataFrame:
+    """Watermarked event-time windowed aggregation (append mode, 1-hour
+    windows, 30-minute watermark): the late-data-dropping monitoring
+    aggregate. A row older than the current watermark is DROPPED; a
+    window is emitted once the watermark passes its end — the
+    semantics the stream_windowed_counts query gates against
+    the batch answer (emitted windows must hold exactly the non-late
+    rows)."""
     # watermarks require TIMESTAMP (LTZ); parquet events carry NTZ —
     # the session runs UTC, so the cast preserves wall-clock and the
     # output casts back to NTZ for engine-neutral comparison
     return (
         events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration), "event_type")
+        .withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -188,16 +185,15 @@ def stateful_turn_chain(transcripts_stream: DataFrame) -> DataFrame:
 
 def stream_exact_dedup(
     events_stream: DataFrame,
-    id_cols: "tuple[str, ...]" = ("event_id",),
-    ts_col: str = "ts",
     watermark: str = "240 hours",
 ) -> DataFrame:
     """Streaming exact deduplication (dropDuplicatesWithinWatermark):
     the ingestion-side twin of the batch exact-dedup family — at-least-
     once upstream delivery (replayed Kafka offsets, retried file
     drops) re-sends the same record across micro-batches, and this
-    operator emits each key's FIRST arrival and drops every duplicate
-    that lands within ``watermark`` of it.
+    operator emits each ``event_id``'s FIRST arrival and drops every
+    duplicate that lands within ``watermark`` of it (event time
+    ``ts``).
 
     Why WithinWatermark and not plain dropDuplicates: plain streaming
     dropDuplicates keeps every key's state FOREVER — unbounded state
@@ -212,18 +208,14 @@ def stream_exact_dedup(
     timestamps are cast back to NTZ so the sink is engine-neutral
     (same LTZ/NTZ policy as stream_event_counts)."""
     return (
-        events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(list(id_cols))
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp_ntz"))
+        events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     )
 
 
-def stream_hll_registers(
-    keyed_stream: DataFrame,
-    b: int = 8,
-    group_col: str = "group",
-) -> DataFrame:
+def stream_hll_registers(keyed_stream: DataFrame, b: int = 8) -> DataFrame:
     """Streaming HyperLogLog (applyInPandasWithState): the per-group
     register array — 2^b bytes, the whole sketch — lives in state and
     is MAXed with each micro-batch's (bucket, rank) rows; every
@@ -250,7 +242,7 @@ def stream_hll_registers(
 
     m = 1 << b
     output_schema = (
-        f"{group_col} string, seq int, m int, nonempty int, "
+        "group string, seq int, m int, nonempty int, "
         "s_scaled long, est double"
     )
     state_schema = "regs binary, seq int"
@@ -285,10 +277,10 @@ def stream_hll_registers(
         s_scaled, est = estimate_from_registers(nonempty, s_nonempty, b)
         yield pd.DataFrame(
             [(group, seq, m, nonempty, s_scaled, est)],
-            columns=[group_col, "seq", "m", "nonempty", "s_scaled", "est"],
+            columns=["group", "seq", "m", "nonempty", "s_scaled", "est"],
         )
 
-    return keyed_stream.groupBy(group_col).applyInPandasWithState(
+    return keyed_stream.groupBy("group").applyInPandasWithState(
         update,
         outputStructType=output_schema,
         stateStructType=state_schema,
@@ -297,12 +289,11 @@ def stream_hll_registers(
     )
 
 
-def stream_sessionize(
-    keyed_events: DataFrame,
-    gap: int = 1800 * 1_000_000,
-) -> DataFrame:
+def stream_sessionize(keyed_events: DataFrame) -> DataFrame:
     """Streaming sessionization (applyInPandasWithState): the
-    event-time-gap session builder running ACROSS micro-batches.
+    event-time-gap sessionizer running ACROSS micro-batches; an
+    event more than 30 minutes after its user's previous one opens a
+    new session.
 
     The batch path sessionizes with a lag-window over the whole
     history; a stream only sees a slice per batch, so the per-user
@@ -326,11 +317,11 @@ def stream_sessionize(
 
     Input: (user_id long, event_id long, epoch long, value double) —
     epoch precomputed JVM-side so only four narrow columns cross
-    into Python. ``gap`` is in the SAME unit as ``epoch`` (the gate
-    passes microsecond epochs so sub-second timestamps survive the
-    round-trip exactly)."""
+    into Python. ``epoch`` is in microseconds, so sub-second
+    timestamps survive the round-trip exactly."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    gap = 1800 * 1_000_000
     output_schema = (
         "user_id long, seq int, session_idx long, n_events long, "
         "start_epoch long, end_epoch long, vsum double"
@@ -437,16 +428,12 @@ def stream_minhash_dedup(banded_stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_cms_registers(
-    keyed_stream: DataFrame,
-    w: int = 256,
-    d: int = 4,
-) -> DataFrame:
+def stream_cms_registers(keyed_stream: DataFrame, w: int = 256) -> DataFrame:
     """Streaming count-min sketch (applyInPandasWithState): each hash
     row's w-counter register array lives in state and SUMS each
     micro-batch's (bucket) hits — the bounded-memory frequency
-    summary as stream state (d groups × w int64s total, independent
-    of key cardinality).
+    summary as stream state (one group of w int64s per hash row,
+    independent of key cardinality).
 
     Snapshot contract as in stream_hll_registers: every invocation
     emits the row's current register array with a monotone ``seq``;
@@ -457,7 +444,8 @@ def stream_cms_registers(
     stream_exact_dedup provides).
 
     Input: (row_idx int, bucket int) coordinate stream — computed
-    JVM-side (sketches.cms_bucket), d rows per record."""
+    JVM-side (sketches.cms_bucket), one row per hash row per
+    record."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdf_iter, state: "GroupState"):

@@ -97,25 +97,6 @@ def test_list_truncation_surfaced_not_dropped(spark):
     assert not full["exhausted"] and full["depth"] == 20
 
 
-def test_list_reconstitute_reliable_checkpoint(spark, tmp_path):
-    """The reliable-checkpoint path (fault-tolerant on a real cluster)
-    produces identical lists to localCheckpoint."""
-    import os
-
-    df = spark.createDataFrame(_chain_rows("_:rc", 100), TRIPLE_SCHEMA)
-    local = {
-        r["head"]: (list(r["items"]), r["exhausted"])
-        for r in reconstitute_lists(df).collect()
-    }
-    ckpt = str(tmp_path / "list_ckpt")
-    reliable = {
-        r["head"]: (list(r["items"]), r["exhausted"])
-        for r in reconstitute_lists(df, checkpoint_dir=ckpt).collect()
-    }
-    assert local == reliable
-    assert any(os.scandir(ckpt)), "reliable checkpoint wrote nothing"
-
-
 def test_lists_roundtrip_through_pipeline(spark):
     """Core toRDF list chains must reassemble to the original order."""
     from json_ld_spark.core import api as core_api

@@ -60,7 +60,7 @@ def test_strict_codec_raises_on_compressed_formats():
     now decodes natively — operators/jpeg.py), mp3 stays the
     documented library boundary."""
     with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0jpegish", None, strict=True)
+        decode_image(b"\xff\xd8\xff\xe0jpegish", strict=True)
     from json_ld_spark.operators.multimodal import decode_audio
 
     with pytest.raises(NotImplementedError):

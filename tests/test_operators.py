@@ -143,29 +143,6 @@ def test_merge_map_skips_literals_matching_an_iri(spark):
     assert out == {("s1", "http://e/canon"), ("s2", "http://e/alias")}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir routes per-round materialization through the
-    RELIABLE checkpoint (fault-tolerant on a real cluster); results
-    must be identical to the localCheckpoint path, and checkpoint
-    files must actually land in the directory."""
-    import os
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (5, 4)], "id_a int, id_b int"
-    )
-    local = {
-        (r["id"], r["component"])
-        for r in connected_components(edges).collect()
-    }
-    ckpt = str(tmp_path / "cc_ckpt")
-    reliable = {
-        (r["id"], r["component"])
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    assert local == reliable
-    assert any(os.scandir(ckpt)), "reliable checkpoint wrote nothing"
-
-
 def test_pagerank_star_and_mass(spark):
     """Power-iteration invariants on a star + path graph: the hub
     outranks every leaf, total mass stays ~1 (no dangling nodes after
@@ -185,6 +162,21 @@ def test_pagerank_star_and_mass(spark):
     assert ranks[11] > ranks[10] and ranks[11] > ranks[12]
     again = {r["node"]: r["rank"] for r in pagerank(edges, n_iters=5).collect()}
     assert ranks == again
+
+
+@pytest.mark.parametrize("symmetrize", [True, False])
+@pytest.mark.parametrize("rows", [[], [("a", "a"), ("b", "b")]],
+                         ids=["no_edges", "self_loops_only"])
+def test_pagerank_empty_graph(spark, rows, symmetrize):
+    """A graph with no edge left after simple_graph (no co-mentions,
+    or only self-loops) has no node to rank: an empty (node, rank)
+    frame, not a division by N = 0 while the plan is built."""
+    from json_ld_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    out = pagerank(edges, symmetrize=symmetrize)
+    assert out.columns == ["node", "rank"]
+    assert out.collect() == []
 
 
 def test_merge_map_relabel(spark):
