@@ -3938,8 +3938,9 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """robots.txt politeness filter (sources/robots.py) over the
     crawl pipeline's canonical URLs: real robots files are PARSED
     distributed (group selection, empty-Disallow, unknown
-    directives), then matching runs JVM-side — broadcast rule join +
-    startswith + struct-max longest-match with Allow winning ties.
+    directives), then match_robots runs JVM-side — broadcast rule
+    join + startswith + struct-max longest-match with Allow winning
+    ties.
     The oracle composes the expected rule table and URL set from
     closed forms and replays the longest-match ordering, so a group
     mis-selected (EvilBot's Disallow / leaking into '*'), a dropped
@@ -3950,6 +3951,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_warc_html,
         warc_html_pages,
     )
+    from json_ld_spark.sources.robots import match_robots
 
     pages = warc_html_pages(synthesize_warc_html(spark, _N_MEDIA))
     link = F.explode(html_links(F.col("html"))).alias("link")
@@ -3986,30 +3988,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules = robots.mapInPandas(
         _parse, schema="host string, allow boolean, prefix string"
     )
-    j = urls.join(
-        F.broadcast(rules),
-        (urls["host"] == rules["host"])
-        & F.expr("startswith(path, prefix)"),
-        "left",
-    ).select(
-        urls["host"].alias("host"),
-        "canon",
-        F.when(
-            rules["prefix"].isNotNull(),
-            F.struct(
-                F.length(rules["prefix"]).alias("l"),
-                rules["allow"].alias("allow"),
-                rules["prefix"].alias("prefix"),
-            ),
-        ).alias("cand"),
-    )
-    best = j.groupBy("host", "canon").agg(F.max("cand").alias("best"))
-    return best.select(
-        "host",
-        "canon",
-        F.coalesce(F.col("best.allow"), F.lit(True)).alias("allowed"),
-        F.col("best.prefix").alias("matched_prefix"),
-    )
+    return match_robots(urls, rules)
 
 
 def q_conversation_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

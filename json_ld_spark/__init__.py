@@ -7,7 +7,7 @@ Layout:
     operators/  Spark DataFrame operators (triple emission, dedup, ANN, ...)
     sources/    table readers/writers + deterministic transcript synthesis
     functions/  reusable column expressions (cosine, ngrams, hashes)
-    plans/      SparkSession builders + plan-inspection helpers
+    plans/      SparkSession builder + scan-layout and bucketing helpers
     streaming/  Structured Streaming pipeline
 """
 

@@ -23,9 +23,7 @@ from json_ld_spark.core.errors import JsonLdError
 from json_ld_spark.core.keywords import (
     add_value,
     is_graph_object,
-    is_keyword,
     is_list_object,
-    is_node_object,
     is_value_object,
 )
 

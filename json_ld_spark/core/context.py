@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import lru_cache
 from typing import Any, Callable, Optional
 
@@ -29,8 +29,6 @@ from json_ld_spark.core import errors as err
 from json_ld_spark.core.errors import JsonLdError
 from json_ld_spark.core.iri import resolve_iri
 from json_ld_spark.core.keywords import (
-    KEYWORDS,
-    LANGTAG_RE,
     MAX_CONTEXTS_LOADED,
     has_keyword_form,
     is_absolute_iri,

@@ -20,9 +20,7 @@ from json_ld_spark.core import errors as err
 from json_ld_spark.core.context import Context
 from json_ld_spark.core.errors import JsonLdError
 from json_ld_spark.core.keywords import (
-    LANGTAG_RE,
     add_value,
-    has_keyword_form,
     is_absolute_iri,
     is_graph_object,
     is_keyword,

@@ -24,7 +24,6 @@ from json_ld_spark.core.keywords import (
     add_value,
     compare_values,
     is_blank_node_id,
-    is_value_object,
 )
 
 

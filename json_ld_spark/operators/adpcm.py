@@ -10,9 +10,8 @@ The decode STATE MACHINE (predictor + step index per nibble) is what
 the driver's DuckDB oracle replays sample-for-sample via a recursive
 CTE over the same closed-form nibble stream — so a wrong table entry,
 a mis-ordered clamp, or swapped nibble order all fail the hash. The
-encoder is the standard quantize-with-feedback loop, unit-tested
-against the stdlib ``audioop`` implementation (an independent C
-implementation of the same IMA variant).
+decoder is unit-tested against the stdlib ``audioop`` implementation
+(an independent C implementation of the same IMA variant).
 """
 
 from __future__ import annotations
@@ -60,43 +59,6 @@ def decode_nibbles(
         index = _clamp_idx(index + INDEX_TABLE[n & 7])
         out.append(pred)
     return out
-
-
-def encode_samples(
-    samples: "list[int]", pred: int = 0, index: int = 0
-) -> "tuple[list[int], int, int]":
-    """Core IMA encode with quantization feedback: returns (nibbles,
-    final_pred, final_index). The reconstruction inside the loop is
-    exactly decode_nibbles', so decode(encode(x)) equals the
-    encoder's internal reconstruction — the property the round-trip
-    test pins."""
-    nibbles = []
-    for s in samples:
-        step = STEP_TABLE[index]
-        delta = s - pred
-        n = 8 if delta < 0 else 0
-        if n:
-            delta = -delta
-        if delta >= step:
-            n |= 4
-            delta -= step
-        if delta >= step >> 1:
-            n |= 2
-            delta -= step >> 1
-        if delta >= step >> 2:
-            n |= 1
-        # reconstruct exactly as the decoder will
-        diff = step >> 3
-        if n & 4:
-            diff += step
-        if n & 2:
-            diff += step >> 1
-        if n & 1:
-            diff += step >> 2
-        pred = _clamp16(pred - diff if n & 8 else pred + diff)
-        index = _clamp_idx(index + INDEX_TABLE[n & 7])
-        nibbles.append(n)
-    return nibbles, pred, index
 
 
 # ---------------------------------------------------------------------------

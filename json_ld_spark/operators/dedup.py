@@ -107,66 +107,22 @@ def minhash_dedup_components(
     return connected_components(verified.select("id_a", "id_b"))
 
 
-def simhash_sig(text_col, pre_lowered: bool = False):
-    """SIMHASH_BITS-wide SimHash over the md5_hash60 hashes of the
-    character shingles, as ONE JVM aggregate: the accumulator is an
-    array of vote counters updated per shingle hash (a single
-    expression tree — one aggregate per bit made codegen explode and
-    cost seconds of compile per query). The interpreted reference
-    form of simhash_sig_table.
-    pre_lowered: ``text_col`` is an already-lowercased staged column —
-    interpreted HOFs re-evaluate a captured lower() per element
-    (see char_shingles), so callers stage it.
-    """
-    lowered = text_col if pre_lowered else F.lower(text_col)
-    shingle = _SIMHASH_SHINGLE
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(lowered) - (shingle - 1), F.lit(1))),
-        lambda i: lowered.substr(i, F.lit(shingle)),
-    )
-    hashes = F.transform(shingles, md5_hash60)
-    # per-bit masks as a literal array; shift functions require
-    # literal bit counts, masks don't
-    masks = F.array(
-        *[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)]
-    )
-    votes = F.aggregate(
-        hashes,
-        F.transform(masks, lambda m: F.lit(0)),
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    # fold positive-vote bits into a bigint: sum of masks where the
-    # vote is positive
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            masks,
-            lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def simhash_sig_table(docs: DataFrame) -> DataFrame:
-    """(_id, _sh): SimHash signatures as an EXPLODED-ROWS aggregation —
-    the corpus-scale form of simhash_sig.
+    """(_id, _sh): SIMHASH_BITS-wide SimHash over the md5_hash60
+    hashes of each document's lowercased character shingles, as an
+    EXPLODED-ROWS aggregation.
 
-    The expression form (simhash_sig) folds an interpreted HOF
-    accumulator over every shingle: one interpreted lambda op per bit
-    per shingle, measured 68 s for 50k docs at sf1 — it was the
-    dominant term of the whole simhash query. This form stays inside
-    whole-stage codegen: explode shingles to rows, hash per row, and
-    take 32 PACKED bit-count sums per document (two 32-bit lanes per
-    long: lane b counts bit b, its high lane counts bit b+32 — lanes
-    cannot carry into each other below 2^31 shingles/doc). One
-    map-side-combined shuffle on the id; same signature bit-for-bit
-    (sig bit b = ones_b·2 > n, identical to the ±1 vote sign).
-    Measured 68 s → ~2 s on the same corpus."""
+    An expression form that folds an interpreted HOF accumulator over
+    every shingle (one interpreted lambda op per bit per shingle) was
+    measured at 68 s for 50k docs at sf1 — the dominant term of the
+    whole simhash query. This form stays inside whole-stage codegen:
+    explode shingles to rows, hash per row, and take 32 PACKED
+    bit-count sums per document (two 32-bit lanes per long: lane b
+    counts bit b, its high lane counts bit b+32 — lanes cannot carry
+    into each other below 2^31 shingles/doc). One map-side-combined
+    shuffle on the id; sig bit b is set iff ones_b·2 > n, the sign of
+    the ±1 vote. Measured 68 s → ~2 s on the same corpus. The
+    ``simhash_pairs`` oracle replays the same signature in DuckDB."""
     lane = 0x0000000100000001
     shingle = _SIMHASH_SHINGLE
     # scan-granularity guard: the exploded hash + packed-lane partial

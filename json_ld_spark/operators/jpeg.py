@@ -4,7 +4,7 @@ for the baseline-sequential JPEG shapes.
 
 Scope: baseline sequential DCT, 8-bit — grayscale (SOF0 single
 luminance component) AND color: 3-component YCbCr at 4:4:4 and 4:2:0
-subsampling (encode_jpeg_color/_decode below, with chroma upsampling
+subsampling (encode_rgb/decode_color below, with chroma upsampling
 on decode). The encoder emits standard JFIF-compatible streams
 (SOI/DQT/SOF0/DHT/SOS/EOI, Annex-K Huffman tables, byte stuffing);
 the decoder performs canonical Huffman reconstruction from DHT,
@@ -259,116 +259,6 @@ def _read_symbol(reader: _BitReader, table) -> int:
     raise ValueError("invalid Huffman code")
 
 
-def decode_gray(payload: bytes) -> "tuple[int, int, bytes]":
-    """(width, height, pixels) from a baseline grayscale JPEG. Parses
-    DQT/DHT/SOF0/SOS from the stream itself (not assumptions about
-    the encoder), entropy-decodes, dequantizes, IDCTs, and crops edge
-    blocks. Raises ValueError on non-baseline / multi-component
-    streams (those need Pillow)."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    pos = 2
-    quant: dict = {}
-    dc_tabs: dict = {}
-    ac_tabs: dict = {}
-    width = height = 0
-    comp_q = comp_dc = comp_ac = 0
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("expected marker")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            raise ValueError("no scan data before EOI")
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue  # standalone markers
-        (seglen,) = struct.unpack(">H", payload[pos:pos + 2])
-        body = payload[pos + 2:pos + seglen]
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                quant[tq] = np.frombuffer(
-                    body[b + 1:b + 65], dtype=np.uint8
-                ).astype(np.int64)
-                b += 65
-        elif marker == 0xC4:  # DHT
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0x0F
-                bits = list(body[b + 1:b + 17])
-                n = sum(bits)
-                vals = list(body[b + 17:b + 17 + n])
-                tab = _decode_table(bits, vals)
-                (dc_tabs if tc == 0 else ac_tabs)[th] = tab
-                b += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            precision, height, width, ncomp = struct.unpack(
-                ">BHHB", body[:6]
-            )
-            if precision != 8:
-                raise ValueError("only 8-bit baseline supported")
-            if ncomp != 1:
-                raise ValueError(
-                    "multi-component (color) JPEG needs Pillow"
-                )
-            if body[7] != 0x11:
-                raise ValueError("only 1x1 sampling supported")
-            comp_q = body[8]
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("non-baseline JPEG unsupported")
-        elif marker == 0xDD:
-            raise ValueError("restart intervals unsupported")
-        elif marker == 0xDA:  # SOS — entropy data follows
-            comp_dc = body[2] >> 4
-            comp_ac = body[2] & 0x0F
-            pos += seglen
-            break
-        pos += seglen
-    else:
-        raise ValueError("no SOS marker")
-    if not width or comp_q not in quant:
-        raise ValueError("missing SOF0 or quant table")
-
-    q = quant[comp_q]
-    dc_tab, ac_tab = dc_tabs[comp_dc], ac_tabs[comp_ac]
-    reader = _BitReader(payload, pos)
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    out = np.zeros((bh * 8, bw * 8), dtype=np.uint8)
-    prev_dc = 0
-    inv_zz = np.zeros(64, dtype=np.int64)
-    for by in range(bh):
-        for bx in range(bw):
-            inv_zz[:] = 0
-            size = _read_symbol(reader, dc_tab)
-            prev_dc += _extend(reader.bits(size), size)
-            inv_zz[0] = prev_dc
-            k = 1
-            while k < 64:
-                sym = _read_symbol(reader, ac_tab)
-                if sym == 0x00:  # EOB
-                    break
-                run, size = sym >> 4, sym & 0x0F
-                if sym == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                k += run
-                if k >= 64:
-                    raise ValueError("AC run past block end")
-                inv_zz[k] = _extend(reader.bits(size), size)
-                k += 1
-            coef = np.zeros(64, dtype=np.float64)
-            coef[ZIGZAG] = inv_zz * q  # dequant + de-zigzag
-            block = _C.T @ coef.reshape(8, 8) @ _C
-            out[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = np.clip(
-                np.round(block) + 128, 0, 255
-            ).astype(np.uint8)
-    return width, height, out[:height, :width].tobytes()
-
-
 # --- color (3-component YCbCr) baseline --------------------------------
 #
 # Annex K.3 typical CHROMINANCE Huffman tables (JPEG spec, public).
@@ -567,14 +457,14 @@ def encode_rgb(width: int, height: int, pixels: bytes,
 
 
 def decode_color(payload: bytes) -> "tuple[int, int, bytes]":
-    """(width, height, rgb_bytes) from a baseline JPEG — grayscale
-    (1 component, replicated to RGB? no: see below), 4:4:4, or 4:2:0
-    YCbCr. Parses DQT/DHT/SOF0/SOS from the stream, entropy-decodes
-    interleaved MCUs with per-component DC predictors, dequantizes,
-    IDCTs, box-upsamples subsampled chroma, and applies the JFIF
-    inverse transform with half-up rounding. For single-component
-    streams it returns the LUMINANCE plane (w·h bytes), matching
-    ``decode_gray`` — callers branch on length, as with PPM vs gray.
+    """(width, height, pixel_bytes) from a baseline JPEG — grayscale
+    (1 component), 4:4:4, or 4:2:0 YCbCr. Parses DQT/DHT/SOF0/SOS from
+    the stream, entropy-decodes interleaved MCUs with per-component DC
+    predictors, dequantizes, IDCTs, box-upsamples subsampled chroma,
+    and applies the JFIF inverse transform with half-up rounding.
+    Color streams return w·h·3 RGB bytes; single-component streams
+    return the LUMINANCE plane (w·h bytes) — callers branch on length,
+    as with PPM vs gray.
 
     Raises ValueError on progressive/arithmetic/non-8-bit streams and
     on sampling layouts other than 1×1×3 (4:4:4), 2×2,1×1,1×1

@@ -24,8 +24,6 @@ Scale notes:
   - binary payloads ride the Arrow transfer like any column; keep
     ``spark.sql.files.maxPartitionBytes`` sized so a partition of
     blobs fits executor memory (the session builder does).
-  - feature vectors come back as array<float> ready for the
-    similarity/dedup operators (operators/similarity.py).
   - decode_stats decodes each blob once per Arrow batch and emits
     only small aggregate rows — the blob bytes never shuffle.
 """
@@ -42,15 +40,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "meta struct<width:int, height:int, sample_rate:int, n_frames:int, "
-    "codec:string>"
-)
-
-FEATURE_DIM = 32
-
 
 def synthesize_media(spark: SparkSession, n: int = 64) -> DataFrame:
     """Deterministic fake media table: payload bytes are a pure
@@ -259,15 +248,16 @@ def decode_image(
     payload: bytes, strict: bool = False
 ) -> tuple[int, int, bytes]:
     """(width, height, pixel_bytes) from a binary-PPM (P6), PNG
-    (8-bit RGB), or baseline JPEG payload — REAL parses of real
+    (8-bit RGB), GIF, or baseline JPEG payload — REAL parses of real
     bytes: PNG includes zlib inflate, CRC checks, and scanline
     unfiltering; JPEG includes Huffman entropy decode, dequantization,
     IDCT, chroma upsampling, and the YCbCr→RGB inverse transform
     (operators/jpeg.py) for grayscale, 4:4:4, and 4:2:0 baseline
     streams. Returned pixel_bytes is 3·w·h RGB for PPM/PNG/color-JPEG
     and w·h luminance for grayscale JPEG — callers branch on length.
-    Progressive/arithmetic/restart-interval JPEG still needs Pillow:
-    strict mode raises, non-strict falls back to a deterministic
+    Progressive/arithmetic/restart-interval JPEG still needs Pillow,
+    and a payload with none of the four signatures is not decoded at
+    all: strict mode raises, non-strict falls back to a deterministic
     digest fake (0×0 dims) so plumbing tests can run on arbitrary
     bytes."""
     if payload[:8] == _PNG_SIG:
@@ -310,8 +300,8 @@ def decode_image(
                 raise
     if strict:
         raise NotImplementedError(
-            "JPEG needs Pillow; PPM (P6) and PNG (8-bit RGB) decode "
-            "natively in this container"
+            "unrecognized image signature; PNG, baseline JPEG, GIF and "
+            "PPM (P6) decode natively"
         )
     return 0, 0, hashlib.sha256(payload).digest()
 
@@ -391,51 +381,6 @@ def decode_video_frames(
         if strict:
             raise
     return out
-
-
-def _features_from_bytes(data: bytes) -> list[float]:
-    """Deterministic fake feature extractor: FEATURE_DIM floats in [-1, 1)
-    unfolded from iterated sha256 (stands in for a CNN/wav2vec
-    embedding; same shape, same dtype, same batch contract)."""
-    out: list[float] = []
-    block = data
-    while len(out) < FEATURE_DIM:
-        block = hashlib.sha256(block).digest()
-        for i in range(0, len(block) - 3, 4):
-            (u,) = struct.unpack_from("<I", block, i)
-            out.append((u / 2**31) - 1.0)
-            if len(out) == FEATURE_DIM:
-                break
-    return out
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """media table → (media_id, kind, feature array<float>, n_bytes).
-
-    mapInPandas so each Arrow batch of blobs is decoded+featurized in
-    one Python call; the output feeds the ANN/near-dup operators."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [
-                _features_from_bytes(
-                    decode_image(bytes(p))[2] if k == "image" else bytes(p)
-                )
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feature": feats,
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                }
-            )
-
-    return media.mapInPandas(
-        _batches,
-        schema="media_id long, kind string, feature array<float>, n_bytes int",
-    )
 
 
 # ---------------------------------------------------------------------------

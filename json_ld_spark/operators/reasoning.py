@@ -40,33 +40,14 @@ from pyspark.sql import functions as F
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
-def transitive_closure(edges: DataFrame, max_depth: int = 16) -> DataFrame:
-    """All (sub, sup) pairs reachable through ``edges`` — pointer
-    doubling, so paths up to ``max_depth`` close in ceil(log2(depth))
-    self-joins rather than depth-many semi-naive rounds. Intended for
-    SCHEMA tables (hundreds of rows): each round is a self-join +
-    distinct on a dimension-sized input. Results exclude reflexive
-    pairs unless asserted."""
-    closed = edges.select("sub", "sup")
-    rounds = max(1, (max_depth - 1).bit_length())
-    for _ in range(rounds):
-        hop = (
-            closed.alias("a")
-            .join(closed.alias("b"), F.col("a.sup") == F.col("b.sub"))
-            .select(F.col("a.sub").alias("sub"), F.col("b.sup").alias("sup"))
-        )
-        closed = closed.unionByName(hop).dropDuplicates()
-    return closed
-
-
 def close_pairs(pairs: "list[tuple[str, str]]") -> "list[tuple[str, str]]":
     """Transitive closure of a DIMENSION-SIZED edge list, driver-side
-    (plain BFS). The RDFS schema is a trained-artifact-sized input —
-    the same policy as BPE merge tables and IVF codebooks: a few
-    hundred rows are closed in microseconds in Python, where the
+    (plain DFS), as sorted (sub, sup) pairs; reflexive pairs only where
+    a cycle asserts them. The RDFS schema is a trained-artifact-sized
+    input — the same policy as BPE merge tables and IVF codebooks: a
+    few hundred rows are closed in microseconds in Python, where a
     distributed pointer-doubling closure costs log(depth) Spark jobs
-    of pure launch latency. Use transitive_closure for hierarchies
-    that are actually large."""
+    of pure launch latency."""
     from collections import defaultdict
 
     adj: "defaultdict[str, set]" = defaultdict(set)

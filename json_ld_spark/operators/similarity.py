@@ -1,8 +1,5 @@
 """Similarity search over (vec_id, embedding array<float>) frames.
 
-  - brute-force cosine top-k: the exact baseline for one literal
-    query — one scan, JVM-side dot products, TakeOrderedAndProject
-    (no full sort).
   - LSH top-k (lsh_topk_batch): the scale path — sign-LSH over md5
     literal planes (plane_matrix, the one plane family, replayed by
     the SQL oracles) restricts the scan to matching buckets
@@ -21,31 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from json_ld_spark.functions.columns import cosine_similarity
-
-
-def _query_vec_col(query_vec: Sequence[float]):
-    return F.array(*[F.lit(float(x)) for x in query_vec])
-
-
-def brute_force_topk(
-    embeddings: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, cosine): exact cosine top-k against a literal query
-    vector. The plan is scan → project(cosine) →
-    TakeOrderedAndProject(k) — verify no global sort appears (tests
-    assert this)."""
-    q = _query_vec_col(query_vec)
-    return (
-        embeddings.select(
-            "vec_id",
-            F.round(cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
 
 
 def plane_matrix(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:

@@ -24,20 +24,18 @@ from typing import Any, Optional
 from json_ld_spark.sources.gazetteer import CONTEXT_URL, KG_CONTEXT
 
 # IRI → context document, exactly what loadRemoteDocument would have
-# returned. Extend via register_context at pipeline-setup time.
+# returned. A corpus that names more contexts passes them to
+# ``jsonld_ops.expand_documents(contexts=...)``, which hands them to
+# registry_snapshot as ``extra``.
 VENDORED_CONTEXTS: dict[str, Any] = {
     CONTEXT_URL: {"@context": KG_CONTEXT},
 }
 
 
-def register_context(iri: str, document: Any) -> None:
-    """Vendor a context document under its IRI (setup-time only —
-    executors see a snapshot taken when the UDF closure is built)."""
-    VENDORED_CONTEXTS[iri] = document
-
-
 def registry_snapshot(extra: Optional[dict[str, Any]] = None) -> dict[str, Any]:
-    """Immutable copy for shipping into a UDF closure."""
+    """The vendored contexts plus ``extra``, as a fresh dict shipped
+    into a UDF closure: one call's extra contexts never leak into the
+    module registry, or into another call's closure."""
     snap = dict(VENDORED_CONTEXTS)
     if extra:
         snap.update(extra)

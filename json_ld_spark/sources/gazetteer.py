@@ -71,6 +71,6 @@ KG_CONTEXT: dict = {
     "score": {"@id": VOCAB + "score", "@type": XSD + "integer"},
 }
 
-# Preloaded-context registry (parity: PRELOADED, context.rb:18).
+# The KG context's IRI; sources/context_registry.py vendors KG_CONTEXT
+# under it (parity: PRELOADED, context.rb:18).
 CONTEXT_URL = "https://example.org/kg/context.jsonld"
-PRELOADED_CONTEXTS: dict[str, dict] = {CONTEXT_URL: {"@context": KG_CONTEXT}}

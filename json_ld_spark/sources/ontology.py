@@ -20,7 +20,6 @@ from __future__ import annotations
 from json_ld_spark.sources.gazetteer import GAZETTEER, VOCAB, entity_iri
 
 RDFNS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 RDF_TYPE = RDFNS + "type"
 
 # (sub, super) rdfs:subClassOf assertions. Deepest chain is 2 edges

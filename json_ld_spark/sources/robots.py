@@ -7,14 +7,18 @@ empty ``Disallow:`` meaning no restriction, unknown directives and
 comments ignored.
 
 The parser is pure Python (runs in Arrow batches over a (host,
-robots_txt) table); MATCHING is JVM-side — the rule table is tiny
-per host (robots files are ~KB), so the filter is a broadcast join
-+ startswith + max_by, no Python in the per-URL path.
+robots_txt) table); MATCHING is JVM-side (``match_robots``) — the
+rule table is tiny per host (robots files are ~KB), so the filter is
+a broadcast join + startswith + a struct max, no Python in the
+per-URL path.
 """
 
 from __future__ import annotations
 
 from typing import List, Tuple
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def parse_robots(
@@ -65,13 +69,35 @@ def parse_robots(
     return specific if specific else wildcard
 
 
-def robots_allowed(path: str, rules: "List[Tuple[bool, str]]") -> bool:
-    """Longest-match-wins; Allow beats Disallow on equal length; no
-    matching rule → allowed."""
-    best: "Tuple[int, bool] | None" = None
-    for allow, prefix in rules:
-        if path.startswith(prefix):
-            cand = (len(prefix), allow)
-            if best is None or cand > best:
-                best = cand
-    return True if best is None else best[1]
+def match_robots(urls: DataFrame, rules: DataFrame) -> DataFrame:
+    """(host, canon, allowed, matched_prefix): the verdict for each
+    (host, canon, path) row of ``urls`` under the (host, allow,
+    prefix) rows of ``rules``. Longest match wins; Allow beats
+    Disallow on equal length; no matching rule → allowed, with a null
+    prefix. One broadcast join of the rule table, then ``max`` over
+    (length, allow, prefix) structs per URL — true sorts above false,
+    so at equal length the Allow rule is the max."""
+    j = urls.join(
+        F.broadcast(rules),
+        (urls["host"] == rules["host"])
+        & F.expr("startswith(path, prefix)"),
+        "left",
+    ).select(
+        urls["host"].alias("host"),
+        "canon",
+        F.when(
+            rules["prefix"].isNotNull(),
+            F.struct(
+                F.length(rules["prefix"]).alias("l"),
+                rules["allow"].alias("allow"),
+                rules["prefix"].alias("prefix"),
+            ),
+        ).alias("cand"),
+    )
+    best = j.groupBy("host", "canon").agg(F.max("cand").alias("best"))
+    return best.select(
+        "host",
+        "canon",
+        F.coalesce(F.col("best.allow"), F.lit(True)).alias("allowed"),
+        F.col("best.prefix").alias("matched_prefix"),
+    )

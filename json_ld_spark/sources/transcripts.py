@@ -127,7 +127,7 @@ def derive_transcripts_from_documents(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """documents.parquet → transcript shape, arithmetic-only (oracle-
-    reproducible; see ``derive_transcripts_sql`` for the DuckDB side).
+    reproducible; ``__spark_entry__._T_CTE`` is the DuckDB side).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     k = _TURNS_PER_CONV
@@ -147,23 +147,6 @@ def derive_transcripts_from_documents(
             )
         ).alias("ts"),
     )
-
-
-def derive_transcripts_sql() -> str:
-    """DuckDB CTE producing byte-identical rows to
-    ``derive_transcripts_from_documents`` (the oracle side)."""
-    k = _TURNS_PER_CONV
-    return f"""
-    SELECT
-      printf('conv%08d', doc_id // {k}) AS conv_id,
-      CAST(doc_id % {k} AS INT) AS turn_idx,
-      (['user','assistant','tool'])[CAST(doc_id % 3 AS INT) + 1] AS role,
-      text,
-      CASE WHEN doc_id % 3 = 2 THEN 'search' END AS tool,
-      TIMESTAMP '2024-01-01 00:00:00'
-        + (doc_id % {k}) * INTERVAL 1 MINUTE AS ts
-    FROM documents
-    """
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:

@@ -22,7 +22,7 @@ splits), exactly how production crawl pipelines shard.
 from __future__ import annotations
 
 import gzip
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 CRLF = b"\r\n"
 VERSION = b"WARC/1.0"
@@ -104,21 +104,3 @@ def parse_warc_gz(
         records.append((headers, body))
         pos = body_start + length + 4
     return records
-
-
-def iter_warc_members(payload: bytes) -> Iterator[bytes]:
-    """Yield each gzip member's compressed bytes — the split points a
-    distributed reader uses to shard one huge .warc.gz. Walks members
-    by decompressing with a streaming decompressor and using
-    unused_data to find boundaries."""
-    import zlib
-
-    pos = 0
-    while pos < len(payload):
-        d = zlib.decompressobj(wbits=31)
-        d.decompress(payload[pos:])
-        if not d.eof:
-            raise ValueError("truncated gzip member")
-        consumed = len(payload) - pos - len(d.unused_data)
-        yield payload[pos : pos + consumed]
-        pos += consumed

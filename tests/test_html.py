@@ -50,25 +50,6 @@ def test_errors():
     assert e.value.code == "invalid script element"
 
 
-def test_spark_html_extraction(spark):
-    from json_ld_spark.operators.html_ops import extract_jsonld_from_html
-
-    rows = [
-        (1, HTML),
-        (2, "<html><body>no scripts here</body></html>"),
-        (3, '<script type="application/ld+json">{broken</script>'),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, html string")
-    out = extract_jsonld_from_html(df).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert len(by_doc[1]) == 3  # extractAllScripts concatenation
-    assert json.loads(by_doc[1][0].doc_json)["@id"] == "http://ex.org/a"
-    assert 2 not in by_doc  # JVM prefilter dropped the scriptless page
-    assert by_doc[3][0].error_code == "invalid script element"
-
-
 def test_detect_jsonld():
     from json_ld_spark.core.html import detect_jsonld
 

@@ -7,9 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators.multimodal import (
-    FEATURE_DIM,
     decode_image,
-    extract_features,
     resize_plan,
     sample_frames,
     synthesize_media,
@@ -28,32 +26,6 @@ def test_media_schema_and_determinism(spark):
     assert a[0]["meta"]["sample_rate"] == 16000
 
 
-def test_feature_extraction_shape(spark):
-    media = synthesize_media(spark, n=24)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 24
-    for r in rows:
-        assert len(r["feature"]) == FEATURE_DIM
-        assert all(-1.0 <= x < 1.0 for x in r["feature"])
-        assert r["n_bytes"] > 0
-    # deterministic across runs
-    again = {r["media_id"]: list(r["feature"]) for r in extract_features(media).collect()}
-    for r in rows:
-        assert [pytest.approx(x) for x in again[r["media_id"]]] == list(r["feature"])
-
-
-def test_features_feed_similarity_ops(spark):
-    from json_ld_spark.operators.similarity import brute_force_topk
-
-    media = synthesize_media(spark, n=24)
-    feats = extract_features(media).withColumnRenamed("media_id", "vec_id")
-    q = feats.filter(F.col("vec_id") == 0).collect()[0]["feature"]
-    top = brute_force_topk(feats, q, k=3, vec_col="feature")
-    rows = top.collect()
-    assert rows[0]["vec_id"] == 0 and abs(rows[0]["cosine"] - 1.0) < 1e-3
-
-
 def test_strict_codec_raises_on_compressed_formats():
     """Codecs outside the native set still raise in strict mode:
     malformed/color JPEG surfaces its parse error (grayscale baseline
@@ -65,6 +37,19 @@ def test_strict_codec_raises_on_compressed_formats():
 
     with pytest.raises(NotImplementedError):
         decode_audio(b"ID3\x04mp3ish", strict=True)
+
+
+def test_decode_image_names_unrecognized_signature():
+    """A payload with no PNG, JPEG, GIF or P6 signature is not a JPEG
+    (or any format decode_image knows): strict mode says so, naming
+    the four native formats, instead of blaming a missing library."""
+    for payload in (b"BM\x00\x00bmpish", b"RIFF\x00\x00\x00\x00WEBP", b""):
+        with pytest.raises(NotImplementedError) as e:
+            decode_image(payload, strict=True)
+        assert str(e.value) == (
+            "unrecognized image signature; PNG, baseline JPEG, GIF and "
+            "PPM (P6) decode natively"
+        )
 
 
 def test_non_strict_fallback_on_malformed_recognized_payloads():
@@ -367,7 +352,7 @@ def test_jpeg_constant_blocks_bit_exact():
     gate stands on."""
     import numpy as np
 
-    from json_ld_spark.operators.jpeg import decode_gray, encode_gray
+    from json_ld_spark.operators.jpeg import decode_color, encode_gray
 
     w, h = 40, 24
     img = np.zeros((h, w), dtype=np.uint8)
@@ -378,7 +363,7 @@ def test_jpeg_constant_blocks_bit_exact():
             ) % 256
     enc = encode_gray(w, h, img.tobytes())
     assert enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"
-    w2, h2, px = decode_gray(enc)
+    w2, h2, px = decode_color(enc)
     assert (w2, h2, px) == (w, h, img.tobytes())
 
 
@@ -388,11 +373,11 @@ def test_jpeg_arbitrary_content_and_lossy_quant():
     i.e. the codec is genuinely lossy-capable, not a fixed-path toy."""
     import numpy as np
 
-    from json_ld_spark.operators.jpeg import decode_gray, encode_gray
+    from json_ld_spark.operators.jpeg import decode_color, encode_gray
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (40, 56), dtype=np.uint8)
-    _, _, px = decode_gray(encode_gray(56, 40, img.tobytes()))
+    _, _, px = decode_color(encode_gray(56, 40, img.tobytes()))
     err = np.abs(
         np.frombuffer(px, np.uint8).astype(int)
         - img.reshape(-1).astype(int)
@@ -402,7 +387,7 @@ def test_jpeg_arbitrary_content_and_lossy_quant():
     fine = encode_gray(56, 40, img.tobytes())
     coarse = encode_gray(56, 40, img.tobytes(), quant=[32] * 64)
     assert len(coarse) < len(fine) / 2
-    _, _, px2 = decode_gray(coarse)
+    _, _, px2 = decode_color(coarse)
     err2 = np.abs(
         np.frombuffer(px2, np.uint8).astype(int)
         - img.reshape(-1).astype(int)
@@ -413,28 +398,28 @@ def test_jpeg_arbitrary_content_and_lossy_quant():
 def test_jpeg_non_multiple_of_8_crops():
     import numpy as np
 
-    from json_ld_spark.operators.jpeg import decode_gray, encode_gray
+    from json_ld_spark.operators.jpeg import decode_color, encode_gray
 
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, (13, 21), dtype=np.uint8)
-    w, h, px = decode_gray(encode_gray(21, 13, img.tobytes()))
+    w, h, px = decode_color(encode_gray(21, 13, img.tobytes()))
     assert (w, h) == (21, 13) and len(px) == 21 * 13
 
 
 def test_jpeg_rejects_unsupported_profiles():
     import pytest as _pytest
 
-    from json_ld_spark.operators.jpeg import decode_gray, encode_gray
+    from json_ld_spark.operators.jpeg import decode_color, encode_gray
 
     with _pytest.raises(ValueError):
-        decode_gray(b"not a jpeg")
+        decode_color(b"not a jpeg")
     # progressive SOF2 marker in an otherwise plausible stream
     import struct
 
     prog = (b"\xff\xd8" + struct.pack(">HH", 0xFFC2, 8)
             + b"\x08\x00\x08\x00\x08\x01")
     with _pytest.raises(ValueError):
-        decode_gray(prog)
+        decode_color(prog)
     with _pytest.raises(ValueError):
         encode_gray(8, 8, b"\x00" * 63)  # wrong buffer size
 
@@ -500,21 +485,26 @@ def test_jpeg_color_arbitrary_content_bounded_error():
 
 def test_jpeg_color_decoder_handles_grayscale_and_rejects():
     """decode_color on a 1-component stream returns the luminance
-    plane (decode_gray parity); malformed/unsupported streams raise."""
+    plane (w·h bytes, pinned by hash); malformed/unsupported streams
+    raise."""
+    import hashlib
+
     import numpy as np
     import pytest as _pytest
 
     from json_ld_spark.operators.jpeg import (
         decode_color,
-        decode_gray,
         encode_gray,
         encode_rgb,
     )
 
     rng = np.random.default_rng(23)
     g = rng.integers(0, 256, (16, 24), dtype=np.uint8)
-    enc = encode_gray(24, 16, g.tobytes())
-    assert decode_color(enc) == decode_gray(enc)
+    w, h, px = decode_color(encode_gray(24, 16, g.tobytes()))
+    assert (w, h, len(px)) == (24, 16, 24 * 16)
+    assert hashlib.sha256(px).hexdigest() == (
+        "10830c69564ccd470af7d87d9f42218154107b8a35f914debfd7d68197dbc5df"
+    )
 
     with _pytest.raises(ValueError):
         decode_color(b"not a jpeg")
@@ -606,9 +596,10 @@ def test_gif_rejects_out_of_subset():
 
 
 def test_adpcm_matches_audioop_and_container():
-    """Core encode/decode vs stdlib audioop — an independent C
-    implementation of the same IMA/DVI variant (audioop packs HIGH
-    nibble first; the WAV container low-first, covered below)."""
+    """Core decode vs stdlib audioop — an independent C implementation
+    of the same IMA/DVI variant, which also encodes the nibbles
+    (audioop packs HIGH nibble first; the WAV container low-first,
+    covered below)."""
     import math
     import struct
     import warnings
@@ -616,29 +607,23 @@ def test_adpcm_matches_audioop_and_container():
     from json_ld_spark.operators.adpcm import (
         build_ima_wav,
         decode_nibbles,
-        encode_samples,
         parse_ima_wav,
     )
 
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        import audioop
+
     pcm = [int(10000 * math.sin(i / 10)) + (i * 37) % 301 - 150
            for i in range(2000)]
-    nib, _, _ = encode_samples(pcm, 0, 0)
-    dec = decode_nibbles(nib, 0, 0)
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            import audioop
-    except ImportError:
-        audioop = None
-    if audioop is not None:
-        raw = struct.pack(f"<{len(pcm)}h", *pcm)
-        adp, _ = audioop.lin2adpcm(raw, 2, None)
-        anibs = []
-        for b in adp:
-            anibs.extend((b >> 4, b & 0xF))
-        assert anibs == nib
-        lin, _ = audioop.adpcm2lin(adp, 2, None)
-        assert list(struct.unpack(f"<{len(pcm)}h", lin)) == dec
+    adp, _ = audioop.lin2adpcm(struct.pack(f"<{len(pcm)}h", *pcm), 2, None)
+    nib = []
+    for b in adp:
+        nib.extend((b >> 4, b & 0xF))
+    lin, _ = audioop.adpcm2lin(adp, 2, None)
+    assert decode_nibbles(nib, 0, 0) == list(
+        struct.unpack(f"<{len(pcm)}h", lin)
+    )
 
     # container round trip: block framing emits the seed sample first
     blocks = []

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from json_ld_spark.plans.session import explain_str
+from conftest import explain_str
 
 SF = "/root/testdata/sf0.001"
 
@@ -41,11 +41,12 @@ def test_broadcast_join_for_dimension(spark):
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark):
-    from json_ld_spark.operators.similarity import brute_force_topk
+    """The brute-force ANN query's order + limit plans as
+    TakeOrderedAndProject: a per-partition top-k, never a global sort
+    of the embedding table."""
+    import __spark_entry__ as E
 
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qvec = emb.limit(1).collect()[0]["embedding"]
-    plan = explain_str(brute_force_topk(emb, qvec, k=10))
+    plan = explain_str(E.queries()["ann_brute_topk"](spark, SF))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -155,23 +156,6 @@ def test_exact_dedup_single_shuffle(spark):
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Exchange") == 1
     assert "partial_count" in plan and "partial_min" in plan
-
-
-def test_html_extraction_prefilters_jvm_side(spark):
-    """The ld+json regexp filter must sit between the scan and the
-    Python stage so scriptless rows never cross the Arrow boundary."""
-    from json_ld_spark.operators.html_ops import extract_jsonld_from_html
-    from json_ld_spark.plans.session import explain_str
-
-    df = spark.createDataFrame([(1, "<p>x</p>")], "doc_id long, html string")
-    plan = explain_str(extract_jsonld_from_html(df))
-    map_pos = plan.find("MapInPandas")
-    filter_pos = plan.find("Filter")
-    assert map_pos != -1 and filter_pos != -1
-    assert "RLIKE" in plan or "rlike" in plan
-    # formatted plans list operators leaf-last: the Filter node must be
-    # BELOW MapInPandas in the tree (appears after it in the listing)
-    assert filter_pos > -1
 
 
 def test_ivf_assign_no_window_exchange(spark):

@@ -13,7 +13,6 @@ from json_ld_spark.operators.reasoning import (
     RDF_TYPE,
     bgp_match,
     rdfs_entail,
-    transitive_closure,
 )
 
 V = "v#"
@@ -27,21 +26,6 @@ def _facts(spark, rows):
 
 def _pairs(spark, rows, cols):
     return spark.createDataFrame(rows, cols)
-
-
-def test_transitive_closure_deep_chain(spark):
-    # depth-5 chain closes fully with pointer doubling
-    edges = _pairs(
-        spark,
-        [(f"c{i}", f"c{i+1}") for i in range(5)],
-        "sub string, sup string",
-    )
-    got = {
-        (r.sub, r.sup)
-        for r in transitive_closure(edges, max_depth=5).collect()
-    }
-    want = {(f"c{i}", f"c{j}") for i in range(5) for j in range(i + 1, 6)}
-    assert got == want
 
 
 def test_rdfs_rules_on_micro_kg(spark):
@@ -167,14 +151,20 @@ def test_sssp_hop_bound_limits_reach(spark):
     assert got == {"n0", "n1", "n2"}
 
 
-def test_close_pairs_matches_distributed_closure(spark):
+def test_close_pairs_matches_distributed_closure():
+    """A depth-5 chain plus a side edge into its middle closes to every
+    (ancestor, descendant) pair, sorted, without reflexive pairs."""
     from json_ld_spark.operators.reasoning import close_pairs
 
     edges = [(f"c{i}", f"c{i+1}") for i in range(5)] + [("x", "c2")]
-    df = spark.createDataFrame(edges, "sub string, sup string")
-    dist = {(r.sub, r.sup)
-            for r in transitive_closure(df, max_depth=6).collect()}
-    assert set(close_pairs(edges)) == dist
+    assert close_pairs(edges) == [
+        ("c0", "c1"), ("c0", "c2"), ("c0", "c3"), ("c0", "c4"), ("c0", "c5"),
+        ("c1", "c2"), ("c1", "c3"), ("c1", "c4"), ("c1", "c5"),
+        ("c2", "c3"), ("c2", "c4"), ("c2", "c5"),
+        ("c3", "c4"), ("c3", "c5"),
+        ("c4", "c5"),
+        ("x", "c2"), ("x", "c3"), ("x", "c4"), ("x", "c5"),
+    ]
     assert close_pairs([]) == []
 
 

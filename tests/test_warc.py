@@ -2,8 +2,24 @@
 and the distributed stats path."""
 
 import gzip
+import zlib
 
 import pytest
+
+
+def _gzip_members(payload):
+    """Each gzip member's compressed bytes: the split points a
+    distributed reader shards one huge .warc.gz at. A streaming
+    decompressor stops at a member's end; ``unused_data`` is the
+    rest."""
+    members = []
+    while payload:
+        d = zlib.decompressobj(wbits=31)
+        d.decompress(payload)
+        assert d.eof, "truncated gzip member"
+        members.append(payload[: len(payload) - len(d.unused_data)])
+        payload = d.unused_data
+    return members
 
 
 def _mk(n_records=3):
@@ -59,10 +75,10 @@ def test_warc_framing_violations_are_loud():
 
 
 def test_warc_member_iteration_matches_records():
-    from json_ld_spark.sources.warc import iter_warc_members, parse_warc_gz
+    from json_ld_spark.sources.warc import parse_warc_gz
 
     records, payload = _mk(5)
-    members = list(iter_warc_members(payload))
+    members = _gzip_members(payload)
     assert len(members) == 5
     assert b"".join(members) == payload
     # each member parses standalone — the distributed split property
@@ -106,8 +122,10 @@ def test_warc_html_pages_decodes_html_bodies(spark):
         assert p["target_uri"].startswith("https://crawl-")
 
 
-def test_robots_parser_and_matching():
-    from json_ld_spark.sources.robots import parse_robots, robots_allowed
+def test_robots_parser_and_matching(spark):
+    from pyspark.sql import functions as F
+
+    from json_ld_spark.sources.robots import match_robots, parse_robots
 
     txt = (
         "# c\n"
@@ -126,13 +144,33 @@ def test_robots_parser_and_matching():
     assert star == [(False, "/private"), (True, "/private/ok")]
     # specific UA group wins and * group is ignored for it
     assert parse_robots(txt, "SpecBot") == [(False, "/only-specbot")]
-    # matching: longest match wins; no match -> allowed
-    assert robots_allowed("/public", star) is True
-    assert robots_allowed("/private/x", star) is False
-    assert robots_allowed("/private/ok/deep", star) is True
-    # tie on length: Allow beats Disallow
+    # matching, on the JVM matcher q_robots_filter runs: longest match
+    # wins; no match -> allowed; a tie on length: Allow beats Disallow
     tie = [(False, "/a"), (True, "/a")]
-    assert robots_allowed("/a/b", tie) is True
+    rules = spark.createDataFrame(
+        [("star", allow, prefix) for allow, prefix in star]
+        + [("tie", allow, prefix) for allow, prefix in tie],
+        "host string, allow boolean, prefix string",
+    )
+    urls = spark.createDataFrame(
+        [
+            ("star", "/public"),
+            ("star", "/private/x"),
+            ("star", "/private/ok/deep"),
+            ("tie", "/a/b"),
+        ],
+        "host string, path string",
+    ).withColumn("canon", F.col("path"))
+    got = {
+        (r["host"], r["canon"]): (r["allowed"], r["matched_prefix"])
+        for r in match_robots(urls, rules).collect()
+    }
+    assert got == {
+        ("star", "/public"): (True, None),
+        ("star", "/private/x"): (False, "/private"),
+        ("star", "/private/ok/deep"): (True, "/private/ok"),
+        ("tie", "/a/b"): (True, "/a"),
+    }
     # consecutive-UA group applies to both agents
     assert parse_robots(txt, "OtherBot") == star
 
@@ -144,11 +182,7 @@ def test_warc_round_trip_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from json_ld_spark.sources.warc import (
-        build_warc_gz,
-        iter_warc_members,
-        parse_warc_gz,
-    )
+    from json_ld_spark.sources.warc import build_warc_gz, parse_warc_gz
 
     header_val = st.text(
         alphabet=st.characters(
@@ -177,6 +211,6 @@ def test_warc_round_trip_property():
         for (h0, b0), (h1, b1) in zip(recs, parsed):
             assert b1 == b0
             assert h1["WARC-Target-URI"] == h0["WARC-Target-URI"]
-        assert len(list(iter_warc_members(payload))) == len(recs)
+        assert len(_gzip_members(payload)) == len(recs)
 
     roundtrip()
